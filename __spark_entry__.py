@@ -56,32 +56,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # priority order, (1) queries whose code changed this round,
         # (2) queries never driver-checked, (3) unchanged queries with
         # the OLDEST banked green row, oldest first. After each round,
-        # re-rank; with 117 queries and a 50-slot window every banked
-        # row is refreshed at most ~2.4 rounds after it lands. The six
+        # re-rank; with 116 queries and a 50-slot window every banked
+        # row is refreshed at most ~2.4 rounds after it lands. The five
         # rows-only entries pinned by golden pytest (products/cotejo/
-        # multimodal/extract_embed_ann/ocr_layout_extraction) stay
-        # parked last: a rows-only driver row adds no evidence over
-        # their fixtures, so they never displace a hash-checkable
-        # refresh.
-        # -- round 8 (optimization round): the window is the 49
-        #    hash-checkable queries whose physical plans or kernels
-        #    changed this round (fan-out, window->max_by, xxhash64
-        #    fingerprint families, unrolled cosine, broadcast-vocab
-        #    scoring, post-filter pair dedup, one-projection gates,
-        #    session-cached inputs, q08 build-side flip — see
-        #    OPTIMIZATION_r08.md), plus supplier_dim, the oldest
-        #    banked row (r05). Every rewrite is also oracle-green
-        #    locally at sf0.01 AND sf0.1 (0 failures, four full-gate
-        #    runs).
-        # -- round-8 continuation: the window further swaps IN the
-        #    seven queries the continuation session rewrote beyond the
-        #    original 49 (embed_neighbor_graph mapInPandas+long-dot,
-        #    q02/q12 lineitem fan, v_productos_top / q14_top_proveedores
-        #    PK-first aggregation, the esc pair's fanned platos base),
-        #    parking seven fan-only entries whose executed plans at the
-        #    gate scale are identical to their r7-banked form (the fan
-        #    gate is off below FAN_MIN_BYTES, so at sf0.01 their plans
-        #    did not change).
+        # extract_embed_ann/ocr_layout_extraction) stay parked last: a
+        # rows-only driver row adds no evidence over their fixtures, so
+        # they never displace a hash-checkable refresh.
         "txt_substring_dup": D.txt_substring_dup,
         "dedup_minhash_lsh": D.dedup_minhash_lsh,
         "txt_decontamination": D.txt_decontamination,
@@ -202,7 +182,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "products_extraction": Q.products_extraction,
         "cotejo_pipeline": Q.cotejo_pipeline,
         "cotejo_inverso_pipeline": Q.cotejo_inverso_pipeline,
-        "multimodal_features": Q.multimodal_features,
     }
 
 

@@ -16,6 +16,7 @@ one "executor"); the call sites note where that swap happens.
 
 from __future__ import annotations
 
+import os
 import threading
 from contextlib import contextmanager
 
@@ -126,33 +127,58 @@ def checkpoint_with_ids(
     return out, ids
 
 
-# Memoized scan PLANS per (session, table file, file mtime). A
-# spark.read.parquet() call costs 60-90 ms of py4j round trips + footer
-# schema inference — paid for the SAME static gate table hundreds of
-# times across a suite/gate run (~350 reader calls ≈ 25 s of the sf0.1
-# suite before this memo). Only the immutable unresolved DataFrame
-# object is reused; no DATA is cached — every action still scans the
-# parquet files. The mtime in the key drops the entry the moment the
-# file (or a partition dir) is rewritten or appended to, so callers that
-# regenerate a table mid-session read fresh bytes, and the applicationId
-# keeps plans from a stopped session from leaking into a new one.
-_SCAN_MEMO: dict[tuple, tuple[float, DataFrame]] = {}
+# Memoized scan PLANS per (session, table path), validated against a
+# fingerprint of the table's file listing. A spark.read.parquet() call
+# costs 60-90 ms of py4j round trips + footer schema inference — paid
+# for the SAME static gate table hundreds of times across a suite/gate
+# run (~350 reader calls ≈ 25 s of the sf0.1 suite before this memo).
+# Only the immutable unresolved DataFrame object is reused; no DATA is
+# cached — every action still scans the parquet files, but through the
+# file listing captured when the plan was built. The fingerprint holds
+# (relative path, size, mtime_ns) of every file under the table path,
+# so any rewrite, append or delete — nested partition files and
+# same-second rewrites included — drops the entry and re-reads. Paths
+# the local filesystem cannot list (hdfs://, s3a://) fingerprint as
+# empty and are never invalidated. Entries from stopped sessions are
+# pruned on insert.
+_SCAN_MEMO: dict[tuple, tuple[tuple, DataFrame]] = {}
+
+
+def _listing_fingerprint(path: str) -> tuple:
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for f in sorted(files):
+            full = os.path.join(root, f)
+            try:
+                st = os.stat(full)
+            except OSError:  # deleted mid-walk: the listing moved anyway
+                continue
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(out)
 
 
 def table_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    import os
+    """Memoized ``spark.read.parquet(f"{sf_dir}/{name}.parquet")``.
 
+    Two reads of one unchanged table return the SAME DataFrame object,
+    so a self-join must ``.alias()`` both sides (``a.alias("l").join(
+    b.alias("r"), F.col("l.x") == F.col("r.x"))``); an unaliased
+    ``a.join(b, a.x == b.x)`` compares a column with itself."""
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        mt = os.path.getmtime(path)
-    except OSError:
-        mt = -1.0
-    key = (spark.sparkContext.applicationId, path)
+    fp = _listing_fingerprint(path)
+    app = spark.sparkContext.applicationId
+    key = (app, path)
     hit = _SCAN_MEMO.get(key)
-    if hit is not None and hit[0] == mt:
+    if hit is not None and hit[0] == fp:
         return hit[1]
     df = spark.read.parquet(path)
-    _SCAN_MEMO[key] = (mt, df)
+    for stale in [k for k in list(_SCAN_MEMO) if k[0] != app]:
+        _SCAN_MEMO.pop(stale, None)
+    _SCAN_MEMO[key] = (fp, df)
     return df
 
 

@@ -157,11 +157,11 @@ EXACT_KEEP_BROADCAST_MAX = 8_000_000
 
 
 def resolve_quota_salts(survivors: DataFrame, quota_k: int) -> int | None:
-    """The ``quota_salts="auto"`` decision, shared by per_doc_flags and
-    tools/profile_shuffle.py so the profiler cannot drift: ONE thin agg
-    (the frame feeding the quota window is persisted upstream, so this
-    materializes work the next action needs anyway — _component_layout's
-    pattern) measures the hottest source AND the total survivor count.
+    """The ``quota_salts="auto"`` decision made by per_doc_flags: ONE
+    thin agg (the frame feeding the quota window is persisted upstream,
+    so this materializes work the next action needs anyway —
+    _component_layout's pattern) measures the hottest source AND the
+    total survivor count.
     Two-phase triggers when either clears QUOTA_SALT_TARGET: a hot
     source because the single-phase window serializes it through one
     task, a large total because the single-phase ALL-rows output forces
@@ -208,11 +208,11 @@ def quota_keep_ids(
     usually broadcast-sized — and consumers must left-join and coalesce
     missing to False, which the quota stage already does. (Emitting the
     False rows too would need a full-corpus-width join back on doc_id;
-    measured at 32M rows that join costs more than the skew it cures —
-    bench.py --quota-skew.) The single-phase form keeps the historical
-    all-rows output. Both forms pick the identical keep SET (the order
-    key is unique per row); equality is property-tested and the
-    two-phase form is oracle-twinned (corpus_quota_two_phase)."""
+    measured at 32M rows that join costs more than the skew it cures.)
+    The single-phase form keeps the historical all-rows output. Both
+    forms pick the identical keep SET (the order key is unique per row);
+    equality is property-tested and the two-phase form is oracle-twinned
+    (corpus_quota_two_phase)."""
     key = [F.md5(F.col("doc_id").cast("string")), F.col("doc_id")]
     if not salts or salts <= 1:
         w = Window.partitionBy("source").orderBy(*key)
@@ -535,9 +535,9 @@ def per_doc_flags(
 
     # stage 7: per-source quota among s6 survivors.
     # Skew note (the 100-TB shape): the single-phase window puts every
-    # row of a source in ONE partition — a Zipf-hot crawl source
-    # (tools/sf3_bench.py plants 30% of the corpus on one source)
-    # serializes in a single fat task, and AQE cannot split a window.
+    # row of a source in ONE partition — a Zipf-hot crawl source (one
+    # holding 30% of the corpus, say) serializes in a single fat task,
+    # and AQE cannot split a window.
     # The "auto" default (round-7 directive 4) measures the hottest
     # source and switches to the exact two-phase salted top-k past
     # QUOTA_SALT_TARGET rows — same keep set (property-tested), hot
@@ -793,10 +793,9 @@ def corpus_quota_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself proves two-phase == single-phase == DuckDB on the identical
     input. This is the quota stage's 100-TB shape: a Zipf-hot source
     spreads over the salt partitions instead of serializing in one
-    unsplittable window task (bench.py --quota-skew measures both forms
-    on a planted 60%-hot corpus: wall parity at 32M rows, hot-task
-    footprint bounded at salts*k candidates instead of the whole
-    source)."""
+    unsplittable window task (measured on a planted 60%-hot corpus:
+    wall parity with the single window at 32M rows, hot-task footprint
+    bounded at salts*k candidates instead of the whole source)."""
     docs = _t(spark, sf_dir, "documents")
     keep = quota_keep_ids(docs.select("doc_id", "source"), quota_k=8, salts=4)
     return (

@@ -28,7 +28,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # memoized scan plan (cache.table_scan): the reader call costs
     # 60-90 ms of py4j + footer schema inference per invocation; only
     # the immutable plan object is reused, every action still scans
-    # the parquet files (mtime-keyed, so a rewritten table re-reads)
+    # the parquet files (listing-keyed, so a rewritten table re-reads)
     from facturas_spark.analytics.cache import table_scan
 
     return table_scan(spark, sf_dir, name)
@@ -923,9 +923,9 @@ def dedup_lsh_clusters(
     ``family`` is an EXPLICIT parameter (default md5 — the DuckDB-
     portable oracle family), never the ambient env var: the families
     produce different candidate sets in general, so a stray env var must
-    not silently change oracle-gated results. The shuffle-scaling bench
-    passes xxhash64, the integer production family (_band_table
-    docstring), through this argument (round-7 advice)."""
+    not silently change oracle-gated results. Callers that want
+    xxhash64, the integer production family (_band_table docstring),
+    pass it through this argument."""
 
     def make() -> DataFrame:
         docs = _t_fan(spark, sf_dir, "documents", "doc_id").filter(

@@ -47,7 +47,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # memoized scan plan (cache.table_scan): the reader call costs
     # 60-90 ms of py4j + footer schema inference per invocation; only
     # the immutable plan object is reused, every action still scans
-    # the parquet files (mtime-keyed, so a rewritten table re-reads)
+    # the parquet files (listing-keyed, so a rewritten table re-reads)
     from facturas_spark.analytics.cache import table_scan
 
     return table_scan(spark, sf_dir, name)

@@ -61,7 +61,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # memoized scan plan (cache.table_scan): the reader call costs
     # 60-90 ms of py4j + footer schema inference per invocation; only
     # the immutable plan object is reused, every action still scans
-    # the parquet files (mtime-keyed, so a rewritten table re-reads)
+    # the parquet files (listing-keyed, so a rewritten table re-reads)
     from facturas_spark.analytics.cache import table_scan
 
     return table_scan(spark, sf_dir, name)
@@ -519,59 +519,6 @@ def cotejo_inverso_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("pares"), F.round(F.avg("score"), 4).alias("score_medio"))
         .orderBy("categoria_enlace", "metodo")
     )
-
-
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal pipeline, rows-only check: synthetic corpus of REAL
-    BMP/PNG/WAV/Y4M files -> magic-byte sniff + image features + audio
-    features + video frame sampling (mapInPandas, genuine pure-stdlib
-    decode — sources/codecs.py) -> per-kind aggregate counts."""
-    from facturas_spark.sources.multimodal import (
-        MEDIA_DDL,
-        audio_features,
-        frame_sample,
-        image_features,
-        media_sniff,
-        synth_media_rows,
-    )
-
-    # 90 rows over the default 32 partitions would schedule ~128 one-row
-    # Python-worker tasks across the four branches; 4 partitions keep the
-    # Arrow batches full (plan stays shuffle-free — coalesce, no exchange).
-    # Round 8: session-cached (cache.py pattern) — synthesizing + driver-
-    # converting the 90 real media files cost ~1 s per call, four builds
-    # per bench run (2 rounds x the shared input of 4 branches).
-    from facturas_spark.analytics.cache import session_cached
-
-    media = session_cached(
-        spark,
-        "synthetic",
-        "media_90",
-        lambda: spark.createDataFrame(
-            synth_media_rows(90, seed=42), MEDIA_DDL
-        ).coalesce(4),
-    )
-    img = image_features(media).agg(
-        F.lit("image").alias("kind"),
-        F.count("*").alias("rows"),
-        F.round(F.sum("mean_intensity"), 4).alias("metric"),
-    )
-    aud = audio_features(media).agg(
-        F.lit("audio").alias("kind"),
-        F.count("*").alias("rows"),
-        F.round(F.sum("rms"), 4).alias("metric"),
-    )
-    vid = frame_sample(media, fps=0.5).agg(
-        F.lit("video_frames").alias("kind"),
-        F.count("*").alias("rows"),
-        F.round(F.sum("luma_mean"), 4).alias("metric"),
-    )
-    snf = media_sniff(media).agg(
-        F.lit("sniff").alias("kind"),
-        F.count("*").alias("rows"),
-        F.sum(F.col("mime_ok").cast("int")).cast("double").alias("metric"),
-    )
-    return img.unionByName(aud).unionByName(vid).unionByName(snf).orderBy("kind")
 
 
 def _ocr_docs(spark: SparkSession) -> DataFrame:

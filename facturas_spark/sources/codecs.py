@@ -16,14 +16,11 @@ specified as plain byte layouts and need nothing beyond ``struct`` + ``zlib``
   video interchange format (what ffmpeg pipes), trivially seekable:
   frame k starts at header_end + k * (6 + w*h*3//2).
 
-These replace the round-1/2 decode *stubs* in multimodal.py: the features
-(mean luma, average-hash, RMS, FFT band energies, per-frame stats) are now
-computed from genuinely decoded pixels/samples. Swapping in PIL/librosa in
-production changes which codecs are reachable, not the operator shape.
+No Spark query calls these codecs; they, ``jpeg.py``, ``gif.py`` and
+``avi.py`` form a standalone decode library pinned by its own tests.
 
 No reference-repo counterpart (the reference delegates decode to Google
-Document AI — process-invoice/index.ts); this module serves the brief's
-training-data-pipeline multimodal requirement.
+Document AI — process-invoice/index.ts).
 """
 
 from __future__ import annotations

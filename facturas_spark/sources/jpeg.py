@@ -19,9 +19,8 @@ format — nothing beyond ``struct`` + numpy is needed for a correct
   approximation) — each pinned against the decoder, the progressive and
   4:2:0-neutral-chroma cases bit-identically.
 
-The entropy loop is Python-per-symbol — fine for tests and the bounded
-multimodal demo queries; at production scale the decode UDF swaps in
-libjpeg-turbo via PIL, changing the codec call, not the operator shape
+The entropy loop is Python-per-symbol — fine for tests and small
+inputs; at production scale libjpeg-turbo via PIL is the drop-in
 (same contract as the other codecs in sources/codecs.py).
 """
 

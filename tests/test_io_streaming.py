@@ -94,6 +94,55 @@ def test_run_with_resume_partial(spark, tmp_path):
     ) <= {1, 3}
 
 
+def _manifest(out: str) -> dict[int, tuple[int, str]]:
+    entries = LineageManifest(os.path.join(out, "_manifest")).committed()
+    return {b: (e["rows"], e["digest"]) for b, e in entries.items()}
+
+
+def _extracted(spark, out: str) -> set:
+    back = spark.read.parquet(os.path.join(out, "extracted"))
+    cols = back.select("bucket", "url", F.md5("extracted_text").alias("h"))
+    return {tuple(r) for r in cols.collect()}
+
+
+@pytest.mark.parametrize("k", [0, 2])
+def test_run_with_resume_commit_failure_injection(spark, tmp_path, monkeypatch, k):
+    """Crash after k of n manifest commits, with every bucket already
+    written: the rerun redoes exactly the n-k uncommitted buckets, skips
+    the k committed ones, and ends with the manifest and data of an
+    uninterrupted run on a fresh directory."""
+    df = spark.createDataFrame(corpus_rows(60, seed=42), PAGES_SCHEMA_DDL)
+    ref_out = str(tmp_path / "ref")
+    ref = run_with_resume(spark, df, ref_out, n_buckets=4)
+    n = len(ref["processed"])
+    assert n == 4  # every bucket populated, so a resume always has work
+
+    real_commit = LineageManifest.commit
+    committed = []
+
+    def flaky_commit(self, bucket, rows, digest):
+        if len(committed) == k:
+            raise OSError("injected commit failure")
+        real_commit(self, bucket, rows, digest)
+        committed.append(bucket)
+
+    out = str(tmp_path / "crash")
+    monkeypatch.setattr(LineageManifest, "commit", flaky_commit)
+    with pytest.raises(OSError, match="injected"):
+        run_with_resume(spark, df, out, n_buckets=4)
+    monkeypatch.setattr(LineageManifest, "commit", real_commit)
+    assert set(_manifest(out)) == set(committed) and len(committed) == k
+
+    r = run_with_resume(spark, df, out, n_buckets=4)
+    assert sorted(r["skipped"]) == sorted(committed)
+    assert sorted(r["processed"]) == sorted(set(ref["processed"]) - set(committed))
+    assert len(r["processed"]) == n - k
+    ref_manifest = _manifest(ref_out)
+    assert r["rows"] == sum(ref_manifest[b][0] for b in r["processed"])
+    assert _manifest(out) == ref_manifest
+    assert _extracted(spark, out) == _extracted(spark, ref_out)
+
+
 def test_stream_extract_incremental(spark, tmp_path):
     from facturas_spark.streaming.stream import stream_extract_pages
 

@@ -129,27 +129,6 @@ def test_progressive_identical_to_baseline():
         assert np.array_equal(a, b), (img.shape, q)
 
 
-def test_decodes_reference_progressive_photo():
-    """The reference repo ships a REAL WhatsApp photo — a 900x1600
-    libjpeg progressive stream (8 scans, successive approximation,
-    4:2:0). Our decoder must produce a plausible natural image from it:
-    right dims, photo-like smoothness (mean |gradient| far below global
-    std — a Huffman desync yields noise with gradient ~ std), and
-    strongly correlated color channels."""
-    b = open(
-        "/root/reference/Imagen de WhatsApp 2025-08-17 a las 14.01.54_bbefa6bc.jpg",
-        "rb",
-    ).read()
-    px = decode_jpeg(b)
-    assert px.shape == (1600, 900, 3)
-    luma = px.astype(float) @ np.array([0.299, 0.587, 0.114])
-    assert 150 < luma.mean() < 180  # photographed white-ish document
-    grad = np.abs(np.diff(luma, axis=1)).mean()
-    assert grad < luma.std() / 5
-    r, g = px[..., 0].ravel().astype(float), px[..., 1].ravel().astype(float)
-    assert np.corrcoef(r, g)[0, 1] > 0.95
-
-
 def test_gif_lzw_roundtrip():
     from facturas_spark.sources.gif import decode_gif, encode_gif
     from facturas_spark.sources.codecs import sniff_media

@@ -1,8 +1,5 @@
-"""Multimodal layer tests: REAL codec round-trips + real Spark plumbing.
-
-Since round 3 the payloads are genuine BMP/PNG/WAV/Y4M files and the
-features are computed from decoded pixels/samples (codecs.py, stdlib-only),
-so these tests pin decode *correctness*, not stub determinism.
+"""Container codec tests: BMP/PNG/WAV/Y4M round-trips and magic-byte
+sniffing (codecs.py, stdlib-only), pinning decode *correctness*.
 """
 
 from __future__ import annotations
@@ -21,21 +18,6 @@ from facturas_spark.sources.codecs import (
     encode_y4m,
     sniff_media,
 )
-from facturas_spark.sources.multimodal import (
-    MEDIA_DDL,
-    audio_features,
-    frame_sample,
-    image_features,
-    media_sniff,
-    resize_plan,
-    synth_media_rows,
-)
-
-N = 30
-
-
-def _media(spark):
-    return spark.createDataFrame(synth_media_rows(N, seed=42), MEDIA_DDL)
 
 
 # ------------------------------------------------------------- codecs ----
@@ -107,236 +89,3 @@ def test_sniff_magic_bytes():
     assert sniff_media(encode_y4m(np.zeros((1, 2, 2), np.uint8), 1)) == "video/y4m"
     assert sniff_media(b"plain text") == "application/octet-stream"
     assert sniff_media(None) == "application/octet-stream"
-
-
-# ----------------------------------------------------------- operators ----
-def test_image_features_real_decode(spark):
-    rows = {r.media_id: r for r in image_features(_media(spark)).collect()}
-    raw = {t[0]: t for t in synth_media_rows(N, seed=42)}
-    assert set(rows) == {i for i in range(N) if i % 3 == 0}
-    for mid, r in rows.items():
-        payload, meta = bytes(raw[mid][2]), raw[mid][3]
-        if meta[4] == "image/png":
-            px = decode_png(payload)
-        elif meta[4] == "image/jpeg":
-            from facturas_spark.sources.jpeg import decode_jpeg
-
-            px = decode_jpeg(payload)
-        elif meta[4] == "image/gif":
-            from facturas_spark.sources.gif import decode_gif
-
-            px = decode_gif(payload)
-        else:
-            px = decode_bmp(payload)
-        # decoded dims equal the sidecar meta AND the pixel array
-        assert (r.width, r.height) == (meta[0], meta[1]) == px.shape[1::-1]
-        luma = px @ np.array([0.299, 0.587, 0.114])
-        assert abs(r.mean_intensity - luma.mean() / 255.0) < 1e-9
-        assert len(r.phash) == 16 and int(r.phash, 16) >= 0
-    # structured test-cards: phashes differ across documents
-    assert len({r.phash for r in rows.values()}) > 1
-
-
-def test_resize_plan_aspect(spark):
-    rows = resize_plan(_media(spark), max_side=32).collect()
-    assert len(rows) > 0
-    for r in rows:
-        assert max(r.target_w, r.target_h) <= 32
-        assert abs(r.target_w / r.target_h - r.width / r.height) < 0.1
-        assert r.target_w <= r.width and r.target_h <= r.height
-
-
-def test_frame_sample_grid_and_luma(spark):
-    out = frame_sample(_media(spark), fps=0.5).collect()
-    raw = {t[0]: t for t in synth_media_rows(N, seed=42)}
-    by_media: dict[int, list] = {}
-    for r in out:
-        by_media.setdefault(r.media_id, []).append(r)
-    assert set(by_media) == {i for i in range(N) if i % 3 == 2}
-    for mid, frames in by_media.items():
-        payload, duration = bytes(raw[mid][2]), raw[mid][3][2]
-        assert len(frames) == max(1, int(duration * 0.5))
-        ts = sorted(f.ts_s for f in frames)
-        assert ts[0] == 0.0
-        if len(ts) > 1:
-            assert ts[1] - ts[0] == 2.0  # 1/fps spacing
-        if raw[mid][3][4] == "video/avi":
-            from facturas_spark.sources.avi import decode_avi_frame, decode_avi_header
-
-            meta = decode_avi_header(payload)
-            for f in frames:
-                luma = decode_avi_frame(payload, meta, f.frame_idx)
-                assert abs(f.luma_mean - luma.mean() / 255.0) < 1e-9
-                assert abs(f.luma_std - luma.std() / 255.0) < 1e-9
-        elif raw[mid][3][4] == "video/h264":
-            # the fixture rotation now emits BOTH transform-coded CAVLC
-            # IDRs and I_PCM streams; decode_h264_iframe covers both
-            from facturas_spark.sources.h264_intra import decode_h264_iframe
-
-            luma = decode_h264_iframe(payload)[0]
-            assert len(frames) == 1 and frames[0].frame_idx == 0
-            assert abs(frames[0].luma_mean - luma.mean() / 255.0) < 1e-9
-            assert abs(frames[0].luma_std - luma.std() / 255.0) < 1e-9
-        else:
-            meta = decode_y4m_header(payload)
-            for f in frames:
-                # luma stats match a direct decode of the same frame
-                luma = decode_y4m_frame(payload, meta, f.frame_idx)
-                assert abs(f.luma_mean - luma.mean() / 255.0) < 1e-9
-                assert abs(f.luma_std - luma.std() / 255.0) < 1e-9
-
-
-def test_audio_features_real_decode(spark):
-    rows = audio_features(_media(spark)).collect()
-    raw = {t[0]: t for t in synth_media_rows(N, seed=42)}
-    assert {r.media_id for r in rows} == {i for i in range(N) if i % 3 == 1}
-    for r in rows:
-        samples, rate = decode_wav(bytes(raw[r.media_id][2]))
-        assert abs(r.duration_s - len(samples) / rate) < 1e-9
-        assert r.duration_bucket == int(r.duration_s // 10)
-        x = samples.astype(np.float64) / 32768.0
-        assert abs(r.rms - float(np.sqrt(np.mean(x * x)))) < 1e-9
-        assert len(r.embedding) == 8
-        assert abs(np.linalg.norm(r.embedding) - 1.0) < 1e-6
-    # pure sine -> energy concentrated in few bands (real spectral signal)
-    for r in rows[:3]:
-        assert max(r.embedding) > 0.9
-
-
-def test_media_sniff_matches_declared(spark):
-    rows = media_sniff(_media(spark)).collect()
-    assert len(rows) == N
-    assert all(r.mime_ok for r in rows)
-
-
-def test_no_shuffle_in_feature_plans(spark):
-    m = _media(spark)
-    for df in (image_features(m), audio_features(m), frame_sample(m), media_sniff(m)):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-
-
-def test_real_docai_page_image_decodes(spark):
-    """Real-world codec validation: the reference fixture ships the
-    Document-AI page render (1681x2379 PNG, libpng-encoded by Google's
-    pipeline, NOT by our encoder). Our pure-stdlib PNG decoder must
-    reproduce its dims and a plausible document luma (white page)."""
-    import base64
-    import json
-
-    import numpy as np
-
-    from facturas_spark.sources.codecs import decode_png, sniff_media
-
-    raw = json.load(open("/root/reference/dashboard-facturas-claude/JSON_MUESTRA"))
-    doc = raw.get("document", raw)
-    img = doc["pages"][0]["image"]
-    payload = base64.b64decode(img["content"])
-    assert sniff_media(payload) == "image/png"
-    px = decode_png(payload)
-    assert px.shape == (img["height"], img["width"], 3) == (2379, 1681, 3)
-    assert 230 <= float(px.mean()) <= 255  # a scanned white invoice
-
-
-def test_media_corpus_exercises_jpeg(spark):
-    from facturas_spark.sources.multimodal import synth_media_rows
-
-    rows = synth_media_rows(30, seed=42)
-    mimes = {r[3][4] for r in rows if r[1] == "image"}
-    assert mimes == {"image/bmp", "image/png", "image/jpeg", "image/gif"}
-
-
-def test_hostile_payloads_null_not_crash(spark):
-    """Corrupt/truncated media payloads must yield null feature rows —
-    never a dead task (the crawl-scale contract)."""
-    import numpy as np
-
-    from facturas_spark.sources.codecs import encode_bmp
-    from facturas_spark.sources.multimodal import MEDIA_DDL, frame_sample, image_features
-
-    good = encode_bmp(np.zeros((8, 8, 3), dtype=np.uint8))
-    rows = [
-        (0, "image", bytearray(good), (8, 8, None, None, "image/bmp")),
-        (1, "image", bytearray(b"\xff\xd8\xffgarbage"), (8, 8, None, None, "image/jpeg")),
-        (2, "image", bytearray(b""), (8, 8, None, None, "image/bmp")),
-        (3, "video", bytearray(b"RIFF\x10\x00\x00\x00AVI garbage"), (8, 8, 4.0, None, "video/avi")),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_DDL)
-    feats = {r.media_id: r for r in image_features(df).collect()}
-    assert feats[0].phash is not None
-    assert feats[1].phash is None and feats[1].width is None
-    assert feats[2].phash is None
-    vid = frame_sample(df, fps=0.5).collect()
-    assert all(r.frame_idx is None for r in vid if r.media_id == 3)
-
-
-def test_h264_ipcm_roundtrip_and_meta():
-    """SPS metadata is parsed from the real bitstream (profile/level/
-    dims via exp-Golomb, emulation bytes stripped) and the I_PCM IDR
-    frame roundtrips bit-exactly through Annex B."""
-    from facturas_spark.sources.codecs import sniff_media
-    from facturas_spark.sources.h264 import (
-        add_emulation,
-        decode_h264_ipcm,
-        encode_h264_ipcm,
-        h264_meta,
-        strip_emulation,
-    )
-
-    rng = np.random.RandomState(7)
-    y = rng.randint(0, 256, (48, 64), dtype=np.uint8)
-    cb = rng.randint(0, 256, (24, 32), dtype=np.uint8)
-    cr = rng.randint(0, 256, (24, 32), dtype=np.uint8)
-    stream = encode_h264_ipcm(y, cb, cr)
-    assert sniff_media(stream) == "video/h264"
-    m = h264_meta(stream)
-    assert (m["profile_idc"], m["width"], m["height"]) == (66, 64, 48)
-    assert m["n_idr"] == 1 and m["entropy_coding_mode"] == 0
-    y2, cb2, cr2 = decode_h264_ipcm(stream)
-    assert np.array_equal(y, y2) and np.array_equal(cb, cb2)
-    assert np.array_equal(cr, cr2)
-    # random-payload emulation-prevention roundtrip (PCM bytes can spell
-    # start codes — the EBSP layer must hide them)
-    raw = bytes(rng.randint(0, 4, 4096, dtype=np.uint8))  # 00-03 heavy
-    assert strip_emulation(add_emulation(raw)) == raw
-    assert b"\x00\x00\x01" not in add_emulation(raw)
-
-
-def test_h264_transform_coded_is_honest_gap():
-    """A non-I_PCM macroblock raises NotImplementedError (the documented
-    subset boundary), never a wrong decode."""
-    import pytest as _pytest
-
-    from facturas_spark.sources.h264 import decode_h264_ipcm, encode_h264_ipcm
-
-    y = np.zeros((16, 16), np.uint8)
-    c = np.zeros((8, 8), np.uint8)
-    stream = bytearray(encode_h264_ipcm(y, c, c))
-    # corrupt the first mb_type bit pattern: ue(25) starts right after the
-    # slice header; flipping the slice payload's first byte yields a
-    # different mb_type
-    idx = stream.rindex(b"\x00\x00\x00\x01") + 5
-    stream[idx] ^= 0x80
-    with _pytest.raises((NotImplementedError, ValueError)):
-        decode_h264_ipcm(bytes(stream))
-
-
-def test_frame_sample_transform_coded_h264_yields_null_rows(spark):
-    """A real-world (transform-coded) H.264 payload must become null
-    frame rows, never a dead task (review fix: the decode now sits
-    inside the failure boundary)."""
-    from facturas_spark.sources.h264 import encode_h264_ipcm
-
-    stream = bytearray(encode_h264_ipcm(np.zeros((16, 16), np.uint8),
-                                        np.zeros((8, 8), np.uint8),
-                                        np.zeros((8, 8), np.uint8)))
-    # flip the slice payload's first byte -> mb_type is no longer I_PCM
-    idx = stream.rindex(b"\x00\x00\x00\x01") + 5
-    stream[idx] ^= 0x80
-    rows = [
-        (0, "video", bytearray(stream), (16, 16, 2.0, None, "video/h264")),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_DDL)
-    out = frame_sample(media, fps=0.5).collect()
-    assert len(out) == 1
-    assert out[0].frame_idx is None and out[0].luma_mean is None

@@ -227,3 +227,57 @@ def test_table_scan_memo_and_mtime_invalidation(spark, tmp_path):
     c = table_scan(spark, p, "t")
     assert c is not a
     assert sorted(r["x"] for r in c.collect()) == [2, 3]
+
+
+def test_table_scan_memo_sees_nested_part_file_rewrite(spark, tmp_path):
+    """A part file rewritten in place inside a partition dir changes no
+    directory entry, so the top-level table dir's mtime stays put; the
+    memo must still drop the stale plan (its captured file listing points
+    at the old bytes) and re-read."""
+    import os
+    import shutil
+
+    from facturas_spark.analytics.cache import table_scan
+
+    p = str(tmp_path)
+    top = f"{p}/t.parquet"
+    spark.createDataFrame([(1, 1)], "x long, k int").coalesce(1).write.partitionBy(
+        "k"
+    ).parquet(top)
+    a = table_scan(spark, p, "t")
+    assert [r["x"] for r in a.collect()] == [1]
+
+    new = f"{p}/new"
+    spark.createDataFrame([(2,), (3,), (4,)], "x long").coalesce(1).write.parquet(new)
+    part_dir = f"{top}/k=1"
+
+    def _part(d):
+        (name,) = [f for f in os.listdir(d) if f.startswith("part-")]
+        return name
+
+    old_part, new_part = _part(part_dir), _part(new)
+    top_mtime = os.stat(top).st_mtime_ns
+    shutil.copyfile(f"{new}/{new_part}", f"{part_dir}/{old_part}")
+    shutil.copyfile(f"{new}/.{new_part}.crc", f"{part_dir}/.{old_part}.crc")
+    assert os.stat(top).st_mtime_ns == top_mtime  # invisible to a top-dir key
+
+    c = table_scan(spark, p, "t")
+    assert c is not a
+    assert sorted(r["x"] for r in c.collect()) == [2, 3, 4]
+
+
+def test_table_scan_memo_prunes_stopped_sessions(spark, tmp_path):
+    """Inserting a scan drops memo entries of other applicationIds: a
+    stopped session's py4j-backed plans must not pile up forever."""
+    from facturas_spark.analytics import cache
+
+    p = str(tmp_path)
+    spark.createDataFrame([(1,)], "x long").write.parquet(f"{p}/t.parquet")
+    foreign = ("local-stopped-app", f"{p}/t.parquet")
+    cache._SCAN_MEMO[foreign] = ((), None)
+    try:
+        cache.table_scan(spark, p, "t")
+        assert foreign not in cache._SCAN_MEMO
+        assert (spark.sparkContext.applicationId, f"{p}/t.parquet") in cache._SCAN_MEMO
+    finally:
+        cache._SCAN_MEMO.pop(foreign, None)
