@@ -20,28 +20,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from facturas_spark.analytics.cache import table_scan as _t
+
 N_HASHES = 8  # MinHash signature length
 N_BANDS = 4   # LSH bands (2 rows per band)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # memoized scan plan (cache.table_scan): the reader call costs
-    # 60-90 ms of py4j + footer schema inference per invocation; only
-    # the immutable plan object is reused, every action still scans
-    # the parquet files (listing-keyed, so a rewritten table re-reads)
-    from facturas_spark.analytics.cache import table_scan
-
-    return table_scan(spark, sf_dir, name)
 
 
 _FAN_MEMO: dict[tuple, bool] = {}
 
 # Fan-out only pays when the single-task scan carries real work: below a
 # few MB the repartition exchange costs more than it parallelizes
-# (measured at sf0.1: ~+0.2 s per query for no gain). Env-overridable so
-# a cluster profile can raise/lower it; the splits<cores guard already
-# disables fan-out entirely once inputs arrive in many splits.
-FAN_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_FAN_MIN_BYTES", str(4 << 20)))
+# (measured at sf0.1: ~+0.2 s per query for no gain). The splits<cores
+# guard already disables fan-out entirely once inputs arrive in many
+# splits.
+FAN_MIN_BYTES = 4 << 20
 
 
 def _table_bytes(sf_dir: str, name: str) -> int:
@@ -112,9 +104,7 @@ def _scan_effective_parallelism(
 # job instead of falling back). Gate on corpus bytes — at the default
 # 1 GiB of documents the vocab is at most a few million tokens (tens of
 # MB built); past the cap the scoring join reverts to the shuffle plan.
-VOCAB_BROADCAST_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_VOCAB_BROADCAST_MAX", str(1 << 30))
-)
+VOCAB_BROADCAST_MAX_BYTES = 1 << 30
 
 
 def _maybe_broadcast_vocab(sf_dir: str, df: DataFrame) -> DataFrame:
@@ -464,6 +454,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Pair count above which the component loop leaves the single-partition
+# broadcast layout for the N-way co-partitioned one.
+COMPONENT_AUTO_THRESHOLD = 200_000
+
+
 def _component_layout(
     pairs: DataFrame, partitions: int | None
 ) -> tuple[DataFrame, int | None]:
@@ -478,11 +473,10 @@ def _component_layout(
 
     Layout resolution, in priority order:
     1. explicit ``partitions`` argument (callers that know their graph);
-    2. env SPARK_GRAFT_COMPONENT_PARTITIONS (deployment override);
-    3. ADAPTIVE default: count the materialized pairs — small graphs
-       (<= SPARK_GRAFT_COMPONENT_AUTO_THRESHOLD, default 200k pairs)
-       take the single-partition broadcast loop (each round a handful
-       of tasks — right for the sandbox's sparse near-dup graphs);
+    2. ADAPTIVE default: count the materialized pairs — small graphs
+       (<= COMPONENT_AUTO_THRESHOLD pairs) take the single-partition
+       broadcast loop (each round a handful of tasks — right for the
+       sandbox's sparse near-dup graphs);
        larger graphs switch to the N-way co-partitioned shuffle-join
        layout with N ~ pairs/100k capped at spark.sql.shuffle.partitions,
        so a 100-TB crawl's billion-edge graph never funnels its loop
@@ -493,28 +487,11 @@ def _component_layout(
     pairs = tracked_checkpoint(pairs)
     if partitions is not None:
         return pairs, partitions
-    env = os.environ.get("SPARK_GRAFT_COMPONENT_PARTITIONS")
-    if env:
-        # validate loudly: '0' or garbage would otherwise surface as an
-        # uncontextualized repartition failure deep in the component loop
-        try:
-            env_n = int(env)
-        except ValueError:
-            env_n = -1
-        if env_n <= 0:
-            raise ValueError(
-                "SPARK_GRAFT_COMPONENT_PARTITIONS must be a positive "
-                f"integer, got {env!r} (unset it for the adaptive layout)"
-            )
-        return pairs, env_n
-    thresh = int(
-        os.environ.get("SPARK_GRAFT_COMPONENT_AUTO_THRESHOLD", "200000")
-    )
     n = pairs.count()
-    if n <= thresh:
+    if n <= COMPONENT_AUTO_THRESHOLD:
         return pairs, None
     cap = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    return pairs, max(2, min(cap, n // max(1, thresh // 2)))
+    return pairs, max(2, min(cap, n // max(1, COMPONENT_AUTO_THRESHOLD // 2)))
 
 
 def _min_label_components(
@@ -523,14 +500,6 @@ def _min_label_components(
     """Connected components over an (id1, id2) pair graph via iterative
     min-label propagation to a fixpoint. Returns (doc_id, cluster_id) for
     every node in >=1 pair; cluster_id = the component's min doc_id.
-
-    Deep-component safety valve: set env SPARK_GRAFT_COMPONENT_ALGO=star
-    (or call ``_star_components`` directly) to switch every consumer to
-    the O(log^2 n)-round large-star/small-star algorithm — min-label
-    needs O(diameter) rounds, fine for shallow near-dup clusters but not
-    for the 100-TB case where chains of borderline near-dups get long.
-    Both produce identical (doc_id, cluster_id) labels (property-pinned
-    in tests/test_dedup_chain.py).
 
     Scale shape: each iteration is one shuffle on the node id (join +
     min-agg); convergence in O(diameter) rounds — near-dup components are
@@ -555,8 +524,6 @@ def _min_label_components(
       must be survivable (needs a checkpoint dir; plan shape identical).
     Both paths run the same loop body and produce identical labels
     (pinned by tests/test_dedup_chain.py)."""
-    if os.environ.get("SPARK_GRAFT_COMPONENT_ALGO") == "star":
-        return _star_components(pairs, partitions)
     from facturas_spark.analytics.cache import (
         free_block_ids,
         tracked_checkpoint_ids,
@@ -618,119 +585,6 @@ def _min_label_components(
     # the returned plan reads only the FINAL label checkpoint
     free_block_ids(spark, und_ids)
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
-
-
-def _star_components(
-    pairs: DataFrame, partitions: int | None = None
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond", public paper) — the deep-component safety valve for
-    ``_min_label_components``: converges in O(log^2 n) ROUNDS regardless
-    of component diameter, where min-label needs O(diameter). Same
-    contract: (doc_id, cluster_id) for every node in >= 1 pair,
-    cluster_id = component min.
-
-    One round =
-      large-star: per node u, m = min(N(u) ∪ {u}); re-point every
-        LARGER neighbor v > u at m (keeps the graph connected, strictly
-        shrinks large-id edges toward minima);
-      small-star: direct each edge (hi, lo); per hi,
-        m = min(N_lo(hi) ∪ {hi}); re-point hi and all its lo-neighbors
-        at m.
-    At the fixpoint every edge is (v, component_min) — a star — so the
-    label read-off is one projection. Each half-round is one groupBy
-    shuffle on the node id + a co-keyed join, localCheckpoint-truncated
-    like the min-label loop; ``partitions`` selects the same broadcast
-    (small-graph) vs N-way co-partitioned (large-graph) layouts, with
-    None resolved adaptively by ``_component_layout``."""
-    from facturas_spark.analytics.cache import (
-        free_block_ids,
-        tracked_checkpoint_ids,
-    )
-
-    pairs, partitions = _component_layout(pairs, partitions)
-    spark = pairs.sparkSession
-
-    def _layout(df: DataFrame, key: str) -> tuple[DataFrame, list[int]]:
-        laid = (
-            df.coalesce(1)
-            if partitions is None
-            else df.repartition(partitions, key)
-        )
-        return tracked_checkpoint_ids(laid)
-
-    def _maybe_broadcast(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if partitions is None else df
-
-    nodes, _ = _layout(
-        pairs.select(F.col("id1").alias("doc_id"))
-        .unionByName(pairs.select(F.col("id2").alias("doc_id")))
-        .distinct(),
-        "doc_id",
-    )
-    # canonical undirected edge set as (hi, lo), hi > lo
-    edges, prev_ids = _layout(
-        pairs.select(
-            F.greatest("id1", "id2").alias("hi"), F.least("id1", "id2").alias("lo")
-        )
-        .filter(F.col("hi") != F.col("lo"))
-        .distinct(),
-        "hi",
-    )
-    rounds = 0
-    while True:
-        rounds += 1
-        if rounds > 200:  # paper bound is O(log^2 n); 200 means a bug
-            raise RuntimeError("star components failed to converge")
-        # ---- large-star ------------------------------------------------
-        und = edges.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionByName(
-            edges.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-        )
-        m = (
-            und.groupBy("u")
-            .agg(F.min("v").alias("_mn"))
-            .select("u", F.least("u", "_mn").alias("m"))
-        )
-        ls = (
-            und.join(_maybe_broadcast(m), "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
-            .filter(F.col("hi") != F.col("lo"))
-            .distinct()
-        )
-        # ---- small-star ------------------------------------------------
-        sm = ls.groupBy("hi").agg(F.min("lo").alias("m"))
-        ss = (
-            ls.join(_maybe_broadcast(sm), "hi")
-            .select(F.col("lo").alias("a"), F.col("m"))
-            .unionByName(
-                sm.select(F.col("hi").alias("a"), F.col("m"))
-            )
-            .filter(F.col("a") != F.col("m"))
-            .select(F.greatest("a", "m").alias("hi"), F.least("a", "m").alias("lo"))
-            .distinct()
-        )
-        new_edges, new_ids = _layout(ss, "hi")
-        # converged when the canonical edge set is a fixpoint
-        n_new = new_edges.count()
-        same = (
-            n_new == edges.count()
-            and new_edges.exceptAll(edges).limit(1).count() == 0
-        )
-        # fixpoint test done — the superseded round's blocks are free
-        # (bounds the loop footprint at two edge sets, not O(rounds))
-        free_block_ids(spark, prev_ids)
-        prev_ids = new_ids
-        edges = new_edges
-        if same:
-            break
-    star = edges.groupBy("hi").agg(F.min("lo").alias("cluster_id"))
-    return nodes.join(
-        _maybe_broadcast(star), nodes.doc_id == star.hi, "left"
-    ).select(
-        "doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id")
-    )
 
 
 # session-level cluster-label cache: the iterative component job is the
@@ -1000,16 +854,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cos_sim") >= 0.2)
         .orderBy("id1", "id2")
     )
-
-
-def _sign_bucket(col: str, bits: int = 8):
-    """Axis-aligned hyperplane LSH bucket: bit i = sign of embedding dim i.
-    Deterministic and portable to the DuckDB oracle."""
-    bucket = None
-    for i in range(bits):
-        bit = F.when(F.element_at(col, i + 1) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return bucket
 
 
 EMB_FAST_DIM = 64  # the corpus embedding width (every synth sf emits 64-dim)
@@ -1603,6 +1447,11 @@ def _incr_candidate_pairs(sh_b: DataFrame, sh_c: DataFrame) -> DataFrame:
     )
 
 
+# Candidate-pair count above which dedup_incremental checkpoints the
+# candidate set instead of relying on its persist cache alone.
+INCR_CKPT_THRESHOLD = 200_000
+
+
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dedup: a NEW BATCH of documents arrives and must be
     deduplicated against the already-ingested corpus without re-deduping
@@ -1658,17 +1507,14 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count materializes the DAG exactly once into the block-manager
     # cache — both later references read cached blocks, so the 4.8M-doc
     # re-execution blowup cannot recur — and ONLY a large candidate set
-    # (> SPARK_GRAFT_INCR_CKPT_THRESHOLD, default 200k pairs — the
-    # _component_layout count-then-choose pattern) pays the checkpoint,
+    # (> INCR_CKPT_THRESHOLD pairs — the _component_layout
+    # count-then-choose pattern) pays the checkpoint,
     # which truncates the lineage so an eviction under memory pressure
     # can never silently re-execute the band-join DAG mid-verify. Plan
     # shape of the un-materialized frame is asserted by
     # tests/test_plans.py (band-key equi-join, no theta).
     cand = _incr_candidate_pairs(sh_b, sh_c).persist()
-    ckpt_thresh = int(
-        os.environ.get("SPARK_GRAFT_INCR_CKPT_THRESHOLD", "200000")
-    )
-    if cand.count() > ckpt_thresh:
+    if cand.count() > INCR_CKPT_THRESHOLD:
         from facturas_spark.analytics.cache import tracked_checkpoint
 
         ckpt = tracked_checkpoint(cand)
@@ -2071,7 +1917,12 @@ def embed_neighbor_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum-of-squares as an interpreted per-element lambda; sumsq now comes
     from the same int64 vector in numpy (integer adds — order-exact), and
     the pair dot takes the unrolled codegen long kernel (:func:`_dot_long`,
-    bit-identical to the fold). Measured 1.6 s -> ~0.5 s noop at sf0.1."""
+    bit-identical to the fold). Measured 1.6 s -> ~0.5 s noop at sf0.1.
+
+    Calling this function launches Spark jobs: it runs an eager
+    ``localCheckpoint`` while building the plan, and the checkpointed
+    blocks stay pinned until ``cache.release_session_cache`` (or until
+    an enclosing ``cache.scratch_scope`` exits)."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
 
     def vec_batches(batches):
@@ -2254,7 +2105,12 @@ def txt_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     (integer keys, no per-window concat_ws/md5 string build — guide §2.3
     narrower types + §4.2). Both sides use the same family, so the
     contamination decisions are unchanged (pinned by
-    test_decontamination_families_agree)."""
+    test_decontamination_families_agree).
+
+    Calling this function launches Spark jobs: it runs an eager
+    ``localCheckpoint`` while building the plan, and the checkpointed
+    blocks stay pinned until ``cache.release_session_cache`` (or until
+    an enclosing ``cache.scratch_scope`` exits)."""
     K = DECON_K
     docs = _t_fan(spark, sf_dir, "documents", "doc_id")
     is_bench = F.col("doc_id") % 97 == 0
@@ -2298,8 +2154,7 @@ def txt_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 def txt_bigram_lm_ppl(
     spark: SparkSession,
     sf_dir: str,
-    tercile_mode: str | None = None,
-    head_min_count: int = 1,
+    tercile_mode: str = "offset",
 ) -> DataFrame:
     """CCNet-style LM-perplexity filter with head/middle/tail buckets
     (Wenzek et al. 2020, public paper — CCNet scores docs under a
@@ -2317,10 +2172,7 @@ def txt_bigram_lm_ppl(
     (nll_r, doc_id) order — head = lowest perplexity, CCNet's keep-set.
 
     ``tercile_mode`` picks how the terciles are realized — both forms
-    produce IDENTICAL buckets (property-pinned, tests/test_quality_ops2),
-    so the env valve SPARK_GRAFT_BIGRAM_TERCILE may switch them safely
-    (the _star_components pattern; unlike the LSH family knob this
-    never changes results):
+    produce IDENTICAL buckets (property-pinned, tests/test_quality_ops2):
 
     * ``"offset"`` (default, the 100-TB shape): the LM tables become
       BROADCAST joins and the tercile split needs NO global window.
@@ -2336,14 +2188,6 @@ def txt_bigram_lm_ppl(
     * ``"window"`` — the literal ntile(3) reference form the oracle
       twin mirrors; kept as the equality baseline.
 
-    ``head_min_count`` (offset mode): keep only LM entries with count
-    >= this in the broadcast slices — the Zipf-head cut for 100-TB
-    vocabularies. Because cu(w1) >= c2(w1 w2), cutting both tables at
-    the same threshold is self-consistent: a dropped entry scores
-    exactly as an unseen one (c2=0 / the add-one unigram floor). At 1
-    (default) the slices are the full tables and the output is
-    bit-identical to the exact-join form.
-
     Scale shape: bigram extraction is a map (zip_with over two slices —
     NOT an index transform, which would re-evaluate the words array per
     element); the model tables build with one token-keyed partial-agg
@@ -2352,18 +2196,12 @@ def txt_bigram_lm_ppl(
     TOP slices broadcast with the back-off floor as OOV default, making
     scoring map-side. Docs with < 2 tokens have no bigrams and are
     absent from the output (both engines)."""
-    if tercile_mode is None:
-        tercile_mode = os.environ.get("SPARK_GRAFT_BIGRAM_TERCILE", "offset")
     if tercile_mode not in ("offset", "window"):
         raise ValueError(
-            "SPARK_GRAFT_BIGRAM_TERCILE / tercile_mode must be 'offset' "
-            f"or 'window', got {tercile_mode!r}"
+            f"tercile_mode must be 'offset' or 'window', got {tercile_mode!r}"
         )
     per_doc = _bigram_per_doc(
-        spark,
-        sf_dir,
-        broadcast_lm=(tercile_mode == "offset"),
-        head_min_count=head_min_count,
+        spark, sf_dir, broadcast_lm=(tercile_mode == "offset")
     )
     from pyspark.sql.window import Window as _W
 
@@ -2404,7 +2242,7 @@ def txt_bigram_lm_ppl(
     per_doc = session_cached(
         spark,
         sf_dir,
-        f"bigram-perdoc-h{head_min_count}",
+        "bigram-perdoc",
         lambda: per_doc,
     )
     hist = sorted(
@@ -2459,7 +2297,6 @@ def _bigram_per_doc(
     spark: SparkSession,
     sf_dir: str,
     broadcast_lm: bool,
-    head_min_count: int = 1,
 ) -> DataFrame:
     """The scoring stage of txt_bigram_lm_ppl, pre-tercile: one row per
     doc with >= 2 tokens, (doc_id, n_bigrams, nll). Exposed separately
@@ -2507,19 +2344,8 @@ def _bigram_per_doc(
         .agg(F.count("*").alias("c2"))
     )
 
-    # totals ALWAYS come from the full tables — the Zipf-head cut below
-    # thins the LM join slices, never the smoothing denominator. The cut
-    # applies in BOTH modes (review fix: it used to be gated on
-    # broadcast_lm, so tercile_mode='window' silently dropped an
-    # explicit head_min_count and the modes diverged exactly when
-    # someone flipped the env var to compare them). Cutting uni and bi
-    # at the SAME count threshold is self-consistent (see docstring);
-    # at head_min_count=1 the slices are the full tables.
-    if head_min_count > 1:
-        uni = uni.filter(F.col("cu") >= head_min_count)
-        bi = bi.filter(F.col("c2") >= head_min_count)
     if broadcast_lm:
-        # 100-TB shape: broadcast the Zipf-head LM slices so scoring is
+        # 100-TB shape: broadcast the LM tables so scoring is
         # a map-side pass (three BroadcastHashJoins, zero corpus-side
         # shuffle before the per-doc agg)
         uni_j, bi_j = F.broadcast(uni), F.broadcast(bi)
@@ -2577,7 +2403,12 @@ def txt_unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus totals (T, V) are a 1-row broadcast; scoring joins
     exploded tokens to the vocab — at 100 TB the join side is the
     Zipf-headed vocab TOP slice broadcast with an OOV floor, making the
-    score a map-side pass (the exact-join form here is the oracle)."""
+    score a map-side pass (the exact-join form here is the oracle).
+
+    Calling this function launches Spark jobs: it runs an eager
+    ``localCheckpoint`` while building the plan, and the checkpointed
+    blocks stay pinned until ``cache.release_session_cache`` (or until
+    an enclosing ``cache.scratch_scope`` exits)."""
     docs = _t_fan(spark, sf_dir, "documents", "doc_id")
     # the token stream feeds BOTH the vocab build and the scoring join —
     # materialize the scan+fan+TOKENIZE once (round 8; 1.69 -> 1.56 s at
@@ -3012,7 +2843,12 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two token-keyed partial-agg shuffles build the two
     count tables (one left-joins the other on the token), corpus totals
     are a 1-row broadcast, scoring is the same exploded-token join as
-    txt_unigram_lm_score; at 100 TB the Zipf-headed vocab broadcasts."""
+    txt_unigram_lm_score; at 100 TB the Zipf-headed vocab broadcasts.
+
+    Calling this function launches Spark jobs: it runs an eager
+    ``localCheckpoint`` while building the plan, and the checkpointed
+    blocks stay pinned until ``cache.release_session_cache`` (or until
+    an enclosing ``cache.scratch_scope`` exits)."""
     docs = _t_fan(spark, sf_dir, "documents", "doc_id")
     # the token stream feeds BOTH the vocab aggregate (broadcast branch —
     # AQE broadcast query stages never reuse exchanges) and the scoring

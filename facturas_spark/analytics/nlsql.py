@@ -23,6 +23,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from facturas_spark.analytics.cache import table_scan as _t
+
 __all__ = ["detect_query_type", "is_sql_safe"]
 
 
@@ -84,16 +86,6 @@ def is_sql_safe(sql: str, restaurante_id: str) -> bool:
     if ";" in lower and len(lower.split(";")) > 2:
         return False
     return True
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # memoized scan plan (cache.table_scan): the reader call costs
-    # 60-90 ms of py4j + footer schema inference per invocation; only
-    # the immutable plan object is reused, every action still scans
-    # the parquet files (listing-keyed, so a rewritten table re-reads)
-    from facturas_spark.analytics.cache import table_scan
-
-    return table_scan(spark, sf_dir, name)
 
 
 # --- Q15 hybrid search cascade (busquedaHibridaRobusta, index.ts:687-922) ---

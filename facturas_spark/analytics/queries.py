@@ -16,6 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from facturas_spark.analytics.cache import table_scan as _t
+from facturas_spark.analytics.dedup import _t_fan
+
 
 def _fan_post(
     spark: SparkSession,
@@ -46,25 +49,6 @@ def _fan_post(
     if force or _fan_needed(spark, sf_dir, table):
         return df.repartition(spark.sparkContext.defaultParallelism, key)
     return df
-
-
-def _t_fan(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
-    """Unsplittable-input fan-out — see dedup._t_fan (the sf parquet
-    tables are single-row-group files; without this the scan stage and
-    every per-row expression fused into it run as one task)."""
-    from facturas_spark.analytics.dedup import _t_fan as fan
-
-    return fan(spark, sf_dir, name, key)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # memoized scan plan (cache.table_scan): the reader call costs
-    # 60-90 ms of py4j + footer schema inference per invocation; only
-    # the immutable plan object is reused, every action still scans
-    # the parquet files (listing-keyed, so a rewritten table re-reads)
-    from facturas_spark.analytics.cache import table_scan
-
-    return table_scan(spark, sf_dir, name)
 
 
 def _cents(c) -> "F.Column":

@@ -57,7 +57,6 @@ _CONTAINERS = (
     ("lines", "line", 0.85),
     ("tokens", "token", 0.9),
 )
-_KIND_PRIORS = {field: conf for field, _key, conf in _CONTAINERS}
 
 
 def _seq(x):

@@ -12,6 +12,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
     DateType,
     DoubleType,
     IntegerType,
@@ -19,8 +21,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-from pyspark.sql.types import ArrayType, BooleanType
 
 from facturas_spark.extraction.boilerplate import extract_main_text
 from facturas_spark.extraction.products import extract_products
@@ -30,10 +30,6 @@ __all__ = [
     "EXTRACTED_SCHEMA",
     "PRODUCT_SCHEMA",
     "FULL_SCHEMA",
-    "extract_fields_udf",
-    "main_text_udf",
-    "classify_udf",
-    "extract_products_udf",
     "extract_doc_udf",
 ]
 
@@ -53,64 +49,6 @@ EXTRACTED_SCHEMA = StructType(
         StructField("confianza_importes", DoubleType()),
     ]
 )
-
-CLASSIFY_SCHEMA = StructType(
-    [
-        StructField("tipo_documento", StringType()),
-        StructField("confianza_clasificacion", DoubleType()),
-        StructField("razonamiento", StringType()),
-    ]
-)
-
-
-@pandas_udf(EXTRACTED_SCHEMA)
-def extract_fields_udf(text: pd.Series) -> pd.DataFrame:
-    """F1-F12 deterministic field extraction, one struct per document."""
-    rows = []
-    for t in text:
-        f = extract_fields(t if isinstance(t, str) else None)
-        rows.append(
-            (
-                f.proveedor_nombre,
-                f.proveedor_cif,
-                f.numero_factura,
-                f.fecha_factura,
-                f.total_factura,
-                f.base_imponible,
-                f.cuota_iva,
-                f.tipo_iva,
-                f.confianza_global,
-                f.confianza_proveedor,
-                f.confianza_datos_fiscales,
-                f.confianza_importes,
-            )
-        )
-    return pd.DataFrame(
-        rows, columns=[fld.name for fld in EXTRACTED_SCHEMA.fields]
-    )
-
-
-@pandas_udf(StringType())
-def main_text_udf(html: pd.Series, text: pd.Series) -> pd.Series:
-    """Main-content text per page: pre-extracted ``text`` wins when present;
-    otherwise the boilerplate strip runs on the ``html`` payload."""
-    out = []
-    for h, t in zip(html, text):
-        if isinstance(t, str) and t:
-            out.append(t)
-        else:
-            out.append(extract_main_text(h))
-    return pd.Series(out, dtype="object")
-
-
-@pandas_udf(CLASSIFY_SCHEMA)
-def classify_udf(text: pd.Series) -> pd.DataFrame:
-    """C1 document classifier (factura/albaran + confidence + reason tag)."""
-    rows = [classify_document(t if isinstance(t, str) else None) for t in text]
-    return pd.DataFrame(
-        rows, columns=["tipo_documento", "confianza_clasificacion", "razonamiento"]
-    )
-
 
 PRODUCT_SCHEMA = StructType(
     [
@@ -154,15 +92,11 @@ FULL_SCHEMA = StructType(
     ]
 )
 
-_PRODUCT_COLS_FUSED = [f.name for f in PRODUCT_SCHEMA.fields]
-
 
 def extract_batch(html, text) -> pd.DataFrame:
     """The fused per-batch kernel (shared by the pandas UDF and the
     accumulator-instrumented mapInPandas path): boilerplate strip ->
     classify -> field extraction -> line-item extraction."""
-    from facturas_spark.extraction.products import extract_products
-
     rows = []
     for h, t in zip(html, text):
         doc_text = t if isinstance(t, str) and t else extract_main_text(h)
@@ -186,7 +120,7 @@ def extract_batch(html, text) -> pd.DataFrame:
                 f.confianza_proveedor,
                 f.confianza_datos_fiscales,
                 f.confianza_importes,
-                [tuple(map(p.get, _PRODUCT_COLS_FUSED)) for p in prods],
+                [tuple(map(p.get, _PRODUCT_COLS)) for p in prods],
             )
         )
     return pd.DataFrame(rows, columns=[fld.name for fld in FULL_SCHEMA.fields])
@@ -249,17 +183,3 @@ def extract_header_udf(html: pd.Series, text: pd.Series) -> pd.DataFrame:
     line-item computation or transfer."""
     return extract_batch_header(html, text)
 
-
-@pandas_udf(ArrayType(PRODUCT_SCHEMA))
-def extract_products_udf(text: pd.Series, tipo_iva: pd.Series) -> pd.Series:
-    """P3-P15 line-item extraction: one array<struct> per document, exploded
-    downstream with posexplode — the per-doc sequential pipeline runs in one
-    Python pass, no shuffle."""
-    out = []
-    for t, iva in zip(text, tipo_iva):
-        prods = extract_products(
-            t if isinstance(t, str) else None,
-            int(iva) if iva is not None and not pd.isna(iva) else 21,
-        )
-        out.append([tuple(map(p.get, _PRODUCT_COLS)) for p in prods])
-    return pd.Series(out, dtype="object")

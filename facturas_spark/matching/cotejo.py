@@ -87,14 +87,6 @@ def salted_join(
         cond = cond & extra_cond
     return big_s.join(small_s, cond, how).drop("_salt", "_salt2", "_key2")
 
-_CANDIDATE_COLS = [
-    "factura_id",
-    "albaran_id",
-    "score",
-    "metodo",
-    "metodo_prio",
-]
-
 
 def _clamp01(c):
     return F.greatest(F.lit(0.0), F.least(F.lit(1.0), c))

@@ -108,19 +108,3 @@ def write_pages(
         raise IcebergUnavailable(f"no Iceberg catalog for {table!r}")
     df.writeTo(table).overwritePartitions()
 
-
-def incremental_pages(
-    spark: SparkSession,
-    table: str = "lake.crawl.pages_extracted",
-    start_snapshot_id: int | None = None,
-) -> DataFrame:
-    """Incremental read between snapshots (the resume/streaming source):
-    only files appended after ``start_snapshot_id`` are scanned — the
-    scale-out replacement for the reference's row-level 'procesado'
-    state machine."""
-    if not iceberg_available(spark, table.split(".", 1)[0]):
-        raise IcebergUnavailable(f"no Iceberg catalog for {table!r}")
-    reader = spark.read.format("iceberg")
-    if start_snapshot_id is not None:
-        reader = reader.option("start-snapshot-id", str(start_snapshot_id))
-    return reader.load(table)

@@ -162,6 +162,16 @@ def stream_windowed_events(
     )
 
 
+def _committed_epochs(ledger) -> set[int]:
+    """Epoch ids whose ``epoch=<id>.json`` marker is in the CommitFS
+    ledger, i.e. whose sink output is durably committed."""
+    return {
+        int(name[len("epoch="):-len(".json")])
+        for name in ledger.list_names()
+        if name.startswith("epoch=") and name.endswith(".json")
+    }
+
+
 def stream_extract_to_bucketed(
     spark: SparkSession,
     input_dir: str,
@@ -198,15 +208,8 @@ def stream_extract_to_bucketed(
     # picks rename-commit vs direct-PUT per scheme)
     ledger = CommitFS(os.path.join(out_dir, "_epoch_manifest"), spark=spark)
 
-    def committed_epochs() -> set[int]:
-        return {
-            int(name[len("epoch="):-len(".json")])
-            for name in ledger.list_names()
-            if name.startswith("epoch=") and name.endswith(".json")
-        }
-
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id in committed_epochs():
+        if epoch_id in _committed_epochs(ledger):
             return  # fast path: retried epoch already durably committed
         out = with_salt_bucket(extract_pages(batch_df), n_buckets=n_buckets)
         (
@@ -297,13 +300,6 @@ def stream_clean_increment(
         ).persist()
         bench_hashes.count()
 
-    def committed_epochs() -> set[int]:
-        return {
-            int(name[len("epoch="):-len(".json")])
-            for name in ledger.list_names()
-            if name.startswith("epoch=") and name.endswith(".json")
-        }
-
     def read_or_empty(path: str, ddl: str, committed: set[int]) -> DataFrame:
         """Read a corpus index layer restricted to LEDGER-COMMITTED
         epochs. The epoch=N directories are written BEFORE the ledger
@@ -321,7 +317,7 @@ def stream_clean_increment(
         return df.filter(F.col("epoch").isin(list(committed))).drop("epoch")
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        committed = committed_epochs()
+        committed = _committed_epochs(ledger)
         if epoch_id in committed:
             return
         # every persisted/checkpointed frame serves only THIS micro-
@@ -506,6 +502,7 @@ def stream_clean_increment(
                 ).parquet(os.path.join(corpus_dir, "embbands", ep))
             ledger.write_json(f"epoch={epoch_id}.json", {"epoch": int(epoch_id)})
         finally:
+            from facturas_spark.analytics.cache import free_block_ids
             from facturas_spark.analytics.corpus_clean import (
                 release_stage_caches,
             )
@@ -514,11 +511,7 @@ def stream_clean_increment(
                 _df.unpersist()
             # drop the checkpointed frames' blocks by recorded RDD id —
             # safe, they're per-batch-only and the epoch writes are done
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for _rid in _ckpt_rdd_ids:
-                _jrdd = jmap.get(_rid)
-                if _jrdd is not None:
-                    _jrdd.unpersist(True)
+            free_block_ids(spark, _ckpt_rdd_ids)
             release_stage_caches()
             _scope.__exit__(None, None, None)
 

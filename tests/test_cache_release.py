@@ -186,42 +186,3 @@ def test_component_loop_footprint_bounded(spark, clean_registry):
         for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
     }
     assert not (end - before), "release must drain all loop blocks"
-
-
-def test_star_component_loop_footprint_bounded(spark, clean_registry):
-    from facturas_spark.analytics.dedup import _star_components
-
-    before = {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "id1 long, id2 long"
-    )
-    labels = _star_components(pairs)
-    assert labels.filter("cluster_id = 0").count() == 13
-    after = {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
-    # alive: pairs ckpt + nodes + FINAL edge set (superseded rounds freed)
-    assert len(after - before) <= 4, sorted(after - before)
-    C.release_session_cache(spark)
-    end = {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
-    assert not (end - before)
-
-
-def test_component_partitions_env_validated(spark, monkeypatch):
-    from facturas_spark.analytics.dedup import _component_layout
-
-    pairs = spark.createDataFrame([(1, 2)], "a long, b long")
-    for bad in ("0", "-3", "lots"):
-        monkeypatch.setenv("SPARK_GRAFT_COMPONENT_PARTITIONS", bad)
-        with pytest.raises(ValueError, match="SPARK_GRAFT_COMPONENT_PARTITIONS"):
-            _component_layout(pairs, None)
-    monkeypatch.setenv("SPARK_GRAFT_COMPONENT_PARTITIONS", "4")
-    _, n = _component_layout(pairs, None)
-    assert n == 4

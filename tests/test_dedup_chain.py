@@ -109,12 +109,40 @@ def test_embedding_lsh_short_vectors_band_gated(spark, tmp_path):
     assert D.dedup_embedding_lsh(spark, str(tmp_path)).count() == 0
 
 
+def _union_find_labels(edges):
+    """Plain-Python reference for the component operators: union-find
+    rooted at the component minimum, so every node's root is its
+    expected cluster_id."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in parent}
+
+
 def test_components_partitioned_path_identical(spark):
     """The cluster-scale layout (hash-partitioned N-way co-partitioned
     joins, no broadcast, no coalesce(1)) produces exactly the labels of
     the sandbox layout on a graph with a chain, a triangle, a 2-clique
-    and an isolated pair."""
+    and an isolated pair. Both layouts also match a plain-Python
+    union-find on fixed shapes — a DEEP chain (min-label's worst case,
+    one loop round per link), a reversed pair, a self-loop — and on
+    seeded random graphs."""
+    import random
+
     from facturas_spark.analytics.dedup import _min_label_components
+
+    def labels(df):
+        return {(r["doc_id"], r["cluster_id"]) for r in df.collect()}
 
     edges = [
         (1, 2), (2, 3), (3, 4),        # chain -> cluster 1
@@ -123,20 +151,31 @@ def test_components_partitioned_path_identical(spark):
         (30, 31),                      # pair -> cluster 30
     ]
     pairs = spark.createDataFrame(edges, "id1 long, id2 long")
-    base = {
-        (r["doc_id"], r["cluster_id"])
-        for r in _min_label_components(pairs).collect()
-    }
-    part = {
-        (r["doc_id"], r["cluster_id"])
-        for r in _min_label_components(pairs, partitions=8).collect()
-    }
+    base = labels(_min_label_components(pairs))
+    part = labels(_min_label_components(pairs, partitions=8))
     assert base == part
     assert base == {
         (1, 1), (2, 1), (3, 1), (4, 1),
         (10, 10), (11, 10), (12, 10),
         (20, 20), (21, 20), (30, 30), (31, 30),
     }
+
+    shapes = [
+        [(i, i + 1) for i in range(1, 30)],          # depth-29 chain
+        [(2, 1)],                                    # reversed order pair
+        [(5, 5), (6, 7)],                            # self-loop
+    ]
+    rng = random.Random(7)
+    for _ in range(3):
+        n = rng.randrange(5, 30)
+        shapes.append(
+            [(rng.randrange(n), rng.randrange(n)) for _ in range(n)]
+        )
+    for edges in shapes:
+        want = _union_find_labels(edges)
+        pairs = spark.createDataFrame(edges, "id1 long, id2 long")
+        assert labels(_min_label_components(pairs)) == want, edges
+        assert labels(_min_label_components(pairs, partitions=4)) == want, edges
 
 
 def test_xxhash64_family_same_clusters(spark):
@@ -156,57 +195,11 @@ def test_xxhash64_family_same_clusters(spark):
     assert len(md5_rows) > 0
 
 
-def test_star_components_equal_min_label(spark):
-    """Large-star/small-star (the deep-component safety valve) produces
-    exactly min-label's (doc_id, cluster_id) labels — fixed shapes
-    including a DEEP chain (min-label's worst case), plus randomized
-    graphs, plus the env-flag dispatch and the partitioned layout."""
-    import os
-    import random
-
-    from facturas_spark.analytics.dedup import (
-        _min_label_components,
-        _star_components,
-    )
-
-    def labels(df):
-        return {(r["doc_id"], r["cluster_id"]) for r in df.collect()}
-
-    fixed = [
-        [(1, 2), (2, 3), (3, 4)],
-        [(10, 11), (11, 12), (10, 12), (20, 21)],
-        [(i, i + 1) for i in range(1, 30)],          # depth-29 chain
-        [(2, 1)],                                    # reversed order pair
-        [(5, 5), (6, 7)],                            # self-loop ignored
-    ]
-    rng = random.Random(7)
-    for _ in range(3):
-        n = rng.randrange(5, 30)
-        fixed.append(
-            [(rng.randrange(n), rng.randrange(n)) for _ in range(n)]
-        )
-    for edges in fixed:
-        pairs = spark.createDataFrame(edges, "id1 long, id2 long")
-        want = labels(_min_label_components(pairs))
-        assert labels(_star_components(pairs)) == want, edges
-        assert labels(_star_components(pairs, partitions=4)) == want, edges
-
-    # env-flag dispatch: _min_label_components itself routes to star
-    pairs = spark.createDataFrame(fixed[2], "id1 long, id2 long")
-    want = labels(_min_label_components(pairs))
-    os.environ["SPARK_GRAFT_COMPONENT_ALGO"] = "star"
-    try:
-        assert labels(_min_label_components(pairs)) == want
-    finally:
-        del os.environ["SPARK_GRAFT_COMPONENT_ALGO"]
-
-
-def test_components_adaptive_layout_threshold(spark):
+def test_components_adaptive_layout_threshold(spark, monkeypatch):
     """_component_layout auto-selects the N-way co-partitioned loop once
-    the materialized pair count crosses the threshold (env-overridable),
-    with identical labels either side of the switch."""
-    import os
-
+    the materialized pair count crosses COMPONENT_AUTO_THRESHOLD, with
+    identical labels either side of the switch."""
+    from facturas_spark.analytics import dedup as D
     from facturas_spark.analytics.dedup import (
         _component_layout,
         _min_label_components,
@@ -219,8 +212,8 @@ def test_components_adaptive_layout_threshold(spark):
     _, p = _component_layout(pairs, None)
     assert p is None
 
-    os.environ["SPARK_GRAFT_COMPONENT_AUTO_THRESHOLD"] = "10"
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(D, "COMPONENT_AUTO_THRESHOLD", 10)
         _, p = _component_layout(pairs, None)
         assert p is not None and p >= 2
         # the adaptive run (threshold crossed -> partitioned loop) keeps
@@ -231,8 +224,6 @@ def test_components_adaptive_layout_threshold(spark):
             for r in _min_label_components(pairs).collect()
         }
         assert got == want
-    finally:
-        del os.environ["SPARK_GRAFT_COMPONENT_AUTO_THRESHOLD"]
 
     # explicit argument always wins over the adaptive count
     _, p = _component_layout(pairs, 4)

@@ -105,6 +105,37 @@ def _extracted(spark, out: str) -> set:
     return {tuple(r) for r in cols.collect()}
 
 
+def _crash_after_commits(spark, df, out: str, k: int, monkeypatch) -> list:
+    """Run run_with_resume with a manifest commit that raises after k
+    commits (every bucket is already written by then); returns the
+    buckets that did commit."""
+    real_commit = LineageManifest.commit
+    committed = []
+
+    def flaky_commit(self, bucket, rows, digest):
+        if len(committed) == k:
+            raise OSError("injected commit failure")
+        real_commit(self, bucket, rows, digest)
+        committed.append(bucket)
+
+    monkeypatch.setattr(LineageManifest, "commit", flaky_commit)
+    with pytest.raises(OSError, match="injected"):
+        run_with_resume(spark, df, out, n_buckets=4)
+    monkeypatch.setattr(LineageManifest, "commit", real_commit)
+    assert set(_manifest(out)) == set(committed) and len(committed) == k
+    return committed
+
+
+def _bucket_bytes(out: str, bucket: int) -> dict[str, bytes]:
+    """Every file under one bucket's partition directory, by name."""
+    part = os.path.join(out, "extracted", f"bucket={bucket}")
+    files = {}
+    for name in sorted(os.listdir(part)):
+        with open(os.path.join(part, name), "rb") as fh:
+            files[name] = fh.read()
+    return files
+
+
 @pytest.mark.parametrize("k", [0, 2])
 def test_run_with_resume_commit_failure_injection(spark, tmp_path, monkeypatch, k):
     """Crash after k of n manifest commits, with every bucket already
@@ -117,21 +148,8 @@ def test_run_with_resume_commit_failure_injection(spark, tmp_path, monkeypatch, 
     n = len(ref["processed"])
     assert n == 4  # every bucket populated, so a resume always has work
 
-    real_commit = LineageManifest.commit
-    committed = []
-
-    def flaky_commit(self, bucket, rows, digest):
-        if len(committed) == k:
-            raise OSError("injected commit failure")
-        real_commit(self, bucket, rows, digest)
-        committed.append(bucket)
-
     out = str(tmp_path / "crash")
-    monkeypatch.setattr(LineageManifest, "commit", flaky_commit)
-    with pytest.raises(OSError, match="injected"):
-        run_with_resume(spark, df, out, n_buckets=4)
-    monkeypatch.setattr(LineageManifest, "commit", real_commit)
-    assert set(_manifest(out)) == set(committed) and len(committed) == k
+    committed = _crash_after_commits(spark, df, out, k, monkeypatch)
 
     r = run_with_resume(spark, df, out, n_buckets=4)
     assert sorted(r["skipped"]) == sorted(committed)
@@ -141,6 +159,50 @@ def test_run_with_resume_commit_failure_injection(spark, tmp_path, monkeypatch, 
     assert r["rows"] == sum(ref_manifest[b][0] for b in r["processed"])
     assert _manifest(out) == ref_manifest
     assert _extracted(spark, out) == _extracted(spark, ref_out)
+
+
+def test_run_with_resume_after_input_rewrite(spark, tmp_path, monkeypatch):
+    """S6 contract when the input changes between a crash and its
+    resume: the ledger is per bucket, not per input version. A crash
+    commits 2 of 4 buckets, then every page's text is rewritten. The
+    rerun keeps the 2 committed buckets as they were (manifest digest
+    and parquet bytes) and extracts the 2 pending buckets from the new
+    text, exactly as a fresh run over the rewritten input would."""
+    df = spark.createDataFrame(corpus_rows(60, seed=42), PAGES_SCHEMA_DDL)
+    marker = "FACTURA REESCRITA"
+    rewritten = df.withColumn(
+        "text", F.concat(F.lit(marker + "\n"), F.coalesce("text", F.lit("")))
+    )
+    old_ref, new_ref = str(tmp_path / "ref_old"), str(tmp_path / "ref_new")
+    run_with_resume(spark, df, old_ref, n_buckets=4)
+    run_with_resume(spark, rewritten, new_ref, n_buckets=4)
+    old_m, new_m = _manifest(old_ref), _manifest(new_ref)
+    assert set(old_m) == set(new_m) == {0, 1, 2, 3}
+    assert all(old_m[b][1] != new_m[b][1] for b in old_m)  # rewrite shows
+
+    out = str(tmp_path / "crash")
+    committed = _crash_after_commits(spark, df, out, 2, monkeypatch)
+    pending = sorted(set(old_m) - set(committed))
+    kept_bytes = {b: _bucket_bytes(out, b) for b in committed}
+
+    r = run_with_resume(spark, rewritten, out, n_buckets=4)
+    assert sorted(r["skipped"]) == sorted(committed)
+    assert r["processed"] == pending
+    got = _manifest(out)
+    for b in committed:
+        assert got[b] == old_m[b]
+        assert _bucket_bytes(out, b) == kept_bytes[b]
+    for b in pending:
+        assert got[b] == new_m[b]
+    want = {
+        row for row in _extracted(spark, old_ref) if row[0] in committed
+    } | {row for row in _extracted(spark, new_ref) if row[0] in pending}
+    assert _extracted(spark, out) == want
+    texts = spark.read.parquet(os.path.join(out, "extracted")).collect()
+    assert all(
+        t.extracted_text.startswith(marker) == (t.bucket in pending)
+        for t in texts
+    )
 
 
 def test_stream_extract_incremental(spark, tmp_path):

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from facturas_spark.extraction.boilerplate import extract_main_text
 from facturas_spark.sources.pdf import encode_pdf, pdf_extract_text
 
@@ -41,6 +44,14 @@ def test_hostile_pdfs_never_raise():
     # broken Flate body is skipped, not fatal
     broken = b"%PDF-1.4\n1 0 obj << /Length 4 /Filter /FlateDecode >>\nstream\nXXXX\nendstream"
     assert pdf_extract_text(broken) == ""
+
+
+@given(st.binary(min_size=0, max_size=400))
+@settings(max_examples=80, deadline=None)
+def test_pdf_extract_text_total_on_junk(junk):
+    """The PDF extractor never raises and always terminates: arbitrary
+    bytes behind the ``%PDF`` magic yield a string."""
+    assert isinstance(pdf_extract_text(b"%PDF-1.4" + junk), str)
 
 
 def test_extract_main_text_routes_pdf():

@@ -312,7 +312,7 @@ def test_incremental_ckpt_guard_adaptive(spark, monkeypatch):
         tuple(r) for r in D.dedup_incremental(spark, SF).collect()
     )
     # threshold 0 forces every candidate set onto the checkpoint path
-    monkeypatch.setenv("SPARK_GRAFT_INCR_CKPT_THRESHOLD", "0")
+    monkeypatch.setattr(D, "INCR_CKPT_THRESHOLD", 0)
     forced = sorted(
         tuple(r) for r in D.dedup_incremental(spark, SF).collect()
     )

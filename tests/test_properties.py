@@ -135,3 +135,25 @@ def test_similarity_bounded(a, b):
 @settings(max_examples=100)
 def test_comparar_reflexive(a):
     assert comparar_productos_py(a, a) is True
+
+
+# ---- extraction-kernel fuzz: crawl reality is arbitrary bytes ----------
+@settings(max_examples=60, deadline=None)
+@given(
+    html=st.one_of(st.none(), st.binary(max_size=400)),
+    text=st.one_of(st.none(), st.text(max_size=400)),
+)
+def test_extract_header_kernel_total_on_arbitrary_input(html, text):
+    """The fused header kernel must be TOTAL over crawl reality — None,
+    arbitrary binary (invalid UTF-8 included), control chars, lone
+    surrogates in text — returning exactly one well-typed row per doc."""
+    from facturas_spark.extraction.udf import extract_batch_header
+
+    out = extract_batch_header([html], [text])
+    assert len(out) == 1
+    row = out.iloc[0]
+    assert isinstance(row["extracted_text"], str)
+    assert row["tipo_documento"] in (
+        "factura", "albaran", "ticket", "presupuesto", "desconocido", "otro",
+    ) or isinstance(row["tipo_documento"], str)
+    assert 0.0 <= row["confianza_global"] <= 1.0

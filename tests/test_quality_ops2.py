@@ -356,25 +356,6 @@ def test_bigram_offset_plan_has_no_global_window(spark):
     assert "SortMergeJoin" not in scoring
 
 
-def test_bigram_zipf_head_cut_self_consistent(spark, bigram_dir):
-    """head_min_count=2 drops the count-1 LM entries ('c c'); a dropped
-    bigram must score exactly as an unseen one (c2=0 + add-one floor)."""
-    import math
-
-    from facturas_spark.analytics.dedup import txt_bigram_lm_ppl
-
-    rows = {
-        r["doc_id"]: r
-        for r in txt_bigram_lm_ppl(spark, bigram_dir, head_min_count=2).collect()
-    }
-    # doc 7 'c c': bigram 'c c' (c2=1) is cut, unigram c (cu=2) survives
-    # -> p = 0.7*0 + 0.3*(2+1)/(8+3) — the dropped bigram scores exactly
-    # as an unseen one while the back-off floor keeps its true count
-    assert rows[7]["nll"] == round(-math.log(0.3 * 3 / 11), 4)
-    # doc 1 'a b' keeps its full-table score (a, b, 'a b' all count>=2)
-    assert rows[1]["nll"] == round(-math.log(0.7 + 0.3 * 4 / 11), 4)
-
-
 def test_bigram_empty_training_slice_yields_no_rows(spark, tmp_path_factory):
     """Corpus whose %7 training slice has NO tokens (doc 0 is empty,
     doc 7 absent): n_total aggregates to NULL and every doc's nll is
@@ -395,13 +376,11 @@ def test_bigram_empty_training_slice_yields_no_rows(spark, tmp_path_factory):
         assert txt_bigram_lm_ppl(spark, sf, tercile_mode=mode).count() == 0
 
 
-def test_bigram_tercile_mode_env_and_validation(spark, bigram_dir, monkeypatch):
+def test_bigram_tercile_mode_validation(spark, bigram_dir):
     from facturas_spark.analytics.dedup import txt_bigram_lm_ppl
 
-    monkeypatch.setenv("SPARK_GRAFT_BIGRAM_TERCILE", "window")
-    df = txt_bigram_lm_ppl(spark, bigram_dir)
+    df = txt_bigram_lm_ppl(spark, bigram_dir, tercile_mode="window")
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ntile" in plan  # env valve reaches the default resolution
-    monkeypatch.setenv("SPARK_GRAFT_BIGRAM_TERCILE", "bogus")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_BIGRAM_TERCILE"):
-        txt_bigram_lm_ppl(spark, bigram_dir)
+    assert "ntile" in plan  # the literal reference form
+    with pytest.raises(ValueError, match="tercile_mode"):
+        txt_bigram_lm_ppl(spark, bigram_dir, tercile_mode="bogus")
