@@ -29,8 +29,12 @@ from facturas_spark.extraction.textparse import classify_document, extract_field
 __all__ = [
     "EXTRACTED_SCHEMA",
     "PRODUCT_SCHEMA",
+    "HEADER_SCHEMA",
     "FULL_SCHEMA",
+    "extract_batch",
+    "extract_batch_header",
     "extract_doc_udf",
+    "extract_header_udf",
 ]
 
 EXTRACTED_SCHEMA = StructType(
@@ -82,61 +86,6 @@ _PRODUCT_COLS = [f.name for f in PRODUCT_SCHEMA.fields]
 # PythonEvalExec with its own worker per task — at 32 tasks x 4 chained UDFs
 # that's 128 concurrent Python workers and 4 Arrow round-trips per row.
 # Fusing keeps it at one worker per task and one Arrow transfer.
-FULL_SCHEMA = StructType(
-    [
-        StructField("extracted_text", StringType()),
-        StructField("tipo_documento", StringType()),
-        StructField("confianza_clasificacion", DoubleType()),
-        *EXTRACTED_SCHEMA.fields,
-        StructField("productos", ArrayType(PRODUCT_SCHEMA)),
-    ]
-)
-
-
-def extract_batch(html, text) -> pd.DataFrame:
-    """The fused per-batch kernel (shared by the pandas UDF and the
-    accumulator-instrumented mapInPandas path): boilerplate strip ->
-    classify -> field extraction -> line-item extraction."""
-    rows = []
-    for h, t in zip(html, text):
-        doc_text = t if isinstance(t, str) and t else extract_main_text(h)
-        tipo, conf, _ = classify_document(doc_text)
-        f = extract_fields(doc_text)
-        prods = extract_products(doc_text, f.tipo_iva)
-        rows.append(
-            (
-                doc_text,
-                tipo,
-                conf,
-                f.proveedor_nombre,
-                f.proveedor_cif,
-                f.numero_factura,
-                f.fecha_factura,
-                f.total_factura,
-                f.base_imponible,
-                f.cuota_iva,
-                f.tipo_iva,
-                f.confianza_global,
-                f.confianza_proveedor,
-                f.confianza_datos_fiscales,
-                f.confianza_importes,
-                [tuple(map(p.get, _PRODUCT_COLS)) for p in prods],
-            )
-        )
-    return pd.DataFrame(rows, columns=[fld.name for fld in FULL_SCHEMA.fields])
-
-
-@pandas_udf(FULL_SCHEMA)
-def extract_doc_udf(html: pd.Series, text: pd.Series) -> pd.DataFrame:
-    """Fused doc pipeline: one Python pass per Arrow batch."""
-    return extract_batch(html, text)
-
-
-# Header-only variant: the 10^12-doc header pipeline (extract_pages) never
-# reads ``productos``, but the full UDF still computed the line items (~43%
-# of kernel time) and shipped the nested array<struct> back through Arrow —
-# whose ColumnVector->UnsafeRow copy dominated the JVM side of the job.
-# Computing only what the job consumes cut the sf0.1 bench wall ~2x.
 HEADER_SCHEMA = StructType(
     [
         StructField("extracted_text", StringType()),
@@ -145,41 +94,68 @@ HEADER_SCHEMA = StructType(
         *EXTRACTED_SCHEMA.fields,
     ]
 )
+FULL_SCHEMA = StructType(
+    [*HEADER_SCHEMA.fields, StructField("productos", ArrayType(PRODUCT_SCHEMA))]
+)
+_HEADER_COLS = HEADER_SCHEMA.fieldNames()
+_FULL_COLS = FULL_SCHEMA.fieldNames()
 
 
-def extract_batch_header(html, text) -> pd.DataFrame:
-    """Fused header kernel: boilerplate strip -> classify -> fields.
-    Identical to :func:`extract_batch` minus line-item extraction."""
+def extract_batch(html, text, products: bool = True) -> pd.DataFrame:
+    """The fused per-batch kernel (shared by the pandas UDFs and the
+    accumulator-instrumented mapInPandas path): boilerplate strip ->
+    classify -> field extraction -> line-item extraction.
+
+    ``products=False`` skips the line items and returns the
+    :data:`HEADER_SCHEMA` columns; every other column is the same."""
     rows = []
     for h, t in zip(html, text):
         doc_text = t if isinstance(t, str) and t else extract_main_text(h)
         tipo, conf, _ = classify_document(doc_text)
         f = extract_fields(doc_text)
-        rows.append(
-            (
-                doc_text,
-                tipo,
-                conf,
-                f.proveedor_nombre,
-                f.proveedor_cif,
-                f.numero_factura,
-                f.fecha_factura,
-                f.total_factura,
-                f.base_imponible,
-                f.cuota_iva,
-                f.tipo_iva,
-                f.confianza_global,
-                f.confianza_proveedor,
-                f.confianza_datos_fiscales,
-                f.confianza_importes,
-            )
+        row = (
+            doc_text,
+            tipo,
+            conf,
+            f.proveedor_nombre,
+            f.proveedor_cif,
+            f.numero_factura,
+            f.fecha_factura,
+            f.total_factura,
+            f.base_imponible,
+            f.cuota_iva,
+            f.tipo_iva,
+            f.confianza_global,
+            f.confianza_proveedor,
+            f.confianza_datos_fiscales,
+            f.confianza_importes,
         )
-    return pd.DataFrame(rows, columns=[fld.name for fld in HEADER_SCHEMA.fields])
+        if products:
+            prods = extract_products(doc_text, f.tipo_iva)
+            row += ([tuple(map(p.get, _PRODUCT_COLS)) for p in prods],)
+        rows.append(row)
+    return pd.DataFrame(rows, columns=_FULL_COLS if products else _HEADER_COLS)
 
 
+def extract_batch_header(html, text) -> pd.DataFrame:
+    """Fused header kernel: :func:`extract_batch` without line items."""
+    return extract_batch(html, text, products=False)
+
+
+@pandas_udf(FULL_SCHEMA)
+def extract_doc_udf(html: pd.Series, text: pd.Series) -> pd.DataFrame:
+    """Fused doc pipeline: one Python pass per Arrow batch."""
+    return extract_batch(html, text)
+
+
+# Header-only variant: the header pipelines (extract_pages and the S5/S6
+# sink in sources.io) never read ``productos``, but the full UDF still
+# computes the line items (~43% of kernel time) and ships the nested
+# array<struct> back through Arrow — whose ColumnVector->UnsafeRow copy
+# dominated the JVM side of the job. Computing only what the job consumes
+# cut the sf0.1 bench wall ~2x.
 @pandas_udf(HEADER_SCHEMA)
 def extract_header_udf(html: pd.Series, text: pd.Series) -> pd.DataFrame:
     """Fused header pipeline: one Python pass per Arrow batch, no
     line-item computation or transfer."""
     return extract_batch_header(html, text)
-

@@ -25,10 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from facturas_spark.extraction.udf import extract_doc_udf
+from facturas_spark.extraction.udf import extract_doc_udf, extract_header_udf
 
 __all__ = [
     "extract_pages_full",
+    "extract_pages_header",
     "extract_pages",
     "extract_products_table",
     "with_salt_bucket",
@@ -49,21 +50,24 @@ def extract_pages_full(pages: DataFrame) -> DataFrame:
     ).select("url", "warc_ts", "lang", F.col("_d.*"))
 
 
-def extract_pages(pages: DataFrame) -> DataFrame:
-    """Header-fields pipeline (no product array), plus the C2 review gate:
-    confianza < 0.8 flags the document for manual review — processing
-    continues (process-invoice/index.ts:4649-4696).
+def extract_pages_header(pages: DataFrame) -> DataFrame:
+    """:func:`extract_pages_full` without the ``productos`` column.
 
     Uses the header-only fused UDF rather than extract_pages_full().drop():
     dropping ``productos`` after the UDF still paid for the line-item
     extraction in Python AND the nested array's Arrow transfer + UnsafeRow
     conversion in the JVM — ~2x the wall clock of this job at sf0.1."""
-    from facturas_spark.extraction.udf import extract_header_udf
+    return pages.withColumn(
+        "_d", extract_header_udf(F.col("html"), F.col("text"))
+    ).select("url", "warc_ts", "lang", F.col("_d.*"))
 
-    return (
-        pages.withColumn("_d", extract_header_udf(F.col("html"), F.col("text")))
-        .select("url", "warc_ts", "lang", F.col("_d.*"))
-        .withColumn("requiere_revision", F.col("confianza_global") < 0.8)
+
+def extract_pages(pages: DataFrame) -> DataFrame:
+    """Header-fields pipeline (no product array), plus the C2 review gate:
+    confianza < 0.8 flags the document for manual review — processing
+    continues (process-invoice/index.ts:4649-4696)."""
+    return extract_pages_header(pages).withColumn(
+        "requiere_revision", F.col("confianza_global") < 0.8
     )
 
 
@@ -116,7 +120,7 @@ def extract_products_table(extracted_full: DataFrame) -> DataFrame:
     )
 
 
-def with_salt_bucket(df: DataFrame, n_buckets: int = 256, url_col: str = "url") -> DataFrame:
+def with_salt_bucket(df: DataFrame, *, n_buckets: int, url_col: str = "url") -> DataFrame:
     """Write-side bucket column: xxhash64(url) mod n_buckets.
 
     Emulates Iceberg ``bucket(N, url)`` partitioning; hashing the full url

@@ -5,11 +5,25 @@
   ``whatsapp_`` name prefix are always jpeg; default pdf).
 - :func:`write_bucketed`     — S5 row sink: parquet partitioned by
   ``bucket = xxhash64(url) % N`` (emulates Iceberg ``bucket(N, url)``;
-  full-url hashing breaks host skew at the storage layer).
+  full-url hashing breaks host skew at the storage layer). Rows are
+  clustered by bucket before the write (Iceberg's ``hash``
+  write-distribution), so each bucket gets one file rather than one per
+  input split.
 - :class:`LineageManifest` / :func:`run_with_resume` — S6 processing-state
   machine re-expressed at partition granularity: a JSON ledger of committed
-  buckets (rows + metric digest each); re-runs skip committed buckets and
-  are idempotent. This is the north rule's checkpointed-lineage resume.
+  buckets (rows + metric digest each) plus the bucket count they were
+  hashed under; re-runs skip committed buckets and are idempotent. This is
+  the north rule's checkpointed-lineage resume.
+
+The one exchange in the sink pays for itself. Without it every scan split
+writes its own file into every bucket it touches: splits x buckets files
+(64 for 1600 pages in 16 buckets on 4 cores), each with its own output
+stream, footer, commit rename and checksum file, and the manifest's digest
+read-back then opens all of them. The exchange moves only the extracted
+header rows (the html is gone by then, ~0.25 KB/doc), after the single
+Python eval, and leaves one file per bucket. Under AQE a rebalance, unlike
+a plain repartition, may still split an oversized bucket into files of the
+advisory partition size.
 
 At 10^12 docs the manifest is per (bucket, snapshot) — tiny relative to
 data — and the write path is overwrite-by-partition, so a mid-job failure
@@ -24,9 +38,11 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from facturas_spark.pipeline import extract_pages_full, with_salt_bucket
+from facturas_spark.pipeline import extract_pages_header, with_salt_bucket
 
 __all__ = ["mime_from_url", "write_bucketed", "LineageManifest", "run_with_resume"]
+
+_LAYOUT = "layout.json"
 
 
 def mime_from_url(url: Column) -> Column:
@@ -42,10 +58,11 @@ def mime_from_url(url: Column) -> Column:
     )
 
 
-def write_bucketed(df: DataFrame, path: str, n_buckets: int = 16) -> None:
+def write_bucketed(df: DataFrame, path: str, *, n_buckets: int) -> None:
     """S5: write partitioned by url-hash bucket (dynamic overwrite so a
-    re-run replaces exactly the buckets it processed — idempotent)."""
-    out = with_salt_bucket(df, n_buckets=n_buckets)
+    re-run replaces exactly the buckets it processed — idempotent), one
+    file per bucket."""
+    out = with_salt_bucket(df, n_buckets=n_buckets).hint("rebalance", "bucket")
     (
         out.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -57,7 +74,8 @@ def write_bucketed(df: DataFrame, path: str, n_buckets: int = 16) -> None:
 @dataclass
 class LineageManifest:
     """Committed-bucket ledger: one JSON marker per committed bucket under
-    ``<dir>/_manifest/bucket=<k>.json`` with rows + metric digest.
+    ``<dir>/_manifest/bucket=<k>.json`` with rows + metric digest, and
+    ``layout.json`` with the bucket count they were hashed under.
 
     I/O goes through :class:`facturas_spark.sources.fs.CommitFS` — the
     JVM Hadoop FileSystem API — so the ledger works unchanged against
@@ -85,44 +103,55 @@ class LineageManifest:
         entry = {"bucket": bucket, "rows": rows, "digest": digest}
         self._fs.write_json(f"bucket={bucket}.json", entry)
 
+    def pin_layout(self, n_buckets: int) -> None:
+        """Record ``n_buckets`` on first use; raise ``ValueError`` when a
+        rerun asks for another count. A committed bucket's number means
+        nothing under another modulus: skipping it would skip the wrong
+        urls and write the rest a second time."""
+        if _LAYOUT not in self._fs.list_names():
+            self._fs.write_json(_LAYOUT, {"n_buckets": n_buckets})
+            return
+        pinned = int(self._fs.read_json(_LAYOUT)["n_buckets"])
+        if pinned != n_buckets:
+            raise ValueError(
+                f"{self.manifest_dir} was written with n_buckets={pinned}; "
+                f"a rerun with n_buckets={n_buckets} would duplicate rows"
+            )
+
 
 def run_with_resume(
     spark: SparkSession,
     pages: DataFrame,
     out_dir: str,
-    n_buckets: int = 8,
+    *,
+    n_buckets: int,
 ) -> dict:
     """Extraction with per-bucket checkpointed resume (S6 semantics).
 
     Plan: bucket the input by url hash; skip buckets already in the
-    manifest; run the fused extraction on the remaining buckets in ONE job
-    (single scan + single write, not a per-bucket loop); commit each
-    processed bucket's manifest entry after the write succeeds.
+    manifest; run the fused header extraction on the remaining buckets in
+    ONE job (single scan + single write through :func:`write_bucketed`,
+    not a per-bucket loop); commit each processed bucket's manifest entry
+    after the write succeeds. Raises ``ValueError`` when ``out_dir`` was
+    written with another ``n_buckets``.
 
     Returns {"processed": [...], "skipped": [...], "rows": n}.
     """
     manifest = LineageManifest(os.path.join(out_dir, "_manifest"))
+    manifest.pin_layout(n_buckets)
     done = set(manifest.committed())
 
-    bucketed = with_salt_bucket(pages, n_buckets=n_buckets)
-    todo = bucketed.filter(~F.col("bucket").isin(*done) if done else F.lit(True))
+    todo = with_salt_bucket(pages, n_buckets=n_buckets)
+    if done:
+        todo = todo.filter(~F.col("bucket").isin(*done))
 
-    # bucket is a pure function of url — recompute after extraction instead
-    # of joining back (keeps the job a single scan with zero shuffles before
-    # the partitioned write)
-    extracted = with_salt_bucket(
-        extract_pages_full(todo.select("url", "warc_ts", "html", "text", "lang")),
+    # bucket is a pure function of url: write_bucketed recomputes it after
+    # extraction instead of carrying it through the Python eval; its
+    # exchange comes after the eval, so it moves extracted rows, not html
+    write_bucketed(
+        extract_pages_header(todo.select("url", "warc_ts", "html", "text", "lang")),
+        os.path.join(out_dir, "extracted"),
         n_buckets=n_buckets,
-    )
-
-    # one write for all pending buckets (dynamic partition overwrite keeps
-    # committed buckets' data intact and re-runs idempotent)
-    (
-        extracted.drop("productos")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(os.path.join(out_dir, "extracted"))
     )
 
     # per-bucket stats from what we just wrote -> manifest commits.

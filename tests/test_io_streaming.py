@@ -205,6 +205,90 @@ def test_run_with_resume_after_input_rewrite(spark, tmp_path, monkeypatch):
     )
 
 
+def test_run_with_resume_rejects_other_bucket_count(spark, tmp_path):
+    """A rerun with another ``n_buckets`` raises instead of skipping
+    committed bucket numbers hashed under the old modulus (which left 88
+    rows for 60 pages: 4 -> 8 skipped buckets 0-3 of the new layout)."""
+    df = spark.createDataFrame(corpus_rows(60, seed=42), PAGES_SCHEMA_DDL)
+    out = str(tmp_path / "job")
+    run_with_resume(spark, df, out, n_buckets=4)
+    with pytest.raises(ValueError, match=r"n_buckets=4\b.*n_buckets=8\b"):
+        run_with_resume(spark, df, out, n_buckets=8)
+    assert spark.read.parquet(os.path.join(out, "extracted")).count() == 60
+    assert run_with_resume(spark, df, out, n_buckets=4)["processed"] == []
+
+
+def _python_evals(plan) -> list:
+    """Every ArrowEvalPython node of a JVM physical plan."""
+    found = [plan] if plan.nodeName() == "ArrowEvalPython" else []
+    kids = plan.children()
+    for i in range(kids.size()):
+        found += _python_evals(kids.apply(i))
+    return found
+
+
+def test_run_with_resume_header_kernel_ab(spark, tmp_path, monkeypatch):
+    """The S5/S6 sink runs the header-only kernel and writes one file per
+    bucket, with the rows and manifest digests of the full kernel."""
+    import hashlib
+
+    from facturas_spark.pipeline import extract_pages_full, with_salt_bucket
+
+    rows = corpus_rows(80, seed=7)
+    assert any(r[3] is None for r in rows)  # html-only pages
+    df = spark.createDataFrame(rows, PAGES_SCHEMA_DDL)
+    assert df.rdd.getNumPartitions() > 1  # else one file per bucket is free
+    full = with_salt_bucket(extract_pages_full(df), n_buckets=4)
+    want = full.drop("productos")
+
+    written = []
+
+    def spy(extracted, path, *, n_buckets):
+        written.append(extracted)
+        write_bucketed(extracted, path, n_buckets=n_buckets)
+
+    monkeypatch.setattr("facturas_spark.sources.io.write_bucketed", spy)
+    out = str(tmp_path / "job")
+    assert run_with_resume(spark, df, out, n_buckets=4)["processed"] == [0, 1, 2, 3]
+
+    (extracted,) = written
+    evals = _python_evals(extracted._jdf.queryExecution().sparkPlan())
+    assert len(evals) == 1
+    assert "productos" not in evals[0].schema().simpleString()
+    assert "productos" not in extracted.columns
+
+    back = spark.read.parquet(os.path.join(out, "extracted"))
+    assert back.columns == want.columns
+
+    def by_url(df):
+        return sorted(df.collect(), key=lambda r: r.url)
+
+    assert by_url(back) == by_url(want)
+
+    per_bucket: dict[int, list[str]] = {}
+    for r in full.select("bucket", "extracted_text").collect():
+        per_bucket.setdefault(r.bucket, []).append(
+            hashlib.md5(r.extracted_text.encode()).hexdigest()
+        )
+    digests = {
+        b: hashlib.md5("|".join(sorted(hs)).encode()).hexdigest()
+        for b, hs in per_bucket.items()
+    }
+    assert {b: d for b, (_, d) in _manifest(out).items()} == digests
+
+    def parquet_files(b):
+        part = os.path.join(out, "extracted", f"bucket={b}")
+        return [f for f in os.listdir(part) if f.endswith(".parquet")]
+
+    assert all(len(parquet_files(b)) == 1 for b in range(4))
+    # a resume rewrites its buckets as one file each as well
+    for b in (0, 2):
+        os.remove(os.path.join(out, "_manifest", f"bucket={b}.json"))
+    assert run_with_resume(spark, df, out, n_buckets=4)["processed"] == [0, 2]
+    assert all(len(parquet_files(b)) == 1 for b in range(4))
+    assert {b: d for b, (_, d) in _manifest(out).items()} == digests
+
+
 def test_stream_extract_incremental(spark, tmp_path):
     from facturas_spark.streaming.stream import stream_extract_pages
 
