@@ -1,4 +1,5 @@
-"""Session-scoped DataFrame cache for bases shared across queries.
+"""Session-scoped DataFrame cache for bases shared across queries, and
+the one owner of scratch-frame lifetime.
 
 Several registry queries rebuild the same intermediate lineage
 (`_platos_base` feeds two esc_* queries; the ngram component labels feed
@@ -8,6 +9,15 @@ session is pure waste, so the first caller materializes the base with
 ``persist`` would keep the whole nested plan alive for re-analysis) —
 and later callers reuse it. Keyed by (applicationId, sf_dir, kind) so a
 new session or a different scale factor never sees stale data.
+
+Lifetime rule for scratch: every intermediate a build persists
+(``scratch_persist``) or checkpoints (``tracked_checkpoint``) belongs to
+the innermost ``scratch_scope`` open on its thread and is freed when
+that scope exits, whether the body succeeds or raises. Scratch made
+outside any scope goes on the loose ledger, which
+``release_session_cache`` drains. ``session_cached`` builds, the
+clean-corpus job's flag stage and each streaming clean micro-batch run
+inside a scope.
 
 At cluster scale the same role is played by a persisted staging table
 (the checkpoint is executor-local here because local mode has exactly
@@ -24,12 +34,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 _CACHE: dict[tuple, DataFrame] = {}
 
-# Serializes every before/after block-id delta window (here and
-# stream.py's per-batch _ck): two concurrent delta windows would
-# attribute each other's checkpoint RDDs, and releasing a checkpointed
-# frame another thread still holds is unrecoverable (no lineage).
-# Plain .persist() frames that slip into someone's window are merely
-# recomputable, so the lock only needs to cover localCheckpoint sites.
+# Serializes every before/after block-id delta window: two concurrent
+# delta windows would attribute each other's checkpoint RDDs, and
+# releasing a checkpointed frame another thread still holds is
+# unrecoverable (no lineage). Plain .persist() frames that slip into
+# someone's window are merely recomputable, so the lock only needs to
+# cover localCheckpoint sites.
 _ATTRIBUTION_LOCK = threading.Lock()
 # RDD ids materialized by each entry's eager localCheckpoint, captured at
 # creation so release_session_cache can free EXACTLY the blocks this
@@ -38,17 +48,12 @@ _ATTRIBUTION_LOCK = threading.Lock()
 # lineage to recompute from, so any surviving reference became unusable)
 _CACHE_RDD_IDS: dict[tuple, list[int]] = {}
 
-# Scratch attribution for checkpoints made INSIDE a session_cached build
-# (component-loop rounds, candidate frames): the entry's own checkpoint
-# holds the result, so every make()-internal block is dead weight the
-# moment the entry materializes. session_cached opens a thread-local
-# scope around make(); tracked_checkpoint appends to the active scope —
-# or, outside any build (top-level query paths), to the module loose
-# ledger that release_session_cache drains. Without this, make-internal
-# checkpoints linger until session teardown (the round-7-advice leak
-# class: scoped release can only free what it can attribute).
+# _SCRATCH.scope is the (block ids, persisted frames) pair of the
+# innermost scratch_scope open on this thread, None outside any scope.
+# The loose ledger below holds scratch registered outside every scope.
 _SCRATCH = threading.local()
 _LOOSE_IDS: list[int] = []
+_LOOSE_FRAMES: list[DataFrame] = []
 
 
 def _persistent_ids(spark: SparkSession) -> set[int]:
@@ -70,19 +75,44 @@ def free_block_ids(spark: SparkSession, ids) -> int:
     return n
 
 
-def tracked_checkpoint_ids(df: DataFrame) -> tuple[DataFrame, list[int]]:
-    """Eager localCheckpoint for SCRATCH frames, with the block ids both
-    registered for scoped release (active build scope, else the loose
-    ledger) and returned so iterative callers (the component loops) can
-    free superseded rounds as soon as the next round materializes."""
-    spark = df.sparkSession
-    out, ids = checkpoint_with_ids(spark, df)
-    scope = getattr(_SCRATCH, "ids", None)
+def _free_scratch(spark: SparkSession, ids, frames) -> int:
+    n = 0
+    for df in frames:
+        try:
+            df.unpersist()
+            n += 1
+        except Exception:  # its session already stopped: nothing to free
+            pass
+    return n + free_block_ids(spark, ids)
+
+
+def _register(ids=(), frames=()) -> None:
+    scope = getattr(_SCRATCH, "scope", None)
     if scope is not None:
-        scope.extend(ids)
+        scope[0].extend(ids)
+        scope[1].extend(frames)
     else:
         with _ATTRIBUTION_LOCK:
             _LOOSE_IDS.extend(ids)
+            _LOOSE_FRAMES.extend(frames)
+
+
+def scratch_persist(df: DataFrame) -> DataFrame:
+    """``df.persist()`` for a scratch frame, registered with the active
+    scratch_scope (else the loose ledger) so it is unpersisted once the
+    consuming action is done."""
+    df = df.persist()
+    _register(frames=[df])
+    return df
+
+
+def tracked_checkpoint_ids(df: DataFrame) -> tuple[DataFrame, list[int]]:
+    """Eager localCheckpoint for SCRATCH frames, with the block ids both
+    registered for scoped release (active scope, else the loose ledger)
+    and returned so iterative callers (the component loops) can free
+    superseded rounds as soon as the next round materializes."""
+    out, ids = checkpoint_with_ids(df.sparkSession, df)
+    _register(ids=ids)
     return out, ids
 
 
@@ -94,20 +124,18 @@ def tracked_checkpoint(df: DataFrame) -> DataFrame:
 
 @contextmanager
 def scratch_scope(spark: SparkSession):
-    """Attribute every tracked_checkpoint made on this thread inside the
-    ``with`` body to one scope, and free those blocks on exit (success or
-    failure). Used by session_cached around make() and by the streaming
-    sink around each micro-batch — any frame checkpointed inside serves
-    only that build/epoch. Nests: an inner scope frees only its own."""
-    outer = getattr(_SCRATCH, "ids", None)
-    scope: list[int] = []
-    _SCRATCH.ids = scope
+    """Attribute every scratch_persist and tracked_checkpoint made on this
+    thread inside the ``with`` body to one scope, and free them all on
+    exit (success or failure). Nests: an inner scope frees only its own."""
+    outer = getattr(_SCRATCH, "scope", None)
+    scope: tuple[list[int], list[DataFrame]] = ([], [])
+    _SCRATCH.scope = scope
     try:
-        yield scope
+        yield
     finally:
-        _SCRATCH.ids = outer
+        _SCRATCH.scope = outer
         try:
-            free_block_ids(spark, scope)
+            _free_scratch(spark, *scope)
         except Exception:
             pass  # a dying session must not mask the body's error
 
@@ -118,7 +146,7 @@ def checkpoint_with_ids(
     """Eagerly localCheckpoint ``df`` and return (frame, block RDD ids
     the checkpoint materialized), with the delta window held under
     _ATTRIBUTION_LOCK so concurrent checkpoint sites (session_cached
-    builds, stream.py's per-batch frames) can never claim each other's
+    builds, streaming micro-batches) can never claim each other's
     unrecomputable blocks."""
     with _ATTRIBUTION_LOCK:
         before = _persistent_ids(spark)
@@ -189,11 +217,11 @@ def session_cached(
     if key not in _CACHE:
         # make() runs OUTSIDE the lock (nested session_cached builds —
         # bpe_token_seq -> bpe_vocab — must be able to take it), inside a
-        # fresh scratch scope: its internal tracked checkpoints
-        # (component-loop rounds, candidate frames) are dead weight once
-        # the entry's own checkpoint holds the result, so the scope frees
-        # them on exit, success or failure, rather than leaving them to
-        # linger until release.
+        # fresh scratch scope: its internal scratch persists and tracked
+        # checkpoints (stage joints, component-loop rounds, candidate
+        # frames) are dead weight once the entry's own checkpoint holds
+        # the result, so the scope frees them on exit, success or
+        # failure, rather than leaving them to linger until release.
         with scratch_scope(spark):
             df = make()
             frame, ids = checkpoint_with_ids(spark, df)
@@ -206,50 +234,19 @@ def release_session_cache(spark: SparkSession) -> int:
     """Free the blocks recorded for THIS module's cache entries: an
     eagerly localCheckpointed frame's materialized RDD stays resident in
     the block manager until py4j finalizers + the ContextCleaner
-    nondeterministically collect it (measured by the round-6 review as
-    prior-rep cluster-label and flag frames sitting in memory during the
-    shuffle sweep's timed cold reps). Unpersists ONLY the RDD ids
+    nondeterministically collect it. Unpersists ONLY the RDD ids
     captured when each entry was created — never frames owned by other
-    callers — and clears the registry. Returns the number of RDDs
-    released."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    callers — clears the registry, and drains the loose scratch ledger.
+    Returns the number of RDDs and frames released."""
     app = spark.sparkContext.applicationId
     n = 0
-    for key, ids in list(_CACHE_RDD_IDS.items()):
-        if key[0] != app:  # stale entries from a stopped session
-            _CACHE.pop(key, None)
-            _CACHE_RDD_IDS.pop(key, None)
-            continue
-        for i in ids:
-            jrdd = jmap.get(i)
-            if jrdd is not None:
-                jrdd.unpersist(True)
-                n += 1
+    for key in list(_CACHE_RDD_IDS):
+        ids = _CACHE_RDD_IDS.pop(key)
         _CACHE.pop(key, None)
-        _CACHE_RDD_IDS.pop(key, None)
-    # scratch checkpoints from top-level (non-cached) query paths —
-    # candidate frames, component rounds — registered on the loose ledger
+        if key[0] == app:  # entries of a stopped session are just dropped
+            n += free_block_ids(spark, ids)
     with _ATTRIBUTION_LOCK:
-        loose = list(_LOOSE_IDS)
+        ids, frames = list(_LOOSE_IDS), list(_LOOSE_FRAMES)
         _LOOSE_IDS.clear()
-    n += free_block_ids(spark, loose)
-    return n
-
-
-def teardown_all_rdd_blocks(spark: SparkSession) -> int:
-    """Blanket sweep: unpersist EVERY persistent RDD in the context —
-    localCheckpoint blocks included — and clear the registry. ONLY for
-    bench/test teardown between cold reps where the whole session's
-    block population must go: a checkpointed frame has no lineage to
-    recompute from, so any reference still held by ANY caller becomes
-    permanently unusable after this."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    n = 0
-    for jrdd in jmap.values():
-        jrdd.unpersist(True)
-        n += 1
-    _CACHE.clear()
-    _CACHE_RDD_IDS.clear()
-    with _ATTRIBUTION_LOCK:
-        _LOOSE_IDS.clear()
-    return n
+        _LOOSE_FRAMES.clear()
+    return n + _free_scratch(spark, ids, frames)

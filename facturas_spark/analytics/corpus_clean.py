@@ -48,6 +48,7 @@ from pyspark.sql.window import Window
 
 import os
 
+from facturas_spark.analytics.cache import scratch_persist
 from facturas_spark.analytics.dedup import (
     DECON_K,
     _kgram_hashes,
@@ -79,53 +80,6 @@ __all__ = [
 # language-marker token lists — same banks as txt_langid (dedup.py)
 MARKERS_EN = ["the", "of", "and", "to", "in", "a", "is"]
 MARKERS_ES = ["el", "la", "de", "que", "los", "las", "una", "y"]
-
-# Intermediate persisted frames of the current flag-chain build (the
-# diamond joints quality_frame/per_doc_flags cache to keep the corpus
-# scan count at 1). They are only needed until the caller's consuming
-# action (parquet write / localCheckpoint) completes; in a long-lived
-# session repeated job invocations would otherwise accumulate dead
-# cached blocks (round-4 advice). Callers release them with
-# ``release_stage_caches()`` right after materializing.
-#
-# The registry is THREAD-LOCAL (round-6 advice): the streaming
-# foreachBatch release runs on a micro-batch thread, so it can no longer
-# unpersist intermediates registered by a concurrent batch build on the
-# main thread. Within one thread a build is constructed and materialized
-# sequentially before the next begins, so build→materialize→release
-# pairs never interleave — that single-concurrent-build-per-thread
-# assumption is the documented contract here.
-import threading as _threading
-
-
-class _StageCaches(_threading.local):
-    def __init__(self):
-        self.frames: list = []
-
-
-_STAGE_CACHES = _StageCaches()
-
-
-def _stage_persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _STAGE_CACHES.frames.append(df)
-    return df
-
-
-def release_stage_caches() -> int:
-    """Unpersist every intermediate frame cached by the flag chain ON
-    THIS THREAD since the last release. Call AFTER the consuming action;
-    returns the number of frames released."""
-    n = 0
-    for df in _STAGE_CACHES.frames:
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing to free
-            pass
-    _STAGE_CACHES.frames.clear()
-    return n
-
 
 # gopher stopword rule, bilingual union (en list = txt_gopher_quality's)
 STOPWORDS_BI = ["the", "be", "to", "of", "and", "that", "have", "with", "a", "in"] + MARKERS_ES
@@ -403,7 +357,7 @@ def quality_frame(docs: DataFrame) -> DataFrame:
             ),
         )
         .drop("w")
-        .transform(_stage_persist)
+        .transform(scratch_persist)
     )
 
 
@@ -430,7 +384,7 @@ def semantic_dedup_ids(
     emb = (
         docs.select("doc_id", embed_udf(F.col(text_col)).alias("embedding"))
         .filter(F.col("embedding").isNotNull())
-        .transform(_stage_persist)
+        .transform(scratch_persist)
     )
     verified = (
         _emb_candidates_with_cosine(emb, "doc_id")
@@ -462,7 +416,12 @@ def per_doc_flags(
     an earlier survivor reaches tau are dropped (folded into s6;
     ``sem_drop`` marks them, all-false when off). Catches rephrasings and
     reorderings that keep shingle-Jaccard below the MinHash threshold —
-    the FineWeb-style heuristics -> MinHash -> semantic chain."""
+    the FineWeb-style heuristics -> MinHash -> semantic chain.
+
+    The chain persists its diamond joints (so the corpus is scanned once)
+    and checkpoints its candidate and component frames as scratch: build
+    AND consume the result inside one ``cache.scratch_scope``, which
+    frees them on exit."""
     f1 = quality_frame(docs)
 
     # stage 5: exact dedup on the scrubbed fingerprint among s3 survivors.
@@ -480,7 +439,7 @@ def per_doc_flags(
     # EXACT_KEEP_BROADCAST_MAX (zero fat movement, the sandbox/sf case);
     # past it fall back to a plain doc_id equi-join — one fat shuffle,
     # which on a real cluster scales with per-node memory bandwidth.
-    kept = _stage_persist(
+    kept = scratch_persist(
         f1.filter(F.col("s3"))
         .select(F.md5("scrubbed").alias("_fp"), "doc_id")
         .groupBy("_fp")
@@ -489,7 +448,7 @@ def per_doc_flags(
     )
     if kept.count() <= EXACT_KEEP_BROADCAST_MAX:
         kept = F.broadcast(kept)
-    f2 = _stage_persist(
+    f2 = scratch_persist(
         f1.join(kept, "doc_id", "left")
         .withColumn("s5", F.col("s3") & F.coalesce("_exact_keep", F.lit(False)))
         .drop("_exact_keep")
@@ -497,22 +456,20 @@ def per_doc_flags(
 
     # stage 6: near-dup LSH chain over the scrubbed text of s5 survivors.
     # ``lsh_family`` mirrors _band_table's knob: md5 (default) is the
-    # DuckDB-portable oracle family; the shuffle sweep benches the
-    # integer xxhash64 production family (same chain shape, ~2x cheaper
-    # minhash, pytest-pinned equivalence on the final keep decisions at
-    # oracle scale). EXPLICIT parameter, never the ambient env var: the
-    # families produce different candidate sets in general, so a stray
-    # env var must not silently change oracle-gated dedup results —
-    # bench/sweep entry points pass their family through this argument
-    # (round-7 advice).
+    # DuckDB-portable oracle family; xxhash64 is the integer production
+    # family (same chain shape, ~2x cheaper minhash). The families give
+    # different candidate sets in general, so keep decisions can differ:
+    # test_xxhash64_family_same_clusters pins equal clusters only on the
+    # sf test corpus. EXPLICIT parameter, never an ambient setting, so
+    # nothing silently changes oracle-gated dedup results.
     family = lsh_family
-    sh = _stage_persist(_shingle_table(
+    sh = scratch_persist(_shingle_table(
         f2.filter(F.col("s5")).select("doc_id", F.col("scrubbed").alias("text"))
     ))
     cand = _lsh_candidate_pairs(sh, family)
     verified = _verified_pairs(sh, cand)
     labels = _min_label_components(verified)
-    f3 = _stage_persist(f2.join(labels, "doc_id", "left").withColumn(
+    f3 = scratch_persist(f2.join(labels, "doc_id", "left").withColumn(
         "s6",
         F.col("s5")
         & (F.col("cluster_id").isNull() | (F.col("cluster_id") == F.col("doc_id"))),
@@ -528,7 +485,7 @@ def per_doc_flags(
             f3.join(sem, "doc_id", "left")
             .withColumn("sem_drop", F.coalesce("sem_drop", F.lit(False)))
             .withColumn("s6", F.col("s6") & ~F.col("sem_drop"))
-            .transform(_stage_persist)
+            .transform(scratch_persist)
         )
     else:
         f3 = f3.withColumn("sem_drop", F.lit(False))
@@ -556,7 +513,7 @@ def per_doc_flags(
         # two-phase output is provably <= #sources * quota_k rows —
         # broadcast it so the fat frame never reshuffles by doc_id
         quota = F.broadcast(quota)
-    f4 = _stage_persist(f3.join(quota, "doc_id", "left").withColumn(
+    f4 = scratch_persist(f3.join(quota, "doc_id", "left").withColumn(
         "s7", F.col("s6") & F.coalesce("quota_keep", F.lit(False))
     ))
 
@@ -779,9 +736,6 @@ def corpus_clean_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             with_synth_pii(_t_fan(spark, sf_dir, "documents", "doc_id"))
         ),
     )
-    # session_cached materializes via eager localCheckpoint — the chain's
-    # intermediate persists are dead weight the moment it returns
-    release_stage_caches()
     return clean_funnel(flags).orderBy("stage")
 
 

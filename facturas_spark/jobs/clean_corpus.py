@@ -97,8 +97,10 @@ def main(argv: list[str] | None = None) -> int:
         help="fingerprint family for --benchmark decontamination AND "
         "the stage-6 near-dup LSH chain: md5 (oracle-portable default) "
         "or xxhash64 (production — integer keys, no hex-string "
-        "materialization; identical keep decisions, pytest-pinned). "
-        "Explicit-only: the env var is never consulted in this job",
+        "materialization). The families give different candidate sets, "
+        "so near-dup keep decisions can differ; "
+        "test_xxhash64_family_same_clusters pins equal clusters only on "
+        "the sf test corpus",
     )
     parser.add_argument(
         "--benchmark",
@@ -118,6 +120,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = parser.parse_args(argv)
 
+    from facturas_spark.analytics.cache import scratch_persist, scratch_scope
     from facturas_spark.analytics.corpus_clean import (
         clean_funnel,
         cleaned_corpus,
@@ -144,35 +147,30 @@ def main(argv: list[str] | None = None) -> int:
         if args.synth_pii:
             docs = with_synth_pii(docs)
         decon_meta = {}
-        if args.benchmark:
-            # persisted: the count below and the anti-join inside the
-            # flags job both consume it — without persist the full-corpus
-            # k-gram scan would run twice (review fix)
-            bad = contaminated_ids(
-                docs, spark.read.parquet(args.benchmark), family=args.hash_family
-            ).persist()
-            n_bad = bad.count()
-            docs = docs.join(bad, "doc_id", "left_anti")
-            decon_meta = {"decontaminated": n_bad}
-        flags = per_doc_flags(
-            docs,
-            quota_k=args.quota_k,
-            pack_budget=args.pack_budget,
-            pack_shards=args.pack_shards,
-            semantic_tau=args.semantic_dedup,
-            quota_salts=args.quota_salts,
-            lsh_family=args.hash_family,
-        )
-        flags.write.mode("overwrite").parquet(flags_path)
-        # the flags parquet is now the source of truth — free the
-        # chain's intermediate caches (and the decontamination set)
-        # so repeated invocations in one session don't accumulate
-        # dead blocks (round-4 advice)
-        from facturas_spark.analytics.corpus_clean import release_stage_caches
-
-        release_stage_caches()
-        if args.benchmark:
-            bad.unpersist()
+        # every frame the chain persists or checkpoints serves only the
+        # flags write; the scope frees them all once the parquet (the
+        # source of truth from here on) is written, or the build fails
+        with scratch_scope(spark):
+            if args.benchmark:
+                # persisted: the count below and the anti-join inside the
+                # flags job both consume it — without persist the
+                # full-corpus k-gram scan would run twice
+                bad = scratch_persist(contaminated_ids(
+                    docs, spark.read.parquet(args.benchmark), family=args.hash_family
+                ))
+                n_bad = bad.count()
+                docs = docs.join(bad, "doc_id", "left_anti")
+                decon_meta = {"decontaminated": n_bad}
+            flags = per_doc_flags(
+                docs,
+                quota_k=args.quota_k,
+                pack_budget=args.pack_budget,
+                pack_shards=args.pack_shards,
+                semantic_tau=args.semantic_dedup,
+                quota_salts=args.quota_salts,
+                lsh_family=args.hash_family,
+            )
+            flags.write.mode("overwrite").parquet(flags_path)
         flags_back = spark.read.parquet(flags_path)
         rows = flags_back.count()
         if args.semantic_dedup is not None:

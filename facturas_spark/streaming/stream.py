@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from facturas_spark.extraction.udf import extract_doc_udf
+from facturas_spark.pipeline import extract_pages_header
 
 __all__ = [
     "stream_extract_pages",
@@ -49,12 +49,8 @@ def stream_extract_pages(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     pages = reader.load(input_dir)
 
-    extracted = pages.withColumn(
-        "_d", extract_doc_udf(F.col("html"), F.col("text"))
-    ).select("url", "warc_ts", "lang", F.col("_d.*")).drop("productos")
-
     q = (
-        extracted.writeStream.format("parquet")
+        extract_pages_header(pages).writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
@@ -87,9 +83,7 @@ def stream_dedup_urls(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import StructType
 
-    out_schema = StructType.fromDDL(
-        "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
+    out_schema = StructType.fromDDL(PAGES_DDL)
     state_schema = StructType.fromDDL("intentos int")
 
     def first_delivery_only(key, pdfs, state: GroupState):
@@ -277,6 +271,11 @@ def stream_clean_increment(
     stream_extract_to_bucketed, ledger through CommitFS."""
     import os
 
+    from facturas_spark.analytics.cache import (
+        scratch_persist,
+        scratch_scope,
+        tracked_checkpoint,
+    )
     from facturas_spark.analytics.corpus_clean import quality_frame
     from facturas_spark.analytics.dedup import (
         LSH_JACCARD_THRESHOLD,
@@ -321,44 +320,11 @@ def stream_clean_increment(
         if epoch_id in committed:
             return
         # every persisted/checkpointed frame serves only THIS micro-
-        # batch; register them so the outer finally releases blocks
-        # even when a phase FAILS mid-build (round-6 review: the
-        # semantic phase ran real jobs before the old try/finally, so
-        # a failing batch leaked its frames for the session lifetime)
-        _persisted: list[DataFrame] = []
-        # block-RDD ids materialized by per-batch eager localCheckpoints:
-        # unlike persist(), a checkpointed frame's blocks are NOT released
-        # by unpersisting the DataFrame handle — without explicit cleanup
-        # they linger until nondeterministic py4j/ContextCleaner GC, one
-        # leaked frame per epoch on a long-running stream (round-7 advice)
-        _ckpt_rdd_ids: list[int] = []
-
-        def _p(df: DataFrame) -> DataFrame:
-            _persisted.append(df.persist())
-            return df
-
-        def _ck(df: DataFrame) -> DataFrame:
-            # shared locked delta window (analytics/cache.py): a
-            # concurrent session_cached build on another thread must not
-            # claim this batch's unrecomputable checkpoint blocks, nor
-            # vice versa (review fix)
-            from facturas_spark.analytics.cache import checkpoint_with_ids
-
-            out, ids = checkpoint_with_ids(spark, df)
-            _ckpt_rdd_ids.extend(ids)
-            return out
-
-        # scratch scope for the tracked checkpoints made INSIDE library
-        # calls this epoch (semantic_dedup_ids -> _min_label_components'
-        # loop rounds): attributed here and freed in the finally below,
-        # instead of lingering on the loose ledger one frame per epoch
-        # (the round-7-advice leak class). Entered/exited manually to
-        # avoid re-indenting the whole epoch body.
-        from facturas_spark.analytics.cache import scratch_scope
-
-        _scope = scratch_scope(spark)
-        _scope.__enter__()
-        try:
+        # batch, including those made inside library calls
+        # (semantic_dedup_ids -> _min_label_components' loop rounds): the
+        # scope frees them all once the epoch is written, or when a phase
+        # fails mid-build
+        with scratch_scope(spark):
             if bench_hashes is not None:
                 from facturas_spark.analytics.corpus_clean import (
                     contaminated_ids_against,
@@ -397,7 +363,7 @@ def stream_clean_increment(
                 "_min", F.min("doc_id").over(Window.partitionBy("fp"))
             ).withColumn("_batch_first", F.col("doc_id") == F.col("_min"))
             ex_hit = bfp.join(prior_fp, "fp", "left_semi").select("doc_id")
-            exact_kept = _p(
+            exact_kept = scratch_persist(
                 bfp.filter(F.col("_batch_first"))
                 .join(ex_hit, "doc_id", "left_anti")
                 .select("doc_id", "source", "text", "fp")
@@ -405,9 +371,9 @@ def stream_clean_increment(
 
             # near phase: batch bands vs PERSISTED corpus band index; verify
             # re-shingles only the collided corpus docs
-            sh_b = _p(_shingle_table(exact_kept.select("doc_id", "text")))
+            sh_b = scratch_persist(_shingle_table(exact_kept.select("doc_id", "text")))
             bands_b = _band_table(sh_b)
-            cand = _ck(
+            cand = tracked_checkpoint(
                 bands_b.withColumnRenamed("doc_id", "bid")
                 .join(prior_bands, ["band", "key"])
                 .select("bid", "cid")
@@ -428,7 +394,7 @@ def stream_clean_increment(
                 .select(F.col("bid").alias("doc_id"))
                 .distinct()
             )
-            kept = _p(exact_kept.join(near_hit, "doc_id", "left_anti"))
+            kept = scratch_persist(exact_kept.join(near_hit, "doc_id", "left_anti"))
 
             # semantic phase (SemDeDup, streaming twin of --semantic-dedup):
             # batch-internal drops via the batch job's own kernel, then
@@ -446,7 +412,7 @@ def stream_clean_increment(
                     kept.select("doc_id", "text"), tau=semantic_tau
                 )
                 sem_kept = kept.join(internal, "doc_id", "left_anti")
-                emb_b = _p(
+                emb_b = scratch_persist(
                     sem_kept.select(
                         "doc_id", embed_udf(F.col("text")).alias("embedding")
                     )
@@ -477,7 +443,7 @@ def stream_clean_increment(
                     .select(F.col("bid").alias("doc_id"))
                     .distinct()
                 )
-                kept = _p(sem_kept.join(sem_hit, "doc_id", "left_anti"))
+                kept = scratch_persist(sem_kept.join(sem_hit, "doc_id", "left_anti"))
                 emb_kept = emb_b.join(kept.select("doc_id"), "doc_id", "left_semi")
 
             # exactly-once appends: each epoch owns its directories wholesale
@@ -492,8 +458,6 @@ def stream_clean_increment(
                 "overwrite"
             ).parquet(os.path.join(corpus_dir, "bands", ep))
             if emb_kept is not None:
-                from facturas_spark.analytics.dedup import _emb_band_table
-
                 emb_kept.write.mode("overwrite").parquet(
                     os.path.join(corpus_dir, "embs", ep)
                 )
@@ -501,19 +465,6 @@ def stream_clean_increment(
                     "overwrite"
                 ).parquet(os.path.join(corpus_dir, "embbands", ep))
             ledger.write_json(f"epoch={epoch_id}.json", {"epoch": int(epoch_id)})
-        finally:
-            from facturas_spark.analytics.cache import free_block_ids
-            from facturas_spark.analytics.corpus_clean import (
-                release_stage_caches,
-            )
-
-            for _df in _persisted:
-                _df.unpersist()
-            # drop the checkpointed frames' blocks by recorded RDD id —
-            # safe, they're per-batch-only and the epoch writes are done
-            free_block_ids(spark, _ckpt_rdd_ids)
-            release_stage_caches()
-            _scope.__exit__(None, None, None)
 
     q = (
         spark.readStream.schema(DOCS_DDL)

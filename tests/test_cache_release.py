@@ -1,14 +1,15 @@
-"""Scoped block release for the session cache (round-7 advice).
+"""Scoped block release for the session cache and scratch scopes.
 
 ``release_session_cache`` must free ONLY the block RDDs recorded for the
-module's own ``session_cached`` entries: an eagerly localCheckpointed
-frame has no lineage to recompute from, so a blanket
-``getPersistentRDDs`` sweep would permanently break any checkpointed
-frame a *concurrent* caller still holds. The blanket sweep lives on as
-``teardown_all_rdd_blocks`` for bench/test teardown where the whole
-session's block population must go.
+module's own ``session_cached`` entries (plus the loose scratch ledger):
+an eagerly localCheckpointed frame has no lineage to recompute from, so
+a blanket ``getPersistentRDDs`` sweep would permanently break any
+checkpointed frame a *concurrent* caller still holds. ``scratch_scope``
+frees the persisted and checkpointed scratch made inside it on exit.
 """
 from __future__ import annotations
+
+import contextlib
 
 import pytest
 
@@ -23,11 +24,27 @@ def _blocks_alive(df) -> bool:
         return False
 
 
+def _alive_ids(spark) -> set[int]:
+    return {
+        int(i)
+        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    }
+
+
 @pytest.fixture()
 def clean_registry(spark):
-    C.teardown_all_rdd_blocks(spark)
+    def sweep():
+        # blanket: every persistent RDD in the context, checkpoints included
+        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+            jrdd.unpersist(True)
+        C._CACHE.clear()
+        C._CACHE_RDD_IDS.clear()
+        C._LOOSE_IDS.clear()
+        C._LOOSE_FRAMES.clear()
+
+    sweep()
     yield
-    C.teardown_all_rdd_blocks(spark)
+    sweep()
 
 
 def test_release_frees_own_entries(spark, clean_registry):
@@ -40,10 +57,7 @@ def test_release_frees_own_entries(spark, clean_registry):
     assert ids, "eager checkpoint must register at least one block RDD"
     n = C.release_session_cache(spark)
     assert n >= 1
-    alive = {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
+    alive = _alive_ids(spark)
     assert not (set(ids) & alive), "own checkpoint blocks must be gone"
     assert not C._CACHE and not C._CACHE_RDD_IDS
 
@@ -57,15 +71,6 @@ def test_release_spares_foreign_checkpointed_frame(spark, clean_registry):
     # the foreign frame must still be usable — the old blanket sweep
     # would have unpersisted its only copy
     assert _blocks_alive(foreign) and foreign.count() == 50
-
-
-def test_teardown_all_kills_everything(spark, clean_registry):
-    foreign = spark.range(50).toDF("n").localCheckpoint(eager=True)
-    C.session_cached(spark, "/tmp/x", "t3", lambda: spark.range(10).toDF("n"))
-    C.teardown_all_rdd_blocks(spark)
-    alive = spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    assert len(alive) == 0
-    assert not C._CACHE
 
 
 def test_concurrent_checkpoint_attribution_disjoint(spark, clean_registry):
@@ -127,10 +132,7 @@ def test_build_scratch_freed_entry_survives(spark, clean_registry):
 
     df = C.session_cached(spark, "/tmp/x", "scratch1", make)
     assert df.collect()[0]["s"] == 499 * 500 // 2
-    alive = {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
+    alive = _alive_ids(spark)
     assert scratch_ids and not (set(scratch_ids) & alive), (
         "build scratch must be freed at entry materialization"
     )
@@ -151,10 +153,7 @@ def test_loose_ledger_drained_by_release(spark, clean_registry):
     C.free_block_ids(spark, ids)
     n = C.release_session_cache(spark)  # double-free: must not raise
     assert n >= 0 and not C._LOOSE_IDS
-    alive = {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
+    alive = _alive_ids(spark)
     assert not (set(ids) & alive)
 
 
@@ -164,25 +163,71 @@ def test_component_loop_footprint_bounded(spark, clean_registry):
     block population at return is O(1) frames, not O(rounds)."""
     from facturas_spark.analytics.dedup import _min_label_components
 
-    before = {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
+    before = _alive_ids(spark)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id1 long, id2 long"
     )
     labels = _min_label_components(pairs)
     assert labels.filter("cluster_id = 0").count() == 13  # one component
-    after = {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
+    after = _alive_ids(spark)
     # alive: the pairs checkpoint + the FINAL labels round only (und and
     # every superseded round freed in-loop; diameter 12 ⇒ ≥3 rounds)
     assert len(after - before) <= 3, sorted(after - before)
     C.release_session_cache(spark)  # loose ledger: everything attributable
-    end = {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
+    end = _alive_ids(spark)
     assert not (end - before), "release must drain all loop blocks"
+
+
+def _scratch(spark, n: int):
+    """One persisted (materialized) and one checkpointed scratch frame,
+    registered with whatever scope is active."""
+    persisted = C.scratch_persist(spark.range(n).toDF("n"))
+    assert persisted.count() == n
+    _, ids = C.tracked_checkpoint_ids(spark.range(n).toDF("n"))
+    assert ids
+    return persisted, ids
+
+
+@pytest.mark.parametrize("raises", [False, True])
+def test_scope_frees_persisted_and_checkpointed(spark, clean_registry, raises):
+    """On exit, success or failure, a scope unpersists its scratch_persist
+    frames and frees its tracked_checkpoint blocks; nothing reaches the
+    loose ledger."""
+    before = _alive_ids(spark)
+    made = []
+    with pytest.raises(RuntimeError) if raises else contextlib.nullcontext():
+        with C.scratch_scope(spark):
+            made.append(_scratch(spark, 300))
+            assert _alive_ids(spark) - before
+            if raises:
+                raise RuntimeError("stage failed")
+    ((persisted, ids),) = made
+    assert not persisted.is_cached and not persisted.storageLevel.useMemory
+    assert _alive_ids(spark) == before
+    assert not C._LOOSE_IDS and not C._LOOSE_FRAMES
+
+
+def test_nested_scope_frees_only_its_own(spark, clean_registry):
+    before = _alive_ids(spark)
+    with C.scratch_scope(spark):
+        outer, outer_ids = _scratch(spark, 200)
+        with C.scratch_scope(spark):
+            inner, inner_ids = _scratch(spark, 100)
+        alive = _alive_ids(spark)
+        assert not (set(inner_ids) & alive) and not inner.is_cached
+        assert set(outer_ids) <= alive and outer.is_cached
+        assert outer.count() == 200
+    assert _alive_ids(spark) == before and not outer.is_cached
+
+
+def test_loose_frames_drained_by_release(spark, clean_registry):
+    """scratch_persist outside any scope registers on the loose ledger;
+    release_session_cache unpersists it."""
+    before = _alive_ids(spark)
+    persisted = C.scratch_persist(spark.range(100).toDF("n"))
+    assert persisted.count() == 100
+    assert len(C._LOOSE_FRAMES) == 1 and C._LOOSE_FRAMES[0] is persisted
+    assert _alive_ids(spark) - before
+    assert C.release_session_cache(spark) >= 1
+    assert not C._LOOSE_FRAMES and not persisted.is_cached
+    assert _alive_ids(spark) == before

@@ -116,6 +116,36 @@ def test_clean_job_stage_resume(spark, tmp_path):
     assert r3["stages"]["stats"]["funnel"] == funnel1  # derived from flags parquet
 
 
+def test_clean_job_frees_its_scratch(spark, tmp_path):
+    """Two clean-job runs in one session leave no persistent RDD and no
+    loose-ledger entry behind: every frame the flag stage persists or
+    checkpoints (stage joints, the verified-pair and component-round
+    checkpoints) belongs to the job's scratch scope."""
+    import contextlib
+    import io as _io
+
+    from facturas_spark.analytics import cache
+    from facturas_spark.jobs.clean_corpus import main
+
+    docs = str(tmp_path / "docs")
+    spark.read.parquet(f"{SF}/documents.parquet").write.parquet(docs)
+
+    def alive():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(i) for i in jmap.keySet().toArray()}
+
+    before, loose_ids = alive(), list(cache._LOOSE_IDS)
+    loose_frames = len(cache._LOOSE_FRAMES)
+    for run in range(2):
+        out = str(tmp_path / f"out{run}")
+        with contextlib.redirect_stdout(_io.StringIO()):
+            assert main(["--input", docs, "--output", out, "--synth-pii"]) == 0
+        # <=: the context cleaner may collect an older test's frames
+        assert alive() <= before, sorted(alive() - before)
+        assert cache._LOOSE_IDS == loose_ids
+        assert len(cache._LOOSE_FRAMES) == loose_frames
+
+
 def test_sharded_packing_variant(spark):
     """pack_shards=N: identical survivors, per-shard budget respected,
     every doc keeps its pack assignment within its own shard."""

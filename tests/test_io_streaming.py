@@ -312,6 +312,46 @@ def test_stream_extract_incremental(spark, tmp_path):
     assert out.filter(F.col("proveedor_cif").isNull()).count() == 0
 
 
+def test_stream_extract_header_kernel(spark, tmp_path, monkeypatch):
+    """The streaming extraction sink runs the header-only kernel: its rows
+    equal extract_pages_header over the same files, and its one Python
+    eval node never computes ``productos``."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from facturas_spark.pipeline import extract_pages_header
+    from facturas_spark.streaming.stream import stream_extract_pages
+
+    started = []
+    start = DataStreamWriter.start
+
+    def spy(writer, *args, **kwargs):
+        started.append(start(writer, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", spy)
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    rows = corpus_rows(30, seed=5)
+    assert any(r[3] is None for r in rows)  # html-only pages
+    spark.createDataFrame(rows, PAGES_SCHEMA_DDL).write.parquet(in_dir)
+    stream_extract_pages(spark, in_dir, out_dir, str(tmp_path / "ckpt"))
+
+    (query,) = started
+    last = query._jsq.streamingQuery().lastExecution()
+    evals = _python_evals(last.executedPlan())
+    assert len(evals) == 1
+    assert "productos" not in evals[0].schema().simpleString()
+
+    want = extract_pages_header(spark.read.parquet(in_dir))
+    back = spark.read.parquet(out_dir)
+    assert back.columns == want.columns
+
+    def by_url(df):
+        return sorted(df.collect(), key=lambda r: r.url)
+
+    assert by_url(back) == by_url(want)
+
+
 def test_stream_windowed_events_plan(spark):
     """Watermark + tumbling window compiles into a streaming plan."""
     from facturas_spark.streaming.stream import stream_windowed_events
