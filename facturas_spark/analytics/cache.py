@@ -15,9 +15,8 @@ Lifetime rule for scratch: every intermediate a build persists
 the innermost ``scratch_scope`` open on its thread and is freed when
 that scope exits, whether the body succeeds or raises. Scratch made
 outside any scope goes on the loose ledger, which
-``release_session_cache`` drains. ``session_cached`` builds, the
-clean-corpus job's flag stage and each streaming clean micro-batch run
-inside a scope.
+``release_session_cache`` drains. ``session_cached`` builds and the
+clean-corpus job's flag stage run inside a scope.
 
 At cluster scale the same role is played by a persisted staging table
 (the checkpoint is executor-local here because local mode has exactly
@@ -146,7 +145,7 @@ def checkpoint_with_ids(
     """Eagerly localCheckpoint ``df`` and return (frame, block RDD ids
     the checkpoint materialized), with the delta window held under
     _ATTRIBUTION_LOCK so concurrent checkpoint sites (session_cached
-    builds, streaming micro-batches) can never claim each other's
+    builds on other threads) can never claim each other's
     unrecomputable blocks."""
     with _ATTRIBUTION_LOCK:
         before = _persistent_ids(spark)

@@ -67,9 +67,7 @@ __all__ = [
     "PII_EMAIL",
     "PII_PHONE",
     "PII_IPV4",
-    "benchmark_fingerprints",
     "contaminated_ids",
-    "contaminated_ids_against",
     "semantic_dedup_ids",
     "per_doc_flags",
     "clean_funnel",
@@ -253,9 +251,8 @@ def quality_frame(docs: DataFrame) -> DataFrame:
     """Stages 0-4 (the per-doc map/agg filters: nonempty, langid, gopher,
     repetition, PII scrub) as one frame with cumulative flags s0..s3 +
     scrubbed text + redaction counts. This is the batch chain's front
-    half AND the per-micro-batch stage of the streaming increment
-    (``streaming/stream.py:stream_clean_increment``) — corpus-wide
-    stages (dedup/quota/packing) stay out of it by design.
+    half — corpus-wide stages (dedup/quota/packing) stay out of it by
+    design.
 
     Scale shape: ONE linear map over the corpus, zero shuffles. The
     repetition stats (C4/Gopher top-2-gram share + dup-3-gram fraction)
@@ -643,16 +640,21 @@ def _tok_k(df: DataFrame, k: int) -> DataFrame:
     )
 
 
-def benchmark_fingerprints(
-    bench_docs: DataFrame, k: int = DECON_K, family: str = "md5"
+def contaminated_ids(
+    docs: DataFrame, bench_docs: DataFrame, k: int = DECON_K, family: str = "md5"
 ) -> DataFrame:
-    """Distinct k-gram fingerprints of an eval-set table (needs only a
-    ``text`` column). Small by nature — eval sets are thousands of docs —
-    so callers broadcast it (batch job) or persist it once per stream.
-    ``family``: md5 (oracle default) or xxhash64 (production — integer
-    keys, ~no string materialization; identical membership decisions)."""
+    """Benchmark-decontamination pre-filter for the clean job (GPT-3
+    appendix C / PaLM, public papers): doc_ids of ``docs`` sharing any
+    k-word n-gram with ``bench_docs`` (an eval-set table with a ``text``
+    column) — same plan shape as ``dedup.txt_decontamination``.
+
+    The bench side is its distinct k-gram fingerprints, small by nature
+    (eval sets are thousands of docs), so it is broadcast: the corpus
+    side stays a map pass + broadcast hash join + one doc_id distinct —
+    no corpus shuffle. ``family``: md5 (oracle default) or xxhash64
+    (production — integer keys, ~no string materialization)."""
     # the bench side needs no stable id — only its fingerprint set
-    return (
+    bench_hashes = (
         _kgram_hashes(
             _tok_k(
                 bench_docs.select(F.lit(0).cast("bigint").alias("doc_id"), "text"), k
@@ -663,32 +665,11 @@ def benchmark_fingerprints(
         .select("h")
         .distinct()
     )
-
-
-def contaminated_ids_against(
-    docs: DataFrame, bench_hashes: DataFrame, k: int = DECON_K, family: str = "md5"
-) -> DataFrame:
-    """doc_ids of ``docs`` whose any k-gram fingerprint appears in
-    ``bench_hashes`` (a pre-built :func:`benchmark_fingerprints` frame of
-    the SAME family). The corpus side stays a map pass + broadcast hash
-    join + one doc_id distinct — no corpus shuffle."""
     return (
         _kgram_hashes(_tok_k(docs, k), k, family)
         .join(F.broadcast(bench_hashes), "h")
         .select("doc_id")
         .distinct()
-    )
-
-
-def contaminated_ids(
-    docs: DataFrame, bench_docs: DataFrame, k: int = DECON_K, family: str = "md5"
-) -> DataFrame:
-    """Benchmark-decontamination pre-filter for the clean job (GPT-3
-    appendix C / PaLM, public papers): doc_ids of ``docs`` sharing any
-    k-word n-gram with ``bench_docs`` (an eval-set table with a ``text``
-    column) — same plan shape as ``dedup.txt_decontamination``."""
-    return contaminated_ids_against(
-        docs, benchmark_fingerprints(bench_docs, k, family), k, family
     )
 
 

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from facturas_spark.analytics.cache import scratch_persist
 from facturas_spark.analytics.cache import table_scan as _t
 
 N_HASHES = 8  # MinHash signature length
@@ -785,12 +786,10 @@ def dedup_lsh_clusters(
         docs = _t_fan(spark, sf_dir, "documents", "doc_id").filter(
             F.trim(F.coalesce(F.col("text"), F.lit(""))) != ""
         )
-        sh = _shingle_table(docs).persist()
+        sh = scratch_persist(_shingle_table(docs))
         cand = _lsh_candidate_pairs(sh, family)
         verified = _verified_pairs(sh, cand)
-        out = _min_label_components(verified)
-        sh.unpersist()
-        return out
+        return _min_label_components(verified)
 
     return _cached_components(spark, sf_dir, f"lsh-{family}", make).orderBy("doc_id")
 
@@ -984,12 +983,10 @@ def _emb_band_key(col: str, band: int, bits: int = EMB_BAND_BITS):
 
 
 def _emb_band_table(emb: DataFrame, id_col: str) -> DataFrame:
-    """(id, band, key) sign-bucket LSH index of an embedding frame — the
-    persistable form of the multi-band family: each of the N_EMB_BANDS
-    bands reads a disjoint EMB_BAND_BITS-dim slice, vectors shorter than
-    a band's slice simply skip that band. Shared by the in-frame
-    candidate kernel below and the streaming corpus index
-    (streaming/stream.py persists it per epoch)."""
+    """(id, band, key) sign-bucket LSH index of an embedding frame, for
+    the candidate kernel below: each of the N_EMB_BANDS bands reads a
+    disjoint EMB_BAND_BITS-dim slice, vectors shorter than a band's slice
+    simply skip that band."""
     entries = F.array(
         *[
             F.when(
@@ -1033,34 +1030,18 @@ def _emb_candidates_with_cosine(emb: DataFrame, id_col: str) -> DataFrame:
         .filter(F.col("id1") < F.col("id2"))
         .select("id1", "id2")
     )
-    return _pair_cosine(cand, emb, emb, id_col)
-
-
-def _pair_cosine(
-    cand: DataFrame,
-    emb_l: DataFrame,
-    emb_r: DataFrame,
-    id_col: str,
-    lid: str = "id1",
-    rid: str = "id2",
-) -> DataFrame:
-    """Exact cosine for candidate (lid, rid) pairs, vectors looked up from
-    two (possibly distinct) embedding frames — point-lookup equi-joins,
-    norms computed once per side. Cross-frame form serves the streaming
-    batch-vs-corpus SemDeDup check; the in-frame kernel above passes the
-    same frame twice. Returns (lid, rid, _cos)."""
     norm = F.sqrt(_norm2("embedding"))
-    e1 = emb_l.select(
-        F.col(id_col).alias(lid), F.col("embedding").alias("e1"), norm.alias("n1")
+    e1 = emb.select(
+        F.col(id_col).alias("id1"), F.col("embedding").alias("e1"), norm.alias("n1")
     )
-    e2 = emb_r.select(
-        F.col(id_col).alias(rid), F.col("embedding").alias("e2"), norm.alias("n2")
+    e2 = emb.select(
+        F.col(id_col).alias("id2"), F.col("embedding").alias("e2"), norm.alias("n2")
     )
     dot = _dot("e1", "e2")
     return (
-        cand.join(e1, lid)
-        .join(e2, rid)
-        .select(lid, rid, (dot / (F.col("n1") * F.col("n2"))).alias("_cos"))
+        cand.join(e1, "id1")
+        .join(e2, "id2")
+        .select("id1", "id2", (dot / (F.col("n1") * F.col("n2"))).alias("_cos"))
     )
 
 
@@ -1495,10 +1476,11 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # each shingle table feeds BOTH the band join and the Jaccard verify —
-    # persist so tokenization + minhash signatures compute once per side
-    # (session-lifetime cache, same trade dedup_lsh_clusters makes)
-    sh_b = _shingle_table(batch).persist()
-    sh_c = _shingle_table(corpus).persist()
+    # persist so tokenization + minhash signatures compute once per side.
+    # Outside a scratch_scope they sit on the loose ledger, so warm calls
+    # reuse them until release_session_cache frees them.
+    sh_b = scratch_persist(_shingle_table(batch))
+    sh_c = scratch_persist(_shingle_table(corpus))
     # referenced twice below (prune ids + verify probe); see
     # _verified_pairs for why AQE re-executes unmaterialized candidate
     # DAGs per reference. The guard is ADAPTIVE on the candidate count
@@ -1513,7 +1495,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # can never silently re-execute the band-join DAG mid-verify. Plan
     # shape of the un-materialized frame is asserted by
     # tests/test_plans.py (band-key equi-join, no theta).
-    cand = _incr_candidate_pairs(sh_b, sh_c).persist()
+    cand = scratch_persist(_incr_candidate_pairs(sh_b, sh_c))
     if cand.count() > INCR_CKPT_THRESHOLD:
         from facturas_spark.analytics.cache import tracked_checkpoint
 

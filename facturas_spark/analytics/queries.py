@@ -417,7 +417,7 @@ def _cotejo_docs(spark: SparkSession) -> DataFrame:
     """The shared extracted-docs frame both cotejo pipelines consume.
     Round 8: session-cached (cache.py pattern) — each pipeline previously
     re-ran the 300-doc extraction UDF + products rebuild per call (and
-    left an unreleased .persist() behind per call); now the first caller
+    left an unreleased persisted frame behind per call); now the first caller
     materializes it once per session."""
     from facturas_spark.analytics.cache import session_cached
     from facturas_spark.pipeline import extract_pages_full, extract_products_table
@@ -2076,13 +2076,12 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------- streaming batch twins ----
+# ------------------------------------------------------- event windows ----
 def stream_window_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BATCH twin of streaming.stream_windowed_events: identical tumbling
-    1-hour ``F.window`` expression run in batch mode, so the driver's
-    cross-engine oracle gate pins the exact window semantics the streaming
-    path reuses (Structured Streaming executes the same Catalyst window
-    operator incrementally — Spark's batch/stream unification).
+    """Per-hour, per-event-type event counts and value totals: a tumbling
+    1-hour ``F.window`` run in batch mode (the name is historical — the
+    registry key stays). The cross-engine oracle gate pins Spark's
+    epoch-aligned window boundaries against DuckDB's.
 
     Integer-cents sum (see _cents) keeps the total order-independent, so
     the hash matches DuckDB regardless of partitioning. Oracle twin:

@@ -43,16 +43,17 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("--output", required=True, help="output dir")
     parser.add_argument("--buckets", type=int, default=256)
     parser.add_argument("--cores", type=int, default=None, help="local-mode cores")
-    parser.add_argument("--streaming", action="store_true")
+    sink = parser.add_mutually_exclusive_group()
+    sink.add_argument("--streaming", action="store_true")
     parser.add_argument(
         "--url-filter",
         action="store_true",
         help="apply the URL-quality rule bank (sources/urlfilter.py: host "
         "blocklist, junk path keywords, tracking-param overload, asset "
-        "extensions, oversize) before extraction; batch/iceberg modes "
-        "(the streaming path keeps every page — filter its input feed)",
+        "extensions, oversize) before extraction; not with --streaming "
+        "(filter the stream's input feed instead)",
     )
-    parser.add_argument(
+    sink.add_argument(
         "--iceberg-table",
         default=None,
         help="write to this Iceberg table (catalog.db.table) instead of the "
@@ -60,6 +61,8 @@ def main(argv: list[str] | None = None) -> int:
         "(falls back to --output with a warning when absent)",
     )
     args = parser.parse_args(argv)
+    if args.streaming and args.url_filter:
+        parser.error("--url-filter is not supported with --streaming")
 
     from facturas_spark.session import get_spark
 

@@ -1,7 +1,7 @@
 """Object-store-safe commit I/O for ledgers and manifests.
 
-The resume/exactly-once machinery (``io.LineageManifest``, the streaming
-epoch ledger) commits tiny JSON marker files. On a laptop ``os.replace``
+The resume machinery (``io.LineageManifest``, the clean-corpus job's
+stage markers) commits tiny JSON marker files. On a laptop ``os.replace``
 is fine, but at cluster scale the sink is HDFS or object storage
 (s3a://, gs://) where driver-side POSIX calls don't reach. This module
 routes those commits through the JVM Hadoop ``FileSystem`` API —

@@ -60,30 +60,24 @@ def create_pages_table(
     table: str = "lake.crawl.pages_extracted",
     n_buckets: int = 256,
 ) -> None:
-    """CREATE TABLE IF NOT EXISTS with the contract schema, partitioned by
-    ``bucket(N, url)`` — the Iceberg-native form of the parquet emulation's
-    ``xxhash64(url) %% N`` column. Bucketing by the FULL url (not host)
-    spreads Zipf-skewed hosts uniformly across partitions."""
+    """CREATE TABLE IF NOT EXISTS with the columns ``extract_pages`` writes
+    (read off its schema, so the DDL cannot drift from the rows), partitioned
+    by ``bucket(N, url)`` — the Iceberg-native form of the parquet
+    emulation's ``xxhash64(url) %% N`` column. Bucketing by the FULL url (not
+    host) spreads Zipf-skewed hosts uniformly across partitions."""
     if not iceberg_available(spark, table.split(".", 1)[0]):
         raise IcebergUnavailable(f"no Iceberg catalog for {table!r}")
+    from facturas_spark.pipeline import extract_pages
+    from facturas_spark.synth import PAGES_SCHEMA_DDL
+
+    schema = extract_pages(spark.createDataFrame([], PAGES_SCHEMA_DDL)).schema
+    columns = ",\n          ".join(
+        f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
+    )
     spark.sql(
         f"""
         CREATE TABLE IF NOT EXISTS {table} (
-          url STRING,
-          warc_ts TIMESTAMP,
-          lang STRING,
-          tipo_documento STRING,
-          texto_extraido STRING,
-          proveedor_nombre STRING,
-          proveedor_cif STRING,
-          numero_factura STRING,
-          fecha_factura DATE,
-          total_factura DOUBLE,
-          base_imponible DOUBLE,
-          cuota_iva DOUBLE,
-          tipo_iva DOUBLE,
-          confianza_global DOUBLE,
-          requiere_revision BOOLEAN
+          {columns}
         )
         USING iceberg
         PARTITIONED BY (bucket({n_buckets}, url))

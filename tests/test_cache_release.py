@@ -231,3 +231,19 @@ def test_loose_frames_drained_by_release(spark, clean_registry):
     assert C.release_session_cache(spark) >= 1
     assert not C._LOOSE_FRAMES and not persisted.is_cached
     assert _alive_ids(spark) == before
+
+
+def test_dedup_incremental_scratch_freed_by_release(spark, clean_registry):
+    """dedup_incremental's shingle tables and candidate frame are scratch
+    on the loose ledger: they stay cached across calls until
+    release_session_cache, which leaves no persistent RDD behind."""
+    from facturas_spark.analytics.dedup import dedup_incremental
+    from tests.test_plans import SF
+
+    # drop cache entries an earlier call left, so this call persists afresh
+    spark.catalog.clearCache()
+    before = _alive_ids(spark)
+    assert dedup_incremental(spark, SF).collect()
+    assert _alive_ids(spark) - before, "the call persists its scratch"
+    C.release_session_cache(spark)
+    assert not (_alive_ids(spark) - before)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -352,20 +353,6 @@ def test_stream_extract_header_kernel(spark, tmp_path, monkeypatch):
     assert by_url(back) == by_url(want)
 
 
-def test_stream_windowed_events_plan(spark):
-    """Watermark + tumbling window compiles into a streaming plan."""
-    from facturas_spark.streaming.stream import stream_windowed_events
-
-    ev = spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-    ev = ev.select(
-        F.col("timestamp").alias("ts"),
-        F.lit("purchase").alias("event_type"),
-        F.col("value").cast("double"),
-    )
-    agg = stream_windowed_events(ev)
-    assert agg.isStreaming
-    assert {"inicio", "fin", "event_type", "eventos", "total_valor"} == set(agg.columns)
-
 # --- Iceberg path (gated: no Iceberg jar in this container) --------------
 
 
@@ -400,45 +387,48 @@ def test_iceberg_config_probe_requires_classpath(spark):
         spark.conf.unset("spark.sql.catalog.probe_cat")
 
 
-def test_stream_dedup_urls_stateful(spark, tmp_path):
-    """applyInPandasWithState url-dedup: first delivery wins inside a batch,
-    re-deliveries in later micro-batches are suppressed via checkpointed
-    keyed state (restart-safe)."""
-    import duckdb
+def test_iceberg_ddl_matches_extract_pages_schema(spark, monkeypatch):
+    """The table extract_job creates takes exactly the columns it then
+    writes with ``writeTo(...).overwritePartitions()`` (matched by name):
+    same names, same types as extract_pages' output."""
+    from pyspark.sql.types import StructType
 
-    from facturas_spark.streaming.stream import stream_dedup_urls
+    from facturas_spark.pipeline import extract_pages
+    from facturas_spark.sources import iceberg
 
-    indir, outdir, ckpt = (
-        str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    import os
+    sql = []
+    monkeypatch.setattr(iceberg, "iceberg_available", lambda *a, **k: True)
+    monkeypatch.setattr(spark, "sql", sql.append)
+    iceberg.create_pages_table(spark, "lake.crawl.t", n_buckets=8)
 
-    os.makedirs(indir, exist_ok=True)
-    duckdb.sql(f"""
-      COPY (SELECT 'u://' || (i % 3) AS url,
-                   TIMESTAMP '2025-01-01' + INTERVAL (i) MINUTE AS warc_ts,
-                   NULL::BLOB AS html, 'doc ' || i AS text, 'es' AS lang
-            FROM range(6) t(i))
-      TO '{indir}/b1.parquet' (FORMAT PARQUET)
-    """)
-    stream_dedup_urls(spark, indir, outdir, ckpt)
-    out1 = spark.read.parquet(outdir).collect()
-    # 6 rows over 3 urls -> 3 emissions, each the EARLIEST warc_ts per url
-    assert len(out1) == 3
-    assert {r["text"] for r in out1} == {"doc 0", "doc 1", "doc 2"}
+    (ddl,) = sql
+    cols = re.search(r"lake\.crawl\.t \((.*)\)\s*USING iceberg", ddl, re.S)[1]
+    want = extract_pages(spark.createDataFrame([], PAGES_SCHEMA_DDL)).schema
+    got = StructType.fromDDL(cols)
+    assert [(f.name, f.dataType) for f in got.fields] == [
+        (f.name, f.dataType) for f in want.fields
+    ]
+    assert "bucket(8, url)" in ddl
 
-    # second batch: same urls again + one new -> only the new one emits
-    duckdb.sql(f"""
-      COPY (SELECT 'u://' || i AS url,
-                   TIMESTAMP '2025-02-01' AS warc_ts,
-                   NULL::BLOB AS html, 'late ' || i AS text, 'es' AS lang
-            FROM range(4) t(i))
-      TO '{indir}/b2.parquet' (FORMAT PARQUET)
-    """)
-    stream_dedup_urls(spark, indir, outdir, ckpt)
-    out2 = spark.read.parquet(outdir).collect()
-    assert len(out2) == 4
-    assert "late 3" in {r["text"] for r in out2}
+
+@pytest.mark.parametrize(
+    "flags", [["--streaming", "--iceberg-table", "lake.db.t"],
+              ["--streaming", "--url-filter"]],
+)
+def test_extract_job_rejects_flags_streaming_ignores(flags, monkeypatch, capsys):
+    """Flags the streaming path would silently ignore are usage errors,
+    raised before any Spark session starts."""
+    from facturas_spark import session
+    from facturas_spark.jobs.extract_job import main
+
+    def no_spark(*a, **k):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as exc:
+        main(["--input", "in", "--output", "out", *flags])
+    assert exc.value.code == 2
+    assert "--streaming" in capsys.readouterr().err
 
 
 def test_cola_procesamiento_retry_state_machine(spark):
@@ -631,54 +621,6 @@ def test_bucketed_join_without_shuffle(spark, tmp_path):
         spark.sql(f"DROP DATABASE {db} CASCADE")
 
 
-def test_stream_to_bucketed_exactly_once(spark, tmp_path):
-    """Streaming -> bucketed sink: (1) drains files into the bucket=K
-    layout; (2) a rerun with the checkpoint intact appends ONLY new files;
-    (3) a rerun with the checkpoint DELETED (worst-case retry: every epoch
-    replays) appends nothing — the epoch ledger makes replays no-ops."""
-    from facturas_spark.streaming.stream import PAGES_DDL, stream_extract_to_bucketed
-    from facturas_spark.synth import corpus_rows
-
-    in_dir = tmp_path / "in"
-    out_dir = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-
-    def drop(rows):
-        # write through Spark so the parquet timestamp physical type matches
-        # what the stream's reader schema expects
-        spark.createDataFrame(rows, PAGES_DDL).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(in_dir))
-
-    drop(corpus_rows(10, seed=1))
-    stream_extract_to_bucketed(spark, str(in_dir), str(out_dir), str(ckpt))
-    read = lambda: spark.read.parquet(str(out_dir / "extracted"))  # noqa: E731
-    assert read().count() == 10
-    assert "bucket" in read().columns
-
-    # THE crash window: parquet written, but neither the ledger entry nor
-    # the streaming checkpoint committed -> the epoch replays and must
-    # overwrite its own directory, not append to it
-    import shutil
-
-    (out_dir / "_epoch_manifest" / "epoch=0.json").unlink()
-    shutil.rmtree(ckpt)
-    stream_extract_to_bucketed(spark, str(in_dir), str(out_dir), str(ckpt))
-    assert read().count() == 10
-    assert read().select("url").distinct().count() == 10
-
-    # new file -> only its rows appended
-    drop(corpus_rows(6, seed=2))
-    stream_extract_to_bucketed(spark, str(in_dir), str(out_dir), str(ckpt))
-    assert read().count() == 16
-
-    # checkpoint lost -> all epochs replay -> ledger suppresses every write
-    shutil.rmtree(ckpt)
-    stream_extract_to_bucketed(spark, str(in_dir), str(out_dir), str(ckpt))
-    assert read().count() == 16
-    assert read().select("url").distinct().count() == 16
-
-
 def test_commitfs_hadoop_route(spark, tmp_path):
     """CommitFS must take the JVM Hadoop FileSystem route when a session
     is active (the object-store-safe path), and the marker protocol must
@@ -706,308 +648,3 @@ def test_lineage_manifest_uses_hadoop_fs(spark, tmp_path):
     assert m._fs._jfs is not None
     m.commit(7, 42, "digest")
     assert m.committed()[7] == {"bucket": 7, "rows": 42, "digest": "digest"}
-
-
-def test_stream_clean_increment(spark, tmp_path):
-    """Streaming corpus-clean increment: batch 1 seeds the corpus through
-    the quality stages; batch 2 carries an exact duplicate and a near
-    duplicate of corpus docs plus fresh docs — both dup kinds must be
-    dropped against the PERSISTED indexes, fresh docs kept; an immediate
-    re-run drains nothing (checkpoint) and replayed epochs are no-ops
-    (ledger)."""
-    from facturas_spark.streaming.stream import stream_clean_increment
-
-    in_dir = tmp_path / "in"
-    corpus = str(tmp_path / "corpus")
-    ckpt = str(tmp_path / "ckpt")
-    in_dir.mkdir()
-
-    base = (
-        "the quick brown fox and the lazy dog of the farm run in a field "
-        "of corn with a river and the old mill behind the hill"
-    )
-    def doc(i, text, source="web"):
-        return (i, source, "en", text)
-
-    b1 = [doc(i, f"{base} variant number {i} marker{i}") for i in range(5)]
-    spark.createDataFrame(b1, "doc_id long, source string, lang string, text string") \
-        .write.mode("append").parquet(str(in_dir))
-    stream_clean_increment(spark, str(in_dir), corpus, ckpt)
-
-    kept1 = spark.read.parquet(f"{corpus}/docs")
-    n1 = kept1.count()
-    assert n1 == 5  # all pass quality, none duplicate
-
-    # batch 2: 10 = exact dup of doc 2's text; 11 = near dup of doc 3
-    # (same long text, one word changed -> Jaccard >> 0.5); 12 = fresh
-    b2 = [
-        doc(10, f"{base} variant number 2 marker2"),
-        doc(11, f"{base} variant number 3 marker3 extra"),
-        doc(12, f"{base} a completely different tail about boats and the sea "
-                "with sails and the wind of the north"),
-    ]
-    spark.createDataFrame(b2, "doc_id long, source string, lang string, text string") \
-        .write.mode("append").parquet(str(in_dir))
-    stream_clean_increment(spark, str(in_dir), corpus, ckpt)
-
-    kept = {r.doc_id for r in spark.read.parquet(f"{corpus}/docs").collect()}
-    assert 10 not in kept, "exact duplicate must drop against the fp index"
-    assert 11 not in kept, "near duplicate must drop against the band index"
-    assert 12 in kept
-    assert kept == {0, 1, 2, 3, 4, 12}
-
-    # idempotent drain: nothing new -> corpus unchanged
-    stream_clean_increment(spark, str(in_dir), corpus, ckpt)
-    assert spark.read.parquet(f"{corpus}/docs").count() == 6
-    # index layers stay in lockstep with docs
-    assert spark.read.parquet(f"{corpus}/fps").count() == 6
-
-
-def test_watermark_drops_late_events(spark, tmp_path):
-    """Real watermark semantics, not just a plan check: append-mode
-    windowed aggregation across two availableNow drains. Batch 1
-    advances event time far past the watermark horizon; batch 2 replays
-    events OLDER than the horizon (late data) plus one fresh event.
-    The late rows must not resurrect or alter their closed windows."""
-    from datetime import datetime
-
-    from facturas_spark.streaming.stream import stream_windowed_events
-
-    in_dir = str(tmp_path / "ev")
-    out_dir = str(tmp_path / "win")
-    ckpt = str(tmp_path / "ck")
-    ddl = "ts timestamp, event_type string, value double"
-
-    def drain():
-        ev = spark.readStream.schema(ddl).format("parquet").load(in_dir)
-        q = (
-            stream_windowed_events(ev, window="1 hour", watermark="2 hours")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    t = lambda h, m=0: datetime(2025, 3, 1, h, m)  # noqa: E731
-    b1 = [
-        (t(1, 10), "purchase", 10.0),
-        (t(1, 40), "purchase", 5.0),
-        (t(2, 15), "view", 1.0),
-        (t(9, 0), "view", 2.0),  # advances watermark to 07:00
-    ]
-    spark.createDataFrame(b1, ddl).write.mode("append").parquet(in_dir)
-    drain()
-    got1 = {
-        (r.inicio.hour, r.event_type): r.eventos
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    # windows closed by the advanced watermark are emitted once
-    assert got1[(1, "purchase")] == 2
-    assert got1[(2, "view")] == 1
-
-    # batch 2: two LATE purchase events for the already-closed 01:00
-    # window (far below the 07:00 horizon) + one live event
-    b2 = [
-        (t(1, 20), "purchase", 99.0),
-        (t(1, 50), "purchase", 99.0),
-        (t(9, 30), "view", 3.0),
-    ]
-    spark.createDataFrame(b2, ddl).write.mode("append").parquet(in_dir)
-    drain()
-    rows = spark.read.parquet(out_dir).collect()
-    purchase_1h = [
-        r for r in rows if r.inicio.hour == 1 and r.event_type == "purchase"
-    ]
-    # the closed window appears exactly once, count still 2: late rows dropped
-    assert len(purchase_1h) == 1
-    assert purchase_1h[0].eventos == 2 and purchase_1h[0].total_valor == 15.0
-
-
-def test_stream_clean_increment_decontamination(spark, tmp_path):
-    """benchmark_path drops eval-overlapping docs per micro-batch BEFORE
-    the quality stages: a doc embedding a benchmark 13-gram never reaches
-    the corpus, clean docs still land."""
-    from facturas_spark.streaming.stream import stream_clean_increment
-
-    in_dir = tmp_path / "in"
-    corpus = str(tmp_path / "corpus")
-    ckpt = str(tmp_path / "ckpt")
-    in_dir.mkdir()
-
-    base = (
-        "the quick brown fox and the lazy dog of the farm run in a field "
-        "of corn with a river and the old mill behind the hill"
-    )
-    bench_text = " ".join(f"eval{i}" for i in range(13))
-    bench_path = str(tmp_path / "bench")
-    spark.createDataFrame([(bench_text,)], "text string").write.parquet(bench_path)
-
-    docs = [
-        (0, "web", "en", f"{base} {bench_text}"),          # contaminated
-        (1, "web", "en", f"{base} variant number one"),    # clean
-    ]
-    spark.createDataFrame(
-        docs, "doc_id long, source string, lang string, text string"
-    ).write.mode("append").parquet(str(in_dir))
-    stream_clean_increment(
-        spark, str(in_dir), corpus, ckpt, benchmark_path=bench_path
-    )
-
-    kept = {r.doc_id for r in spark.read.parquet(f"{corpus}/docs").collect()}
-    assert kept == {1}
-
-
-def test_stream_clean_increment_semantic_dedup(spark, tmp_path):
-    """Streaming twin of the batch job's --semantic-dedup (round-5
-    verdict directive 3), on the pinned reordered-words case: the
-    word-reversed duplicate has ZERO 3-word-shingle overlap (MinHash
-    keeps it) but ~0.89 hash-embedding cosine. Three properties:
-    (1) CROSS-EPOCH: the reversal arriving a later epoch drops against
-    the PERSISTED embedding-band index; (2) BATCH-INTERNAL: base + its
-    reversal in one batch keep only the min doc_id (the batch kernel's
-    rule); (3) EQUIVALENCE: the streamed corpus equals the batch
-    per_doc_flags(semantic_tau=0.8) survivor set on the same docs."""
-    from pyspark.sql import functions as F
-
-    from facturas_spark.analytics.corpus_clean import per_doc_flags
-    from facturas_spark.streaming.stream import stream_clean_increment
-
-    base = (
-        "the quick brown fox and the lazy dog of the farm run in a field "
-        "of corn with a river and the old mill behind the hill"
-    )
-    rev = " ".join(reversed(base.split()))
-    other = (
-        "a completely different story about boats and the open sea with "
-        "sails and the wind of the north and a calm blue harbor at dawn"
-    )
-    ddl = "doc_id long, source string, lang string, text string"
-
-    # -- (1) cross-epoch: base+other seed the index; rev arrives later
-    in_dir = tmp_path / "in"
-    corpus = str(tmp_path / "corpus")
-    ckpt = str(tmp_path / "ckpt")
-    in_dir.mkdir()
-    spark.createDataFrame(
-        [(0, "s0", "en", base), (2, "s1", "en", other)], ddl
-    ).write.mode("append").parquet(str(in_dir))
-    stream_clean_increment(spark, str(in_dir), corpus, ckpt, semantic_tau=0.8)
-    assert {r.doc_id for r in spark.read.parquet(f"{corpus}/docs").collect()} == {0, 2}
-    # the embedding index persisted alongside docs/fps/bands
-    assert spark.read.parquet(f"{corpus}/embs").count() == 2
-    assert spark.read.parquet(f"{corpus}/embbands").count() > 0
-
-    spark.createDataFrame([(1, "s0", "en", rev)], ddl).write.mode(
-        "append"
-    ).parquet(str(in_dir))
-    stream_clean_increment(spark, str(in_dir), corpus, ckpt, semantic_tau=0.8)
-    kept = {r.doc_id for r in spark.read.parquet(f"{corpus}/docs").collect()}
-    assert kept == {0, 2}, "reversal must drop against the persisted emb index"
-    assert spark.read.parquet(f"{corpus}/embs").count() == 2
-
-    # -- (2) batch-internal: base + rev in ONE epoch -> min doc_id wins
-    in2 = tmp_path / "in2"
-    corpus2 = str(tmp_path / "corpus2")
-    in2.mkdir()
-    spark.createDataFrame(
-        [(0, "s0", "en", base), (1, "s0", "en", rev), (2, "s1", "en", other)],
-        ddl,
-    ).write.mode("append").parquet(str(in2))
-    stream_clean_increment(
-        spark, str(in2), corpus2, str(tmp_path / "ckpt2"), semantic_tau=0.8
-    )
-    kept2 = {r.doc_id for r in spark.read.parquet(f"{corpus2}/docs").collect()}
-
-    # -- (3) equivalence with the batch job's flag chain
-    docs = spark.createDataFrame(
-        [(0, "s0", "en", base), (1, "s0", "en", rev), (2, "s1", "en", other)],
-        ddl,
-    )
-    batch_kept = {
-        r.doc_id
-        for r in per_doc_flags(docs, semantic_tau=0.8)
-        .filter(F.col("s6"))
-        .select("doc_id")
-        .collect()
-    }
-    assert kept2 == batch_kept == {0, 2}
-
-    # off by default: no embedding index is written
-    in3 = tmp_path / "in3"
-    corpus3 = str(tmp_path / "corpus3")
-    in3.mkdir()
-    spark.createDataFrame([(7, "s0", "en", base)], ddl).write.mode(
-        "append"
-    ).parquet(str(in3))
-    stream_clean_increment(spark, str(in3), corpus3, str(tmp_path / "ckpt3"))
-    import os
-
-    assert not os.path.exists(f"{corpus3}/embs")
-
-
-def test_stream_clean_increment_crash_replay_ignores_partial_indexes(
-    spark, tmp_path
-):
-    """Round-6 review: the epoch=N index directories are written BEFORE
-    the ledger marker commits. A crash between the two leaves partial
-    fps/bands (and embs/embbands) on disk; the replayed epoch must NOT
-    read its own partial writes — or every batch doc self-matches and
-    the epoch commits EMPTY (silent data loss). Simulated by planting
-    an epoch-0 index layer with no ledger entry."""
-    import os
-
-    from facturas_spark.streaming.stream import stream_clean_increment
-
-    base = (
-        "the quick brown fox and the lazy dog of the farm run in a field "
-        "of corn with a river and the old mill behind the hill"
-    )
-    ddl = "doc_id long, source string, lang string, text string"
-    in_dir = tmp_path / "in"
-    corpus = str(tmp_path / "corpus")
-    in_dir.mkdir()
-    other = (
-        "a completely different story about boats and the open sea with "
-        "sails and the wind of the north and a calm blue harbor at dawn"
-    )
-    docs = [(0, "s0", "en", base), (1, "s1", "en", other)]
-    spark.createDataFrame(docs, ddl).write.mode("append").parquet(str(in_dir))
-
-    # plant the poison: epoch-0's own fingerprints/bands/embs on disk,
-    # exactly what a crash after the writes but before the ledger leaves
-    from pyspark.sql import functions as F
-
-    from facturas_spark.analytics.dedup import (
-        _band_table,
-        _emb_band_table,
-        _shingle_table,
-    )
-    from facturas_spark.extraction.embed import embed_udf
-
-    df = spark.createDataFrame(docs, ddl)
-    df.select("doc_id", F.md5("text").alias("fp")).write.parquet(
-        os.path.join(corpus, "fps", "epoch=0")
-    )
-    _band_table(_shingle_table(df.select("doc_id", "text"))).write.parquet(
-        os.path.join(corpus, "bands", "epoch=0")
-    )
-    df.select("doc_id", "source", "text").write.parquet(
-        os.path.join(corpus, "docs", "epoch=0")
-    )
-    emb = df.select("doc_id", embed_udf(F.col("text")).alias("embedding"))
-    emb.write.parquet(os.path.join(corpus, "embs", "epoch=0"))
-    _emb_band_table(emb, "doc_id").write.parquet(
-        os.path.join(corpus, "embbands", "epoch=0")
-    )
-    # NO ledger entry for epoch 0 — the replay must treat it as void
-
-    stream_clean_increment(
-        spark, str(in_dir), corpus, str(tmp_path / "ckpt"), semantic_tau=0.8
-    )
-    kept = {r.doc_id for r in spark.read.parquet(f"{corpus}/docs").collect()}
-    assert kept == {0, 1}, (
-        "replayed epoch saw its own partial index and dropped everything"
-    )

@@ -12,14 +12,15 @@ Usage: python tools/debug_hash.py [sf_dir] query [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# run as a script from any checkout: import that checkout's package
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if _ROOT not in sys.path:
+    sys.path.insert(0, _ROOT)
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from tools.verify_local import TABLES  # noqa: E402
 
 
 def normalize(rows, cols):

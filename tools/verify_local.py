@@ -10,9 +10,13 @@ Usage: python tools/verify_local.py [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# run as a script from any checkout: import that checkout's package
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if _ROOT not in sys.path:
+    sys.path.insert(0, _ROOT)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
