@@ -150,7 +150,8 @@ def extract_doc_udf(html: pd.Series, text: pd.Series) -> pd.DataFrame:
 
 # Header-only variant: the header pipelines (extract_pages and the S5/S6
 # sink in sources.io) never read ``productos``, but the full UDF still
-# computes the line items (~43% of kernel time) and ships the nested
+# computes the line items (``extraction.udf.products_share`` in a traced
+# ingest run: 0.41-0.58 of kernel time) and ships the nested
 # array<struct> back through Arrow — whose ColumnVector->UnsafeRow copy
 # dominated the JVM side of the job. Computing only what the job consumes
 # cut the sf0.1 bench wall ~2x.

@@ -3,15 +3,17 @@
 One declarative plan, Catalyst-optimizable end to end:
 
     pages(url, warc_ts, html, text, lang)
-      -> main-content text            (Arrow UDF, only where text is null)
-      -> classify factura/albaran     (Arrow UDF)
-      -> field extraction struct      (Arrow UDF)
+      -> one fused Arrow UDF per batch (main-content text where text is
+         null -> classify factura/albaran -> field extraction -> line
+         items, in the full variant only)
       -> flat typed columns           (built-in projections)
 
 Scale notes (the part that matters at 10^12 docs):
-- The three UDFs run in a single stage: no shuffle between them — Spark
-  pipelines the projections over the same Arrow batches. Input partitioning
-  is preserved from the scan; there is NO shuffle in this job at all.
+- The fused UDF is one Python eval node in one stage, pipelined with the
+  projections over the same Arrow batches. Input partitioning is preserved
+  from the scan; extraction itself has no shuffle. The bucketed sink
+  (``sources.io.write_bucketed``) adds one exchange after the eval, which
+  moves extracted rows, not html, and leaves one file per bucket.
 - Skewed hosts do not skew this stage (extraction is per-row, cost scales
   with bytes not keys). Skew matters for the downstream joins/aggregations,
   handled in analytics/matching via AQE + salting (see matching/cotejo.py).

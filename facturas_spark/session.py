@@ -5,6 +5,19 @@ Local-mode defaults mirror what we'd submit cluster-side via
 a generated-code cache that holds the whole query registry).
 Parallelism is a parameter: tests run at 4 cores, ``perfbench/run.py`` at
 the host's core count, production jobs at ``$SPARK_GRAFT_CPUS``.
+
+Python workers fork from :mod:`facturas_spark.worker_daemon` instead of
+Spark's ``pyspark.daemon``. Spark's daemon imports only ``pyspark.worker``,
+so each worker imported pandas, pyarrow and the extraction kernel on its
+own, re-read ``pyspark.zip``'s directory once per cached zip importer on
+every task (``importlib.invalidate_caches()``) and re-scanned every
+import-time object in the GC run after every task. The package's daemon
+imports them once, then clears the import-path cache and freezes the GC
+before the first fork; every pandas UDF in the package gains, not only
+extraction. Cluster-side the same holds with ``spark-submit --conf
+spark.python.daemon.module=facturas_spark.worker_daemon`` and the package
+on the executors' ``PYTHONPATH`` (``--py-files`` or
+``spark.executorEnv.PYTHONPATH``).
 """
 
 from __future__ import annotations
@@ -12,6 +25,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The directory holding the package, put on the Python workers' path.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Entries of Spark's compiled generated-class cache (an LRU; Spark's default
 # is 100). See the comment where get_spark sets it.
@@ -80,6 +96,12 @@ def get_spark(
         # registry at sf0.01 the JVM's Metaspace held 185 MB against 176 MB
         # at 100 entries; peak RSS moved less than run-to-run noise.
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # Spark puts this ahead of the process PYTHONPATH on the workers'
+        # path, after its own pyspark and py4j zips. Without it a worker
+        # (and the daemon below) finds the package only when the driver's
+        # cwd or PYTHONPATH holds it.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.python.daemon.module", "facturas_spark.worker_daemon")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -1,16 +1,24 @@
-"""Where each benchmark pass spends its CPU, thread by thread.
+"""Where each benchmark set-up and pass spends its CPU, thread by thread.
 
     python3 tools/cpu_by_thread.py --workload analytics --passes 4
 
-Sets up the session and inputs as ``perfbench/run.py`` does, then runs the
-workload's pass ``--passes`` times (pass 0 cold; untraced, unchecked).
-Per pass it prints the wall time; the CPU seconds of the process tree's
-threads (``/proc/<pid>/task/*/stat``), grouped by process and thread name
-with trailing digits dropped; their sum against the tree total (threads
-that ended before the pass did, and reaped processes, count in the total
-only); the JVM's Janino compiles (``CodegenMetrics``) and its JIT compile
-milliseconds (``CompilationMXBean``).  Working files go to
-``.perfbench_work/``.
+Starts the session as ``perfbench/run.py`` does, as many times (set-up 0
+starts the JVM, the later ones only a new SparkContext on it), then
+prepares the inputs and runs the workload's pass ``--passes`` times (pass
+0 cold; untraced, unchecked).  CPU seconds come from the process tree's
+threads (``/proc/<pid>/task/*/stat``).  Processes are labelled ``driver``
+(this Python process), ``jvm`` (the Spark JVM), ``py-daemon`` (a Python
+child of the JVM: Spark's worker daemon) and ``py-worker`` (a child of a
+daemon: a forked Python worker); any other process goes by its name.
+
+Per set-up it prints the wall time of the session start and of the worker
+warm-up, the tree's CPU and that CPU by process label (with the process
+count).  Per pass it prints the wall time, the CPU grouped by process label
+and thread name with trailing digits dropped, the JVM's Janino compiles
+(``CodegenMetrics``) and its JIT compile milliseconds
+(``CompilationMXBean``).  Both print the groups' sum against the tree
+total: threads that ended before the step did, and reaped processes, count
+in the total only.  Working files go to ``.perfbench_work/``.
 """
 
 from __future__ import annotations
@@ -26,7 +34,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 
 from engine import _tree_stats, tree_cpu_s  # noqa: E402
-from run import configure_env, set_up, shut_down  # noqa: E402
+from run import SETUPS, configure_env, shut_down, start_session, warm_workers  # noqa: E402
 from tracing import Tracer  # noqa: E402
 from workloads import WORKLOADS, Ctx  # noqa: E402
 
@@ -38,19 +46,44 @@ def _read(path: str) -> str:
         return f.read()
 
 
-def thread_cpu() -> dict[str, tuple[str, float]]:
-    """``pid/tid`` -> (group, CPU seconds so far) of every live thread of
-    this process tree.  The group is ``process/thread`` name: ``pyspark`` is
-    this Python process, ``jvm`` the Spark JVM, any other process goes by
-    its own name."""
-    out = {}
-    for pid in _tree_stats(os.getpid()):
+def process_labels() -> dict[int, str]:
+    """pid -> label (see the module docstring) of every live process of
+    this tree."""
+    stats = _tree_stats(os.getpid())
+    labels: dict[int, str] = {}
+
+    def label(pid: int) -> str:
+        if pid not in labels:
+            name = _read(f"/proc/{pid}/comm").strip()
+            ppid = int(stats[pid][1])
+            parent = label(ppid) if pid != os.getpid() and ppid in stats else None
+            if pid == os.getpid():
+                labels[pid] = "driver"
+            elif name == "java":
+                labels[pid] = "jvm"
+            elif name.startswith("python") and parent in ("jvm", "py-daemon"):
+                labels[pid] = "py-daemon" if parent == "jvm" else "py-worker"
+            else:
+                labels[pid] = name
+        return labels[pid]
+
+    for pid in stats:
         try:
-            comm = _read(f"/proc/{pid}/comm").strip()
+            label(pid)
+        except OSError:
+            continue  # the process ended
+    return labels
+
+
+def thread_cpu() -> dict[str, tuple[str, str, float]]:
+    """``pid/tid`` -> (process label, thread name, CPU seconds so far) of
+    every live thread of this process tree."""
+    out = {}
+    for pid, proc in process_labels().items():
+        try:
             tids = os.listdir(f"/proc/{pid}/task")
         except OSError:
             continue  # the process ended
-        proc = "pyspark" if pid == os.getpid() else "jvm" if comm == "java" else comm
         for tid in tids:
             try:
                 name, fields = _read(f"/proc/{pid}/task/{tid}/stat").rsplit(")", 1)
@@ -59,8 +92,21 @@ def thread_cpu() -> dict[str, tuple[str, float]]:
             thread = re.sub(r"\d+$", "", name.split("(", 1)[1]).strip()
             # utime and stime are fields 14 and 15; the state (field 3) is first after ')'
             f = fields.split()
-            out[f"{pid}/{tid}"] = (f"{proc}/{thread}", (int(f[11]) + int(f[12])) / TICK)
+            out[f"{pid}/{tid}"] = (proc, thread, (int(f[11]) + int(f[12])) / TICK)
     return out
+
+
+def cpu_since(threads0: dict, by_thread: bool) -> tuple[Counter, Counter]:
+    """CPU seconds each group used since the ``thread_cpu()`` snapshot
+    ``threads0``, and how many processes each group holds; a group is the
+    process label, joined with the thread name if ``by_thread``."""
+    cpu: Counter = Counter()
+    pids: dict[str, set] = {}
+    for key, (proc, thread, s) in thread_cpu().items():
+        group = f"{proc}/{thread}" if by_thread else proc
+        cpu[group] += s - threads0.get(key, (proc, thread, 0.0))[2]
+        pids.setdefault(group, set()).add(key.split("/")[0])
+    return cpu, Counter({g: len(p) for g, p in pids.items()})
 
 
 def jvm_counts(spark) -> tuple[int, int]:
@@ -79,10 +125,24 @@ def main(argv: list[str] | None = None) -> int:
     work = os.path.join(ROOT, ".perfbench_work")
     configure_env(work)
     cores = len(os.sched_getaffinity(0))
-    tracer = Tracer(enabled=False)
-    spark, _ = set_up(cores, work, tracer)
+    spark = None
     try:
-        ctx = Ctx(spark, cores, args.seed, work, tracer)
+        for k in range(SETUPS):
+            if spark is not None:
+                spark.stop()
+            threads0, tree0, t0 = thread_cpu(), tree_cpu_s(), time.perf_counter()
+            spark = start_session(cores, work)
+            t1 = time.perf_counter()
+            warm_workers(spark, cores)
+            t2, tree = time.perf_counter(), tree_cpu_s() - tree0
+            cpu, procs = cpu_since(threads0, by_thread=False)
+            print(
+                f"set-up {k}: start {t1 - t0:.2f} s, warm-up {t2 - t1:.2f} s, tree cpu {tree:.2f} s, "
+                f"processes {sum(cpu.values()):.2f} s"
+            )
+            for name, s in cpu.most_common():
+                print(f"  {s:7.2f} s  {name} ({procs[name]})")
+        ctx = Ctx(spark, cores, args.seed, work, Tracer(enabled=False))
         wl, _ = WORKLOADS[args.workload]()
         wl.prepare(ctx)
         for k in range(args.passes):
@@ -92,9 +152,7 @@ def main(argv: list[str] | None = None) -> int:
                     op.prep()
                 op.run()
             wall, tree, (jan, jit) = time.perf_counter() - t0, tree_cpu_s() - tree0, jvm_counts(spark)
-            groups: Counter = Counter()
-            for tid, (name, s) in thread_cpu().items():
-                groups[name] += s - threads0.get(tid, (name, 0.0))[1]
+            groups, _ = cpu_since(threads0, by_thread=True)
             print(
                 f"pass {k}: wall {wall:.2f} s, tree cpu {tree:.2f} s, thread groups {sum(groups.values()):.2f} s, "
                 f"janino compiles {jan - jan0}, jit {jit - jit0} ms"
@@ -103,7 +161,8 @@ def main(argv: list[str] | None = None) -> int:
                 if s >= 0.05:
                     print(f"  {s:7.2f} s  {name}")
     finally:
-        shut_down(spark)
+        if spark is not None:
+            shut_down(spark)
     return 0
 
 
