@@ -14,10 +14,15 @@ every task (``importlib.invalidate_caches()``) and re-scanned every
 import-time object in the GC run after every task. The package's daemon
 imports them once, then clears the import-path cache and freezes the GC
 before the first fork; every pandas UDF in the package gains, not only
-extraction. Cluster-side the same holds with ``spark-submit --conf
+extraction. Before those imports it moves Spark's ``pyspark.zip`` and py4j
+zip behind an installed pyspark and py4j of the same release: ``zipimport``
+caches no bytecode, so importing pyspark from the zip compiled it from
+source in every new daemon (about 1 CPU s per session set-up). Cluster-side
+the same holds with ``spark-submit --conf
 spark.python.daemon.module=facturas_spark.worker_daemon`` and the package
 on the executors' ``PYTHONPATH`` (``--py-files`` or
-``spark.executorEnv.PYTHONPATH``).
+``spark.executorEnv.PYTHONPATH``); an executor without pip pyspark, or
+with another release, keeps Spark's path and imports from the zips.
 """
 
 from __future__ import annotations

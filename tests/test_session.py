@@ -7,10 +7,14 @@ size every warm pass compiled all of them again (and the JIT re-compiled
 the new classes). ``get_spark`` sizes the cache to hold them.
 
 Python workers fork from ``facturas_spark.worker_daemon``, which has
-imported the kernel, dropped its import-path cache and frozen the GC.
-Byte-identical extraction across daemons is pinned by
+imported the kernel, dropped its import-path cache and frozen the GC. It
+imports the installed pyspark and py4j (cached bytecode) instead of
+Spark's zips when they are the same release; the tests pin that a worker
+runs the installed copies, that every pyspark / py4j module it loaded has
+the bytes of its entry in Spark's zip, and that another release keeps
+Spark's path. Byte-identical extraction across daemons is pinned by
 ``tests/test_local_cluster.py``: its ``local-cluster`` run keeps Spark's
-own daemon.
+own daemon and imports pyspark from the zip.
 """
 
 from __future__ import annotations
@@ -18,19 +22,25 @@ from __future__ import annotations
 import gc
 import json
 import os
+import pathlib
 import runpy
 import subprocess
 import sys
+import zipfile
 import zipimport
 
 import pandas as pd
+import py4j
+import pyspark
 from pyspark.sql import functions as F
 
 import __spark_entry__ as em
 from facturas_spark.analytics.cache import release_session_cache
 from facturas_spark.extraction.udf import extract_batch_header
+from facturas_spark.pipeline import extract_pages_header
 from facturas_spark.session import CODEGEN_CACHE_ENTRIES
 from facturas_spark.synth import gen_corpus_slice
+from facturas_spark.worker_daemon import _spark_zip_package, prefer_installed_pyspark
 from tests.test_plans import SF
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -70,33 +80,111 @@ def test_warm_dashboard_mix_compiles_no_code(spark):
         release_session_cache(spark)
 
 
-def test_workers_fork_with_kernel_imported_and_gc_frozen(spark):
+def _worker_state(spark) -> dict:
+    """What one Python worker reports about its interpreter."""
+
     # a nested function is pickled by value: the worker does not import this
     # module (which imports the kernel) to run it
     @F.pandas_udf("string")
     def report(ids: pd.Series) -> pd.Series:
+        modules = {
+            name: getattr(m, "__file__", None)
+            for name, m in list(sys.modules.items())
+            if name.split(".")[0] in ("pyspark", "py4j")
+        }
         state = {
             "kernel_imported": "facturas_spark.extraction.udf" in sys.modules,
             "frozen": gc.get_freeze_count(),
             "zip_importers": sum(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()),
+            "modules": modules,
+            "zip_modules": sorted(
+                name for name, m in list(sys.modules.items()) if ".zip/" in (getattr(m, "__file__", None) or "")
+            ),
+            "path": sys.path,
         }
         return pd.Series([json.dumps(state)] * len(ids))
 
-    state = json.loads(spark.range(0, 1, 1, 1).select(report("id")).first()[0])
+    return json.loads(spark.range(0, 1, 1, 1).select(report("id")).first()[0])
+
+
+def test_workers_fork_with_kernel_imported_and_gc_frozen(spark):
+    state = _worker_state(spark)
     # Spark's own daemon: no kernel, 0 frozen objects, 16 zip importers (one
     # per imported pyspark/py4j package path, each re-reading pyspark.zip's
-    # directory on every task)
+    # directory on every task); the package's daemon with pyspark and py4j
+    # imported from the zips: 3
     assert state["kernel_imported"]
     assert state["frozen"] > 0
-    assert state["zip_importers"] <= 3
+    assert state["zip_importers"] <= 1
+    # the installed pyspark and py4j, with cached bytecode, not Spark's zips
+    assert state["modules"]["pyspark"] == pyspark.__file__
+    assert state["modules"]["py4j"] == py4j.__file__
+    assert state["zip_modules"] == []
+
+
+def test_workers_run_the_same_pyspark_source_as_sparks_zips(spark):
+    """Every pyspark / py4j module a worker loaded after an extraction is
+    byte-identical to its entry in the zip Spark put on the worker's path."""
+    pages = spark.createDataFrame(
+        gen_corpus_slice(list(range(8)), seed=42), "url string, warc_ts timestamp, html binary, text string, lang string"
+    )
+    extract_pages_header(pages).collect()
+    state = _worker_state(spark)
+    zips = {p: zipimport.zipimporter(e) for e in state["path"] if (p := _spark_zip_package(e))}
+    assert set(zips) == {"pyspark", "py4j"}
+    compared = 0
+    for name, file in state["modules"].items():
+        if file is None:  # namespace packages
+            continue
+        package = name.split(".")[0]
+        member = os.path.relpath(file, os.path.dirname(os.path.dirname(state["modules"][package])))
+        assert zips[package].get_data(member) == pathlib.Path(file).read_bytes(), member
+        compared += 1
+    assert compared > 100
+
+
+def _fake_zip(path, package: str, version: bytes) -> str:
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr(f"{package}/__init__.py", b"")
+        zf.writestr(f"{package}/version.py", version)
+    return str(path)
+
+
+def _installed_version(package) -> bytes:
+    return pathlib.Path(package.__file__).with_name("version.py").read_bytes()
+
+
+def test_daemon_prefers_installed_pyspark_only_for_the_same_release(tmp_path):
+    installed = os.path.dirname(os.path.dirname(pyspark.__file__))
+    assert os.path.dirname(os.path.dirname(py4j.__file__)) == installed
+    py4j_zip = _fake_zip(tmp_path / "py4j-0.10.9.9-src.zip", "py4j", _installed_version(py4j))
+    (tmp_path / "same").mkdir()
+    same = _fake_zip(tmp_path / "same" / "pyspark.zip", "pyspark", _installed_version(pyspark))
+    other = _fake_zip(tmp_path / "pyspark.zip", "pyspark", b"__version__: str = '3.5.0'\n")
+
+    path = [REPO, same, py4j_zip, "/nonexistent", installed]
+    prefer_installed_pyspark(path)
+    assert path == [REPO, "/nonexistent", installed, same, py4j_zip]
+
+    for spark_order in (
+        [REPO, other, py4j_zip, installed],  # another pyspark release installed
+        [REPO, same, py4j_zip],  # no pyspark installed
+    ):
+        path = list(spark_order)
+        prefer_installed_pyspark(path)
+        assert path == spark_order
 
 
 def test_importing_worker_daemon_leaves_driver_untouched():
     frozen = gc.get_freeze_count()
     importers = dict(sys.path_importer_cache)
-    runpy.run_module("facturas_spark.worker_daemon")
+    path = list(sys.path)
+    # run_path: this module has imported the daemon already, and runpy warns
+    # on run_module of an imported module
+    runpy.run_path(os.path.join(REPO, "facturas_spark", "worker_daemon.py"))
     assert gc.get_freeze_count() == frozen
     assert importers.items() <= sys.path_importer_cache.items()
+    assert sys.path == path
 
 
 _CWD_JOB = """
@@ -105,6 +193,7 @@ sys.path.insert(0, %(root)r)
 from facturas_spark.pipeline import extract_pages_header
 from facturas_spark.session import get_spark
 from facturas_spark.synth import gen_corpus_slice
+from facturas_spark.worker_daemon import _spark_zip_package, prefer_installed_pyspark
 
 spark = get_spark("cwd-independent", cores=2)
 pages = spark.createDataFrame(
