@@ -2,9 +2,33 @@
 
 Local-mode defaults mirror what we'd submit cluster-side via
 ``spark-submit --py-files`` (AQE on, Arrow on, sane shuffle partitioning,
-a generated-code cache that holds the whole query registry).
+a generated-code cache that holds the whole query registry, a JIT policy
+for short sessions).
 Parallelism is a parameter: tests run at 4 cores, ``perfbench/run.py`` at
 the host's core count, production jobs at ``$SPARK_GRAFT_CPUS``.
+
+The JVMs compile with C2 (HotSpot's optimizing JIT tier) only what stays
+hot well past JDK 17's default thresholds: :data:`C2_THRESHOLDS` raises
+each of the four tier-4 thresholds 10x. An engine session lives for seconds
+to minutes, and a JFR ``jdk.Compilation`` recording of one cold analytics
+pass found 27.4 s of compile tasks against 40.2 CPU s for the pass, 23.5 s
+of it C2. Most of that compiled code that runs hundreds to thousands of
+times per session: Janino (the compiler of Spark's generated code), Java
+serialization, Spark core and Catalyst; the queries' own generated classes
+took 7%. Under the higher thresholds C1 keeps running that machinery, and
+C2 still compiles whatever stays hot (unlike ``-XX:TieredStopAtLevel=1``,
+which never reaches C2). The cost is paid by hot task code that reaches
+C2 later: over the whole query registry at sf0.1, executor-task CPU rose
+about 14% in the first pass of a session and 27% in the second, and was
+back level from the third, while the JVM's total CPU still fell in the
+first pass. Java 17 floating point is strict (JEP 306), so the JIT tier
+cannot change a result.
+``get_spark`` sets the thresholds in ``spark.driver.defaultJavaOptions`` and
+``spark.executor.defaultJavaOptions``; Spark puts those ahead of the
+``extraJavaOptions``, so ``$SPARK_GRAFT_JVM_OPTS`` (or an
+``extraJavaOptions`` on a cluster) still wins for any flag it repeats.
+Cluster-side the same holds with ``spark-submit --conf
+spark.executor.defaultJavaOptions="<C2_THRESHOLDS>"``.
 
 Python workers fork from :mod:`facturas_spark.worker_daemon` instead of
 Spark's ``pyspark.daemon``. Spark's daemon imports only ``pyspark.worker``,
@@ -37,6 +61,13 @@ _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Entries of Spark's compiled generated-class cache (an LRU; Spark's default
 # is 100). See the comment where get_spark sets it.
 CODEGEN_CACHE_ENTRIES = 2048
+
+# HotSpot's C2 compile thresholds, 10x each JDK 17 default (5000, 600,
+# 15000, 40000). See the module docstring.
+C2_THRESHOLDS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 def get_spark(
@@ -74,12 +105,22 @@ def get_spark(
         # override is a conscious choice; raise only with fatter executors)
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # Spark puts the default options ahead of the extra ones on the
+        # JVM's command line, and HotSpot keeps the last value of a
+        # repeated flag: $SPARK_GRAFT_JVM_OPTS can override a threshold.
+        .config("spark.driver.defaultJavaOptions", C2_THRESHOLDS)
+        # read only when the master launches executor JVMs (a cluster or
+        # local-cluster master set through extra_conf or spark-submit)
+        .config("spark.executor.defaultJavaOptions", C2_THRESHOLDS)
         # Throughput GC: this engine is pure batch — allocation-heavy
         # string/array expressions at 32 concurrent task threads choke
         # Java 17's default G1 (tuned for pause latency, which batch
         # never needs). Measured on the 2.4M-doc quality_frame map at 32
-        # cores: 39 s (G1) -> 24 s (ParallelGC). On a real cluster the
-        # same flag goes in spark.executor.extraJavaOptions.
+        # cores: 39 s (G1) -> 24 s (ParallelGC). It is not set for
+        # executors: on a real cluster the flag goes in
+        # spark.executor.extraJavaOptions, or next to the thresholds in
+        # spark.executor.defaultJavaOptions (a value set there replaces
+        # this package's, so it must repeat C2_THRESHOLDS).
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_GRAFT_JVM_OPTS", "-XX:+UseParallelGC"),

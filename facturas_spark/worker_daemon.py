@@ -22,12 +22,25 @@ loaded package's ``__path__``, so a worker never mixes the two. An executor
 without pip pyspark, or with another release, keeps Spark's order and
 imports from the zips as before.
 
+Spark also puts its ``spark-core`` jar on the workers' path (5359 entries,
+no Python module). Each task's ``importlib.invalidate_caches()`` re-read
+its directory, 0.03 CPU s per task, so the daemon drops every path entry
+that is an archive holding no ``.py`` or ``.pyc`` file. Such an entry
+cannot satisfy an import with code: ``zipimport`` finds only namespace
+package portions in it, one per bare directory (the jar's ``org/`` and
+``google/``). With the jar on the path, the stdlib's ``copy`` and
+``pickle`` imported ``org`` from it as an empty namespace package in
+their Jython probe (``from org.python.core import PyStringMap``), which
+fails with or without the jar; the tests pin that no other module a worker
+loads is one of those names.
+
 Importing this module (rather than running it) changes nothing.
 """
 
 import gc
 import os
 import sys
+import zipfile
 import zipimport
 
 
@@ -66,7 +79,20 @@ def prefer_installed_pyspark(path: list[str]) -> None:
     path[:] = rest + zips
 
 
+def holds_python(entry: str) -> bool:
+    """False only for a path entry that is an archive with no ``.py`` or
+    ``.pyc`` member (anything else is left to the import system)."""
+    if not os.path.isfile(entry):
+        return True
+    try:
+        with zipfile.ZipFile(entry) as zf:
+            return any(name.endswith((".py", ".pyc")) for name in zf.namelist())
+    except (OSError, zipfile.BadZipFile):
+        return True
+
+
 if __name__ == "__main__":
+    sys.path[:] = [entry for entry in sys.path if holds_python(entry)]
     prefer_installed_pyspark(sys.path)
 
     import pandas  # noqa: F401

@@ -8,11 +8,17 @@ no Python in SQL-only queries, zero shuffles in the extraction job.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 
 import __spark_entry__ as em
-from facturas_spark.plans import executed_plan as _plan
 
 SF = "/root/testdata/sf0.001"
+
+
+def _plan(df: DataFrame) -> str:
+    """The executed physical plan as text (post-AQE final plan for the
+    stages already materialized; the initial physical plan otherwise)."""
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_filter_pushdown_reaches_scan(spark):

@@ -12,9 +12,17 @@ imports the installed pyspark and py4j (cached bytecode) instead of
 Spark's zips when they are the same release; the tests pin that a worker
 runs the installed copies, that every pyspark / py4j module it loaded has
 the bytes of its entry in Spark's zip, and that another release keeps
-Spark's path. Byte-identical extraction across daemons is pinned by
-``tests/test_local_cluster.py``: its ``local-cluster`` run keeps Spark's
-own daemon and imports pyspark from the zip.
+Spark's path. The daemon also drops Spark's ``spark-core`` jar from the
+path, an archive with no Python module; the tests pin that no module a
+worker loaded could have come from a dropped archive. Byte-identical
+extraction across daemons is pinned by ``tests/test_local_cluster.py``:
+its ``local-cluster`` run keeps Spark's own daemon and imports pyspark from
+the zip.
+
+The driver JVM runs the C2 thresholds of ``session.C2_THRESHOLDS``: the
+tests read the values the JVM uses (Spark adds
+``-XX:+IgnoreUnrecognizedVMOptions``, so a misspelled flag would be
+dropped silently), and pin that ``$SPARK_GRAFT_JVM_OPTS`` overrides them.
 """
 
 from __future__ import annotations
@@ -38,9 +46,9 @@ import __spark_entry__ as em
 from facturas_spark.analytics.cache import release_session_cache
 from facturas_spark.extraction.udf import extract_batch_header
 from facturas_spark.pipeline import extract_pages_header
-from facturas_spark.session import CODEGEN_CACHE_ENTRIES
+from facturas_spark.session import C2_THRESHOLDS, CODEGEN_CACHE_ENTRIES
 from facturas_spark.synth import gen_corpus_slice
-from facturas_spark.worker_daemon import _spark_zip_package, prefer_installed_pyspark
+from facturas_spark.worker_daemon import _spark_zip_package, holds_python, prefer_installed_pyspark
 from tests.test_plans import SF
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -100,6 +108,12 @@ def _worker_state(spark) -> dict:
             "zip_modules": sorted(
                 name for name, m in list(sys.modules.items()) if ".zip/" in (getattr(m, "__file__", None) or "")
             ),
+            "top_level": sorted({name.split(".")[0] for name in list(sys.modules)}),
+            # every file and package-path entry of every loaded module
+            "locations": sorted(
+                {getattr(m, "__file__", None) or "" for m in list(sys.modules.values())}
+                | {entry for m in list(sys.modules.values()) for entry in (getattr(m, "__path__", None) or [])}
+            ),
             "path": sys.path,
         }
         return pd.Series([json.dumps(state)] * len(ids))
@@ -112,10 +126,10 @@ def test_workers_fork_with_kernel_imported_and_gc_frozen(spark):
     # Spark's own daemon: no kernel, 0 frozen objects, 16 zip importers (one
     # per imported pyspark/py4j package path, each re-reading pyspark.zip's
     # directory on every task); the package's daemon with pyspark and py4j
-    # imported from the zips: 3
+    # imported from the zips: 3; with the spark-core jar on the path: 1
     assert state["kernel_imported"]
     assert state["frozen"] > 0
-    assert state["zip_importers"] <= 1
+    assert state["zip_importers"] == 0
     # the installed pyspark and py4j, with cached bytecode, not Spark's zips
     assert state["modules"]["pyspark"] == pyspark.__file__
     assert state["modules"]["py4j"] == py4j.__file__
@@ -141,6 +155,50 @@ def test_workers_run_the_same_pyspark_source_as_sparks_zips(spark):
         assert zips[package].get_data(member) == pathlib.Path(file).read_bytes(), member
         compared += 1
     assert compared > 100
+
+
+def test_workers_drop_only_archives_no_loaded_module_could_come_from(spark):
+    """The archives the daemon drops from Spark's worker path (the
+    spark-core jar) hold no module a worker loads after an extraction, not
+    even a namespace package portion."""
+    pages = spark.createDataFrame(
+        gen_corpus_slice(list(range(8)), seed=42), "url string, warc_ts timestamp, html binary, text string, lang string"
+    )
+    extract_pages_header(pages).collect()
+    state = _worker_state(spark)
+    spark_path = spark._jvm.org.apache.spark.api.python.PythonUtils.sparkPythonPath().split(os.pathsep)
+    dropped = [entry for entry in spark_path if not holds_python(entry)]
+    assert [os.path.basename(entry).split("_")[0] for entry in dropped] == ["spark-core"]
+    assert _spark_zip_package(spark_path[0]) == "pyspark"
+    for archive in dropped:
+        assert archive not in state["path"]
+        assert not [loc for loc in state["locations"] if loc.startswith(archive)]
+        # the jar's bare ``org/`` and ``google/`` directories are namespace
+        # portions; no loaded top-level name is one of them
+        finder = zipimport.zipimporter(archive)
+        assert [name for name in state["top_level"] if finder.find_spec(name) is not None] == []
+        # With the jar on the path, the stdlib's Jython probe in ``copy`` and
+        # ``pickle`` (``from org.python.core import PyStringMap``) imported
+        # ``org`` from it as an empty namespace package, then failed, as it
+        # does without the jar: the jar holds no ``org/python/``.
+        with zipfile.ZipFile(archive) as zf:
+            assert not [member for member in zf.namelist() if member.startswith("org/python/")]
+    assert {"pandas", "pyarrow", "facturas_spark"} <= set(state["top_level"])
+
+
+def test_holds_python_is_false_only_for_archives_without_modules(tmp_path):
+    def archive(name: str, members: list[str]) -> str:
+        with zipfile.ZipFile(tmp_path / name, "w") as zf:
+            for member in members:
+                zf.writestr(member, b"")
+        return str(tmp_path / name)
+
+    assert not holds_python(archive("core.jar", ["org/apache/A.class", "google/protobuf/any.proto"]))
+    assert holds_python(archive("src.zip", ["pkg/__init__.py"]))
+    assert holds_python(archive("bytecode.zip", ["mod.pyc"]))
+    (tmp_path / "notes.txt").write_text("not an archive")
+    for entry in (str(tmp_path), str(tmp_path / "notes.txt"), str(tmp_path / "missing.zip"), ""):
+        assert holds_python(entry)
 
 
 def _fake_zip(path, package: str, version: bytes) -> str:
@@ -219,3 +277,45 @@ def test_python_udf_runs_from_any_cwd_without_pythonpath(tmp_path):
     _, _, html, text, _ = gen_corpus_slice([1], seed=42)[0]
     want = extract_batch_header([html], [text]).iloc[0]
     assert {c: row[c] for c in _COMPARED} == {c: want[c] for c in _COMPARED}
+
+
+_THRESHOLDS = dict(flag.removeprefix("-XX:").split("=") for flag in C2_THRESHOLDS.split())
+
+
+def _vm_options(jvm) -> dict[str, tuple[str, str]]:
+    """(value, origin) of each C2 threshold, as the JVM reads them."""
+    bean_class = jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(bean_class)
+    options = {name: bean.getVMOption(name) for name in _THRESHOLDS}
+    return {name: (option.getValue(), option.getOrigin().toString()) for name, option in options.items()}
+
+
+def test_driver_jvm_runs_the_package_c2_thresholds(spark):
+    assert len(_THRESHOLDS) == 4
+    # VM_CREATION: set on the command line, not JDK 17's defaults
+    assert _vm_options(spark._jvm) == {name: (value, "VM_CREATION") for name, value in _THRESHOLDS.items()}
+
+
+_JVM_OPTS_JOB = """
+import json, sys
+sys.path.insert(0, %(root)r)
+from facturas_spark.session import get_spark
+
+spark = get_spark("jvm-opts", cores=1)
+jvm = spark._jvm
+bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+)
+print(json.dumps({name: bean.getVMOption(name).getValue() for name in %(names)r}))
+spark.stop()
+"""
+
+
+def test_spark_graft_jvm_opts_override_a_c2_threshold(tmp_path):
+    env = dict(os.environ, SPARK_GRAFT_JVM_OPTS="-XX:+UseParallelGC -XX:Tier4InvocationThreshold=7000")
+    proc = subprocess.run(
+        [sys.executable, "-c", _JVM_OPTS_JOB % {"root": REPO, "names": list(_THRESHOLDS)}],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == {**_THRESHOLDS, "Tier4InvocationThreshold": "7000"}
