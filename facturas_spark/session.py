@@ -7,28 +7,39 @@ for short sessions).
 Parallelism is a parameter: tests run at 4 cores, ``perfbench/run.py`` at
 the host's core count, production jobs at ``$SPARK_GRAFT_CPUS``.
 
-The JVMs compile with C2 (HotSpot's optimizing JIT tier) only what stays
-hot well past JDK 17's default thresholds: :data:`C2_THRESHOLDS` raises
-each of the four tier-4 thresholds 10x. An engine session lives for seconds
-to minutes, and a JFR ``jdk.Compilation`` recording of one cold analytics
-pass found 27.4 s of compile tasks against 40.2 CPU s for the pass, 23.5 s
-of it C2. Most of that compiled code that runs hundreds to thousands of
-times per session: Janino (the compiler of Spark's generated code), Java
-serialization, Spark core and Catalyst; the queries' own generated classes
-took 7%. Under the higher thresholds C1 keeps running that machinery, and
-C2 still compiles whatever stays hot (unlike ``-XX:TieredStopAtLevel=1``,
-which never reaches C2). The cost is paid by hot task code that reaches
-C2 later: over the whole query registry at sf0.1, executor-task CPU rose
-about 14% in the first pass of a session and 27% in the second, and was
-back level from the third, while the JVM's total CPU still fell in the
-first pass. Java 17 floating point is strict (JEP 306), so the JIT tier
-cannot change a result.
-``get_spark`` sets the thresholds in ``spark.driver.defaultJavaOptions`` and
-``spark.executor.defaultJavaOptions``; Spark puts those ahead of the
-``extraJavaOptions``, so ``$SPARK_GRAFT_JVM_OPTS`` (or an
-``extraJavaOptions`` on a cluster) still wins for any flag it repeats.
-Cluster-side the same holds with ``spark-submit --conf
-spark.executor.defaultJavaOptions="<C2_THRESHOLDS>"``.
+The JVM ``get_spark`` launches compiles with C2 (HotSpot's optimizing JIT
+tier) only what stays hot well past JDK 17's default thresholds:
+:data:`C2_THRESHOLDS` raises each of the four tier-4 thresholds 5x. A JFR
+``jdk.Compilation`` recording of one cold analytics pass found 27.4 s of
+compile tasks against 40.2 CPU s for the pass, 23.5 s of it C2. Most of
+that compiled code that runs hundreds to thousands of times per session:
+Janino (the compiler of Spark's generated code), Java serialization, Spark
+core and Catalyst; the queries' own generated classes took 7%. Under the higher thresholds C1
+keeps running that machinery, and C2 still compiles whatever stays hot
+(unlike ``-XX:TieredStopAtLevel=1``, which never reaches C2). Java 17
+floating point is strict (JEP 306), so the JIT tier cannot change a result.
+
+The factor trades short sessions against long ones: hot task code also
+reaches C2 later. A perfbench session lasts about a minute. Over the whole
+query registry at sf0.1 (a first pass of 2-3 minutes, then 1-1.5 minutes
+a pass, in one session) 10x raised executor-task CPU 14% in the first
+pass and 27% in the second. At 5x the first pass's executor-task CPU did
+not rise and the second's rose 5%, inside the spread between runs, while
+the JVM's total CPU fell in both. How long a production job's session
+runs depends on its corpus; none was measured.
+
+``get_spark`` sets the thresholds in ``spark.driver.defaultJavaOptions``,
+which acts only when ``get_spark`` launches the JVM (a plain ``python``
+process). Values set on the builder replace what ``spark-defaults.conf``
+sets for the same keys, so only ``extra_conf`` or ``$SPARK_GRAFT_JVM_OPTS``
+change them here. Spark puts the default options ahead of
+``spark.driver.extraJavaOptions``, and HotSpot keeps the last value of a
+repeated flag, so a threshold in ``$SPARK_GRAFT_JVM_OPTS`` wins. Under
+``spark-submit`` the driver JVM is already running when ``get_spark`` is
+called, so it runs with spark-submit's Java options, not these. Executor
+JVMs on a cluster take theirs from the cluster's own conf: put
+:data:`C2_THRESHOLDS` in its ``spark.executor.defaultJavaOptions``
+(``get_spark`` sets no executor Java option).
 
 Python workers fork from :mod:`facturas_spark.worker_daemon` instead of
 Spark's ``pyspark.daemon``. Spark's daemon imports only ``pyspark.worker``,
@@ -62,11 +73,11 @@ _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # is 100). See the comment where get_spark sets it.
 CODEGEN_CACHE_ENTRIES = 2048
 
-# HotSpot's C2 compile thresholds, 10x each JDK 17 default (5000, 600,
+# HotSpot's C2 compile thresholds, 5x each JDK 17 default (5000, 600,
 # 15000, 40000). See the module docstring.
 C2_THRESHOLDS = (
-    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
-    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+    "-XX:Tier4InvocationThreshold=25000 -XX:Tier4MinInvocationThreshold=3000 "
+    "-XX:Tier4CompileThreshold=75000 -XX:Tier4BackEdgeThreshold=200000"
 )
 
 
@@ -109,18 +120,13 @@ def get_spark(
         # JVM's command line, and HotSpot keeps the last value of a
         # repeated flag: $SPARK_GRAFT_JVM_OPTS can override a threshold.
         .config("spark.driver.defaultJavaOptions", C2_THRESHOLDS)
-        # read only when the master launches executor JVMs (a cluster or
-        # local-cluster master set through extra_conf or spark-submit)
-        .config("spark.executor.defaultJavaOptions", C2_THRESHOLDS)
         # Throughput GC: this engine is pure batch — allocation-heavy
         # string/array expressions at 32 concurrent task threads choke
         # Java 17's default G1 (tuned for pause latency, which batch
         # never needs). Measured on the 2.4M-doc quality_frame map at 32
         # cores: 39 s (G1) -> 24 s (ParallelGC). It is not set for
-        # executors: on a real cluster the flag goes in
-        # spark.executor.extraJavaOptions, or next to the thresholds in
-        # spark.executor.defaultJavaOptions (a value set there replaces
-        # this package's, so it must repeat C2_THRESHOLDS).
+        # executors: on a real cluster the flag goes in the cluster's own
+        # spark.executor.extraJavaOptions.
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_GRAFT_JVM_OPTS", "-XX:+UseParallelGC"),

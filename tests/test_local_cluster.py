@@ -9,9 +9,7 @@ result rows all travel the same wire a production cluster uses.
 Runs in a SUBPROCESS because a JVM allows one SparkContext and the shared
 session fixture owns this process's. Marked by runtime cost: ~60 s for
 cluster startup + job; it asserts byte-level parity of the full extraction
-output against the in-process local-mode run. A third job builds its
-session with ``get_spark`` on ``local-cluster`` and reads the C2
-thresholds an executor JVM runs.
+output against the in-process local-mode run.
 """
 
 from __future__ import annotations
@@ -206,56 +204,3 @@ def test_clean_chain_parity_across_real_executors(spark):
     assert cluster["executors"] >= 3, cluster
     assert cluster["n"] == local["n"] > 0
     assert cluster["digest"] == local["digest"]
-
-
-_JIT_JOB = r"""
-import json, os, subprocess, sys
-sys.path.insert(0, %(repo)r)
-from facturas_spark.session import get_spark
-
-spark = get_spark("cluster-jit", extra_conf={"spark.master": "local-cluster[1,1,1024]"})
-spark.range(0, 4, 1, 2).count()
-children = {}
-for pid in filter(str.isdigit, os.listdir("/proc")):
-    try:
-        with open(f"/proc/{pid}/stat") as f:
-            ppid = int(f.read().rsplit(")", 1)[1].split()[1])
-        with open(f"/proc/{pid}/cmdline", "rb") as f:
-            cmdline = f.read()
-    except OSError:
-        continue
-    children.setdefault(ppid, []).append((int(pid), cmdline))
-tree, executors = [os.getpid()], []
-while tree:
-    for pid, cmdline in children.get(tree.pop(), []):
-        tree.append(pid)
-        if b"CoarseGrainedExecutorBackend" in cmdline:
-            executors.append(pid)
-# the flags as the executor JVM reads them, not as written
-flags = [
-    subprocess.run(["jcmd", str(pid), "VM.flags"], capture_output=True, text=True, check=True).stdout
-    for pid in executors
-]
-spark.stop()
-print("RESULT" + json.dumps([
-    dict(flag.removeprefix("-XX:").split("=", 1) for flag in out.split() if flag.startswith("-XX:") and "=" in flag)
-    for out in flags
-]))
-"""
-
-
-def test_executor_jvm_runs_the_package_c2_thresholds():
-    from tests.test_session import _THRESHOLDS
-
-    proc = subprocess.run(
-        [sys.executable, "-c", _JIT_JOB % {"repo": REPO}],
-        capture_output=True,
-        text=True,
-        timeout=420,
-        cwd=REPO,
-    )
-    results = [json.loads(line[len("RESULT"):]) for line in proc.stdout.splitlines() if line.startswith("RESULT")]
-    assert results, f"cluster job produced no RESULT line:\n{proc.stdout[-2000:]}\n{proc.stderr[-2000:]}"
-    [executors] = results
-    assert len(executors) == 1
-    assert {name: executors[0].get(name) for name in _THRESHOLDS} == _THRESHOLDS
