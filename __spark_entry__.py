@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from facturas_spark.analytics import corpus_clean as CC
 from facturas_spark.analytics import dedup as D
-from facturas_spark.extraction import bpe as BPE
 from facturas_spark.extraction.products import _CATEGORIES as _P15_CATEGORIES
 from facturas_spark.extraction.products import _KB as _P11_KB
 from facturas_spark.analytics import escandallos as E
@@ -56,26 +55,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # priority order, (1) queries whose code changed this round,
         # (2) queries never driver-checked, (3) unchanged queries with
         # the OLDEST banked green row, oldest first. After each round,
-        # re-rank; with 116 queries and a 50-slot window every banked
-        # row is refreshed at most ~2.4 rounds after it lands. The five
+        # re-rank; with 83 queries and a 50-slot window every banked
+        # row is refreshed at most ~1.6 rounds after it lands. The four
         # rows-only entries pinned by golden pytest (products/cotejo/
-        # extract_embed_ann/ocr_layout_extraction) stay parked last: a
+        # cotejo_inverso/ocr_layout_extraction) stay parked last: a
         # rows-only driver row adds no evidence over their fixtures, so
         # they never displace a hash-checkable refresh.
-        "txt_substring_dup": D.txt_substring_dup,
-        "dedup_minhash_lsh": D.dedup_minhash_lsh,
-        "txt_decontamination": D.txt_decontamination,
         "dedup_embedding_lsh": D.dedup_embedding_lsh,
         "c1_classify_documents": Q.c1_classify_documents,
-        "txt_tfidf_keywords": D.txt_tfidf_keywords,
-        "corpus_dsir_weights": D.corpus_dsir_weights,
-        "txt_unigram_lm_score": D.txt_unigram_lm_score,
-        "ann_ivf_topk": D.ann_ivf_topk,
-        "ann_ivf_multiprobe": D.ann_ivf_multiprobe,
-        "ann_lsh_buckets": D.ann_lsh_buckets,
-        "dedup_semantic": D.dedup_semantic,
         "dedup_embedding_cosine": D.dedup_embedding_cosine,
-        "txt_charset_normalize": D.txt_charset_normalize,
         "numier_upsert_ventas": E.numier_upsert_ventas,
         "m14_duplicate_orders": D.m14_duplicate_orders,
         "q08_price_history_log": Q.q08_price_history_log,
@@ -85,61 +73,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact": Q.dedup_exact,
         "ocr_layout_facets": Q.ocr_layout_facets,
         "corpus_clean_stats": CC.corpus_clean_stats,
-        "txt_bigram_lm_ppl": D.txt_bigram_lm_ppl,
-        "dedup_lsh_clusters": D.dedup_lsh_clusters,
-        "dedup_incremental": D.dedup_incremental,
-        "corpus_chunking": D.corpus_chunking,
-        "txt_bpe_token_stats": D.txt_bpe_token_stats,
-        "corpus_packing": D.corpus_packing,
         "f4_f6_amount_banks": Q.f4_f6_amount_banks,
-        "f2_invoice_number": Q.f2_invoice_number,
-        "f1_cif_extraction": Q.f1_cif_extraction,
-        "f12_confidence": Q.f12_confidence,
-        "f8_date_variants": Q.f8_date_variants,
-        "f7_amount_variants": Q.f7_amount_variants,
-        "p9_price_closure": Q.p9_price_closure,
         "f11_fiscal_reconciliation": Q.f11_fiscal_reconciliation,
-        "p8_p15_products_normalized": Q.p8_p15_products_normalized,
-        "p13_price_per_unit": Q.p13_price_per_unit,
-        "p14_multi_price": Q.p14_multi_price,
-        "p4_p7_line_parsers": Q.p4_p7_line_parsers,
-        "s2_mime_sniffing": Q.s2_mime_sniffing,
         "supplier_dim": M.supplier_dim,
-        "embed_neighbor_graph": D.embed_neighbor_graph,
-        "q02_top_products": Q.q02_top_products,
-        "q12_multi_price_products": Q.q12_multi_price_products,
         "v_productos_top": E.v_productos_top,
         "q14_top_proveedores": N.q14_top_proveedores,
         "esc_food_cost_platos": E.esc_food_cost_platos,
         "esc_resumen_global": E.esc_resumen_global,
-        # ---------------- driver window boundary (50) ----------------
-        # parked: banked-green and untouched this round (r05-r07 rows),
-        # then the pinned rows-only pipelines
         "events_json_props": Q.events_json_props,
-        "txt_langid": D.txt_langid,
-        "corpus_vocab_topk": D.corpus_vocab_topk,
         "url_quality_filter": D.url_quality_filter,
         "dedup_url_normalize": D.dedup_url_normalize,
         "txt_field_extraction": Q.txt_field_extraction,
-        "txt_content_lines": Q.txt_content_lines,
-        "corpus_quota_two_phase": CC.corpus_quota_two_phase,
-        "q01_daily_sales": Q.q01_daily_sales,
-        "q03_dashboard_resumen": Q.q03_dashboard_resumen,
-        "q04_payment_pivot": Q.q04_payment_pivot,
-        "q07_category_share": Q.q07_category_share,
-        "q09_purchase_frequency": Q.q09_purchase_frequency,
-        "q10_purchase_gaps": Q.q10_purchase_gaps,
-        "q13_rolling_price_stats": Q.q13_rolling_price_stats,
-        "q11_spend_per_product": Q.q11_spend_per_product,
-        "m3_levenshtein_pairs": D.m3_levenshtein_pairs,
-        "m4_similarity_pairs": D.m4_similarity_pairs,
-        "master_products": M.master_products,
-        "dedup_ngram_jaccard": D.dedup_ngram_jaccard,
-        "ann_cosine_topk": Q.ann_cosine_topk,
-        "dedup_simhash": D.dedup_simhash,
-        "txt_fingerprint_rolling": D.txt_fingerprint_rolling,
-        "whatsapp_routing": E.whatsapp_routing,
-        "mailgun_routing": E.mailgun_routing,
         "numier_dashboard_resumen": E.numier_dashboard_resumen,
         "numier_upsert_catalogo": E.numier_upsert_catalogo,
         "cotejo_patron_efectividad": E.cotejo_patron_efectividad,
@@ -163,22 +107,44 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q15_datos_basicos": N.q15_datos_basicos,
         "stream_window_equivalence": Q.stream_window_equivalence,
         "events_sessionization": Q.events_sessionization,
-        "txt_gopher_quality": D.txt_gopher_quality,
-        "txt_repetition_filter": D.txt_repetition_filter,
-        "corpus_source_quota": D.corpus_source_quota,
-        "txt_pii_scan": D.txt_pii_scan,
         "host_reputation_filter": D.host_reputation_filter,
-        "corpus_mixture_sample": D.corpus_mixture_sample,
-        "corpus_split": D.corpus_split,
-        "embed_fingerprint_stats": D.embed_fingerprint_stats,
         "iva_tipos_breakdown": E.iva_tipos_breakdown,
         "esc_ingredientes_stats": E.esc_ingredientes_stats,
-        "dedup_clusters": D.dedup_clusters,
-        "dedup_canonical_corpus": D.dedup_canonical_corpus,
         "m5_product_match_pairs": D.m5_product_match_pairs,
+        # ---------------- driver window boundary (50) ----------------
+        # parked: banked-green and untouched this round (r08 rows),
+        # then the pinned rows-only pipelines
+        "f2_invoice_number": Q.f2_invoice_number,
+        "f1_cif_extraction": Q.f1_cif_extraction,
+        "f12_confidence": Q.f12_confidence,
+        "f8_date_variants": Q.f8_date_variants,
+        "f7_amount_variants": Q.f7_amount_variants,
+        "p9_price_closure": Q.p9_price_closure,
+        "p8_p15_products_normalized": Q.p8_p15_products_normalized,
+        "p13_price_per_unit": Q.p13_price_per_unit,
+        "p14_multi_price": Q.p14_multi_price,
+        "p4_p7_line_parsers": Q.p4_p7_line_parsers,
+        "s2_mime_sniffing": Q.s2_mime_sniffing,
+        "q02_top_products": Q.q02_top_products,
+        "q12_multi_price_products": Q.q12_multi_price_products,
+        "txt_content_lines": Q.txt_content_lines,
+        "corpus_quota_two_phase": CC.corpus_quota_two_phase,
+        "q01_daily_sales": Q.q01_daily_sales,
+        "q03_dashboard_resumen": Q.q03_dashboard_resumen,
+        "q04_payment_pivot": Q.q04_payment_pivot,
+        "q07_category_share": Q.q07_category_share,
+        "q09_purchase_frequency": Q.q09_purchase_frequency,
+        "q10_purchase_gaps": Q.q10_purchase_gaps,
+        "q13_rolling_price_stats": Q.q13_rolling_price_stats,
+        "q11_spend_per_product": Q.q11_spend_per_product,
+        "m3_levenshtein_pairs": D.m3_levenshtein_pairs,
+        "m4_similarity_pairs": D.m4_similarity_pairs,
+        "master_products": M.master_products,
+        "ann_cosine_topk": Q.ann_cosine_topk,
+        "whatsapp_routing": E.whatsapp_routing,
+        "mailgun_routing": E.mailgun_routing,
         # -- rows-only, golden-fixture-pinned (no SQL oracle by design)
         "ocr_layout_extraction": Q.ocr_layout_extraction,
-        "extract_embed_ann": D.extract_embed_ann,
         "products_extraction": Q.products_extraction,
         "cotejo_pipeline": Q.cotejo_pipeline,
         "cotejo_inverso_pipeline": Q.cotejo_inverso_pipeline,
@@ -505,118 +471,6 @@ def oracle_sql() -> dict[str, str]:
     """DuckDB twins of every query above (ANSI SQL, same column aliases)."""
     return {
         "ocr_layout_facets": _ocr_layout_facets_sql(),
-        "corpus_split": """
-            WITH b AS (
-              SELECT doc_id,
-                     CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INTEGER) AS _raw
-              FROM documents
-            )
-            SELECT doc_id,
-                   _raw AS bucket,
-                   CASE WHEN _raw < 58982 THEN 'train'
-                        WHEN _raw < 62259 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM b ORDER BY doc_id
-        """,
-        "corpus_mixture_sample": """
-            WITH t AS (
-              SELECT doc_id, lang,
-                     CASE lang WHEN 'en' THEN 100 WHEN 'es' THEN 40
-                               WHEN 'fr' THEN 30 WHEN 'de' THEN 20
-                               WHEN 'zh' THEN 10 ELSE 0 END AS target_n,
-                     ROW_NUMBER() OVER (
-                       PARTITION BY lang
-                       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-                     ) AS rank
-              FROM documents
-            )
-            SELECT doc_id, lang, target_n, CAST(rank AS INT) AS rank,
-                   (rank <= target_n) AS keep
-            FROM t ORDER BY doc_id
-        """,
-        "corpus_dsir_weights": """
-            WITH toks AS (
-              SELECT doc_id, lang,
-                     unnest(list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> '')) AS token
-              FROM documents
-            ), raw AS (
-              SELECT token, COUNT(*) AS c_raw FROM toks GROUP BY token
-            ), tgt AS (
-              SELECT token, COUNT(*) AS c_tgt FROM toks
-              WHERE lang = 'en' GROUP BY token
-            ), vocab AS (
-              SELECT r.token, r.c_raw, COALESCE(t.c_tgt, 0) AS c_tgt
-              FROM raw r LEFT JOIN tgt t USING (token)
-            ), totals AS (
-              SELECT SUM(c_raw) AS t_raw, SUM(c_tgt) AS t_tgt,
-                     COUNT(*) AS v_size
-              FROM vocab
-            ), scored AS (
-              SELECT token,
-                     ln(CAST(c_tgt + 1 AS DOUBLE) / (t_tgt + v_size))
-                     - ln(CAST(c_raw + 1 AS DOUBLE) / (t_raw + v_size)) AS lr
-              FROM vocab CROSS JOIN totals
-            )
-            SELECT doc_id,
-                   CAST(COUNT(*) AS BIGINT) AS n_tokens,
-                   ROUND(AVG(lr), 4) + 0.0 AS log_ratio,
-                   (ROUND(AVG(lr), 4) + 0.0 > 0) AS selected
-            FROM toks JOIN scored USING (token)
-            GROUP BY doc_id ORDER BY doc_id
-        """,
-        "corpus_chunking": f"""
-            WITH pret AS (
-              SELECT doc_id, {BPE.pretokens_sql("text")} AS arr FROM documents
-            ), pre AS (
-              SELECT doc_id, CAST(t.i AS INT) AS pos, arr[t.i] AS w
-              FROM pret, UNNEST(range(1, len(arr) + 1)) AS t(i)
-            ), vocab0 AS (
-              SELECT DISTINCT w FROM pre
-            ),
-            {BPE.bpe_ctes_sql("vocab0", "w", "w")},
-            vtok AS (
-              SELECT w, {BPE.tokens_from_spread_sql()} AS toks
-              FROM {BPE.bpe_done_name()}
-            ), d AS (
-              SELECT pre.doc_id, flatten(list(v.toks ORDER BY pre.pos)) AS w
-              FROM pre JOIN vtok v USING (w) GROUP BY pre.doc_id
-            ), base AS (
-              SELECT doc_id, w, len(w) AS n FROM d WHERE len(w) > 0
-            )
-            SELECT doc_id,
-                   CAST(i AS INT) AS chunk_id,
-                   CAST(i * 24 AS INT) AS start,
-                   CAST(LEAST(32, n - i * 24) AS INT) AS n_tokens,
-                   md5(array_to_string(
-                     w[i * 24 + 1 : i * 24 + LEAST(32, n - i * 24)], ' '
-                   )) AS chunk_fp
-            FROM base,
-                 UNNEST(range(0, GREATEST(0, (n - 32 + 23) // 24) + 1)) AS t(i)
-            ORDER BY doc_id, chunk_id
-        """,
-        "txt_charset_normalize": """
-            WITH s AS (
-              SELECT doc_id,
-                     COALESCE(text, '') || CASE doc_id % 4
-                       WHEN 0 THEN ' cafe' || chr(769)
-                       WHEN 1 THEN ' caf' || chr(233)
-                       WHEN 2 THEN ' bell' || chr(7) || 'x'
-                       ELSE '' END AS raw
-              FROM documents
-            ), c AS (
-              SELECT doc_id, raw,
-                     nfc_normalize(
-                       regexp_replace(raw,
-                         '[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]', '', 'g')
-                     ) AS clean
-              FROM s
-            )
-            SELECT doc_id,
-                   CAST(length(raw) AS INT) AS len_raw,
-                   CAST(length(clean) AS INT) AS len_clean,
-                   (clean <> raw) AS changed
-            FROM c ORDER BY doc_id
-        """,
         "dedup_url_normalize": """
             -- canonical form + keep-set derived from the CONSTRUCTION
             -- arithmetic (independent ground truth; the Spark side runs
@@ -676,138 +530,6 @@ def oracle_sql() -> dict[str, str]:
                         OR doc_id % 5 = 0) AS url_keep
             FROM synth ORDER BY doc_id
         """,
-        "txt_decontamination": """
-            WITH d AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> '') AS w
-              FROM documents
-            ), base AS (
-              SELECT doc_id, w FROM d WHERE len(w) >= 13
-            ), bench AS (
-              SELECT DISTINCT unnest(list_transform(range(0, len(w) - 12),
-                       i -> md5(array_to_string(w[i + 1:i + 13], ' ')))) AS h
-              FROM base WHERE doc_id % 97 = 0
-            ), train AS (
-              SELECT doc_id, w FROM base WHERE doc_id % 97 <> 0
-            ), spans AS (
-              SELECT doc_id,
-                     unnest(list_transform(range(0, len(w) - 12),
-                       i -> md5(array_to_string(w[i + 1:i + 13], ' ')))) AS h
-              FROM train
-            ), hits AS (
-              SELECT doc_id, COUNT(*) AS n_hits
-              FROM spans JOIN bench USING (h) GROUP BY doc_id
-            )
-            SELECT t.doc_id,
-                   CAST(len(t.w) - 12 AS BIGINT) AS n_spans,
-                   CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-                   COALESCE(h.n_hits, 0) > 0 AS contaminated
-            FROM train t LEFT JOIN hits h USING (doc_id)
-            ORDER BY doc_id
-        """,
-        "txt_unigram_lm_score": """
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> '')) AS token
-              FROM documents
-            ), vocab AS (
-              SELECT token, COUNT(*) AS c FROM toks GROUP BY token
-            ), totals AS (
-              SELECT SUM(c) AS t_total, COUNT(*) AS v_size FROM vocab
-            ), scored AS (
-              SELECT token,
-                     ln(CAST(c + 1 AS DOUBLE) / (t_total + v_size)) AS lp
-              FROM vocab CROSS JOIN totals
-            )
-            SELECT doc_id,
-                   CAST(COUNT(*) AS BIGINT) AS n_tokens,
-                   ROUND(AVG(-lp), 4) AS nll
-            FROM toks JOIN scored USING (token)
-            GROUP BY doc_id ORDER BY doc_id
-        """,
-        "dedup_semantic": """
-            WITH e AS (
-              SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200
-            ), cents AS (
-              SELECT vec_id AS cent_id, embedding AS ce
-              FROM e WHERE vec_id BETWEEN 1 AND 8
-            ), scored AS (
-              SELECT e.vec_id, e.embedding, c.cent_id,
-                     list_sum(list_transform(list_zip(e.embedding, c.ce),
-                                             x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                     / (sqrt(list_sum(list_transform(e.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))
-                        * sqrt(list_sum(list_transform(c.ce, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))) AS _s
-              FROM e CROSS JOIN cents c
-            ), assigned AS (
-              SELECT vec_id, embedding, cent_id AS cell
-              FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                             ORDER BY _s DESC, cent_id) AS _rn
-                FROM scored
-              ) WHERE _rn = 1
-            ), dup AS (
-              SELECT DISTINCT b.vec_id
-              FROM assigned a JOIN assigned b
-                ON a.cell = b.cell AND a.vec_id < b.vec_id
-              WHERE ROUND(
-                      list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                                              x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                      / (sqrt(list_sum(list_transform(a.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))
-                         * sqrt(list_sum(list_transform(b.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))),
-                    4) >= 0.2
-            )
-            SELECT a.vec_id, a.cell, (d.vec_id IS NULL) AS keep
-            FROM assigned a LEFT JOIN dup d ON a.vec_id = d.vec_id
-            ORDER BY a.vec_id
-        """,
-        "txt_tfidf_keywords": """
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> '')) AS token
-              FROM documents
-            ), tf AS (
-              SELECT doc_id, token, COUNT(*) AS tf FROM toks GROUP BY doc_id, token
-            ), df AS (
-              SELECT token, COUNT(*) AS df FROM tf GROUP BY token
-            ), nd AS (
-              SELECT COUNT(*) AS n_docs FROM (
-                SELECT doc_id FROM toks GROUP BY doc_id
-              )
-            ), ranked AS (
-              SELECT t.doc_id, t.token, t.tf, d.df,
-                     ROW_NUMBER() OVER (PARTITION BY t.doc_id
-                                        ORDER BY t.tf DESC, d.df ASC, t.token ASC) AS rank
-              FROM tf t JOIN df d USING (token)
-            )
-            SELECT doc_id, rank, token, tf, df,
-                   ROUND(tf * ln(CAST(n_docs AS DOUBLE) / df), 4) AS tfidf
-            FROM ranked CROSS JOIN nd
-            WHERE rank <= 3
-            ORDER BY doc_id, rank
-        """,
-        "txt_substring_dup": """
-            WITH d AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> '') AS w
-              FROM documents WHERE trim(COALESCE(text, '')) <> ''
-            ), base AS (
-              SELECT doc_id, w FROM d WHERE len(w) >= 20
-            ), spans AS (
-              SELECT doc_id,
-                     unnest(list_transform(range(0, len(w) - 19),
-                       i -> md5(array_to_string(w[i + 1:i + 20], ' ')))) AS h
-              FROM base
-            ), counts AS (
-              SELECT h, COUNT(*) AS c FROM spans GROUP BY h
-            )
-            SELECT doc_id,
-                   CAST(COUNT(*) AS BIGINT) AS n_spans,
-                   CAST(SUM(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_spans,
-                   ROUND(CAST(SUM(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                         / COUNT(*), 4) AS dup_frac
-            FROM spans JOIN counts USING (h)
-            GROUP BY doc_id ORDER BY doc_id
-        """,
         "iva_tipos_breakdown": """
             WITH t AS (
               SELECT l_orderkey AS factura_id,
@@ -829,88 +551,6 @@ def oracle_sql() -> dict[str, str]:
             FROM c ORDER BY factura_id, tipo_iva
         """,
         "corpus_clean_stats": _CORPUS_CLEAN_SQL,
-        "embed_fingerprint_stats": """
-            WITH d AS (
-              SELECT doc_id,
-                     trim(regexp_replace(lower(COALESCE(text, '')), '\\s+', ' ', 'g')) AS s
-              FROM documents WHERE doc_id < 150
-            ), grams AS (
-              SELECT doc_id, md5(substr(s, CAST(i AS INTEGER), 3)) AS h
-              FROM d, LATERAL unnest(range(1, len(s) - 1)) AS t(i)
-              WHERE len(s) >= 3
-            ), buckets AS (
-              -- bucket = int(md5[:4], 16) %% 64 depends only on the last
-              -- two hex digits (4096 and 256 are both 0 mod 64)
-              SELECT doc_id,
-                     ((strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-                      + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) % 64 AS bucket,
-                     CASE WHEN strpos('0123456789abcdef', substr(h, 5, 1)) - 1 < 8
-                          THEN 1 ELSE -1 END AS sgn
-              FROM grams
-            ), vec AS (
-              SELECT doc_id, bucket, SUM(sgn) AS v
-              FROM buckets GROUP BY doc_id, bucket
-            ), mx AS (
-              SELECT doc_id, MAX(v) AS mv FROM vec GROUP BY doc_id
-            ), stats AS (
-              SELECT vec.doc_id,
-                     COUNT(*) FILTER (WHERE v <> 0) AS nnz,
-                     SUM(v) AS checksum,
-                     SUM(v * v) AS sumsq,
-                     MIN(bucket) FILTER (WHERE v = mv) AS max_dim
-              FROM vec JOIN mx ON vec.doc_id = mx.doc_id
-              GROUP BY vec.doc_id
-            )
-            SELECT d.doc_id,
-                   CAST(GREATEST(len(s) - 2, 0) AS BIGINT) AS n_grams,
-                   CAST(COALESCE(nnz, 0) AS BIGINT) AS nnz,
-                   CAST(COALESCE(checksum, 0) AS BIGINT) AS checksum,
-                   CAST(COALESCE(sumsq, 0) AS BIGINT) AS sumsq,
-                   CAST(max_dim AS BIGINT) AS max_dim,
-                   ROUND(sqrt(CAST(COALESCE(sumsq, 0) AS DOUBLE)), 4) AS l2
-            FROM d LEFT JOIN stats ON d.doc_id = stats.doc_id
-            ORDER BY d.doc_id
-        """,
-        "embed_neighbor_graph": """
-            WITH d AS (
-              SELECT doc_id,
-                     trim(regexp_replace(lower(COALESCE(text, '')), '\\s+', ' ', 'g')) AS s
-              FROM documents WHERE doc_id < 150
-            ), grams AS (
-              SELECT doc_id, md5(substr(s, CAST(i AS INTEGER), 3)) AS h
-              FROM d, LATERAL unnest(range(1, len(s) - 1)) AS t(i)
-              WHERE len(s) >= 3
-            ), buckets AS (
-              SELECT doc_id,
-                     ((strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-                      + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) % 64 AS bucket,
-                     CASE WHEN strpos('0123456789abcdef', substr(h, 5, 1)) - 1 < 8
-                          THEN 1 ELSE -1 END AS sgn
-              FROM grams
-            ), vec AS (
-              SELECT doc_id, bucket, SUM(sgn) AS v
-              FROM buckets GROUP BY doc_id, bucket
-            ), ss AS (
-              SELECT doc_id, SUM(v * v) AS s FROM vec GROUP BY doc_id
-              HAVING SUM(v * v) > 0
-            ), pairs AS (
-              -- dot over shared buckets only: disjoint-support pairs have
-              -- dot = 0 and are excluded by the predicate anyway
-              SELECT a.doc_id AS id1, b.doc_id AS id2, SUM(a.v * b.v) AS dot
-              FROM vec a JOIN vec b
-                ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id
-            )
-            SELECT id1 AS doc_id, id2 AS neighbor_id,
-                   CAST(dot AS BIGINT) AS dot,
-                   ROUND(dot / sqrt(CAST(s1.s AS DOUBLE) * CAST(s2.s AS DOUBLE)), 4)
-                     AS cos_sim
-            FROM pairs
-            JOIN ss s1 ON id1 = s1.doc_id
-            JOIN ss s2 ON id2 = s2.doc_id
-            WHERE dot > 0 AND 16 * dot * dot >= 9 * s1.s * s2.s
-            ORDER BY doc_id, neighbor_id
-        """,
         "events_json_props": """
             SELECT event_type,
                    COUNT(*) AS eventos,
@@ -922,97 +562,10 @@ def oracle_sql() -> dict[str, str]:
                    MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
             FROM events GROUP BY event_type ORDER BY event_type
         """,
-        "txt_pii_scan": """
-            WITH aug AS (
-              SELECT doc_id,
-                     COALESCE(text, '')
-                     || CASE WHEN doc_id % 7 = 0
-                             THEN ' contact: user' || CAST(doc_id AS VARCHAR) || '@example.com'
-                             ELSE '' END
-                     || CASE WHEN doc_id % 11 = 0
-                             THEN ' tel: 612 345 ' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')
-                             ELSE '' END
-                     || CASE WHEN doc_id % 13 = 0
-                             THEN ' ip 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7'
-                             ELSE '' END AS t
-              FROM documents WHERE doc_id < 300
-            )
-            SELECT doc_id,
-                   len(regexp_extract_all(t,
-                       '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}')) AS emails,
-                   len(regexp_extract_all(t,
-                       '\\b[679]\\d{2}[ .-]?\\d{3}[ .-]?\\d{3}\\b')) AS phones,
-                   len(regexp_extract_all(t,
-                       '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b')) AS ipv4s,
-                   length(t) AS n_chars,
-                   (len(regexp_extract_all(t,
-                        '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}'))
-                    + len(regexp_extract_all(t,
-                        '\\b[679]\\d{2}[ .-]?\\d{3}[ .-]?\\d{3}\\b'))
-                    + len(regexp_extract_all(t,
-                        '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b'))) > 0
-                       AS has_pii
-            FROM aug ORDER BY doc_id
-        """,
-        "corpus_vocab_topk": """
-            SELECT token, COUNT(*) AS occurrences
-            FROM (
-              SELECT unnest(list_filter(
-                       string_split_regex(lower(trim(COALESCE(text, ''))), '\\s+'),
-                       x -> x <> '')) AS token
-              FROM documents
-            )
-            GROUP BY token
-            ORDER BY occurrences DESC, token
-            LIMIT 50
-        """,
-        "corpus_packing": f"""
-            WITH pret AS (
-              SELECT doc_id, {BPE.pretokens_sql("text")} AS arr
-              FROM documents WHERE doc_id < 500
-            ), pre AS (
-              SELECT doc_id, unnest(arr) AS w FROM pret
-            ), vocab0 AS (
-              SELECT DISTINCT w FROM pre
-            ),
-            {BPE.bpe_ctes_sql("vocab0", "w", "w")},
-            vtok AS (
-              SELECT w, {BPE.token_count_from_spread_sql()} AS wn
-              FROM {BPE.bpe_done_name()}
-            ), perdoc AS (
-              SELECT pre.doc_id, SUM(v.wn) AS tokens
-              FROM pre JOIN vtok v USING (w) GROUP BY pre.doc_id
-            ), d AS (
-              SELECT p0.doc_id, COALESCE(pd.tokens, 0) AS tokens
-              FROM pret p0 LEFT JOIN perdoc pd USING (doc_id)
-            ), p AS (
-              SELECT doc_id, tokens,
-                     CAST(floor((SUM(tokens) OVER (ORDER BY doc_id
-                                 ROWS UNBOUNDED PRECEDING) - tokens) / 512.0)
-                          AS BIGINT) AS pack_id
-              FROM d
-            )
-            SELECT pack_id, COUNT(*) AS docs,
-                   CAST(SUM(tokens) AS BIGINT) AS tokens,
-                   MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-            FROM p GROUP BY 1 ORDER BY pack_id
-        """,
-        "corpus_source_quota": """
-            WITH r AS (
-              SELECT source, doc_id,
-                     row_number() OVER (PARTITION BY source
-                       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-              FROM documents
-            )
-            SELECT source, COUNT(*) AS total,
-                   CAST(SUM(CASE WHEN rn <= 8 THEN 1 ELSE 0 END) AS BIGINT) AS kept,
-                   MIN(CASE WHEN rn <= 8 THEN doc_id END) AS min_kept_doc
-            FROM r GROUP BY 1 ORDER BY source
-        """,
-        # DELIBERATELY the corpus_source_quota oracle verbatim: the Spark
-        # side runs the two-phase salted top-k (quota_keep_ids salts=4),
-        # the oracle the single global window — a hash match IS the proof
-        # that the two-phase decomposition picks the identical keep set.
+        # DELIBERATELY the single global window: the Spark side runs the
+        # two-phase salted top-k (quota_keep_ids salts=4) — a hash match
+        # IS the proof that the two-phase decomposition picks the
+        # identical keep set.
         "corpus_quota_two_phase": """
             WITH r AS (
               SELECT source, doc_id,
@@ -1024,178 +577,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(SUM(CASE WHEN rn <= 8 THEN 1 ELSE 0 END) AS BIGINT) AS kept,
                    MIN(CASE WHEN rn <= 8 THEN doc_id END) AS min_kept_doc
             FROM r GROUP BY 1 ORDER BY source
-        """,
-        "txt_bigram_lm_ppl": r"""
-            WITH wt AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\s+'), x -> x <> '') AS w
-              FROM documents
-            ), big AS (
-              SELECT doc_id,
-                     unnest(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS bg
-              FROM wt WHERE len(w) >= 2
-            ), tw AS (
-              SELECT w FROM wt WHERE doc_id % 7 = 0
-            ), uni AS (
-              SELECT t, COUNT(*) AS cu
-              FROM (SELECT unnest(w) AS t FROM tw) GROUP BY t
-            ), totals AS (
-              SELECT SUM(cu) AS n_total, COUNT(*) AS v_size FROM uni
-            ), bi AS (
-              SELECT bg, COUNT(*) AS c2
-              FROM (SELECT unnest(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS bg
-                    FROM tw WHERE len(w) >= 2) GROUP BY bg
-            ), scored AS (
-              SELECT b.doc_id,
-                     -ln(0.7 * (CAST(COALESCE(bi.c2, 0) AS DOUBLE) / COALESCE(u1.cu, 1))
-                         + 0.3 * (CAST(COALESCE(u2.cu, 0) + 1 AS DOUBLE) / (t.n_total + t.v_size))) AS nl
-              FROM big b
-              LEFT JOIN bi USING (bg)
-              LEFT JOIN uni u1 ON u1.t = split_part(b.bg, ' ', 1)
-              LEFT JOIN uni u2 ON u2.t = split_part(b.bg, ' ', 2)
-              CROSS JOIN totals t
-            ), per_doc AS (
-              SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-                     ROUND(AVG(nl), 4) AS nll
-              FROM scored GROUP BY doc_id
-            )
-            SELECT doc_id, n_bigrams, nll, ROUND(exp(nll), 2) AS ppl,
-                   CASE nt WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
-                           ELSE 'tail' END AS bucket
-            FROM (SELECT *, ntile(3) OVER (ORDER BY nll, doc_id) AS nt
-                  FROM per_doc
-                  -- all-or-nothing: nll is NULL for every doc at once
-                  -- when the %7 training slice has no tokens (empty-LM
-                  -- corpus); must filter BEFORE ntile so buckets match
-                  -- the Spark side's pre-tercile filter
-                  WHERE nll IS NOT NULL)
-            ORDER BY doc_id
-        """,
-        "txt_gopher_quality": """
-            WITH d AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> '') AS w
-              FROM documents WHERE doc_id < 200
-            ), m AS (
-              SELECT doc_id,
-                     len(w) AS n_words,
-                     ROUND(CAST(COALESCE(list_sum(list_transform(w, x -> length(x))), 0) AS DOUBLE)
-                           / greatest(len(w), 1), 4) AS mean_word_len,
-                     ROUND(CAST(len(list_filter(w, x -> regexp_matches(x, '[a-z]'))) AS DOUBLE)
-                           / greatest(len(w), 1), 4) AS alpha_frac,
-                     len(list_intersect(list_distinct(w),
-                         ['the','be','to','of','and','that','have','with','a','in'])) AS n_stopwords
-              FROM d
-            )
-            SELECT doc_id, n_words, mean_word_len, alpha_frac, n_stopwords,
-                   (n_words >= 10 AND n_words <= 100000
-                    AND mean_word_len >= 2 AND mean_word_len <= 10
-                    AND alpha_frac >= 0.8 AND n_stopwords >= 2) AS keep
-            FROM m ORDER BY doc_id
-        """,
-        "txt_repetition_filter": """
-            WITH d AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> '') AS w
-              FROM documents WHERE doc_id < 200
-            ), base AS (
-              SELECT doc_id, w FROM d WHERE len(w) >= 3
-            ), g2 AS (
-              SELECT doc_id,
-                     unnest(list_transform(range(0, len(w) - 1),
-                       i -> w[i + 1] || ' ' || w[i + 2])) AS g
-              FROM base
-            ), c2 AS (
-              SELECT doc_id, g, COUNT(*) AS c FROM g2 GROUP BY 1, 2
-            ), s2 AS (
-              SELECT doc_id,
-                     ROUND(CAST(MAX(c) AS DOUBLE) / SUM(c), 4) AS top_2gram_frac
-              FROM c2 GROUP BY 1
-            ), g3 AS (
-              SELECT doc_id,
-                     unnest(list_transform(range(0, len(w) - 2),
-                       i -> w[i + 1] || ' ' || w[i + 2] || ' ' || w[i + 3])) AS g
-              FROM base
-            ), c3 AS (
-              SELECT doc_id, g, COUNT(*) AS c FROM g3 GROUP BY 1, 2
-            ), s3 AS (
-              SELECT doc_id,
-                     ROUND(CAST(SUM(CASE WHEN c > 1 THEN c ELSE 0 END) AS DOUBLE)
-                           / SUM(c), 4) AS dup_3gram_frac
-              FROM c3 GROUP BY 1
-            )
-            SELECT b.doc_id AS doc_id, top_2gram_frac, dup_3gram_frac,
-                   (top_2gram_frac <= 0.20 AND dup_3gram_frac <= 0.30) AS keep
-            FROM base b
-            JOIN s2 ON b.doc_id = s2.doc_id
-            JOIN s3 ON b.doc_id = s3.doc_id
-            ORDER BY b.doc_id
-        """,
-        "dedup_incremental": """
-            WITH d AS (
-              SELECT doc_id, text FROM documents
-              WHERE trim(COALESCE(text, '')) <> ''
-            ), bset AS (SELECT * FROM d WHERE doc_id % 5 = 0),
-            cset AS (SELECT * FROM d WHERE doc_id % 5 <> 0),
-            bfp AS (SELECT doc_id, md5(text) AS fp FROM bset),
-            prior AS (
-              SELECT doc_id AS pid, md5(text) AS fp FROM cset
-              UNION ALL SELECT doc_id, md5(text) FROM bset
-            ), exact AS (
-              SELECT a.doc_id, MIN(p.pid) AS exact_match
-              FROM bfp a JOIN prior p ON a.fp = p.fp AND p.pid < a.doc_id
-              GROUP BY a.doc_id
-            ), wb AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> '') AS words
-              FROM bset
-            ), shb AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(range(0, len(words) - 2),
-                       i -> words[i + 1] || ' ' || words[i + 2] || ' ' || words[i + 3])) AS s
-              FROM wb WHERE len(words) >= 3
-            ), wc AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> '') AS words
-              FROM cset
-            ), shc AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(range(0, len(words) - 2),
-                       i -> words[i + 1] || ' ' || words[i + 2] || ' ' || words[i + 3])) AS s
-              FROM wc WHERE len(words) >= 3
-            ), sigb AS (
-              SELECT doc_id,
-                     list_min(list_transform(s, t -> md5(t || ':0'))) AS h0, list_min(list_transform(s, t -> md5(t || ':1'))) AS h1, list_min(list_transform(s, t -> md5(t || ':2'))) AS h2, list_min(list_transform(s, t -> md5(t || ':3'))) AS h3, list_min(list_transform(s, t -> md5(t || ':4'))) AS h4, list_min(list_transform(s, t -> md5(t || ':5'))) AS h5, list_min(list_transform(s, t -> md5(t || ':6'))) AS h6, list_min(list_transform(s, t -> md5(t || ':7'))) AS h7
-              FROM shb
-            ), sigc AS (
-              SELECT doc_id,
-                     list_min(list_transform(s, t -> md5(t || ':0'))) AS h0, list_min(list_transform(s, t -> md5(t || ':1'))) AS h1, list_min(list_transform(s, t -> md5(t || ':2'))) AS h2, list_min(list_transform(s, t -> md5(t || ':3'))) AS h3, list_min(list_transform(s, t -> md5(t || ':4'))) AS h4, list_min(list_transform(s, t -> md5(t || ':5'))) AS h5, list_min(list_transform(s, t -> md5(t || ':6'))) AS h6, list_min(list_transform(s, t -> md5(t || ':7'))) AS h7
-              FROM shc
-            ), bandsb AS (
-              SELECT doc_id, 0 AS band, md5(h0 || h1) AS key FROM sigb UNION ALL SELECT doc_id, 1 AS band, md5(h2 || h3) AS key FROM sigb UNION ALL SELECT doc_id, 2 AS band, md5(h4 || h5) AS key FROM sigb UNION ALL SELECT doc_id, 3 AS band, md5(h6 || h7) AS key FROM sigb
-            ), bandsc AS (
-              SELECT doc_id, 0 AS band, md5(h0 || h1) AS key FROM sigc UNION ALL SELECT doc_id, 1 AS band, md5(h2 || h3) AS key FROM sigc UNION ALL SELECT doc_id, 2 AS band, md5(h4 || h5) AS key FROM sigc UNION ALL SELECT doc_id, 3 AS band, md5(h6 || h7) AS key FROM sigc
-            ), cand AS (
-              SELECT DISTINCT bb.doc_id AS bid, cc.doc_id AS cid
-              FROM bandsb bb JOIN bandsc cc
-                ON bb.band = cc.band AND bb.key = cc.key
-            ), near AS (
-              SELECT bid AS doc_id, MIN(cid) AS near_match
-              FROM cand JOIN shb x ON bid = x.doc_id
-                        JOIN shc y ON cid = y.doc_id
-              WHERE CAST(len(list_intersect(x.s, y.s)) AS DOUBLE)
-                    / len(list_distinct(list_concat(x.s, y.s))) >= 0.5
-              GROUP BY bid
-            )
-            SELECT b.doc_id AS doc_id,
-                   CASE WHEN e.exact_match IS NOT NULL THEN 'dropped_exact'
-                        WHEN n.near_match IS NOT NULL THEN 'dropped_neardup'
-                        ELSE 'kept' END AS decision,
-                   COALESCE(e.exact_match, n.near_match) AS match_id
-            FROM bset b
-            LEFT JOIN exact e ON b.doc_id = e.doc_id
-            LEFT JOIN near n ON b.doc_id = n.doc_id
-            ORDER BY b.doc_id
         """,
         "stream_window_equivalence": """
             SELECT strftime(time_bucket(INTERVAL '1 hour', ts),
@@ -2125,60 +1506,6 @@ def oracle_sql() -> dict[str, str]:
             HAVING COUNT(*) > 1
             ORDER BY o_custkey, fecha
         """,
-        "dedup_minhash_lsh": f"""
-            WITH w AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> '') AS words
-              FROM documents
-              WHERE trim(COALESCE(text, '')) <> ''
-            ), sig AS (
-              SELECT doc_id,
-                     {", ".join(f"list_min(list_transform(words, t -> md5(t || ':{i}'))) AS h{i}" for i in range(8))}
-              FROM w
-            ), bands AS (
-              {" UNION ALL ".join(f"SELECT doc_id, {j} AS band, md5(h{2 * j} || h{2 * j + 1}) AS key FROM sig" for j in range(4))}
-            ), groups AS (
-              SELECT band, key, COUNT(*) AS members FROM bands GROUP BY 1, 2
-            )
-            SELECT band, COUNT(*) AS collision_groups,
-                   CAST(SUM(members) AS BIGINT) AS docs_in_collisions,
-                   MAX(members) AS max_group
-            FROM groups WHERE members > 1
-            GROUP BY band ORDER BY band
-        """,
-        "dedup_ngram_jaccard": """
-            WITH w AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> '') AS words
-              FROM documents WHERE doc_id < 40
-            ), sh AS MATERIALIZED (
-              SELECT doc_id,
-                     list_distinct(list_transform(range(0, len(words) - 2),
-                       i -> words[i + 1] || ' ' || words[i + 2] || ' ' || words[i + 3])) AS s
-              FROM w WHERE len(words) >= 3
-            )
-            SELECT a.doc_id AS id1, b.doc_id AS id2,
-                   ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                         / len(list_distinct(list_concat(a.s, b.s))), 4) AS jaccard
-            FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-            WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                  / len(list_distinct(list_concat(a.s, b.s))) >= 0.01
-            ORDER BY id1, id2
-        """,
-        "dedup_simhash": f"""
-            WITH w AS (
-              SELECT doc_id,
-                     list_transform(
-                       list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> ''),
-                       t -> md5(t)) AS hashes
-              FROM documents WHERE doc_id < 60
-            )
-            SELECT doc_id,
-                   {" + ".join(f"(CASE WHEN 2 * len(list_filter(hashes, h -> substr(h, {k + 1}, 1) IN ('8','9','a','b','c','d','e','f'))) > len(hashes) THEN {1 << k} ELSE 0 END)" for k in range(16))}
-                   AS simhash
-            FROM w WHERE len(hashes) > 0
-            ORDER BY doc_id
-        """,
         "dedup_embedding_cosine": """
             WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 80)
             SELECT a.vec_id AS id1, b.vec_id AS id2,
@@ -2196,53 +1523,6 @@ def oracle_sql() -> dict[str, str]:
                        * sqrt(list_sum(list_transform(b.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))),
                   4) >= 0.2
             ORDER BY id1, id2
-        """,
-        "txt_fingerprint_rolling": """
-            WITH c AS (
-              SELECT doc_id,
-                     list_prepend(CAST(0 AS BIGINT),
-                       list_transform(
-                         range(1, length(lower(regexp_replace(COALESCE(text,''), '\\s+', ' ', 'g'))) + 1),
-                         i -> CAST(ascii(substr(lower(regexp_replace(COALESCE(text,''), '\\s+', ' ', 'g')), i, 1)) AS BIGINT)))
-                     AS codes
-              FROM documents WHERE doc_id < 100
-            )
-            SELECT doc_id,
-                   list_reduce(codes, (a, b) -> (a * 31 + b) % 1000000007) AS fingerprint
-            FROM c ORDER BY doc_id
-        """,
-        "txt_bpe_token_stats": f"""
-            WITH pret AS (
-              SELECT doc_id, lang, {BPE.pretokens_sql("text")} AS arr
-              FROM documents
-            ), pre AS (
-              SELECT doc_id, unnest(arr) AS w FROM pret
-            ), vocab0 AS (
-              SELECT DISTINCT w FROM pre
-            ),
-            {BPE.bpe_ctes_sql("vocab0", "w", "w")},
-            vtok AS (
-              SELECT w, {BPE.token_count_from_spread_sql()} AS wn
-              FROM {BPE.bpe_done_name()}
-            ), perdoc AS (
-              SELECT pre.doc_id, SUM(v.wn) AS tokens
-              FROM pre JOIN vtok v USING (w) GROUP BY pre.doc_id
-            ), tok AS (
-              SELECT p0.doc_id, p0.lang, COALESCE(pd.tokens, 0) AS tokens
-              FROM pret p0 LEFT JOIN perdoc pd USING (doc_id)
-            )
-            SELECT lang,
-                   CAST(SUM(tokens) AS BIGINT) AS total_tokens,
-                   ((200 * SUM(tokens) + COUNT(*))
-                    // (2 * COUNT(*))) / 100.0 AS avg_tokens,
-                   COUNT(*) AS docs
-            FROM tok GROUP BY lang ORDER BY lang
-        """,
-        "ann_lsh_buckets": f"""
-            SELECT {" + ".join(f"(CASE WHEN embedding[{i + 1}] > 0 THEN {1 << i} ELSE 0 END)" for i in range(8))} AS bucket,
-                   COUNT(*) AS vectors
-            FROM embeddings
-            GROUP BY 1 ORDER BY bucket
         """,
         "master_products": """
             WITH ranked AS (
@@ -2428,25 +1708,6 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY cantidad_total DESC, p_name
             LIMIT 10
         """,
-        "txt_langid": """
-            WITH w AS (
-              SELECT lang,
-                     list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> '') AS words
-              FROM documents
-            ), h AS (
-              SELECT lang,
-                     len(list_filter(words, x -> list_contains(['the','of','and','to','in','a','is'], x))) AS en,
-                     len(list_filter(words, x -> list_contains(['el','la','de','que','los','las','una','y'], x))) AS es
-              FROM w
-            )
-            SELECT lang,
-                   CASE WHEN en > es AND en > 0 THEN 'en'
-                        WHEN es > en AND es > 0 THEN 'es'
-                        WHEN en = es AND en > 0 THEN 'tie'
-                        ELSE 'unknown' END AS guess,
-                   COUNT(*) AS docs
-            FROM h GROUP BY 1, 2 ORDER BY lang, guess
-        """,
         "ann_cosine_topk": """
             WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
             SELECT e.vec_id,
@@ -2460,100 +1721,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE e.vec_id <> 0
             ORDER BY cos_sim DESC, e.vec_id
             LIMIT 10
-        """,
-        "dedup_clusters": """
-            WITH RECURSIVE w AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> '') AS words
-              FROM documents WHERE doc_id < 40
-            ), sh AS MATERIALIZED (
-              SELECT doc_id,
-                     list_distinct(list_transform(range(0, len(words) - 2),
-                       i -> words[i + 1] || ' ' || words[i + 2] || ' ' || words[i + 3])) AS s
-              FROM w WHERE len(words) >= 3
-            ), pairs AS (
-              SELECT a.doc_id AS id1, b.doc_id AS id2
-              FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-              WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                    / len(list_distinct(list_concat(a.s, b.s))) >= 0.01
-            ), und AS MATERIALIZED (
-              SELECT id1 AS a, id2 AS b FROM pairs
-              UNION ALL SELECT id2, id1 FROM pairs
-            ), reach(a, b) AS (
-              SELECT a, b FROM und
-              UNION
-              SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-            )
-            SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-            FROM reach GROUP BY a ORDER BY doc_id
-        """,
-        "dedup_canonical_corpus": """
-            WITH RECURSIVE w AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> '') AS words
-              FROM documents WHERE doc_id < 40
-            ), sh AS MATERIALIZED (
-              SELECT doc_id,
-                     list_distinct(list_transform(range(0, len(words) - 2),
-                       i -> words[i + 1] || ' ' || words[i + 2] || ' ' || words[i + 3])) AS s
-              FROM w WHERE len(words) >= 3
-            ), pairs AS (
-              SELECT a.doc_id AS id1, b.doc_id AS id2
-              FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-              WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                    / len(list_distinct(list_concat(a.s, b.s))) >= 0.01
-            ), und AS MATERIALIZED (
-              SELECT id1 AS a, id2 AS b FROM pairs
-              UNION ALL SELECT id2, id1 FROM pairs
-            ), reach(a, b) AS (
-              SELECT a, b FROM und
-              UNION
-              SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-            ), comp AS (
-              SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-              FROM reach GROUP BY a
-            )
-            SELECT d.doc_id, d.lang, LENGTH(d.text) AS n_chars
-            FROM documents d
-            WHERE d.doc_id < 40
-              AND d.doc_id NOT IN (SELECT doc_id FROM comp WHERE doc_id <> cluster_id)
-            ORDER BY d.doc_id
-        """,
-        "dedup_lsh_clusters": f"""
-            WITH RECURSIVE w AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(lower(trim(COALESCE(text,''))), '\\s+'), x -> x <> '') AS words
-              FROM documents
-              WHERE trim(COALESCE(text, '')) <> ''
-            ), sh AS MATERIALIZED (
-              SELECT doc_id,
-                     list_distinct(list_transform(range(0, len(words) - 2),
-                       i -> words[i + 1] || ' ' || words[i + 2] || ' ' || words[i + 3])) AS s
-              FROM w WHERE len(words) >= 3
-            ), sig AS (
-              SELECT doc_id,
-                     {", ".join(f"list_min(list_transform(s, t -> md5(t || ':{i}'))) AS h{i}" for i in range(8))}
-              FROM sh
-            ), bands AS (
-              {" UNION ALL ".join(f"SELECT doc_id, {j} AS band, md5(h{2 * j} || h{2 * j + 1}) AS key FROM sig" for j in range(4))}
-            ), cand AS (
-              SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-              FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-            ), pairs AS (
-              SELECT id1, id2
-              FROM cand JOIN sh a ON id1 = a.doc_id JOIN sh b ON id2 = b.doc_id
-              WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                    / len(list_distinct(list_concat(a.s, b.s))) >= 0.5
-            ), und AS MATERIALIZED (
-              SELECT id1 AS a, id2 AS b FROM pairs
-              UNION ALL SELECT id2, id1 FROM pairs
-            ), reach(a, b) AS (
-              SELECT a, b FROM und
-              UNION
-              SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-            )
-            SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-            FROM reach GROUP BY a ORDER BY doc_id
         """,
         "dedup_embedding_lsh": f"""
             WITH bands AS (
@@ -2584,74 +1751,6 @@ def oracle_sql() -> dict[str, str]:
                        * sqrt(list_sum(list_transform(eb.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))),
                   4) >= 0.2
             ORDER BY id1, id2
-        """,
-        "ann_ivf_topk": """
-            WITH cents AS (
-              SELECT vec_id AS cent_id, embedding AS ce
-              FROM embeddings WHERE vec_id BETWEEN 1 AND 8
-            ), scored AS (
-              SELECT e.vec_id, e.embedding, c.cent_id,
-                     list_sum(list_transform(list_zip(e.embedding, c.ce),
-                                             x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                     / (sqrt(list_sum(list_transform(e.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))
-                        * sqrt(list_sum(list_transform(c.ce, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))) AS _s
-              FROM embeddings e CROSS JOIN cents c
-            ), assigned AS (
-              SELECT vec_id, embedding, cent_id AS cell
-              FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                             ORDER BY _s DESC, cent_id) AS _rn
-                FROM scored
-              ) WHERE _rn = 1
-            ), q AS (
-              SELECT embedding AS qe, cell AS qcell FROM assigned WHERE vec_id = 0
-            )
-            SELECT a.vec_id, a.cell,
-                   ROUND(
-                     list_sum(list_transform(list_zip(a.embedding, q.qe),
-                                             x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                     / (sqrt(list_sum(list_transform(a.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))
-                        * sqrt(list_sum(list_transform(q.qe, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))),
-                   4) AS cos_sim
-            FROM assigned a, q
-            WHERE a.cell = q.qcell AND a.vec_id <> 0
-            ORDER BY cos_sim DESC, a.vec_id
-            LIMIT 10
-        """,
-        "ann_ivf_multiprobe": """
-            WITH cents AS (
-              SELECT vec_id AS cent_id, embedding AS ce
-              FROM embeddings WHERE vec_id BETWEEN 1 AND 8
-            ), scored AS (
-              SELECT e.vec_id, e.embedding, c.cent_id,
-                     list_sum(list_transform(list_zip(e.embedding, c.ce),
-                                             x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                     / (sqrt(list_sum(list_transform(e.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))
-                        * sqrt(list_sum(list_transform(c.ce, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))) AS _s
-              FROM embeddings e CROSS JOIN cents c
-            ), ranked AS (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                           ORDER BY _s DESC, cent_id) AS _rn
-              FROM scored
-            ), assigned AS (
-              SELECT vec_id, embedding, cent_id AS cell FROM ranked WHERE _rn = 1
-            ), probe_cells AS (
-              SELECT cent_id AS qcell FROM ranked WHERE vec_id = 0 AND _rn <= 2
-            ), q AS (
-              SELECT embedding AS qe FROM assigned WHERE vec_id = 0
-            )
-            SELECT a.vec_id, a.cell,
-                   ROUND(
-                     list_sum(list_transform(list_zip(a.embedding, q.qe),
-                                             x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                     / (sqrt(list_sum(list_transform(a.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))
-                        * sqrt(list_sum(list_transform(q.qe, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))),
-                   4) AS cos_sim
-            FROM assigned a JOIN probe_cells p ON a.cell = p.qcell
-            CROSS JOIN q
-            WHERE a.vec_id <> 0
-            ORDER BY cos_sim DESC, a.vec_id
-            LIMIT 10
         """,
         "q15_datos_basicos": """
             WITH resumen AS (

@@ -2,8 +2,7 @@
 the one owner of scratch-frame lifetime.
 
 Several registry queries rebuild the same intermediate lineage
-(`_platos_base` feeds two esc_* queries; the ngram component labels feed
-dedup_clusters AND dedup_canonical_corpus). Computing those twice per
+(`_platos_base` feeds two esc_* queries). Computing it twice per
 session is pure waste, so the first caller materializes the base with
 ``localCheckpoint(eager=True)`` — materialized AND plan-truncated (a
 ``persist`` would keep the whole nested plan alive for re-analysis) —
@@ -214,8 +213,8 @@ def session_cached(
 ) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir, kind)
     if key not in _CACHE:
-        # make() runs OUTSIDE the lock (nested session_cached builds —
-        # bpe_token_seq -> bpe_vocab — must be able to take it), inside a
+        # make() runs OUTSIDE the lock (a nested session_cached build
+        # must be able to take it), inside a
         # fresh scratch scope: its internal scratch persists and tracked
         # checkpoints (stage joints, component-loop rounds, candidate
         # frames) are dead weight once the entry's own checkpoint holds

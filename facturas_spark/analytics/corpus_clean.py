@@ -1,9 +1,8 @@
 """The production corpus-cleaning pipeline: one lineage-managed pass.
 
-Round-3 review: the LLM-corpus quality operators existed only as
-independent bounded driver queries (`doc_id < 200/300/500` windows in
-``analytics/dedup.py``); a user cleaning a crawl runs them as ONE chained
-job. This module is that chain — the corpus-side analogue of the
+A user cleaning a crawl runs the LLM-corpus quality stages as ONE
+chained job, and this module is the one implementation of each stage:
+the chain is the corpus-side analogue of the
 extraction side's ``process-invoice`` handler
 (/root/reference/supabase/functions/process-invoice/index.ts:4181-5365),
 re-expressed over the full ``documents`` table with no demo bounds:
@@ -30,7 +29,7 @@ Scale shape: stages 0-5 are map stages + two keyed shuffles (the
 repetition n-gram counts and the fingerprint window); stage 6 is the
 banded candidate join (never all-pairs) + the iterative component loop;
 7 is one shuffle on source; 8's global window runs per-shard at cluster
-scale (``corpus_packing(shards=N)`` is the same expression). Decision
+scale (``per_doc_flags(pack_shards=N)`` is the same expression). Decision
 thresholds compare UNROUNDED integer ratios — both engines evaluate the
 identical IEEE division, so the DuckDB funnel twin matches exactly.
 
@@ -75,14 +74,14 @@ __all__ = [
     "corpus_clean_stats",
 ]
 
-# language-marker token lists — same banks as txt_langid (dedup.py)
+# language-marker token lists (stage 1)
 MARKERS_EN = ["the", "of", "and", "to", "in", "a", "is"]
 MARKERS_ES = ["el", "la", "de", "que", "los", "las", "una", "y"]
 
-# gopher stopword rule, bilingual union (en list = txt_gopher_quality's)
+# gopher stopword rule (stage 2), bilingual union of the en and es lists
 STOPWORDS_BI = ["the", "be", "to", "of", "and", "that", "have", "with", "a", "in"] + MARKERS_ES
 
-# PII patterns — same shapes as txt_pii_scan; single source of truth so
+# PII patterns (stage 4) — single source of truth so
 # the Spark chain, the job, and the DuckDB twin can't drift
 PII_EMAIL = r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
 PII_PHONE = r"\b[679]\d{2}[ .-]?\d{3}[ .-]?\d{3}\b"
@@ -518,7 +517,7 @@ def per_doc_flags(
     # running sum by default (the oracle-checkable core); pack_shards
     # partitions the window by hash(doc_id) % N so the cumsum never
     # crosses executors at cluster scale (same expression, pack identity
-    # becomes (pack_shard, pack_id) — corpus_packing's technique)
+    # becomes (pack_shard, pack_id))
     surv = f4.filter(F.col("s7")).select(
         "doc_id", F.size(_words(F.col("scrubbed"))).alias("tokens")
     )
@@ -646,7 +645,7 @@ def contaminated_ids(
     """Benchmark-decontamination pre-filter for the clean job (GPT-3
     appendix C / PaLM, public papers): doc_ids of ``docs`` sharing any
     k-word n-gram with ``bench_docs`` (an eval-set table with a ``text``
-    column) — same plan shape as ``dedup.txt_decontamination``.
+    column).
 
     The bench side is its distinct k-gram fingerprints, small by nature
     (eval sets are thousands of docs), so it is broadcast: the corpus
@@ -674,8 +673,8 @@ def contaminated_ids(
 
 
 def with_synth_pii(docs: DataFrame) -> DataFrame:
-    """Deterministic PII-shaped suffixes (same expression as txt_pii_scan,
-    dedup.py): the synthetic corpus is PII-free, which would leave the
+    """Deterministic PII-shaped suffixes: the synthetic corpus is
+    PII-free, which would leave the
     scrub stage a wall of zeros; injecting email/phone/IP shapes on
     doc_id % 7/11/13 gives the scrub + count expressions real positive
     AND negative signal. Applied by the STATS query only — the
@@ -723,8 +722,8 @@ def corpus_clean_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_quota_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver query: the EXACT two-phase salted per-source quota
     (quota_keep_ids salts=4, k=8) over the documents table, aggregated to
-    the same per-source facet as corpus_source_quota — and checked
-    against the same single-window DuckDB oracle, so the driver gate
+    one (total, kept, min_kept_doc) row per source — and checked
+    against a single-window DuckDB oracle, so the driver gate
     itself proves two-phase == single-phase == DuckDB on the identical
     input. This is the quota stage's 100-TB shape: a Zipf-hot source
     spreads over the salt partitions instead of serializing in one

@@ -189,7 +189,7 @@ def q15_semantic_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the candidate cap makes the scored set tiny, so the
     cosine runs on a broadcast-joined 20-row frame — no full-corpus scan
-    at serving time (the full-corpus path is ann_lsh_buckets)."""
+    at serving time (the full-corpus path is ann_cosine_topk)."""
     emb = _t(spark, sf_dir, "embeddings")
     ranked = (
         emb.select(

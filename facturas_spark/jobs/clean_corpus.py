@@ -2,11 +2,18 @@
 
 Usage (cluster or local):
 
-    spark-submit --py-files facturas_spark.zip \\
+    C2=$(python -c 'from facturas_spark.session import C2_THRESHOLDS as t; print(t)')
+    spark-submit --master <master> --driver-memory 8g \\
+        --driver-java-options "-XX:+UseParallelGC $C2" \\
+        --py-files facturas_spark.zip \\
         facturas_spark/jobs/clean_corpus.py \\
         --input /data/documents_parquet --output /data/clean \\
         [--quota-k 15] [--pack-budget 512] [--cores 32] \\
         [--benchmark /data/eval_set_parquet]
+
+The driver's memory and Java options go to spark-submit itself, as in
+``jobs/extract_job.py``: its driver JVM is running before ``get_spark``
+is called, and the session keeps spark-submit's ``--master``.
 
 The corpus-side twin of ``jobs/extract_job.py`` — the single
 lineage-managed pass the reference runs as its one end-to-end handler

@@ -2,10 +2,21 @@
 
 Usage (cluster or local):
 
-    spark-submit --py-files facturas_spark.zip \\
+    C2=$(python -c 'from facturas_spark.session import C2_THRESHOLDS as t; print(t)')
+    spark-submit --master <master> --driver-memory 8g \\
+        --driver-java-options "-XX:+UseParallelGC $C2" \\
+        --py-files facturas_spark.zip \\
         facturas_spark/jobs/extract_job.py \\
         --input /data/pages_parquet --output /data/extracted \\
         --buckets 4096 [--streaming] [--cores 32]
+
+spark-submit starts the driver JVM before ``get_spark`` runs, so the
+driver's memory and Java options (``-XX:+UseParallelGC`` and
+``session.C2_THRESHOLDS``, which ``get_spark`` sets only for a JVM it
+launches itself) must be passed to spark-submit, as above. The session
+keeps spark-submit's ``--master``; ``--cores`` then sets only the
+shuffle partitions. Run as plain ``python`` the job starts its own
+``local[cores]`` JVM with those settings.
 
 Batch mode runs :func:`facturas_spark.sources.io.run_with_resume` — the
 checkpointed, per-bucket-resumable job the north rule asks for; re-running

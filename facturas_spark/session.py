@@ -36,8 +36,12 @@ change them here. Spark puts the default options ahead of
 ``spark.driver.extraJavaOptions``, and HotSpot keeps the last value of a
 repeated flag, so a threshold in ``$SPARK_GRAFT_JVM_OPTS`` wins. Under
 ``spark-submit`` the driver JVM is already running when ``get_spark`` is
-called, so it runs with spark-submit's Java options, not these. Executor
-JVMs on a cluster take theirs from the cluster's own conf: put
+called, so it runs with spark-submit's Java options and memory, not
+these: pass ``--driver-memory`` and ``--driver-java-options``
+(``-XX:+UseParallelGC`` and :data:`C2_THRESHOLDS`) to spark-submit
+itself, as the jobs' usage shows. ``get_spark`` also keeps
+spark-submit's ``--master`` there instead of setting ``local[cores]``.
+Executor JVMs on a cluster take theirs from the cluster's own conf: put
 :data:`C2_THRESHOLDS` in its ``spark.executor.defaultJavaOptions``
 (``get_spark`` sets no executor Java option).
 
@@ -89,20 +93,26 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS or 32. ``shuffle_partitions``
-    defaults to ``cores`` — at sf<=0.1 one shuffle partition per core keeps
-    every task busy without tiny-partition overhead; on a real cluster this
-    is set to ~2-3x total cores (see pipeline.submit notes).
+    ``cores`` defaults to $SPARK_GRAFT_CPUS or 32. The session runs on
+    ``local[cores]`` unless the driver runs under ``spark-submit``, whose
+    ``--master`` is kept. ``shuffle_partitions`` defaults to ``cores`` —
+    at sf<=0.1 one shuffle partition per core keeps every task busy
+    without tiny-partition overhead; on a real cluster this is set to
+    ~2-3x total cores (see pipeline.submit notes).
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = cores
 
+    builder = SparkSession.builder.appName(app_name)
+    # spark-submit starts the driver JVM first and hands its gateway port
+    # to this process; a master set on the builder would override its
+    # --master and run every task in the driver
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        builder = builder.master(f"local[{cores}]")
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -1,78 +1,10 @@
-"""Corpus-level training-data ops: packing, quotas, vocab, PII scan."""
+"""Structural invariants of registry queries the oracle twins hash."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 import __spark_entry__ as em
 
 SF = "/root/testdata/sf0.001"
-BUDGET = 512
-
-
-def test_packing_respects_budget_and_order(spark):
-    """Each pack holds consecutive docs; a pack exceeds the budget only via
-    its final doc (the doc that crossed the boundary closes the pack)."""
-    rows = em.queries()["corpus_packing"](spark, SF).collect()
-    assert rows
-    prev_last = None
-    for r in rows:
-        assert r.first_doc <= r.last_doc
-        if prev_last is not None:
-            assert r.first_doc > prev_last
-        prev_last = r.last_doc
-        # remove the final doc and the remainder must fit the budget
-        # (cannot reconstruct per-doc here; the oracle hash pins exact
-        # values — this checks the structural invariant)
-        assert r.docs >= 1
-
-
-def test_packing_sharded_variant_parallel_layout(spark):
-    """shards=N: identical doc coverage, per-shard budget discipline, and
-    the plan partitions the window by shard (no global sort of the
-    corpus)."""
-    from facturas_spark.analytics.dedup import corpus_packing
-
-    global_rows = corpus_packing(spark, SF).collect()
-    sharded = corpus_packing(spark, SF, shards=4)
-    srows = sharded.collect()
-    assert {c for c in sharded.columns} == {
-        "shard", "pack_id", "docs", "tokens", "first_doc", "last_doc",
-    }
-    # every doc lands in exactly one pack in both layouts
-    assert sum(r.docs for r in srows) == sum(r.docs for r in global_rows)
-    assert sum(r.tokens for r in srows) == sum(r.tokens for r in global_rows)
-    # shards partition doc ids by doc_id % 4
-    for r in srows:
-        assert r.first_doc % 4 == r.shard and r.last_doc % 4 == r.shard
-    plan = sharded._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(shard" in plan, plan
-
-
-def test_source_quota_exact_cap(spark):
-    rows = em.queries()["corpus_source_quota"](spark, SF).collect()
-    assert rows
-    for r in rows:
-        assert r.kept == min(8, r.total)
-
-
-def test_pii_scan_signal(spark):
-    rows = em.queries()["txt_pii_scan"](spark, SF).collect()
-    assert rows
-    # the deterministic suffixes guarantee non-trivial positives
-    assert any(r.emails > 0 for r in rows)
-    assert any(r.phones > 0 for r in rows)
-    assert any(r.ipv4s > 0 for r in rows)
-    assert any(not r.has_pii for r in rows)
-    for r in rows:
-        assert r.has_pii == ((r.emails + r.phones + r.ipv4s) > 0)
-
-
-def test_vocab_topk_sorted(spark):
-    rows = em.queries()["corpus_vocab_topk"](spark, SF).collect()
-    assert 0 < len(rows) <= 50
-    counts = [r.occurrences for r in rows]
-    assert counts == sorted(counts, reverse=True)
 
 
 def test_json_props_stats_consistent(spark):

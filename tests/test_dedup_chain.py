@@ -1,4 +1,4 @@
-"""By-construction tests for the end-to-end dedup chain operators.
+"""By-construction tests for the dedup chains.
 
 The oracle gate checks cross-engine agreement; these tests pin the
 SEMANTICS on a corpus whose ground-truth clusters are known by
@@ -11,38 +11,47 @@ from __future__ import annotations
 import pytest
 
 
+def _flags(spark, docs, lsh_family: str = "md5") -> dict:
+    """doc_id -> (s5, s6) of the clean chain's per-doc flags, built and
+    collected inside one scratch scope."""
+    from facturas_spark.analytics.cache import scratch_scope
+    from facturas_spark.analytics.corpus_clean import per_doc_flags
+
+    with scratch_scope(spark):
+        rows = per_doc_flags(docs, lsh_family=lsh_family).collect()
+    return {r["doc_id"]: (r["s5"], r["s6"]) for r in rows}
+
+
 @pytest.fixture(scope="module")
-def tiny_corpus_dir(spark, tmp_path_factory):
-    base = " ".join(f"word{i}" for i in range(60))
-    near = base.replace("word30", "changed")      # ~95% shingle overlap
+def tiny_corpus(spark):
+    # stopwords + markers so every full-length doc passes stages 1-3
+    base = "the and of " + " ".join(f"word{i}" for i in range(60))
+    near = base.replace("word30", "changed")      # ~90% shingle overlap
     docs = [
-        (0, base, "en"),
-        (1, base, "en"),                          # exact dup of 0
-        (2, near, "en"),                          # near-dup of 0/1
-        (3, " ".join(f"other{i}" for i in range(60)), "en"),  # unrelated
-        (4, "tiny", "en"),                        # <3 words: no shingles
-        (5, base + " tail1 tail2", "en"),         # still >0.5 jaccard
+        (0, base),
+        (1, base),                                # exact dup of 0
+        (2, near),                                # near-dup of 0/1
+        (3, "the and of " + " ".join(f"other{i}" for i in range(60))),  # unrelated
+        (4, "tiny"),                              # too short for the chain
+        (5, base + " tail1 tail2"),               # still >0.5 jaccard
     ]
-    out = str(tmp_path_factory.mktemp("dedup") / "documents.parquet")
-    spark.createDataFrame(docs, "doc_id long, text string, lang string").write.parquet(
-        out
+    return spark.createDataFrame(
+        [(i, t, "src") for i, t in docs], "doc_id long, text string, source string"
     )
-    return out.rsplit("/documents.parquet", 1)[0]
 
 
-def test_lsh_chain_finds_known_clusters(spark, tiny_corpus_dir):
-    """Exact and near duplicates land in one cluster labeled by the min
-    doc_id; unrelated and shingle-less docs stay out of the node set."""
-    from facturas_spark.analytics.dedup import dedup_lsh_clusters
-
-    labels = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup_lsh_clusters(spark, tiny_corpus_dir).collect()
-    }
-    assert labels[0] == 0 and labels[1] == 0 and labels[2] == 0
-    assert labels[5] == 0
-    assert 3 not in labels  # unrelated: never a candidate pair survivor
-    assert 4 not in labels  # no shingles -> excluded from the chain
+def test_lsh_chain_finds_known_clusters(spark, tiny_corpus):
+    """The clean chain keeps one doc per duplicate cluster, its min
+    doc_id: the exact copy goes at stage 5, the near copies at stage 6
+    (MinHash/LSH candidates -> Jaccard verify -> components); the
+    unrelated doc survives both. Same decisions under either family."""
+    for family in ("md5", "xxhash64"):
+        flags = _flags(spark, tiny_corpus, family)
+        assert flags[0] == (True, True), family
+        assert flags[1][0] is False, family  # exact dup of 0
+        assert flags[2] == (True, False) and flags[5] == (True, False), family
+        assert flags[3] == (True, True), family  # unrelated: no verified pair
+        assert flags[4] == (False, False), family  # fails the quality stages
 
 
 def test_embedding_lsh_same_bucket_only(spark, tmp_path):
@@ -180,19 +189,16 @@ def test_components_partitioned_path_identical(spark):
 
 def test_xxhash64_family_same_clusters(spark):
     """The production hash family (xxhash64 integer MinHash — no hex
-    strings, ~4x cheaper) must find the same near-dup clusters as the
+    strings, ~4x cheaper) must make the same near-dup decisions as the
     DuckDB-portable md5 family on the test corpus: both are uniform hash
     families, so band collisions recover the same >=0.5-Jaccard pairs and
-    the verify step makes the final clusters hash-family-independent."""
-    from facturas_spark.analytics.dedup import dedup_lsh_clusters
+    the verify step makes the chain's keep set hash-family-independent."""
+    from facturas_spark.analytics.corpus_clean import with_synth_pii
 
-    sf = "/root/testdata/sf0.001"
-    md5_rows = sorted(map(tuple, dedup_lsh_clusters(spark, sf).collect()))
-    xx_rows = sorted(
-        map(tuple, dedup_lsh_clusters(spark, sf, family="xxhash64").collect())
-    )
-    assert md5_rows == xx_rows
-    assert len(md5_rows) > 0
+    docs = with_synth_pii(spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
+    md5 = _flags(spark, docs)
+    assert _flags(spark, docs, "xxhash64") == md5
+    assert any(s5 and not s6 for s5, s6 in md5.values())  # stage 6 dropped some
 
 
 def test_components_adaptive_layout_threshold(spark, monkeypatch):

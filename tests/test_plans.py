@@ -53,25 +53,14 @@ def test_sql_queries_have_no_python(spark):
     (Rows-only pipelines are the per-doc UDF surface and are exempt.)"""
     qs = em.queries()
     oracle_backed = set(em.oracle_sql())
-    # dedup_clusters runs its iterative fixpoint loop at construction time
-    # (driver-side convergence counts) — exempt here; its per-iteration
-    # operators are plain join+min-agg built-ins.
-    oracle_backed.discard("dedup_clusters")
-    oracle_backed.discard("dedup_canonical_corpus")  # builds on the loop
-    # the embedder facet IS an Arrow kernel surface (the hashed-3-gram
-    # projection, vectorized pandas_udf) — oracle-twinned for exactness
-    # but per-doc Python by design, like the rows-only pipelines
-    # (embed_neighbor_graph is its pairwise-cosine facet, same kernel)
-    oracle_backed.discard("embed_fingerprint_stats")
-    oracle_backed.discard("embed_neighbor_graph")
     # the layout facet runs the REAL walk_layout kernel on purpose — the
     # DuckDB twin re-derives its numbers from raw spans with pure SQL, so
     # the pair is a cross-engine check OF the Python kernel itself
     oracle_backed.discard("ocr_layout_facets")
-    oracle_backed.discard("corpus_clean_stats")  # built-ins + the loop
-    # NFC normalization has no Spark built-in — the Arrow pandas UDF is
-    # the documented exemption (control-char strip stays JVM-side)
-    oracle_backed.discard("txt_charset_normalize")
+    # the clean chain runs its component loop at construction time
+    # (driver-side convergence counts); its own plan is pinned by
+    # test_clean_chain_plan_properties
+    oracle_backed.discard("corpus_clean_stats")
     for name, fn in qs.items():
         if name not in oracle_backed:
             continue
@@ -108,9 +97,9 @@ def test_embedding_lsh_pairs_no_theta_join(spark):
 
 
 def test_lsh_cluster_chain_no_theta_join(spark):
-    """The end-to-end dedup chain's candidate generation (band-key
-    equi-join) and verify must plan without any cartesian; the component
-    labels it returns are a persisted scan."""
+    """The clean chain's near-dup stage (``corpus_clean.per_doc_flags``:
+    shingles -> band-key equi-join candidates -> Jaccard verify ->
+    components) must plan without any cartesian."""
     from facturas_spark.analytics import dedup as D
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -127,7 +116,11 @@ def test_lsh_cluster_chain_no_theta_join(spark):
         for line in cand_plan.splitlines()
         if "Join" in line or "hashpartitioning" in line
     ), cand_plan
-    labels = em.queries()["dedup_lsh_clusters"](spark, SF)
+    verified = D._verified_pairs(sh, D._lsh_candidate_pairs(sh))
+    verify_plan = _plan(verified)
+    assert "CartesianProduct" not in verify_plan
+    assert "BroadcastNestedLoopJoin" not in verify_plan
+    labels = D._min_label_components(verified)
     assert labels.columns == ["doc_id", "cluster_id"]
 
 
@@ -178,41 +171,6 @@ def test_sessionization_single_hash_shuffle(spark):
     assert len(hash_ex) == 1, plan
     assert "user_id" in hash_ex[0], hash_ex[0]
     assert len(range_ex) <= 1, plan
-
-
-def test_incremental_dedup_no_theta_join(spark):
-    """dedup_incremental: every join is an equi-join (fingerprint, band
-    key, or doc id) — no cartesian/nested-loop anywhere, the property that
-    lets the increment run against an unbounded corpus."""
-    plan = _plan(em.queries()["dedup_incremental"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # the band-key candidate join is eagerly checkpointed in production
-    # (AQE re-executes multiply-referenced candidate DAGs — see
-    # dedup._verified_pairs), so assert its equi-join shape on the
-    # un-materialized builder, same pattern as the full-chain test.
-    from facturas_spark.analytics import dedup as D
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sh_b = D._shingle_table(docs.filter(docs.doc_id % 5 == 0))
-    sh_c = D._shingle_table(docs.filter(docs.doc_id % 5 != 0))
-    cand_plan = _plan(D._incr_candidate_pairs(sh_b, sh_c))
-    assert "CartesianProduct" not in cand_plan
-    assert "BroadcastNestedLoopJoin" not in cand_plan
-    assert any(
-        "band" in line and "key" in line
-        for line in cand_plan.splitlines()
-        if "Join" in line or "hashpartitioning" in line
-    ), cand_plan
-
-
-def test_repetition_filter_no_python_no_cartesian(spark):
-    """txt_repetition_filter: explode->count->reduce must stay JVM-side
-    (no Python eval nodes) and join per-doc stats back by doc_id only."""
-    plan = _plan(em.queries()["txt_repetition_filter"](spark, SF))
-    assert "PythonUDF" not in plan and "ArrowEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_aqe_skew_join_splits_hot_partition(spark):
@@ -275,51 +233,15 @@ def test_clean_chain_plan_properties(spark):
 
 
 def test_decontamination_broadcast_no_cartesian(spark):
-    """txt_decontamination must broadcast the (small) benchmark n-gram
-    set and hash-join the exploded corpus side — the corpus never
-    shuffles on the fingerprint, so the scan stays map-side at 100 TB."""
-    plan = _plan(em.queries()["txt_decontamination"](spark, SF))
+    """The clean job's ``--benchmark`` pre-filter
+    (``corpus_clean.contaminated_ids``) must broadcast the (small)
+    benchmark n-gram set and hash-join the exploded corpus side — the
+    corpus never shuffles on the fingerprint, so the scan stays map-side
+    at 100 TB."""
+    from facturas_spark.analytics.corpus_clean import contaminated_ids
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    bench = docs.filter("doc_id % 23 = 0").select("text")
+    plan = _plan(contaminated_ids(docs.filter("doc_id % 23 <> 0"), bench))
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan, plan
-
-
-def test_semdedup_cell_equijoin_no_cartesian(spark):
-    """dedup_semantic's pairwise compare must key on the cell id (the
-    SemDeDup O(sum cell^2) bound): no cartesian anywhere; the only
-    broadcast-nested-loop allowed is the 8-row centroid broadcast."""
-    plan = _plan(em.queries()["dedup_semantic"](spark, SF))
-    assert "CartesianProduct" not in plan
-    joined_on_cell = any(
-        "cell" in line
-        for line in plan.splitlines()
-        if "SortMergeJoin" in line or "ShuffledHashJoin" in line
-        or "hashpartitioning" in line or "BroadcastHashJoin" in line
-    )
-    assert joined_on_cell, plan
-
-
-def test_unigram_lm_partial_agg_and_broadcast_totals(spark):
-    """Vocab build must partial-aggregate map-side; the (T, V) totals are
-    a 1-row broadcast, never a shuffle of the token stream."""
-    plan = _plan(em.queries()["txt_unigram_lm_score"](spark, SF))
-    assert "partial_count" in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-
-
-def test_incremental_ckpt_guard_adaptive(spark, monkeypatch):
-    """Round-7 directive: the candidate checkpoint is adaptive on the
-    materialized candidate count — small graphs stay on persist() (one
-    execution, cached blocks serve both references), large graphs
-    upgrade to the lineage-truncating eager localCheckpoint. Both paths
-    must produce identical decisions."""
-    from facturas_spark.analytics import dedup as D
-
-    base = sorted(
-        tuple(r) for r in D.dedup_incremental(spark, SF).collect()
-    )
-    # threshold 0 forces every candidate set onto the checkpoint path
-    monkeypatch.setattr(D, "INCR_CKPT_THRESHOLD", 0)
-    forced = sorted(
-        tuple(r) for r in D.dedup_incremental(spark, SF).collect()
-    )
-    assert base == forced

@@ -49,8 +49,10 @@ def test_unrolled_cosine_bitwise_equals_fold(spark):
             )
         )
     df = spark.createDataFrame(rows, "e1 array<float>, e2 array<float>")
+    # the cosine _emb_candidates_with_cosine computes, norms carried
+    fast = D._dot("e1", "e2") / (F.sqrt(D._norm2("e1")) * F.sqrt(D._norm2("e2")))
     got = df.select(
-        D._cosine("e1", "e2").alias("fast"),
+        fast.alias("fast"),
         _fold_cosine_reference("e1", "e2").alias("fold"),
     ).collect()
     assert len(got) == 200
@@ -125,63 +127,16 @@ def test_effective_parallelism_caps_by_row_groups(spark):
 
 def test_fan_is_result_invariant(spark, monkeypatch):
     """Forcing the fan on must not change any query's rows — only the
-    physical partitioning. Checked on the round-8 rewritten
-    txt_substring_dup (window-over-fingerprint form)."""
-    base = [tuple(r) for r in D.txt_substring_dup(spark, SF).collect()]
+    physical partitioning. Checked on dedup_url_normalize, whose
+    min-over-window keep flag runs on the fanned documents scan."""
+    base = [tuple(r) for r in D.dedup_url_normalize(spark, SF).collect()]
     monkeypatch.setattr(D, "FAN_MIN_BYTES", 0)
     D._FAN_MEMO.clear()
     try:
-        fanned = [tuple(r) for r in D.txt_substring_dup(spark, SF).collect()]
+        fanned = [tuple(r) for r in D.dedup_url_normalize(spark, SF).collect()]
     finally:
         D._FAN_MEMO.clear()
     assert base == fanned
-
-
-def test_dot_long_bitwise_equals_integer_fold(spark):
-    """The LONG unrolled dot (_dot_long, embed_neighbor_graph's pair
-    kernel) must equal the zip_with/aggregate integer fold EXACTLY —
-    integer addition is associative so any summation order is the same
-    value; this pins that the unrolled SQL actually computes it. Covers
-    the exact-width fast path and the odd-width fold fallback."""
-    rng = random.Random(88)
-    rows = []
-    for i in range(200):
-        dim = D.EMB_FAST_DIM if i % 3 else rng.choice([3, 17, 63, 65])
-        rows.append(
-            (
-                [rng.randrange(-1000, 1000) for _ in range(dim)],
-                [rng.randrange(-1000, 1000) for _ in range(dim)],
-            )
-        )
-    df = spark.createDataFrame(rows, "e1 array<long>, e2 array<long>")
-    fold = F.aggregate(
-        F.zip_with("e1", "e2", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    for r in df.select(
-        D._dot_long("e1", "e2").alias("fast"), fold.alias("fold")
-    ).collect():
-        assert r["fast"] == r["fold"], (r["fast"], r["fold"])
-
-
-def test_neighbor_graph_sumsq_matches_fold_rule(spark):
-    """embed_neighbor_graph now computes s = sum(e_i^2) in numpy int64
-    inside its mapInPandas (one Python eval per side instead of four);
-    the value must equal the old long-fold sum exactly for the real
-    embedder's vectors."""
-    import numpy as np
-
-    from facturas_spark.extraction.embed import embed_counts
-
-    texts = ["factura total 123,45", "", None, "x" * 500, "iva 21% base"]
-    vecs = [embed_counts(t) for t in texts]
-    rows = [([int(x) for x in v],) for v in vecs]
-    df = spark.createDataFrame(rows, "e array<long>")
-    fold = F.aggregate("e", F.lit(0).cast("long"), lambda acc, v: acc + v * v)
-    got = [r[0] for r in df.select(fold).collect()]
-    np_side = [int((v * v).sum()) for v in vecs]
-    assert got == np_side
 
 
 def test_fan_post_force_is_result_invariant(spark):

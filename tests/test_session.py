@@ -23,6 +23,7 @@ The driver JVM runs the C2 thresholds of ``session.C2_THRESHOLDS``: the
 tests read the values the JVM uses (Spark adds
 ``-XX:+IgnoreUnrecognizedVMOptions``, so a misspelled flag would be
 dropped silently), and pin that ``$SPARK_GRAFT_JVM_OPTS`` overrides them.
+A driver under ``spark-submit`` keeps spark-submit's ``--master``.
 """
 
 from __future__ import annotations
@@ -40,6 +41,7 @@ import zipimport
 import pandas as pd
 import py4j
 import pyspark
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import functions as F
 
 import __spark_entry__ as em
@@ -319,3 +321,34 @@ def test_spark_graft_jvm_opts_override_a_c2_threshold(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert json.loads(proc.stdout.strip().splitlines()[-1]) == {**_THRESHOLDS, "Tier4InvocationThreshold": "7000"}
+
+
+_MASTER_PROBE = """
+import json, sys
+sys.path.insert(0, %(root)r)
+from facturas_spark.session import get_spark
+
+spark = get_spark("master-probe", cores=1)
+print(json.dumps({"master": spark.sparkContext.master}))
+spark.stop()
+"""
+
+
+def _probe_master(argv: list[str], cwd) -> str:
+    proc = subprocess.run(argv, cwd=cwd, capture_output=True, text=True, timeout=600)
+    # spark-submit merges the driver's stderr into stdout
+    assert proc.returncode == 0, (proc.stdout + proc.stderr)[-3000:]
+    last = [line for line in proc.stdout.splitlines() if line.startswith("{")][-1]
+    return json.loads(last)["master"]
+
+
+def test_spark_submit_keeps_its_master(tmp_path):
+    """Under spark-submit the driver JVM is already running with
+    spark-submit's ``--master``; ``get_spark`` must not replace it with
+    ``local[cores]``, which would run every task in the driver. A plain
+    ``python`` driver still gets ``local[cores]``."""
+    probe = tmp_path / "probe.py"
+    probe.write_text(_MASTER_PROBE % {"root": REPO})
+    submit = os.path.join(_find_spark_home(), "bin", "spark-submit")
+    assert _probe_master([submit, "--master", "local[2]", str(probe)], tmp_path) == "local[2]"
+    assert _probe_master([sys.executable, str(probe)], tmp_path) == "local[1]"
