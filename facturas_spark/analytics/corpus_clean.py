@@ -108,7 +108,7 @@ EXACT_KEEP_BROADCAST_MAX = 8_000_000
 
 
 def resolve_quota_salts(survivors: DataFrame, quota_k: int) -> int | None:
-    """The ``quota_salts="auto"`` decision made by per_doc_flags: ONE
+    """The quota-form decision made by per_doc_flags: ONE
     thin agg (the frame feeding the quota window is persisted upstream,
     so this materializes work the next action needs anyway —
     _component_layout's pattern) measures the hottest source AND the
@@ -398,8 +398,6 @@ def per_doc_flags(
     pack_budget: int = PACK_BUDGET,
     pack_shards: int | None = None,
     semantic_tau: float | None = None,
-    quota_salts: int | None | str = "auto",
-    lsh_family: str = "md5",
 ) -> DataFrame:
     """One row per input doc with cumulative stage-survival flags
     (s0..s7), the scrubbed text, PII span counts, and pack assignment.
@@ -450,19 +448,11 @@ def per_doc_flags(
         .drop("_exact_keep")
     )
 
-    # stage 6: near-dup LSH chain over the scrubbed text of s5 survivors.
-    # ``lsh_family`` mirrors _band_table's knob: md5 (default) is the
-    # DuckDB-portable oracle family; xxhash64 is the integer production
-    # family (same chain shape, ~2x cheaper minhash). The families give
-    # different candidate sets in general, so keep decisions can differ:
-    # test_xxhash64_family_same_clusters pins equal clusters only on the
-    # sf test corpus. EXPLICIT parameter, never an ambient setting, so
-    # nothing silently changes oracle-gated dedup results.
-    family = lsh_family
+    # stage 6: near-dup LSH chain over the scrubbed text of s5 survivors
     sh = scratch_persist(_shingle_table(
         f2.filter(F.col("s5")).select("doc_id", F.col("scrubbed").alias("text"))
     ))
-    cand = _lsh_candidate_pairs(sh, family)
+    cand = _lsh_candidate_pairs(sh)
     verified = _verified_pairs(sh, cand)
     labels = _min_label_components(verified)
     f3 = scratch_persist(f2.join(labels, "doc_id", "left").withColumn(
@@ -491,19 +481,14 @@ def per_doc_flags(
     # row of a source in ONE partition — a Zipf-hot crawl source (one
     # holding 30% of the corpus, say) serializes in a single fat task,
     # and AQE cannot split a window.
-    # The "auto" default (round-7 directive 4) measures the hottest
-    # source and switches to the exact two-phase salted top-k past
-    # QUOTA_SALT_TARGET rows — same keep set (property-tested), hot
-    # phase-1 tasks bounded near the target, and a bonus at scale: the
-    # two-phase output is <= #sources * quota_k rows, so the join-back
-    # below broadcasts instead of reshuffling the fat frame by doc_id.
-    # Explicit ints / None still force a form. See quota_keep_ids.
+    # resolve_quota_salts measures the hottest source and switches to
+    # the exact two-phase salted top-k past QUOTA_SALT_TARGET rows —
+    # same keep set (property-tested), hot phase-1 tasks bounded near
+    # the target, and a bonus at scale: the two-phase output is
+    # <= #sources * quota_k rows, so the join-back below broadcasts
+    # instead of reshuffling the fat frame by doc_id. See quota_keep_ids.
     surv_ids = f3.filter(F.col("s6")).select("doc_id", "source")
-    salts = (
-        resolve_quota_salts(surv_ids, quota_k)
-        if quota_salts == "auto"
-        else quota_salts
-    )
+    salts = resolve_quota_salts(surv_ids, quota_k)
     quota = quota_keep_ids(surv_ids, quota_k, salts=salts)
     if salts and salts > 1:
         # two-phase output is provably <= #sources * quota_k rows —
@@ -515,7 +500,7 @@ def per_doc_flags(
 
     # stage 8: token-budget packing of the final survivors. Global
     # running sum by default (the oracle-checkable core); pack_shards
-    # partitions the window by hash(doc_id) % N so the cumsum never
+    # partitions the window by doc_id % N so the cumsum never
     # crosses executors at cluster scale (same expression, pack identity
     # becomes (pack_shard, pack_id))
     surv = f4.filter(F.col("s7")).select(
@@ -640,7 +625,7 @@ def _tok_k(df: DataFrame, k: int) -> DataFrame:
 
 
 def contaminated_ids(
-    docs: DataFrame, bench_docs: DataFrame, k: int = DECON_K, family: str = "md5"
+    docs: DataFrame, bench_docs: DataFrame, k: int = DECON_K
 ) -> DataFrame:
     """Benchmark-decontamination pre-filter for the clean job (GPT-3
     appendix C / PaLM, public papers): doc_ids of ``docs`` sharing any
@@ -650,8 +635,7 @@ def contaminated_ids(
     The bench side is its distinct k-gram fingerprints, small by nature
     (eval sets are thousands of docs), so it is broadcast: the corpus
     side stays a map pass + broadcast hash join + one doc_id distinct —
-    no corpus shuffle. ``family``: md5 (oracle default) or xxhash64
-    (production — integer keys, ~no string materialization)."""
+    no corpus shuffle."""
     # the bench side needs no stable id — only its fingerprint set
     bench_hashes = (
         _kgram_hashes(
@@ -659,13 +643,12 @@ def contaminated_ids(
                 bench_docs.select(F.lit(0).cast("bigint").alias("doc_id"), "text"), k
             ),
             k,
-            family,
         )
         .select("h")
         .distinct()
     )
     return (
-        _kgram_hashes(_tok_k(docs, k), k, family)
+        _kgram_hashes(_tok_k(docs, k), k)
         .join(F.broadcast(bench_hashes), "h")
         .select("doc_id")
         .distinct()

@@ -7,7 +7,7 @@ URL/host filters over ``documents``. Everything here is expressible in
 both Spark SQL and DuckDB so the driver's oracle gate covers it.
 
 Portability note: MinHash normally uses an integer hash family; DuckDB
-can't parse hex -> int without extensions, so the default hash family is
+can't parse hex -> int without extensions, so the hash family is
 ``min(md5(shingle || ':' || i))`` under LEXICOGRAPHIC order — md5 hex
 strings are uniformly distributed, so the min-string is a valid MinHash
 permutation stand-in, and both engines produce identical signatures.
@@ -52,14 +52,6 @@ def _table_bytes(sf_dir: str, name: str) -> int:
         return total
     except OSError:
         return 0
-
-
-def _table_big(sf_dir: str, name: str) -> bool:
-    """Size-only half of the fan gate — also the right predicate for
-    choosing per-row KERNELS (e.g. the unrolled cosine), where split
-    count is irrelevant: a big table deserves the fast kernel whether or
-    not its scan also needs a repartition."""
-    return _table_bytes(sf_dir, name) >= FAN_MIN_BYTES
 
 
 def _scan_effective_parallelism(
@@ -108,7 +100,7 @@ def _fan_needed(spark: SparkSession, sf_dir: str, name: str) -> bool:
     need = _FAN_MEMO.get(k)
     if need is None:
         cores = spark.sparkContext.defaultParallelism
-        need = _table_big(sf_dir, name) and (
+        need = _table_bytes(sf_dir, name) >= FAN_MIN_BYTES and (
             _scan_effective_parallelism(spark, sf_dir, name) < cores
         )
         _FAN_MEMO[k] = need
@@ -354,9 +346,7 @@ def _jaccard(s1, s2):
 COMPONENT_AUTO_THRESHOLD = 200_000
 
 
-def _component_layout(
-    pairs: DataFrame, partitions: int | None
-) -> tuple[DataFrame, int | None]:
+def _component_layout(pairs: DataFrame) -> tuple[DataFrame, int | None]:
     """Materialize the pair graph at its own parallelism and resolve the
     component-loop layout. The eager checkpoint is load-bearing twice
     over: (a) the sandbox layout collapses to coalesce(1), which is NOT
@@ -366,22 +356,17 @@ def _component_layout(
     29 s -> 14 s fixed); (b) it makes the pair COUNT a near-free job,
     which funds the adaptive layout choice.
 
-    Layout resolution, in priority order:
-    1. explicit ``partitions`` argument (callers that know their graph);
-    2. ADAPTIVE default: count the materialized pairs — small graphs
-       (<= COMPONENT_AUTO_THRESHOLD pairs) take the single-partition
-       broadcast loop (each round a handful of tasks — right for the
-       sandbox's sparse near-dup graphs);
-       larger graphs switch to the N-way co-partitioned shuffle-join
-       layout with N ~ pairs/100k capped at spark.sql.shuffle.partitions,
-       so a 100-TB crawl's billion-edge graph never funnels its loop
-       rounds through one task and nothing needs a manual knob. Both
-       layouts produce identical labels (property-pinned)."""
+    Layout: count the materialized pairs — small graphs
+    (<= COMPONENT_AUTO_THRESHOLD pairs) take the single-partition
+    broadcast loop (None; each round a handful of tasks — right for the
+    sandbox's sparse near-dup graphs); larger graphs switch to the N-way
+    co-partitioned shuffle-join layout with N ~ pairs/100k capped at
+    spark.sql.shuffle.partitions, so a 100-TB crawl's billion-edge graph
+    never funnels its loop rounds through one task. Both layouts produce
+    identical labels (property-pinned)."""
     from facturas_spark.analytics.cache import tracked_checkpoint
 
     pairs = tracked_checkpoint(pairs)
-    if partitions is not None:
-        return pairs, partitions
     n = pairs.count()
     if n <= COMPONENT_AUTO_THRESHOLD:
         return pairs, None
@@ -389,9 +374,7 @@ def _component_layout(
     return pairs, max(2, min(cap, n // max(1, COMPONENT_AUTO_THRESHOLD // 2)))
 
 
-def _min_label_components(
-    pairs: DataFrame, partitions: int | None = None
-) -> DataFrame:
+def _min_label_components(pairs: DataFrame) -> DataFrame:
     """Connected components over an (id1, id2) pair graph via iterative
     min-label propagation to a fixpoint. Returns (doc_id, cluster_id) for
     every node in >=1 pair; cluster_id = the component's min doc_id.
@@ -404,13 +387,13 @@ def _min_label_components(
     per round and Catalyst re-analyzes the whole stack on every later
     action (measured: 3-36 s to collect a 24-row cached result).
 
-    ``partitions`` selects the layout (None = ADAPTIVE, resolved by
-    ``_component_layout`` from the materialized pair count):
+    ``_component_layout`` picks the layout from the materialized pair
+    count:
     - single-partition broadcast loop (small graphs): the pair graph is
       tiny relative to the corpus (near-dups are rare), so collapse to
       one partition and broadcast the label side — each round is a
       handful of tasks.
-    - N-way co-partitioned (large graphs / explicit N): hash-partition
+    - N-way co-partitioned (large graphs): hash-partition
       edges and labels on the node id into N partitions and use plain
       shuffle joins — every round is an N-way parallel co-partitioned
       join, no single-task stage and no assumption the label table fits
@@ -424,7 +407,7 @@ def _min_label_components(
         tracked_checkpoint_ids,
     )
 
-    pairs, partitions = _component_layout(pairs, partitions)
+    pairs, partitions = _component_layout(pairs)
     spark = pairs.sparkSession
 
     def _layout(df: DataFrame, key: str) -> tuple[DataFrame, list[int]]:
@@ -485,35 +468,23 @@ def _min_label_components(
 LSH_JACCARD_THRESHOLD = 0.5
 
 
-def _band_table(sh: DataFrame, family: str = "md5") -> DataFrame:
+def _band_table(sh: DataFrame) -> DataFrame:
     """MinHash LSH band table of a shingle table: 8 min-hash signatures ->
     4 bands x 2 rows -> explode to one (doc_id, band, key) row per band.
     The candidate-generation kernel of the clean-corpus chain's near-dup
     stage (``corpus_clean.per_doc_flags``).
 
-    ``family`` selects the hash:
-    - ``"md5"`` (default): hex-string min under lexicographic order —
-      DuckDB computes the identical value, so the oracle gate covers the
-      chain end-to-end. ~4x dearer than xxhash64 (string materialization
-      + 128-bit digest).
-    - ``"xxhash64"``: Spark's native 64-bit hash, integer min — the
-      production family at 10^12 docs (no hex strings, no string
-      comparisons, same plan shape). Not DuckDB-expressible, so it is
-      covered by the pytest equivalence test instead of the oracle
-      (tests/test_dedup_chain.py::test_xxhash64_family_same_clusters)."""
+    Each signature is the md5 hex-string min under lexicographic order,
+    the value DuckDB computes too, so the ``corpus_clean_stats`` twin
+    covers the chain end-to-end."""
 
     def sig(i: int):
         suffix = f":{i}"
-        if family == "xxhash64":
-            h = lambda s: F.xxhash64(F.concat(s, F.lit(suffix)))  # noqa: E731
-        else:
-            h = lambda s: F.md5(F.concat(s, F.lit(suffix)))  # noqa: E731
+        h = lambda s: F.md5(F.concat(s, F.lit(suffix)))  # noqa: E731
         return F.array_min(F.transform(F.col("sh"), h)).alias(f"h{i}")
 
     def band_key(j: int):
         lo, hi = F.col(f"h{2 * j}"), F.col(f"h{2 * j + 1}")
-        if family == "xxhash64":
-            return F.xxhash64(lo, hi)
         return F.md5(F.concat(lo, hi))
 
     return (
@@ -585,14 +556,14 @@ def _verified_pairs(sh: DataFrame, cand: DataFrame) -> DataFrame:
     )
 
 
-def _lsh_candidate_pairs(sh: DataFrame, family: str = "md5") -> DataFrame:
+def _lsh_candidate_pairs(sh: DataFrame) -> DataFrame:
     """Candidate pairs from MinHash band collisions over a shingle table:
     band table self equi-join on (band, key) -> distinct (id1 < id2) pairs.
 
     Exposed as a unit so tests/test_plans.py can pin the property the
     100-TB chain depends on: candidates come ONLY from this banded
     equi-join — never an all-pairs/theta join over the corpus."""
-    bands = _band_table(sh, family)
+    bands = _band_table(sh)
     a = bands.select("band", "key", F.col("doc_id").alias("id1"))
     b = bands.select("band", "key", F.col("doc_id").alias("id2"))
     return (
@@ -810,26 +781,13 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 DECON_K = 13  # GPT-3-appendix-C n-gram width
 
 
-def _kgram_hashes(df: DataFrame, k: int, family: str = "md5") -> DataFrame:
-    """(doc_id, h) rows: fingerprint of every k-word window of column
-    ``w`` (a pre-tokenized array), for the clean job's decontamination
-    pre-filter (``corpus_clean.contaminated_ids``).
-
-    ``family``: "md5" (default — DuckDB-identical, the oracle path) or
-    "xxhash64" (Spark's native 64-bit integer hash — the production
-    family; membership decisions only depend on hash EQUALITY, so the
-    two families make identical contamination calls, pinned by
-    tests/test_corpus_clean.py::test_decontamination_families_agree).
-    The xxhash64 family hashes the word-slice ARRAY directly — no
-    concat_ws string materialization per window (guide §4.2's "re-slice,
-    don't copy" applied to the JVM side); words are whitespace-split so
-    the two families fingerprint identical window identities."""
-    if family == "xxhash64":
-        win = lambda i: F.xxhash64(F.slice("w", i + 1, k))  # noqa: E731
-    else:
-        win = lambda i: F.md5(  # noqa: E731
-            F.concat_ws(" ", F.slice("w", i + 1, k))
-        )
+def _kgram_hashes(df: DataFrame, k: int) -> DataFrame:
+    """(doc_id, h) rows: md5 fingerprint of every k-word window of
+    column ``w`` (a pre-tokenized array), for the clean job's
+    decontamination pre-filter (``corpus_clean.contaminated_ids``)."""
+    win = lambda i: F.md5(  # noqa: E731
+        F.concat_ws(" ", F.slice("w", i + 1, k))
+    )
     return df.select(
         "doc_id",
         F.explode(

@@ -26,7 +26,6 @@ def _fan_post(
     table: str,
     df: DataFrame,
     key: str,
-    force: bool = False,
 ) -> DataFrame:
     """Post-filter fan-out for the synthesized bank queries: their pushed
     key filters leave a few thousand rows in the one task that owns the
@@ -34,19 +33,10 @@ def _fan_post(
     cost. Repartition those rows to session parallelism — but only when
     the source table passes the same size/splits gate as dedup._t_fan
     (a tiny table's scan is already cheap, and the exchange would cost
-    more than it parallelizes).
-
-    ``force`` overrides the byte gate for a site whose bank is heavy
-    enough to win at EVERY scale: these filters keep a constant ~5-6k
-    rows (the key bound is a literal), so both the exchange cost and the
-    bank cost are scale-independent — the right gate is the per-site
-    measured constant, not the source-table bytes. Round-8 A/B at sf0.1
-    (interleaved, min of 3): only f4_f6 clears it (0.63; its amount
-    battery is ~3x the other banks per row) — f1 1.54, f2 1.40, f8 1.74,
-    f11 1.63, f12 1.56, p9 1.30 all lose below the byte gate."""
+    more than it parallelizes)."""
     from facturas_spark.analytics.dedup import _fan_needed
 
-    if force or _fan_needed(spark, sf_dir, table):
+    if _fan_needed(spark, sf_dir, table):
         return df.repartition(spark.sparkContext.defaultParallelism, key)
     return df
 
@@ -1917,12 +1907,15 @@ def f4_f6_amount_banks(spark: SparkSession, sf_dir: str) -> DataFrame:
     each bank. Texts synthesized per key cover multi-candidate pick-max,
     value-before-label captures, the IVA-rate-token-as-cuota quirk, the
     out-of-range tipo filter, and all-defaults."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000), "o_orderkey",
-        # the three amount banks are the heaviest battery in the family —
-        # fan wins at every scale (0.63 at sf0.1; see _fan_post docstring)
-        force=True,
+    # fanned out at every scale, not behind _fan_post's byte gate: the
+    # filter keeps a constant ~5k rows, and the three amount banks cost
+    # ~3x the other banks per row. Round-8 A/B at sf0.1 (interleaved, min
+    # of 3): fanned/unfanned 0.63 here; f1 1.54, f2 1.40, f8 1.74, f11
+    # 1.63, f12 1.56 and p9 1.30 lose, so they keep the gate.
+    o = (
+        _t(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") <= 5000)
+        .repartition(spark.sparkContext.defaultParallelism, "o_orderkey")
     )
     k = F.col("o_orderkey")
     a = lambda mult: F.concat(  # noqa: E731

@@ -32,7 +32,6 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 
 __all__ = [
@@ -40,7 +39,6 @@ __all__ = [
     "embed_counts",
     "embed_vector",
     "embed_udf",
-    "embed_products",
 ]
 
 EMBED_DIM = 64
@@ -84,13 +82,3 @@ def embed_udf(col):
     from pyspark.sql.types import ArrayType, FloatType
 
     return pandas_udf(_embed_series, ArrayType(FloatType()))(col)
-
-
-def embed_products(df: DataFrame, text_col: str = "nombre") -> DataFrame:
-    """Attach a deterministic ``embedding array<float>`` column — the
-    engine's stand-in for the reference's OpenAI embedding write
-    (index.ts:5370-5519). Works on any frame with a text column
-    (master products, extracted documents); rows whose text yields a
-    zero/empty vector get NULL, mirroring the reference skipping docs
-    the embedding call failed on."""
-    return df.withColumn("embedding", embed_udf(df[text_col]))

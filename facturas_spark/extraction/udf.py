@@ -102,9 +102,8 @@ _FULL_COLS = FULL_SCHEMA.fieldNames()
 
 
 def extract_batch(html, text, products: bool = True) -> pd.DataFrame:
-    """The fused per-batch kernel (shared by the pandas UDFs and the
-    accumulator-instrumented mapInPandas path): boilerplate strip ->
-    classify -> field extraction -> line-item extraction.
+    """The fused per-batch kernel the pandas UDFs run: boilerplate
+    strip -> classify -> field extraction -> line-item extraction.
 
     ``products=False`` skips the line items and returns the
     :data:`HEADER_SCHEMA` columns; every other column is the same."""

@@ -8,7 +8,7 @@ Usage (cluster or local):
         --py-files facturas_spark.zip \\
         facturas_spark/jobs/clean_corpus.py \\
         --input /data/documents_parquet --output /data/clean \\
-        [--quota-k 15] [--pack-budget 512] [--cores 32] \\
+        [--quota-k 15] [--pack-budget 512] [--pack-shards 64] [--cores 32] \\
         [--benchmark /data/eval_set_parquet]
 
 The driver's memory and Java options go to spark-submit itself, as in
@@ -37,8 +37,14 @@ extraction job uses (object-store-safe; ``sources/fs.py``):
 A re-run skips committed stages (idempotent: each stage overwrites its
 own directory before its marker commits). Cluster sizing notes mirror
 extract_job.py: shuffle partitions ~2-3x cores (the chain shuffles on
-(doc_id, gram), fingerprint, band key, source), AQE on for skew, and
-the packing window runs per-shard at scale (``--pack-shards``).
+(doc_id, gram), fingerprint, band key, source) and AQE on for skew.
+
+Pass ``--pack-shards N`` on any corpus that does not fit one task.
+Without it, stage 8 (token-budget packing) is a running sum over the
+whole surviving corpus in doc_id order, which Spark runs through ONE
+task (it logs ``No Partition Defined for Window operation! Moving all
+data to a single partition``). With it, the running sum restarts in each
+of N shards, and pack identity becomes (pack_shard, pack_id).
 """
 
 from __future__ import annotations
@@ -64,21 +70,9 @@ def main(argv: list[str] | None = None) -> int:
         "--pack-shards",
         type=int,
         default=None,
-        help="shard the packing window by hash(doc_id) %% N (cluster scale: "
-        "the running sum never crosses executors; pack identity becomes "
-        "(pack_shard, pack_id))",
-    )
-    parser.add_argument(
-        "--quota-salts",
-        type=lambda s: s if s == "auto" else int(s),
-        default="auto",
-        metavar="S",
-        help="exact two-phase salted per-source quota (cluster scale: a "
-        "Zipf-hot source spreads over S salt partitions instead of one "
-        "unsplittable window task; merge phase bounded at S*quota_k "
-        "rows/source; identical keep set — see quota_keep_ids). Default "
-        "'auto' measures the hottest source and salts only past "
-        "QUOTA_SALT_TARGET rows; 0 forces single-phase",
+        help="shard the packing window by doc_id %% N; pack identity becomes "
+        "(pack_shard, pack_id). Without it the packing stage runs the "
+        "whole surviving corpus through one task",
     )
     parser.add_argument("--cores", type=int, default=None, help="local-mode cores")
     parser.add_argument(
@@ -96,18 +90,6 @@ def main(argv: list[str] | None = None) -> int:
         "hash-embedding cosine with an earlier survivor reaches TAU "
         "(catches reorderings/rephrasings MinHash misses; banded "
         "sign-bucket LSH candidates, never all-pairs)",
-    )
-    parser.add_argument(
-        "--hash-family",
-        choices=["md5", "xxhash64"],
-        default="md5",
-        help="fingerprint family for --benchmark decontamination AND "
-        "the stage-6 near-dup LSH chain: md5 (oracle-portable default) "
-        "or xxhash64 (production — integer keys, no hex-string "
-        "materialization). The families give different candidate sets, "
-        "so near-dup keep decisions can differ; "
-        "test_xxhash64_family_same_clusters pins equal clusters only on "
-        "the sf test corpus",
     )
     parser.add_argument(
         "--benchmark",
@@ -162,9 +144,9 @@ def main(argv: list[str] | None = None) -> int:
                 # persisted: the count below and the anti-join inside the
                 # flags job both consume it — without persist the
                 # full-corpus k-gram scan would run twice
-                bad = scratch_persist(contaminated_ids(
-                    docs, spark.read.parquet(args.benchmark), family=args.hash_family
-                ))
+                bad = scratch_persist(
+                    contaminated_ids(docs, spark.read.parquet(args.benchmark))
+                )
                 n_bad = bad.count()
                 docs = docs.join(bad, "doc_id", "left_anti")
                 decon_meta = {"decontaminated": n_bad}
@@ -174,8 +156,6 @@ def main(argv: list[str] | None = None) -> int:
                 pack_budget=args.pack_budget,
                 pack_shards=args.pack_shards,
                 semantic_tau=args.semantic_dedup,
-                quota_salts=args.quota_salts,
-                lsh_family=args.hash_family,
             )
             flags.write.mode("overwrite").parquet(flags_path)
         flags_back = spark.read.parquet(flags_path)

@@ -106,7 +106,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         result = {"mode": "streaming", "output": f"{args.output}/extracted"}
     elif args.iceberg_table:
-        from facturas_spark.pipeline import extract_pages
+        from facturas_spark.pipeline import extract_pages_header
         from facturas_spark.sources.iceberg import (
             create_pages_table,
             iceberg_available,
@@ -116,7 +116,7 @@ def main(argv: list[str] | None = None) -> int:
         pages = read_pages()
         if iceberg_available(spark, args.iceberg_table.split(".", 1)[0]):
             create_pages_table(spark, args.iceberg_table, n_buckets=args.buckets)
-            write_pages(extract_pages(pages), args.iceberg_table)
+            write_pages(extract_pages_header(pages), args.iceberg_table)
             result = {"mode": "iceberg", "table": args.iceberg_table}
         else:
             print(

@@ -15,9 +15,8 @@ Input contracts (column names):
 Scale notes:
 - Every method joins on proveedor_nombre equality plus a date-range
   predicate -> sort-merge join keyed on proveedor. Proveedor is the skewed
-  key (a hot supplier dominates); AQE skew-join splits oversized partitions,
-  and `salt` adds an explicit salting column for the pathological case
-  (documented, off by default — AQE handles the sf we test).
+  key (a hot supplier dominates); AQE skew-join (``get_spark`` turns it on)
+  splits oversized partitions inside the join.
 - Method 1 (explicit refs) is an equi-join on numero_albaran — if the
   albaran dim is small it broadcasts automatically (autoBroadcastJoinThreshold).
 - Consolidation is one groupBy((factura_id, albaran_id)).max_by — the only
@@ -49,43 +48,7 @@ __all__ = [
     "categorize",
     "run_cotejo",
     "run_cotejo_inverso",
-    "salted_join",
 ]
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    how: str = "inner",
-    extra_cond=None,
-) -> DataFrame:
-    """Explicit skew-salting equi-join (north rule: salting for skewed keys).
-
-    The hot-key problem: a dominant proveedor puts most rows of both sides
-    into one shuffle partition. Salting splits it: the big side gets a
-    random-but-deterministic salt ``xxhash64(all cols) % n_salts``; the
-    small side is exploded n_salts times so every (key, salt) pair exists.
-    Shuffle key becomes (key, salt) — the hot key spreads over n_salts
-    partitions. AQE's skew-join handles moderate skew automatically; this
-    is the explicit tool for the pathological case.
-    """
-    big_s = big.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(n_salts)).cast(
-            "int"
-        ),
-    )
-    small_s = small.withColumnRenamed(key, "_key2").withColumn(
-        "_salt2", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    cond = (big_s[key] == small_s["_key2"]) & (
-        big_s["_salt"] == small_s["_salt2"]
-    )
-    if extra_cond is not None:
-        cond = cond & extra_cond
-    return big_s.join(small_s, cond, how).drop("_salt", "_salt2", "_key2")
 
 
 def _clamp01(c):

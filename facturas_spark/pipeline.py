@@ -16,7 +16,7 @@ Scale notes (the part that matters at 10^12 docs):
   moves extracted rows, not html, and leaves one file per bucket.
 - Skewed hosts do not skew this stage (extraction is per-row, cost scales
   with bytes not keys). Skew matters for the downstream joins/aggregations,
-  handled in analytics/matching via AQE + salting (see matching/cotejo.py).
+  handled in analytics/matching via AQE skew-join (see matching/cotejo.py).
 - ``salt_bucket`` derives the write-side bucket: hash(url) mod n_buckets —
   the Iceberg ``bucket(N, url)`` layout from SURVEY §2.1 S5, emulated with
   parquet partitioning in this sandbox.
@@ -71,40 +71,6 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     return extract_pages_header(pages).withColumn(
         "requiere_revision", F.col("confianza_global") < 0.8
     )
-
-
-def extract_pages_instrumented(spark, pages: DataFrame):
-    """Accumulator-instrumented extraction (north rule: accumulator-backed
-    extraction metrics): same fused kernel via mapInPandas, incrementing
-    live counters per Arrow batch — visible on the driver while the job
-    runs, unlike the declarative :func:`extraction_metrics` (which remains
-    the exact, recomputable source of truth).
-
-    Returns (DataFrame, accumulators dict). Accumulator values are
-    task-at-least-once semantics (Spark retries may double-count) — use for
-    monitoring, not correctness.
-    """
-    from facturas_spark.extraction.udf import FULL_SCHEMA, extract_batch
-
-    acc = {
-        "docs": spark.sparkContext.accumulator(0),
-        "cif_hits": spark.sparkContext.accumulator(0),
-        "review_flagged": spark.sparkContext.accumulator(0),
-    }
-
-    def batches(it):
-        for pdf in it:
-            out = extract_batch(pdf["html"], pdf["text"])
-            out.insert(0, "url", pdf["url"].values)
-            acc["docs"].add(len(out))
-            acc["cif_hits"].add(int(out["proveedor_cif"].notna().sum()))
-            acc["review_flagged"].add(int((out["confianza_global"] < 0.8).sum()))
-            yield out
-
-    schema = "url string, " + ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in FULL_SCHEMA.fields
-    )
-    return pages.mapInPandas(batches, schema=schema), acc
 
 
 def extract_products_table(extracted_full: DataFrame) -> DataFrame:

@@ -88,22 +88,20 @@ C2_THRESHOLDS = (
 def get_spark(
     app_name: str = "facturas-spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
     ``cores`` defaults to $SPARK_GRAFT_CPUS or 32. The session runs on
     ``local[cores]`` unless the driver runs under ``spark-submit``, whose
-    ``--master`` is kept. ``shuffle_partitions`` defaults to ``cores`` —
-    at sf<=0.1 one shuffle partition per core keeps every task busy
-    without tiny-partition overhead; on a real cluster this is set to
-    ~2-3x total cores (see pipeline.submit notes).
+    ``--master`` is kept. Shuffle partitions equal ``cores`` — at
+    sf<=0.1 one shuffle partition per core keeps every task busy without
+    tiny-partition overhead; on a real cluster set
+    ``spark.sql.shuffle.partitions`` to ~2-3x total cores through
+    ``extra_conf`` (see the jobs' sizing notes).
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = cores
 
     builder = SparkSession.builder.appName(app_name)
     # spark-submit starts the driver JVM first and hands its gateway port
@@ -112,7 +110,7 @@ def get_spark(
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
         builder = builder.master(f"local[{cores}]")
     builder = (
-        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder.config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

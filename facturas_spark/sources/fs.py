@@ -85,20 +85,10 @@ class CommitFS:
                 return f.read()
         stream = self._jfs.open(self._p(name))
         try:
-            try:
-                # one py4j round-trip for the whole file (commons-io ships
-                # with Spark); the byte-at-a-time loop below is the
-                # no-dependency fallback, fine for <1 KB markers
-                data = self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-                return bytes(data).decode("utf-8")
-            except Exception:
-                out = bytearray()
-                while True:
-                    b = stream.read()
-                    if b < 0:
-                        break
-                    out.append(b)
-                return out.decode("utf-8")
+            # one py4j round-trip for the whole file (commons-io ships
+            # with Spark)
+            data = self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+            return bytes(data).decode("utf-8")
         finally:
             stream.close()
 

@@ -60,17 +60,18 @@ def create_pages_table(
     table: str = "lake.crawl.pages_extracted",
     n_buckets: int = 256,
 ) -> None:
-    """CREATE TABLE IF NOT EXISTS with the columns ``extract_pages`` writes
-    (read off its schema, so the DDL cannot drift from the rows), partitioned
+    """CREATE TABLE IF NOT EXISTS with the columns ``extract_pages_header``
+    writes, the ones the bucketed-parquet sink holds too (read off its
+    schema, so the DDL cannot drift from the rows), partitioned
     by ``bucket(N, url)`` — the Iceberg-native form of the parquet
     emulation's ``xxhash64(url) %% N`` column. Bucketing by the FULL url (not
     host) spreads Zipf-skewed hosts uniformly across partitions."""
     if not iceberg_available(spark, table.split(".", 1)[0]):
         raise IcebergUnavailable(f"no Iceberg catalog for {table!r}")
-    from facturas_spark.pipeline import extract_pages
+    from facturas_spark.pipeline import extract_pages_header
     from facturas_spark.synth import PAGES_SCHEMA_DDL
 
-    schema = extract_pages(spark.createDataFrame([], PAGES_SCHEMA_DDL)).schema
+    schema = extract_pages_header(spark.createDataFrame([], PAGES_SCHEMA_DDL)).schema
     columns = ",\n          ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
     )

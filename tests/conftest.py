@@ -14,5 +14,5 @@ if str(REPO) not in sys.path:
 def spark():
     from facturas_spark.session import get_spark
 
-    s = get_spark("pytest", cores=4, shuffle_partitions=4)
+    s = get_spark("pytest", cores=4)
     yield s

@@ -11,14 +11,14 @@ from __future__ import annotations
 import pytest
 
 
-def _flags(spark, docs, lsh_family: str = "md5") -> dict:
+def _flags(spark, docs) -> dict:
     """doc_id -> (s5, s6) of the clean chain's per-doc flags, built and
     collected inside one scratch scope."""
     from facturas_spark.analytics.cache import scratch_scope
     from facturas_spark.analytics.corpus_clean import per_doc_flags
 
     with scratch_scope(spark):
-        rows = per_doc_flags(docs, lsh_family=lsh_family).collect()
+        rows = per_doc_flags(docs).collect()
     return {r["doc_id"]: (r["s5"], r["s6"]) for r in rows}
 
 
@@ -44,14 +44,13 @@ def test_lsh_chain_finds_known_clusters(spark, tiny_corpus):
     """The clean chain keeps one doc per duplicate cluster, its min
     doc_id: the exact copy goes at stage 5, the near copies at stage 6
     (MinHash/LSH candidates -> Jaccard verify -> components); the
-    unrelated doc survives both. Same decisions under either family."""
-    for family in ("md5", "xxhash64"):
-        flags = _flags(spark, tiny_corpus, family)
-        assert flags[0] == (True, True), family
-        assert flags[1][0] is False, family  # exact dup of 0
-        assert flags[2] == (True, False) and flags[5] == (True, False), family
-        assert flags[3] == (True, True), family  # unrelated: no verified pair
-        assert flags[4] == (False, False), family  # fails the quality stages
+    unrelated doc survives both."""
+    flags = _flags(spark, tiny_corpus)
+    assert flags[0] == (True, True)
+    assert flags[1][0] is False  # exact dup of 0
+    assert flags[2] == (True, False) and flags[5] == (True, False)
+    assert flags[3] == (True, True)  # unrelated: no verified pair
+    assert flags[4] == (False, False)  # fails the quality stages
 
 
 def test_embedding_lsh_same_bucket_only(spark, tmp_path):
@@ -138,20 +137,27 @@ def _union_find_labels(edges):
     return {(x, find(x)) for x in parent}
 
 
-def test_components_partitioned_path_identical(spark):
+def test_components_partitioned_path_identical(spark, monkeypatch):
     """The cluster-scale layout (hash-partitioned N-way co-partitioned
     joins, no broadcast, no coalesce(1)) produces exactly the labels of
     the sandbox layout on a graph with a chain, a triangle, a 2-clique
     and an isolated pair. Both layouts also match a plain-Python
     union-find on fixed shapes — a DEEP chain (min-label's worst case,
     one loop round per link), a reversed pair, a self-loop — and on
-    seeded random graphs."""
+    seeded random graphs. A zero COMPONENT_AUTO_THRESHOLD sends every
+    graph down the partitioned layout."""
     import random
 
+    from facturas_spark.analytics import dedup as D
     from facturas_spark.analytics.dedup import _min_label_components
 
     def labels(df):
         return {(r["doc_id"], r["cluster_id"]) for r in df.collect()}
+
+    def part_labels(pairs):
+        with monkeypatch.context() as m:
+            m.setattr(D, "COMPONENT_AUTO_THRESHOLD", 0)
+            return labels(_min_label_components(pairs))
 
     edges = [
         (1, 2), (2, 3), (3, 4),        # chain -> cluster 1
@@ -161,8 +167,7 @@ def test_components_partitioned_path_identical(spark):
     ]
     pairs = spark.createDataFrame(edges, "id1 long, id2 long")
     base = labels(_min_label_components(pairs))
-    part = labels(_min_label_components(pairs, partitions=8))
-    assert base == part
+    assert base == part_labels(pairs)
     assert base == {
         (1, 1), (2, 1), (3, 1), (4, 1),
         (10, 10), (11, 10), (12, 10),
@@ -184,21 +189,7 @@ def test_components_partitioned_path_identical(spark):
         want = _union_find_labels(edges)
         pairs = spark.createDataFrame(edges, "id1 long, id2 long")
         assert labels(_min_label_components(pairs)) == want, edges
-        assert labels(_min_label_components(pairs, partitions=4)) == want, edges
-
-
-def test_xxhash64_family_same_clusters(spark):
-    """The production hash family (xxhash64 integer MinHash — no hex
-    strings, ~4x cheaper) must make the same near-dup decisions as the
-    DuckDB-portable md5 family on the test corpus: both are uniform hash
-    families, so band collisions recover the same >=0.5-Jaccard pairs and
-    the verify step makes the chain's keep set hash-family-independent."""
-    from facturas_spark.analytics.corpus_clean import with_synth_pii
-
-    docs = with_synth_pii(spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
-    md5 = _flags(spark, docs)
-    assert _flags(spark, docs, "xxhash64") == md5
-    assert any(s5 and not s6 for s5, s6 in md5.values())  # stage 6 dropped some
+        assert part_labels(pairs) == want, edges
 
 
 def test_components_adaptive_layout_threshold(spark, monkeypatch):
@@ -215,22 +206,18 @@ def test_components_adaptive_layout_threshold(spark, monkeypatch):
     pairs = spark.createDataFrame(edges, "id1 long, id2 long")
 
     # below threshold: sandbox single-partition broadcast layout
-    _, p = _component_layout(pairs, None)
+    _, p = _component_layout(pairs)
     assert p is None
 
     with monkeypatch.context() as m:
         m.setattr(D, "COMPONENT_AUTO_THRESHOLD", 10)
-        _, p = _component_layout(pairs, None)
+        _, p = _component_layout(pairs)
         assert p is not None and p >= 2
         # the adaptive run (threshold crossed -> partitioned loop) keeps
-        # exactly the labels of the explicit layouts
+        # exactly the expected labels
         want = {(a, a) for a, _ in edges} | {(b, a) for a, b in edges}
         got = {
             (r["doc_id"], r["cluster_id"])
             for r in _min_label_components(pairs).collect()
         }
         assert got == want
-
-    # explicit argument always wins over the adaptive count
-    _, p = _component_layout(pairs, 4)
-    assert p == 4

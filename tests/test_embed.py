@@ -8,8 +8,8 @@ import pytest
 from facturas_spark.extraction.embed import (
     EMBED_DIM,
     embed_counts,
+    embed_udf,
     embed_vector,
-    embed_products,
 )
 
 
@@ -48,7 +48,7 @@ def test_embed_products_wiring(spark):
         [(1, "aceite de oliva"), (2, "queso manchego curado"), (3, "")],
         "producto_id int, nombre string",
     )
-    out = embed_products(df).collect()
+    out = df.withColumn("embedding", embed_udf(df["nombre"])).collect()
     got = {r.producto_id: r.embedding for r in out}
     assert got[3] is None  # degenerate text -> NULL, reference skip semantics
     assert len(got[1]) == EMBED_DIM

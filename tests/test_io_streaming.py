@@ -387,14 +387,20 @@ def test_iceberg_config_probe_requires_classpath(spark):
         spark.conf.unset("spark.sql.catalog.probe_cat")
 
 
-def test_iceberg_ddl_matches_extract_pages_schema(spark, monkeypatch):
-    """The table extract_job creates takes exactly the columns it then
-    writes with ``writeTo(...).overwritePartitions()`` (matched by name):
-    same names, same types as extract_pages' output."""
+def test_iceberg_ddl_matches_parquet_sink_columns(spark, tmp_path, monkeypatch):
+    """The table extract_job's --iceberg-table sink creates takes exactly
+    the columns the bucketed-parquet sink (run_with_resume) writes, minus
+    the parquet layout's ``bucket`` column: same names, order and types.
+    Iceberg's ``writeTo(...).overwritePartitions()`` matches by name, so
+    both sinks then hold the same rows."""
     from pyspark.sql.types import StructType
 
-    from facturas_spark.pipeline import extract_pages
     from facturas_spark.sources import iceberg
+
+    out = str(tmp_path / "job")
+    pages = spark.createDataFrame(corpus_rows(8, seed=3), PAGES_SCHEMA_DDL)
+    run_with_resume(spark, pages, out, n_buckets=2)
+    sink = spark.read.parquet(os.path.join(out, "extracted")).drop("bucket")
 
     sql = []
     monkeypatch.setattr(iceberg, "iceberg_available", lambda *a, **k: True)
@@ -403,10 +409,9 @@ def test_iceberg_ddl_matches_extract_pages_schema(spark, monkeypatch):
 
     (ddl,) = sql
     cols = re.search(r"lake\.crawl\.t \((.*)\)\s*USING iceberg", ddl, re.S)[1]
-    want = extract_pages(spark.createDataFrame([], PAGES_SCHEMA_DDL)).schema
     got = StructType.fromDDL(cols)
     assert [(f.name, f.dataType) for f in got.fields] == [
-        (f.name, f.dataType) for f in want.fields
+        (f.name, f.dataType) for f in sink.schema.fields
     ]
     assert "bucket(8, url)" in ddl
 

@@ -204,26 +204,6 @@ def test_cotejo_patterns_dim_faithful_gates(spark):
     assert rows0[("f3", "a4", "patron_temporal")] == pytest.approx(0.54)
 
 
-def test_salted_join_equivalence(spark):
-    """Salted join returns exactly the rows of the plain equi-join, with the
-    hot key spread over n_salts shuffle partitions."""
-    from facturas_spark.matching.cotejo import salted_join
-
-    # skewed big side: one proveedor dominates
-    big = spark.createDataFrame(
-        [(f"r{i}", "HOT S.L." if i % 10 != 9 else f"COLD{i} S.A.", float(i))
-         for i in range(200)],
-        "row_id string, proveedor string, amount double",
-    )
-    small = spark.createDataFrame(
-        [("HOT S.L.", 1), ("COLD9 S.A.", 2), ("COLD19 S.A.", 3)],
-        "proveedor string, prio int",
-    )
-    plain = big.join(small, "proveedor").select("row_id", "prio")
-    salted = salted_join(big, small, "proveedor").select("row_id", "prio")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
 def test_inverse_cotejo_m13(spark):
     """M13 faithful: the inverse direction has its OWN windows/filters
     (forward-looking m2/m4 windows, albarán-denominated overlap, fixed

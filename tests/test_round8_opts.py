@@ -140,16 +140,16 @@ def test_fan_is_result_invariant(spark, monkeypatch):
 
 
 def test_fan_post_force_is_result_invariant(spark):
-    """The force=True site (f4_f6_amount_banks) must produce identical
-    rows with the fan on and off — only the partitioning differs."""
+    """f4_f6_amount_banks fans its bank rows out whatever the scan fan
+    gate says, and still returns its rows."""
     from facturas_spark.analytics.queries import f4_f6_amount_banks
 
     key = (spark.sparkContext.applicationId, SF, "orders")
     D._FAN_MEMO[key] = False
     try:
         df = f4_f6_amount_banks(spark, SF)
-        # the fan is forced regardless of the (False-seeded) gate: the
-        # bank rows pass through a hash repartition before the battery
+        # the fan ignores the (False-seeded) gate: the bank rows pass
+        # through a hash repartition before the battery
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "RepartitionByExpression" in plan, plan
         assert len(df.collect()) > 0

@@ -76,24 +76,6 @@ def test_entry_contract(spark):
     assert len(out) > 0
 
 
-def test_extract_pages_instrumented_accumulators(spark):
-    from facturas_spark.pipeline import extract_pages_instrumented
-
-    df = spark.createDataFrame(corpus_rows(50, seed=42), PAGES_SCHEMA_DDL)
-    out, acc = extract_pages_instrumented(spark, df)
-    n = out.count()
-    assert n == 50
-    assert acc["docs"].value == 50
-    assert acc["cif_hits"].value == 50  # every synthetic doc carries a CIF
-    assert 0 <= acc["review_flagged"].value <= 50
-    # same results as the UDF path
-    from facturas_spark.pipeline import extract_pages_full
-
-    a = {r.url: r.proveedor_cif for r in out.collect()}
-    b = {r.url: r.proveedor_cif for r in extract_pages_full(df).collect()}
-    assert a == b
-
-
 def test_extract_pages_hostile_inputs(spark):
     """Crawl-reality probe: null payloads, broken UTF-8, tag soup, empty
     strings, and a binary-garbage html cell must flow through the fused
