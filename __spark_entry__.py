@@ -7,6 +7,7 @@
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,8 +62,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # cotejo_inverso/ocr_layout_extraction) stay parked last: a
         # rows-only driver row adds no evidence over their fixtures, so
         # they never displace a hash-checkable refresh.
-        "dedup_embedding_lsh": D.dedup_embedding_lsh,
+        "f2_invoice_number": Q.f2_invoice_number,
+        "f1_cif_extraction": Q.f1_cif_extraction,
+        "p14_multi_price": Q.p14_multi_price,
+        "p4_p7_line_parsers": Q.p4_p7_line_parsers,
+        "txt_content_lines": Q.txt_content_lines,
         "c1_classify_documents": Q.c1_classify_documents,
+        "f4_f6_amount_banks": Q.f4_f6_amount_banks,
+        "txt_field_extraction": Q.txt_field_extraction,
+        "dedup_embedding_lsh": D.dedup_embedding_lsh,
         "dedup_embedding_cosine": D.dedup_embedding_cosine,
         "numier_upsert_ventas": E.numier_upsert_ventas,
         "m14_duplicate_orders": D.m14_duplicate_orders,
@@ -73,7 +81,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact": Q.dedup_exact,
         "ocr_layout_facets": Q.ocr_layout_facets,
         "corpus_clean_stats": CC.corpus_clean_stats,
-        "f4_f6_amount_banks": Q.f4_f6_amount_banks,
         "f11_fiscal_reconciliation": Q.f11_fiscal_reconciliation,
         "supplier_dim": M.supplier_dim,
         "v_productos_top": E.v_productos_top,
@@ -83,7 +90,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_json_props": Q.events_json_props,
         "url_quality_filter": D.url_quality_filter,
         "dedup_url_normalize": D.dedup_url_normalize,
-        "txt_field_extraction": Q.txt_field_extraction,
         "numier_dashboard_resumen": E.numier_dashboard_resumen,
         "numier_upsert_catalogo": E.numier_upsert_catalogo,
         "cotejo_patron_efectividad": E.cotejo_patron_efectividad,
@@ -106,28 +112,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q15_semantic_ranked": N.q15_semantic_ranked,
         "q15_datos_basicos": N.q15_datos_basicos,
         "stream_window_equivalence": Q.stream_window_equivalence,
+        # ---------------- driver window boundary (50) ----------------
+        # parked: banked-green and untouched this round (the five newest
+        # banked rows the regex-bank fold displaced, then the r08 rows),
+        # then the pinned rows-only pipelines
         "events_sessionization": Q.events_sessionization,
         "host_reputation_filter": D.host_reputation_filter,
         "iva_tipos_breakdown": E.iva_tipos_breakdown,
         "esc_ingredientes_stats": E.esc_ingredientes_stats,
         "m5_product_match_pairs": D.m5_product_match_pairs,
-        # ---------------- driver window boundary (50) ----------------
-        # parked: banked-green and untouched this round (r08 rows),
-        # then the pinned rows-only pipelines
-        "f2_invoice_number": Q.f2_invoice_number,
-        "f1_cif_extraction": Q.f1_cif_extraction,
         "f12_confidence": Q.f12_confidence,
         "f8_date_variants": Q.f8_date_variants,
         "f7_amount_variants": Q.f7_amount_variants,
         "p9_price_closure": Q.p9_price_closure,
         "p8_p15_products_normalized": Q.p8_p15_products_normalized,
         "p13_price_per_unit": Q.p13_price_per_unit,
-        "p14_multi_price": Q.p14_multi_price,
-        "p4_p7_line_parsers": Q.p4_p7_line_parsers,
         "s2_mime_sniffing": Q.s2_mime_sniffing,
         "q02_top_products": Q.q02_top_products,
         "q12_multi_price_products": Q.q12_multi_price_products,
-        "txt_content_lines": Q.txt_content_lines,
         "corpus_quota_two_phase": CC.corpus_quota_two_phase,
         "q01_daily_sales": Q.q01_daily_sales,
         "q03_dashboard_resumen": Q.q03_dashboard_resumen,
@@ -151,21 +153,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-from facturas_spark.analytics.queries import (  # noqa: E402
-    _F4_PATTERNS,
-    _F5_PATTERNS,
-    _F6_PATTERNS,
-    _TIPO_PATTERNS,
+from facturas_spark.extraction.textparse import (  # noqa: E402
+    _PAT_BASE,
+    _PAT_CUOTA,
+    _PAT_TIPO,
+    _PAT_TOTAL,
 )
 
 
-def _bank_extracts_sql(patterns: list[str]) -> str:
+def _bank_extracts_sql(patterns: list[re.Pattern[str]]) -> str:
     return " || ".join(
-        f"regexp_extract_all(texto, '(?i){p}', 1)" for p in patterns
+        f"regexp_extract_all(texto, '(?i){p.pattern}', 1)" for p in patterns
     )
 
 
-def _bank_max_sql(patterns: list[str], gate: str) -> str:
+def _bank_max_sql(patterns: list[re.Pattern[str]], gate: str) -> str:
     ex = _bank_extracts_sql(patterns)
     parsed = (
         f"list_filter(list_transform(list_filter(list_transform({ex}, x -> trim(x)),"
@@ -784,16 +786,16 @@ def oracle_sql() -> dict[str, str]:
               FROM orders WHERE o_orderkey <= 5000
             )
             SELECT o_orderkey, escenario, texto,
-                   {_bank_max_sql(_F4_PATTERNS, "contains(lower(texto), 'total') OR contains(lower(texto), 'líquido') OR contains(lower(texto), 'liquido') OR contains(lower(texto), 'importe') OR contains(lower(texto), 'suma')")} AS total_factura,
-                   {_bank_max_sql(_F5_PATTERNS, "contains(lower(texto), 'base') OR contains(lower(texto), 'subtotal') OR contains(lower(texto), 'neto')")} AS base_imponible,
-                   {_bank_max_sql(_F6_PATTERNS, "contains(lower(texto), 'iva') OR contains(lower(texto), 'i.v.a') OR contains(lower(texto), 'cuota')")} AS cuota_iva,
+                   {_bank_max_sql(_PAT_TOTAL, "contains(lower(texto), 'total') OR contains(lower(texto), 'líquido') OR contains(lower(texto), 'liquido') OR contains(lower(texto), 'importe') OR contains(lower(texto), 'suma')")} AS total_factura,
+                   {_bank_max_sql(_PAT_BASE, "contains(lower(texto), 'base') OR contains(lower(texto), 'subtotal') OR contains(lower(texto), 'neto')")} AS base_imponible,
+                   {_bank_max_sql(_PAT_CUOTA, "contains(lower(texto), 'iva') OR contains(lower(texto), 'i.v.a') OR contains(lower(texto), 'cuota')")} AS cuota_iva,
                    COALESCE(
                      (list_filter(
                         CASE WHEN regexp_matches(texto, '\\d')
                               AND (contains(lower(texto), 'iva') OR contains(lower(texto), 'i.v.a') OR contains(lower(texto), 'al'))
                              THEN list_filter(
                                     list_transform(
-                                      list_filter(list_transform({_bank_extracts_sql(_TIPO_PATTERNS)}, x -> trim(x)), x -> x <> ''),
+                                      list_filter(list_transform({_bank_extracts_sql(_PAT_TIPO)}, x -> trim(x)), x -> x <> ''),
                                       x -> TRY_CAST(x AS INT)),
                                     n -> n IS NOT NULL AND n >= 0 AND n <= 30)
                              ELSE CAST([] AS INT[]) END,
@@ -802,7 +804,7 @@ def oracle_sql() -> dict[str, str]:
                             AND (contains(lower(texto), 'iva') OR contains(lower(texto), 'i.v.a') OR contains(lower(texto), 'al'))
                            THEN list_filter(
                                   list_transform(
-                                    list_filter(list_transform({_bank_extracts_sql(_TIPO_PATTERNS)}, x -> trim(x)), x -> x <> ''),
+                                    list_filter(list_transform({_bank_extracts_sql(_PAT_TIPO)}, x -> trim(x)), x -> x <> ''),
                                     x -> TRY_CAST(x AS INT)),
                                   n -> n IS NOT NULL AND n >= 0 AND n <= 30)
                            ELSE CAST([] AS INT[]) END)[1],
@@ -906,10 +908,10 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT p_partkey, linea,
                    COALESCE(
-                     CASE WHEN TRY_CAST(replace(regexp_extract(linea, '(\\d+[,\\.]\\d+)\\s*(?:kg|kilogramos?|gramos?|g|unidades?|uds?|piezas?|litros?|l|ml)', 1), ',', '.') AS DOUBLE) > 0
-                          THEN TRY_CAST(replace(regexp_extract(linea, '(\\d+[,\\.]\\d+)\\s*(?:kg|kilogramos?|gramos?|g|unidades?|uds?|piezas?|litros?|l|ml)', 1), ',', '.') AS DOUBLE) END,
-                     CASE WHEN TRY_CAST(regexp_extract(linea, '(\\d+)\\s*(?:kg|kilogramos?|gramos?|g|unidades?|uds?|piezas?|litros?|l|ml)', 1) AS DOUBLE) > 0
-                          THEN TRY_CAST(regexp_extract(linea, '(\\d+)\\s*(?:kg|kilogramos?|gramos?|g|unidades?|uds?|piezas?|litros?|l|ml)', 1) AS DOUBLE) END,
+                     CASE WHEN TRY_CAST(replace(regexp_extract(linea, '(?i)(\\d+[,\\.]\\d+)\\s*(?:kg|kilogramos?|gramos?|g|unidades?|uds?|piezas?|litros?|l|ml)', 1), ',', '.') AS DOUBLE) > 0
+                          THEN TRY_CAST(replace(regexp_extract(linea, '(?i)(\\d+[,\\.]\\d+)\\s*(?:kg|kilogramos?|gramos?|g|unidades?|uds?|piezas?|litros?|l|ml)', 1), ',', '.') AS DOUBLE) END,
+                     CASE WHEN TRY_CAST(regexp_extract(linea, '(?i)(\\d+)\\s*(?:kg|kilogramos?|gramos?|g|unidades?|uds?|piezas?|litros?|l|ml)', 1) AS DOUBLE) > 0
+                          THEN TRY_CAST(regexp_extract(linea, '(?i)(\\d+)\\s*(?:kg|kilogramos?|gramos?|g|unidades?|uds?|piezas?|litros?|l|ml)', 1) AS DOUBLE) END,
                      CASE WHEN TRY_CAST(replace(regexp_extract(linea, '^(\\d+[,\\.]\\d+)', 1), ',', '.') AS DOUBLE) > 0
                           THEN TRY_CAST(replace(regexp_extract(linea, '^(\\d+[,\\.]\\d+)', 1), ',', '.') AS DOUBLE) END,
                      CASE WHEN TRY_CAST(regexp_extract(linea, '^(\\d+)', 1) AS DOUBLE) > 0

@@ -24,22 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from facturas_spark.analytics.cache import table_scan as _t
+from facturas_spark.analytics.queries import _cents, _rev_e4
 
 __all__ = ["detect_query_type", "is_sql_safe"]
-
-
-def _cents_ot():
-    """Exact cents of o_totalprice (see queries._cents)."""
-    from facturas_spark.analytics.queries import _cents
-
-    return _cents(F.col("o_totalprice"))
-
-
-def _rev4():
-    """Exact 1e-4-euro net line revenue (see queries._rev_e4)."""
-    from facturas_spark.analytics.queries import _rev_e4
-
-    return _rev_e4()
 
 
 def detect_query_type(pregunta: str) -> str | None:
@@ -150,8 +137,6 @@ def busqueda_textual(
     for k in kws:
         c = F.lower(F.col("p_name")).contains(k)
         cond = c if cond is None else (cond | c)
-    from facturas_spark.analytics.queries import _rev_e4
-
     return (
         li.join(F.broadcast(part.filter(cond)), li.l_partkey == part.p_partkey)
         .groupBy("p_name")
@@ -312,7 +297,7 @@ def q14_facturas_semana(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderdate") >= F.col("_semana"))
         .agg(
             F.count("*").alias("total_facturas"),
-            F.sum(_cents_ot()).alias("_c"),
+            F.sum(_cents(F.col("o_totalprice"))).alias("_c"),
         )
         .withColumn("total_gastado", F.expr("CAST(_c AS DOUBLE) / 100.0"))
         .select("total_facturas", "total_gastado")
@@ -328,7 +313,7 @@ def q14_gasto_mes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         orders.crossJoin(F.broadcast(anchor))
         .filter(F.date_trunc("month", F.col("o_orderdate")) == F.col("_mes"))
-        .agg(F.sum(_cents_ot()).alias("_c"))
+        .agg(F.sum(_cents(F.col("o_totalprice"))).alias("_c"))
         .select(F.expr("CAST(_c AS DOUBLE) / 100.0").alias("total_mes"))
     )
 
@@ -346,7 +331,7 @@ def q14_proveedores_activos(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s_name")
         .agg(
             F.count("*").alias("num_facturas"),
-            F.sum(_rev4()).alias("_r4"),
+            F.sum(_rev_e4()).alias("_r4"),
         )
         .withColumn(
             "total_gastado", F.expr("CAST((2 * _r4 + 100) div 200 AS DOUBLE) / 100.0")
@@ -364,7 +349,7 @@ def q14_resumen_anual(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.groupBy(F.year("o_orderdate").alias("anio"))
         .agg(
             F.count("*").alias("total_facturas"),
-            F.sum(_cents_ot()).alias("_c"),
+            F.sum(_cents(F.col("o_totalprice"))).alias("_c"),
         )
         .withColumn("total_gastado", F.expr("CAST(_c AS DOUBLE) / 100.0"))
         .withColumn(
@@ -390,7 +375,7 @@ def q14_top_proveedores(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     sup = _t(spark, sf_dir, "supplier")
     agg = li.groupBy("l_suppkey").agg(
-        F.count("*").alias("_n"), F.sum(_rev4()).alias("_r")
+        F.count("*").alias("_n"), F.sum(_rev_e4()).alias("_r")
     )
     return (
         agg.join(F.broadcast(sup), agg.l_suppkey == sup.s_suppkey)
@@ -509,7 +494,7 @@ def q14_productos_categoria(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p_type")
         .agg(
             F.count("*").alias("num_productos"),
-            F.sum(_rev4()).alias("_r4"),
+            F.sum(_rev_e4()).alias("_r4"),
         )
         .withColumn(
             "total_gastado", F.expr("CAST((2 * _r4 + 100) div 200 AS DOUBLE) / 100.0")

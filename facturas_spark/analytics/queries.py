@@ -11,13 +11,52 @@ Reference citations per query are in each docstring.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from facturas_spark.analytics.cache import table_scan as _t
 from facturas_spark.analytics.dedup import _t_fan
+from facturas_spark.extraction.boilerplate import _DATE_LINE, _LABEL_LINE, _ONLY_DIGITS
+from facturas_spark.extraction.dashboard_calc import (
+    _HUEVOS,
+    _LIQUIDO,
+    _PACK,
+    _PESO,
+    _TYPE_RULES,
+    _UNIDADES,
+    _VINO,
+)
+from facturas_spark.extraction.products import (
+    _CODE_PATTERNS,
+    _PRICE_PATTERNS,
+    _QTY_PATTERNS,
+    _UNIT_PATTERNS,
+)
+from facturas_spark.extraction.textparse import (
+    _ALBARAN_KEYWORDS,
+    _ENTREGA_INDICATORS,
+    _FACTURA_KEYWORDS,
+    _PAT_BASE,
+    _PAT_CIF,
+    _PAT_CUOTA,
+    _PAT_NUMERO,
+    _PAT_TIPO,
+    _PAT_TOTAL,
+    _PRICE_SHAPE,
+)
+from facturas_spark.matching.context import _CIF_SCAN
+
+
+def _rx(p: re.Pattern[str]) -> str:
+    """A kernel's compiled pattern as the Java regex the columnar form
+    runs: its source, behind ``(?i)`` when it was compiled IGNORECASE.
+    The kernel table is the rule's only definition; the DuckDB twins keep
+    their own copies, so a wrong rendering fails the oracle."""
+    return ("(?i)" if p.flags & re.IGNORECASE else "") + p.pattern
 
 
 def _fan_post(
@@ -706,9 +745,9 @@ def txt_content_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep = (
         (n >= 5)
         & (n <= 120)
-        & ~cand.rlike(r"^\d+$")
-        & ~cand.rlike(r"^\d{1,2}[\/\-\.]\d{1,2}[\/\-\.]\d{2,4}$")
-        & ~cand.rlike(r"(?i)^(factura|invoice|fecha|date|cliente|customer)")
+        & ~cand.rlike(_rx(_ONLY_DIGITS))
+        & ~cand.rlike(_rx(_DATE_LINE))
+        & ~cand.rlike(_rx(_LABEL_LINE))
         & (letters >= 4)
         & (letters >= n * 0.3)
     )
@@ -734,12 +773,6 @@ def c1_classify_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     delivery indicators -> default, grouped per (lang, tipo, confianza,
     razonamiento-tag). The fused-UDF kernel is the hot path; this is the
     same operator in its SQL-surface form, oracle-gated."""
-    from facturas_spark.extraction.textparse import (
-        _ALBARAN_KEYWORDS,
-        _ENTREGA_INDICATORS,
-        _FACTURA_KEYWORDS,
-    )
-
     docs = _t_fan(spark, sf_dir, "documents", "doc_id")
     txt = F.coalesce("text", F.lit(""))
     low = F.lower(txt)
@@ -766,9 +799,9 @@ def c1_classify_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.length(txt) < 10).alias("short"),
         any_kw(_ALBARAN_KEYWORDS).alias("has_alb"),
         any_kw(_FACTURA_KEYWORDS).alias("has_fac"),
-        F.size(
-            F.regexp_extract_all(low, F.lit(r"(\d+[,\.]\d{2}\s*€)"), 1)
-        ).alias("precios"),
+        F.size(F.regexp_extract_all(low, F.lit(_rx(_PRICE_SHAPE)), 0)).alias(
+            "precios"
+        ),
         entrega_n.alias("entrega"),
     )
     short = F.col("short")
@@ -857,10 +890,7 @@ def txt_field_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.lit(""))
     txt = F.concat(F.coalesce("text", F.lit("")), cif_part, fecha_part, amount_part)
     cif = F.try_element_at(
-        F.regexp_extract_all(
-            txt, F.lit(r"(\b[A-Z]\d{8}\b|\b[A-Z]\d{7}[A-Z]\b|\b\d{8}[A-Z]\b)"), 1
-        ),
-        F.lit(1),
+        F.regexp_extract_all(txt, F.lit(_rx(_CIF_SCAN)), 0), F.lit(1)
     )
     amounts = F.transform(
         F.regexp_extract_all(txt, F.lit(r"(\d+[,\.]\d{2})"), 1),
@@ -1451,70 +1481,13 @@ def p14_multi_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         precio.alias("precio"),
     )
     low_desc = F.lower(F.col("descripcion"))
-    tipo = (
-        F.when(low_desc.rlike(r"(huevo|huevos|egg|eggs|clara|yema|gallina|pollo)"), "huevos")
-        .when(
-            low_desc.rlike(
-                r"(cerveza|vino|refresco|agua|zumo|bebida|heineken|cruzcampo|estella"
-                r"|mahou|san miguel|estrella|damm|amstel|corona|budweiser|guinness"
-                r"|paulaner|franziskaner|klein|radler|sin alcohol|0\.0|0,0|amontillado"
-                r"|fino|oloroso|pedro ximenez|manzanilla|palo cortado|verdejo|albariño"
-                r"|godello|mencía|garnacha|tempranillo|rioja|ribera|chardonnay"
-                r"|sauvignon blanc|pinot noir|merlot|cabernet|syrah|shiraz|malbec)"
-            ),
-            "bebida",
-        )
-        .when(
-            low_desc.rlike(
-                r"(chuleta|pollo|ternera|cerdo|carne|filete|lomo|solomillo|entrecot"
-                r"|costilla|panceta|jamón|salchicha|hamburguesa|albóndiga|salchichón"
-                r"|chorizo|morcilla|butifarra)"
-            ),
-            "carne",
-        )
-        .when(
-            low_desc.rlike(
-                r"(pescado|merluza|salmón|atún|gambas|langostinos|calamares|pulpo"
-                r"|sepia|bacalao|lubina|dorada|rodaballo|rape|pescadilla|boquerones"
-                r"|sardinas|anchoas)"
-            ),
-            "pescado",
-        )
-        .when(
-            low_desc.rlike(
-                r"(leche|queso|yogur|mantequilla|nata|crema|helado|cuajada|requesón"
-                r"|ricotta|mozzarella|gouda|cheddar|parmesano|manchego|roquefort|brie"
-                r"|camembert)"
-            ),
-            "lacteo",
-        )
-        .when(
-            low_desc.rlike(
-                r"(lechuga|tomate|cebolla|patata|zanahoria|manzana|naranja|plátano"
-                r"|fresa|uva|melón|sandía|pimiento|berenjena|calabacín|pepino"
-                r"|espinaca|acelga)"
-            ),
-            "verdura",
-        )
-        .when(
-            low_desc.rlike(
-                r"(pan|bollo|croissant|donut|magdalena|galleta|pastel|tarta|bizcocho"
-                r"|rosquilla|churro|ensaimada|brioche)"
-            ),
-            "panaderia",
-        )
-        .otherwise("general")
-    )
+    tipo = F  # F.when opens the chain, Column.when extends it
+    for name, pat in _TYPE_RULES:
+        tipo = tipo.when(low_desc.rlike(_rx(pat)), name)
+    tipo = tipo.otherwise("general")
     text = F.lower(F.coalesce("formato_comercial", "descripcion"))
-    h_pat = r"(\d+)\s*(ud|u|huevos?|unidades?|docena|docenas)"
-    pack_pat = r"(\d+)x(\d+(?:[.,]\d+)?)\s*(cl|ml|l|litro|litros)"
-    peso_pat = r"(\d+(?:[.,]\d+)?)\s*(kg|g|gramos|kilos)"
-    uni_pat = r"(\d+)\s*(ud|unidades|pcs|piezas|unidad)"
-    liq_pat = r"(\d+(?:[.,]\d+)?)\s*(l|ml|cl|litro|litros)"
-    vino_pat = (
-        r"(vino|amontillado|fino|oloroso|pedro ximenez|manzanilla|palo cortado"
-        r"|verdejo|albariño|godello|mencía|garnacha|tempranillo|rioja|ribera"
-        r"|chardonnay|sauvignon blanc|pinot noir|merlot|cabernet|syrah|shiraz|malbec)"
+    h_pat, pack_pat, peso_pat, uni_pat, liq_pat, vino_pat = map(
+        _rx, (_HUEVOS, _PACK, _PESO, _UNIDADES, _LIQUIDO, _VINO)
     )
     num = lambda pat, g: F.translate(  # noqa: E731
         F.regexp_extract(text, pat, g), ",", "."
@@ -1625,63 +1598,33 @@ def p4_p7_line_parsers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("con"),
         pick(_P4P7_PRICES, F.expr("p_partkey div 25") % 5),
     )
-    d = part.select("p_partkey", line.alias("linea"))
-    t = F.col("linea")
+    return (
+        part.select("p_partkey", line.alias("linea"))
+        .select("p_partkey", "linea", *_line_parsers(F.col("linea")))
+        .orderBy("p_partkey")
+    )
 
-    def num_cand(pat):
-        ex = F.regexp_extract(t, pat, 1)
-        val = F.translate(ex, ",", ".").try_cast("double")
-        return F.when((ex != "") & (val > 0), val)
 
-    def str_cand(pat):
-        ex = F.regexp_extract(t, pat, 1)
+def _line_parsers(line: Column) -> list[Column]:
+    """P4-P7 over a line column, from the kernels' pattern tables: the
+    first pattern with a match wins; quantity and price fall through to
+    the next pattern unless the value parses > 0. Columns cantidad (1.0
+    default), precio, codigo, unidad (lower-cased; null defaults)."""
+
+    def group(p):
+        ex = F.regexp_extract(line, _rx(p), 1)
         return F.when(ex != "", ex)
 
-    def unit_cand(pat):
-        ex = F.regexp_extract(t, "(?i)" + pat, 1)
-        return F.when(ex != "", F.lower(ex))
+    def positive(p):
+        val = F.translate(group(p), ",", ".").try_cast("double")
+        return F.when(val > 0, val)
 
-    _UN = r"(?:kg|kilogramos?|gramos?|g|unidades?|uds?|piezas?|litros?|l|ml)"
-    qty = F.coalesce(
-        num_cand(r"(\d+[,\.]\d+)\s*" + _UN),
-        num_cand(r"(\d+)\s*" + _UN),
-        num_cand(r"^(\d+[,\.]\d+)"),
-        num_cand(r"^(\d+)"),
-        F.lit(1.0),
-    )
-    price = F.coalesce(
-        num_cand(r"(\d+[,\.]\d{2})\s*€"),
-        num_cand(r"€\s*(\d+[,\.]\d{2})"),
-        num_cand(r"(?i)(\d+[,\.]\d{2})\s*euros?"),
-        num_cand(r"(?i)(\d+[,\.]\d{2})\s*eur"),
-        num_cand(r"(\d+[,\.]\d{2})$"),
-        num_cand(r"(\d+)\s*€"),
-        num_cand(r"€\s*(\d+)"),
-    )
-    code = F.coalesce(
-        str_cand(r"^([A-Z0-9]{3,10})\s"),
-        str_cand(r"^(\d{4,8})\s"),
-        str_cand(r"([A-Z]{2,4}\d{2,6})"),
-        str_cand(r"(\d{3,6}[A-Z]{1,3})"),
-    )
-    unit = F.coalesce(
-        unit_cand(r"(kg|kilogramos?)"),
-        unit_cand(r"(g|gramos?)"),
-        unit_cand(r"(l|litros?)"),
-        unit_cand(r"(ml|mililitros?)"),
-        unit_cand(r"(uds?|unidades?)"),
-        unit_cand(r"(piezas?|pzas?)"),
-        unit_cand(r"(cajas?)"),
-        unit_cand(r"(paquetes?)"),
-    )
-    return d.select(
-        "p_partkey",
-        "linea",
-        qty.alias("cantidad"),
-        price.alias("precio"),
-        code.alias("codigo"),
-        unit.alias("unidad"),
-    ).orderBy("p_partkey")
+    return [
+        F.coalesce(*map(positive, _QTY_PATTERNS), F.lit(1.0)).alias("cantidad"),
+        F.coalesce(*map(positive, _PRICE_PATTERNS)).alias("precio"),
+        F.coalesce(*map(group, _CODE_PATTERNS)).alias("codigo"),
+        F.lower(F.coalesce(*map(group, _UNIT_PATTERNS))).alias("unidad"),
+    ]
 
 
 def s2_mime_sniffing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1723,16 +1666,6 @@ def s2_mime_sniffing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_F2_PATTERNS = [
-    r"(?:Nº?\s*FACTURA|N[ÚU]MERO?\s*FACTURA)\s*\n?(\d+)",
-    r"(?:FACTURA|factura|Factura)\s*\n?(\d+)",
-    r"(?:Nº|NUMERO?|num|NUM)\s*\n?(\d+)",
-    r"(?:f\.?n\.?|F\.?N\.?)\s*[:\s]*(\d+)",
-    r"(?:FACTURA|factura|Factura)\s*[:\s#\-]*([A-Z0-9\-\/\.\s]{1,20})",
-    r"(?:invoice|Invoice|INVOICE)\s*[:\s#\-]*([A-Z0-9\-\/\.\s]{1,20})",
-]
-
-
 def f2_invoice_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2 invoice-number extraction oracle-hashed (the 6-pattern bank at
     index.ts:1242-1255 + the shortest-candidate pick at :1600-1611):
@@ -1763,10 +1696,7 @@ def f2_invoice_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = o.select("o_orderkey", s.alias("escenario"), txt.alias("texto"))
     t = F.col("texto")
-    arrs = [
-        F.regexp_extract_all(t, F.lit("(?i)" + p), 1) for p in _F2_PATTERNS
-    ]
-    cands = F.concat(*arrs)
+    cands = F.concat(*[F.regexp_extract_all(t, F.lit(_rx(p)), 1) for p in _PAT_NUMERO])
     cands = F.filter(
         F.transform(cands, lambda c: F.trim(c)), lambda c: c != ""
     )
@@ -1803,16 +1733,6 @@ def f2_invoice_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderkey")
 
 
-_F1_PATTERNS = [
-    r"\b([A-Z]\-\d{8}\d{1,2})\b",
-    r"\b([A-Z]\d{8}[A-Z0-9]?)\b",
-    r"(?:CIF|C\.I\.F\.)\s*[:\s]*([A-Z][\-\d]{8,10})",
-    r"\b([A-Z]\d{8}[A-Z0-9]?)\b"
-    r"|\b(?:[A-Z][\s\-]?\d{2}[\.\s]?\d{3}[\.\s]?\d{3}[\s\-]?[A-Z0-9])\b"
-    r"|\b(?:\d{8}[A-Z])\b",
-]
-
-
 def f1_cif_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1 CIF/NIF bank oracle-hashed (index.ts:1230-1239 + selection at
     :1634): candidates in pattern order then text order, separators
@@ -1841,7 +1761,7 @@ def f1_cif_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = o.select("o_orderkey", s.alias("escenario"), txt.alias("texto"))
     t = F.col("texto")
-    arrs = [F.regexp_extract_all(t, F.lit("(?i)" + p), 1) for p in _F1_PATTERNS]
+    arrs = [F.regexp_extract_all(t, F.lit(_rx(p)), 1) for p in _PAT_CIF]
     cands = F.filter(
         F.transform(F.concat(*arrs), lambda c: F.trim(c)), lambda c: c != ""
     )
@@ -1858,43 +1778,6 @@ def f1_cif_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "texto",
         F.when(t.rlike(r"\d"), pick).alias("proveedor_cif"),
     ).orderBy("o_orderkey")
-
-
-_AMT_SQL = r"(\d{1,8}[,\.]\d{1,2})"
-_F4_PATTERNS = [
-    r"(?:TOTAL|total|Total)\s*[:\s]*" + _AMT_SQL + r"\s*€?",
-    r"(?:L[íi]quido|LIQUIDO|liquido)\s*(?:\(EUR\))?\s*[:\s]*" + _AMT_SQL + r"\s*€?",
-    r"(?:IMPORTE\s*TOTAL|importe\s*total)\s*[:\s]*" + _AMT_SQL + r"\s*€?",
-    r"(?:TOTAL\s*FACTURA|total\s*factura)\s*[:\s]*" + _AMT_SQL + r"\s*€?",
-    r"(?:SUMA\s*TOTAL|suma\s*total)\s*[:\s]*" + _AMT_SQL + r"\s*€?",
-]
-_F5_PATTERNS = [
-    r"(?:BASE\s*IMPONIBLE|base\s*imponible)\s*[:\s]*" + _AMT_SQL + r"\s*€?",
-    r"(?:SUBTOTAL|subtotal|Subtotal)\s*[:\s]*" + _AMT_SQL + r"\s*€?",
-    r"(?:BASE|base|Base)\s*[:\s]*" + _AMT_SQL + r"\s*€?",
-    r"(?:IMPORTE\s*NETO|importe\s*neto)\s*[:\s]*" + _AMT_SQL + r"\s*€?",
-    r"(?:NETO|neto|Neto)\s*[:\s]*" + _AMT_SQL + r"\s*€?",
-    r"(?:BASE\s*IMPONIBLE|base\s*imponible)\s*" + _AMT_SQL,
-    _AMT_SQL + r"\s*€?\s*(?:BASE|base|Base)",
-    r"(?:SUBTOTAL|subtotal)\s*" + _AMT_SQL,
-    r"(?:BASE\s*IMPONIBLE|base\s*imponible)\s*(\d{1,8})",
-    r"(\d{1,8})\s*(?:BASE|base|Base)",
-]
-_F6_PATTERNS = [
-    r"(?:IVA|iva)\s*\d{1,2}%?\s*[:\s]*" + _AMT_SQL + r"\s*€?",
-    r"(?:CUOTA\s*IVA|cuota\s*iva)\s*[:\s]*" + _AMT_SQL + r"\s*€?",
-    r"(?:I\.V\.A\.|i\.v\.a\.)\s*[:\s]*" + _AMT_SQL + r"\s*€?",
-    r"(?:IVA|iva)\s*" + _AMT_SQL,
-    _AMT_SQL + r"\s*€?\s*(?:IVA|iva)",
-    r"(?:CUOTA\s*IVA|cuota\s*iva)\s*" + _AMT_SQL,
-    r"(?:IVA|iva)\s*(\d{1,8})",
-    r"(\d{1,8})\s*(?:IVA|iva)",
-]
-_TIPO_PATTERNS = [
-    r"(?:IVA|iva|I\.V\.A\.)\s*(\d{1,2})[%\s]",
-    r"(\d{1,2})\s*%\s*(?:IVA|iva)",
-    r"(?:al|AL)\s*(\d{1,2})\s*%",
-]
 
 
 def f4_f6_amount_banks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1956,7 +1839,7 @@ def f4_f6_amount_banks(spark: SparkSession, sf_dir: str) -> DataFrame:
     has_digit = t.rlike(r"\d")
 
     def bank_max(patterns, gate):
-        arrs = [F.regexp_extract_all(t, F.lit("(?i)" + p), 1) for p in patterns]
+        arrs = [F.regexp_extract_all(t, F.lit(_rx(p)), 1) for p in patterns]
         cands = F.filter(
             F.transform(F.concat(*arrs), lambda c: F.trim(c)), lambda c: c != ""
         )
@@ -1975,21 +1858,19 @@ def f4_f6_amount_banks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     total = bank_max(
-        _F4_PATTERNS,
+        _PAT_TOTAL,
         low.contains("total") | low.contains("líquido") | low.contains("liquido")
         | low.contains("importe") | low.contains("suma"),
     )
     base = bank_max(
-        _F5_PATTERNS,
+        _PAT_BASE,
         low.contains("base") | low.contains("subtotal") | low.contains("neto"),
     )
     cuota = bank_max(
-        _F6_PATTERNS,
+        _PAT_CUOTA,
         low.contains("iva") | low.contains("i.v.a") | low.contains("cuota"),
     )
-    tipo_arrs = [
-        F.regexp_extract_all(t, F.lit("(?i)" + p), 1) for p in _TIPO_PATTERNS
-    ]
+    tipo_arrs = [F.regexp_extract_all(t, F.lit(_rx(p)), 1) for p in _PAT_TIPO]
     tipo_gate = has_digit & (
         low.contains("iva") | low.contains("i.v.a") | low.contains("al")
     )

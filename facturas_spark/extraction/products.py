@@ -26,7 +26,7 @@ from __future__ import annotations
 import math
 import re
 
-from facturas_spark.extraction.textparse import js_round2
+from facturas_spark.extraction.textparse import _js_parse_float, js_round2
 
 __all__ = [
     "normalize_product_name",
@@ -45,11 +45,6 @@ __all__ = [
 ]
 
 _I = re.IGNORECASE
-
-
-def _js_parse_float_prefix(s: str) -> float:
-    m = re.match(r"^[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?", s)
-    return float(m.group(0)) if m else math.nan
 
 
 # --- P8: conservative name normalization ------------------------------------
@@ -91,7 +86,7 @@ def extract_quantity(text: str | None) -> float:
     for pat in _QTY_PATTERNS:
         m = pat.search(text)
         if m:
-            q = _js_parse_float_prefix(m.group(1).replace(",", ".", 1))
+            q = _js_parse_float(m.group(1).replace(",", ".", 1))
             if not math.isnan(q) and q > 0:
                 return q
     return 1.0
@@ -123,14 +118,14 @@ def extract_price(text: str | None) -> float | None:
     if "€" not in text and "eur" not in text.lower():
         m = _PRICE_EOL.search(text)
         if m:
-            p = _js_parse_float_prefix(m.group(1).replace(",", ".", 1))
+            p = _js_parse_float(m.group(1).replace(",", ".", 1))
             if not math.isnan(p) and p > 0:
                 return p
         return None
     for pat in _PRICE_PATTERNS:
         m = pat.search(text)
         if m:
-            p = _js_parse_float_prefix(m.group(1).replace(",", ".", 1))
+            p = _js_parse_float(m.group(1).replace(",", ".", 1))
             if not math.isnan(p) and p > 0:
                 return p
     return None
@@ -378,7 +373,7 @@ def extract_product_format(description: str | None) -> tuple[str | None, float |
     for pat in _PESO_PATTERNS if (has_digit and "g" in desc) else ():
         m = pat.search(desc)
         if m:
-            valor = _js_parse_float_prefix(m.group(1).replace(",", ".", 1))
+            valor = _js_parse_float(m.group(1).replace(",", ".", 1))
             if "kg" in desc or "kilogram" in desc:
                 peso = valor
                 formato = f"{valor:g} kg"
@@ -390,7 +385,7 @@ def extract_product_format(description: str | None) -> tuple[str | None, float |
         for pat in _VOL_PATTERNS:
             m = pat.search(desc)
             if m:
-                valor = _js_parse_float_prefix(m.group(1).replace(",", ".", 1))
+                valor = _js_parse_float(m.group(1).replace(",", ".", 1))
                 if "ml" in desc or "mililitro" in desc:
                     vol = valor / 1000
                     formato = f"{valor:g} ml"

@@ -13,7 +13,8 @@ Usage (cluster or local):
 
 The driver's memory and Java options go to spark-submit itself, as in
 ``jobs/extract_job.py``: its driver JVM is running before ``get_spark``
-is called, and the session keeps spark-submit's ``--master``.
+is called, and the session keeps spark-submit's ``--master`` and
+``--conf`` values.
 
 The corpus-side twin of ``jobs/extract_job.py`` — the single
 lineage-managed pass the reference runs as its one end-to-end handler

@@ -14,9 +14,10 @@ spark-submit starts the driver JVM before ``get_spark`` runs, so the
 driver's memory and Java options (``-XX:+UseParallelGC`` and
 ``session.C2_THRESHOLDS``, which ``get_spark`` sets only for a JVM it
 launches itself) must be passed to spark-submit, as above. The session
-keeps spark-submit's ``--master``; ``--cores`` then sets only the
-shuffle partitions. Run as plain ``python`` the job starts its own
-``local[cores]`` JVM with those settings.
+keeps spark-submit's ``--master`` and every ``--conf`` it passes;
+``--cores`` then sets the shuffle partitions only when no ``--conf
+spark.sql.shuffle.partitions`` is given. Run as plain ``python`` the
+job starts its own ``local[cores]`` JVM with those settings.
 
 Batch mode runs :func:`facturas_spark.sources.io.run_with_resume` — the
 checkpointed, per-bucket-resumable job the north rule asks for; re-running

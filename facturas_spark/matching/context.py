@@ -79,9 +79,7 @@ def with_restaurant_filter(
     the dim is tiny (one row per tenant) and broadcasts."""
     text_upper = F.upper(F.col(text_col))
     found = F.array_distinct(
-        F.regexp_extract_all(
-            text_col, F.lit(r"(\b[A-Z]\d{8}\b|\b[A-Z]\d{7}[A-Z]\b|\b\d{8}[A-Z]\b)"), 1
-        )
+        F.regexp_extract_all(text_col, F.lit(_CIF_SCAN.pattern), 0)
     )
     prov = _indicator_count(text_upper, PROVEEDOR_INDICATORS)
     cli = _indicator_count(text_upper, CLIENTE_INDICATORS)

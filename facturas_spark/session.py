@@ -39,8 +39,9 @@ repeated flag, so a threshold in ``$SPARK_GRAFT_JVM_OPTS`` wins. Under
 called, so it runs with spark-submit's Java options and memory, not
 these: pass ``--driver-memory`` and ``--driver-java-options``
 (``-XX:+UseParallelGC`` and :data:`C2_THRESHOLDS`) to spark-submit
-itself, as the jobs' usage shows. ``get_spark`` also keeps
-spark-submit's ``--master`` there instead of setting ``local[cores]``.
+itself, as the jobs' usage shows. There ``get_spark`` sets only the keys
+spark-submit left unset: its ``--master``, ``--conf`` values and
+``spark-defaults.conf`` are kept.
 Executor JVMs on a cluster take theirs from the cluster's own conf: put
 :data:`C2_THRESHOLDS` in its ``spark.executor.defaultJavaOptions``
 (``get_spark`` sets no executor Java option).
@@ -68,6 +69,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 # The directory holding the package, put on the Python workers' path.
@@ -93,41 +95,37 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     ``cores`` defaults to $SPARK_GRAFT_CPUS or 32. The session runs on
-    ``local[cores]`` unless the driver runs under ``spark-submit``, whose
-    ``--master`` is kept. Shuffle partitions equal ``cores`` — at
+    ``local[cores]`` with shuffle partitions equal to ``cores`` — at
     sf<=0.1 one shuffle partition per core keeps every task busy without
-    tiny-partition overhead; on a real cluster set
-    ``spark.sql.shuffle.partitions`` to ~2-3x total cores through
-    ``extra_conf`` (see the jobs' sizing notes).
+    tiny-partition overhead. Under ``spark-submit`` each key the launcher
+    holds (``--master``, ``--conf``, ``spark-defaults.conf``) keeps its
+    value, so on a real cluster ``--conf spark.sql.shuffle.partitions``
+    sets ~2-3x total cores (see the jobs' sizing notes). ``extra_conf``
+    wins over both.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    builder = SparkSession.builder.appName(app_name)
-    # spark-submit starts the driver JVM first and hands its gateway port
-    # to this process; a master set on the builder would override its
-    # --master and run every task in the driver
-    if "PYSPARK_GATEWAY_PORT" not in os.environ:
-        builder = builder.master(f"local[{cores}]")
-    builder = (
-        builder.config("spark.sql.shuffle.partitions", str(cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+    conf = {
+        "spark.master": f"local[{cores}]",
+        "spark.sql.shuffle.partitions": str(cores),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # big Arrow batches amortize Python-worker round-trips in the
         # extraction UDF; each doc row is small (~1-4 KB text)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         # spill-awareness: 128 MB input splits keep one decompressed split
         # + its Arrow batch well inside an executor-core's memory share at
         # any corpus scale (the default, pinned here so a cluster-side
         # override is a conscious choice; raise only with fatter executors)
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        "spark.sql.files.maxPartitionBytes": "134217728",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
         # Spark puts the default options ahead of the extra ones on the
         # JVM's command line, and HotSpot keeps the last value of a
         # repeated flag: $SPARK_GRAFT_JVM_OPTS can override a threshold.
-        .config("spark.driver.defaultJavaOptions", C2_THRESHOLDS)
+        "spark.driver.defaultJavaOptions": C2_THRESHOLDS,
         # Throughput GC: this engine is pure batch — allocation-heavy
         # string/array expressions at 32 concurrent task threads choke
         # Java 17's default G1 (tuned for pause latency, which batch
@@ -135,12 +133,11 @@ def get_spark(
         # cores: 39 s (G1) -> 24 s (ParallelGC). It is not set for
         # executors: on a real cluster the flag goes in the cluster's own
         # spark.executor.extraJavaOptions.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_JVM_OPTS", "-XX:+UseParallelGC"),
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
+        "spark.driver.extraJavaOptions": os.environ.get(
+            "SPARK_GRAFT_JVM_OPTS", "-XX:+UseParallelGC"
+        ),
+        "spark.ui.enabled": "false",
+        "spark.sql.session.timeZone": "UTC",
         # Compiled generated classes are cached by their source text, in an
         # LRU. At sf0.01 one pass of the 116-query registry generates 1303
         # distinct code bodies, perfbench's ten-query dashboard mix about
@@ -155,15 +152,21 @@ def get_spark(
         # Cost: about 10 MB of Metaspace. After one pass of the whole
         # registry at sf0.01 the JVM's Metaspace held 185 MB against 176 MB
         # at 100 entries; peak RSS moved less than run-to-run noise.
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
         # Spark puts this ahead of the process PYTHONPATH on the workers'
         # path, after its own pyspark and py4j zips. Without it a worker
         # (and the daemon below) finds the package only when the driver's
         # cwd or PYTHONPATH holds it.
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
-        .config("spark.python.daemon.module", "facturas_spark.worker_daemon")
-    )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
-    return builder.getOrCreate()
+        "spark.executorEnv.PYTHONPATH": _PACKAGE_PARENT,
+        "spark.python.daemon.module": "facturas_spark.worker_daemon",
+    }
+    # spark-submit starts the driver JVM first and hands its gateway port
+    # to this process. A value set on the builder would override its
+    # --master (running every task in the driver), its --conf and its
+    # spark-defaults.conf, so only keys the launcher left unset are set.
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        SparkContext._ensure_initialized()
+        launched = SparkConf()
+        conf = {k: v for k, v in conf.items() if not launched.contains(k)}
+    conf.update(extra_conf or {})
+    return SparkSession.builder.appName(app_name).config(map=conf).getOrCreate()

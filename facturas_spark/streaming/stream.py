@@ -15,10 +15,9 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from facturas_spark.pipeline import extract_pages_header
+from facturas_spark.synth import PAGES_SCHEMA_DDL
 
 __all__ = ["stream_extract_pages"]
-
-PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
 def stream_extract_pages(
@@ -30,7 +29,7 @@ def stream_extract_pages(
     """Drain all currently-available page files through the extraction
     pipeline and stop (availableNow). Checkpointed: a second call processes
     only files added since the last run."""
-    pages = spark.readStream.schema(PAGES_DDL).format("parquet").load(input_dir)
+    pages = spark.readStream.schema(PAGES_SCHEMA_DDL).format("parquet").load(input_dir)
     q = (
         extract_pages_header(pages).writeStream.format("parquet")
         .option("path", output_dir)

@@ -360,3 +360,35 @@ def test_p4_p7_columnar_match_kernels(spark):
         assert r["precio"] == extract_price(line), line
         assert r["codigo"] == extract_code(line), line
         assert r["unidad"] == extract_unit(line), line
+
+
+def test_p4_p7_columnar_rules_keep_the_kernels_flags(spark):
+    """The columnar P4-P7 rules compile the kernels' tables, flags
+    included: upper-case units and currency give what extract_* gives.
+    A quantity rule that dropped the kernel's IGNORECASE read
+    '2,5 KG' as the 1.0 default."""
+    from pyspark.sql import functions as F
+
+    from facturas_spark.analytics.queries import _line_parsers
+
+    lines = [
+        "ABC123 2,5 KG con 12,34 €",
+        "prod 3 UDS con 12,34 EUROS",
+        "4567 7,25 L con 9,99 EUR",
+        "AB12 500 G con 8,88",
+        "1,5 KILOGRAMOS x 3 PIEZAS",
+    ]
+    rows = (
+        spark.createDataFrame([(line,) for line in lines], "linea string")
+        .select("linea", *_line_parsers(F.col("linea")))
+        .collect()
+    )
+    got = {r["linea"]: r for r in rows}
+    assert got.keys() == set(lines)
+    for line, r in got.items():
+        assert r["cantidad"] == extract_quantity(line), line
+        assert r["precio"] == extract_price(line), line
+        assert r["codigo"] == extract_code(line), line
+        assert r["unidad"] == extract_unit(line), line
+    assert got["ABC123 2,5 KG con 12,34 €"]["cantidad"] == 2.5
+    assert got["prod 3 UDS con 12,34 EUROS"]["cantidad"] == 3.0

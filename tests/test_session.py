@@ -23,7 +23,8 @@ The driver JVM runs the C2 thresholds of ``session.C2_THRESHOLDS``: the
 tests read the values the JVM uses (Spark adds
 ``-XX:+IgnoreUnrecognizedVMOptions``, so a misspelled flag would be
 dropped silently), and pin that ``$SPARK_GRAFT_JVM_OPTS`` overrides them.
-A driver under ``spark-submit`` keeps spark-submit's ``--master``.
+A driver under ``spark-submit`` keeps spark-submit's ``--master`` and
+``--conf`` values.
 """
 
 from __future__ import annotations
@@ -329,26 +330,31 @@ sys.path.insert(0, %(root)r)
 from facturas_spark.session import get_spark
 
 spark = get_spark("master-probe", cores=1)
-print(json.dumps({"master": spark.sparkContext.master}))
+print(json.dumps({
+    "master": spark.sparkContext.master,
+    "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+}))
 spark.stop()
 """
 
 
-def _probe_master(argv: list[str], cwd) -> str:
+def _probe_master(argv: list[str], cwd) -> dict[str, str]:
     proc = subprocess.run(argv, cwd=cwd, capture_output=True, text=True, timeout=600)
     # spark-submit merges the driver's stderr into stdout
     assert proc.returncode == 0, (proc.stdout + proc.stderr)[-3000:]
     last = [line for line in proc.stdout.splitlines() if line.startswith("{")][-1]
-    return json.loads(last)["master"]
+    return json.loads(last)
 
 
 def test_spark_submit_keeps_its_master(tmp_path):
     """Under spark-submit the driver JVM is already running with
-    spark-submit's ``--master``; ``get_spark`` must not replace it with
-    ``local[cores]``, which would run every task in the driver. A plain
-    ``python`` driver still gets ``local[cores]``."""
+    spark-submit's ``--master`` and ``--conf`` values; ``get_spark`` must
+    not replace them: ``local[cores]`` would run every task in the driver,
+    and ``cores`` shuffle partitions would undo the cluster's sizing. A
+    plain ``python`` driver still gets ``local[cores]`` and ``cores``."""
     probe = tmp_path / "probe.py"
     probe.write_text(_MASTER_PROBE % {"root": REPO})
     submit = os.path.join(_find_spark_home(), "bin", "spark-submit")
-    assert _probe_master([submit, "--master", "local[2]", str(probe)], tmp_path) == "local[2]"
-    assert _probe_master([sys.executable, str(probe)], tmp_path) == "local[1]"
+    argv = [submit, "--master", "local[2]", "--conf", "spark.sql.shuffle.partitions=7", str(probe)]
+    assert _probe_master(argv, tmp_path) == {"master": "local[2]", "shuffle_partitions": "7"}
+    assert _probe_master([sys.executable, str(probe)], tmp_path) == {"master": "local[1]", "shuffle_partitions": "1"}
