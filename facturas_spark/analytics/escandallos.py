@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from facturas_spark.analytics.cache import table_scan as _t
+from facturas_spark.analytics.queries import _cents, _rev_e4
 
 
 def _r(c, n: int = 2):
@@ -74,8 +75,6 @@ def _platos_base(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _platos_base_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from facturas_spark.analytics.queries import _rev_e4
-
     orders = _t(spark, sf_dir, "orders")
     # round 8: fanned scan keyed on the groupBy key (guide §2.5; one
     # exchange either way, but the 600k-row agg runs session-wide during
@@ -408,8 +407,6 @@ def numier_dashboard_resumen(spark: SparkSession, sf_dir: str) -> DataFrame:
     neto = bruto/1.1, impuestos = bruto - neto, descuentos = o_orderkey%%5,
     propinas = o_custkey%%7, comensales = o_custkey%%8+1; period = 1995H1,
     anterior = 1994H2 (the corpus's densest halves, matching Q3)."""
-    from facturas_spark.analytics.queries import _cents
-
     o = _t(spark, sf_dir, "orders")
     in_per = (F.col("o_orderdate") >= F.lit("1995-01-01")) & (
         F.col("o_orderdate") < F.lit("1995-07-01")
@@ -745,8 +742,6 @@ def iva_tipos_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent value — every number is an integer ratio, so the DuckDB twin
     matches bit-for-bit. One shuffle on (orderkey, tipo); at scale this
     is the same plan per 10^12 invoices (key cardinality ~3x orders)."""
-    from facturas_spark.analytics.queries import _rev_e4
-
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 2000)
     tipo = F.element_at(
         F.array(F.lit(4), F.lit(10), F.lit(21)), (F.col("l_partkey") % 3 + 1).cast("int")

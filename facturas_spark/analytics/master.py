@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from facturas_spark.analytics.cache import table_scan as _t
+from facturas_spark.analytics.queries import _cents, _rev_e4
 
 
 def master_products(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -48,7 +49,6 @@ def master_products(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_extendedprice") - F.col("_prev")) / F.col("_prev") * 100, 2
         ).alias("variacion_pct"),
     )
-    from facturas_spark.analytics.queries import _cents
 
     hist = (
         li.groupBy("l_partkey")
@@ -90,7 +90,6 @@ def supplier_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     sup = _t(spark, sf_dir, "supplier")
     nat = _t(spark, sf_dir, "nation")
-    from facturas_spark.analytics.queries import _rev_e4
 
     agg = (
         li.groupBy("l_suppkey")

@@ -20,7 +20,6 @@ from pyspark.sql.window import Window
 
 from facturas_spark.analytics.cache import table_scan as _t
 from facturas_spark.analytics.dedup import _t_fan
-from facturas_spark.extraction.boilerplate import _DATE_LINE, _LABEL_LINE, _ONLY_DIGITS
 from facturas_spark.extraction.dashboard_calc import (
     _HUEVOS,
     _LIQUIDO,
@@ -38,8 +37,12 @@ from facturas_spark.extraction.products import (
 )
 from facturas_spark.extraction.textparse import (
     _ALBARAN_KEYWORDS,
+    _DMY,
     _ENTREGA_INDICATORS,
     _FACTURA_KEYWORDS,
+    _LEADING_KEYWORD_1,
+    _LETTERS,
+    _ONLY_DIGITS,
     _PAT_BASE,
     _PAT_CIF,
     _PAT_CUOTA,
@@ -739,15 +742,14 @@ def txt_content_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = F.regexp_replace("raw", r"^\s+|\s+$", "")
     n = F.length(cand)
-    letters = F.length(
-        F.regexp_replace(cand, "[^a-zA-ZáéíóúüñÁÉÍÓÚÜÑ]", "")
-    )
+    # letters: what is left after deleting every character outside the class
+    letters = F.length(F.regexp_replace(cand, "[^" + _LETTERS.pattern[1:], ""))
     keep = (
         (n >= 5)
         & (n <= 120)
         & ~cand.rlike(_rx(_ONLY_DIGITS))
-        & ~cand.rlike(_rx(_DATE_LINE))
-        & ~cand.rlike(_rx(_LABEL_LINE))
+        & ~cand.rlike(_rx(_DMY))
+        & ~cand.rlike(_rx(_LEADING_KEYWORD_1))
         & (letters >= 4)
         & (letters >= n * 0.3)
     )

@@ -33,6 +33,13 @@ from __future__ import annotations
 import html as _html
 import re
 
+from facturas_spark.extraction.textparse import (
+    _DMY,
+    _LEADING_KEYWORD_1,
+    _LETTERS,
+    _ONLY_DIGITS,
+)
+
 __all__ = ["extract_main_text", "line_content_mask"]
 
 _SCRIPT_STYLE = re.compile(
@@ -152,13 +159,6 @@ def extract_main_text(html_payload: bytes | str | None) -> str:
     return "\n".join(kept)
 
 
-_ONLY_DIGITS = re.compile(r"^\d+$")
-_DATE_LINE = re.compile(r"^\d{1,2}[\/\-\.]\d{1,2}[\/\-\.]\d{2,4}$")
-_LABEL_LINE = re.compile(
-    r"^(FACTURA|INVOICE|factura|invoice|fecha|date|cliente|customer)", re.IGNORECASE
-)
-
-
 def line_content_mask(line: str) -> bool:
     """Reference line-level content filter (T4,
     process-invoice/index.ts:1493-1510): keep 'name-like' content lines —
@@ -169,9 +169,9 @@ def line_content_mask(line: str) -> bool:
         return False
     if _ONLY_DIGITS.match(cand):
         return False
-    if _DATE_LINE.match(cand):
+    if _DMY.match(cand):
         return False
-    if _LABEL_LINE.match(cand):
+    if _LEADING_KEYWORD_1.match(cand):
         return False
-    letters = len(re.findall(r"[a-zA-ZáéíóúüñÁÉÍÓÚÜÑ]", cand))
+    letters = len(_LETTERS.findall(cand))
     return letters >= 4 and letters >= len(cand) * 0.3

@@ -1,42 +1,44 @@
 """Object-store-safe commit I/O for ledgers and manifests.
 
 The resume machinery (``io.LineageManifest``, the clean-corpus job's
-stage markers) commits tiny JSON marker files. On a laptop ``os.replace``
-is fine, but at cluster scale the sink is HDFS or object storage
-(s3a://, gs://) where driver-side POSIX calls don't reach. This module
-routes those commits through the JVM Hadoop ``FileSystem`` API —
-``Path(uri).getFileSystem(hadoopConf)`` — so the SAME code path works
-for ``file://`` in the sandbox and ``s3a://``/``hdfs://`` in production
-(the FileSystem implementation is chosen by URI scheme from the
-cluster's Hadoop configuration).
+stage markers) commits tiny JSON marker files. At cluster scale the sink
+is HDFS or object storage (s3a://, gs://), which driver-side POSIX calls
+don't reach. With a session up, :class:`CommitFS` resolves the base dir's
+Hadoop ``FileSystem`` once — ``Path(uri).getFileSystem(hadoopConf)``, so
+a scheme-less path follows the cluster's ``fs.defaultFS`` — and picks one
+route for every operation:
 
-Commit protocol, per scheme family:
+- **Local storage** (scheme ``file``): ``os`` calls in the driver. A
+  ``file:`` URI base dir maps to its local path. Hadoop's local
+  ``FileSystem`` would cost a py4j round trip per call plus, without the
+  native library, a forked ``chmod`` for every file it creates (the
+  marker's tmp file and its ``.crc``).
+- **Rename-atomic stores** (``hdfs``, ``viewfs``, ``o3fs``): the JVM
+  ``FileSystem``; write ``.name.tmp`` then ``rename`` to the final name.
+- **Object stores** (``s3a``, ``gs``, ``abfs``, anything else): the JVM
+  ``FileSystem``; create the final object directly. A single-object PUT
+  is already atomic (readers never observe a partial object; the object
+  appears only on successful close), while rename on these stores is a
+  non-atomic copy+delete — so rename is exactly the wrong primitive there.
 
-- **Rename-atomic stores** (``file``, ``hdfs``, ``viewfs``, ``o3fs``):
-  write ``.name.tmp`` then ``rename`` to the final name — rename is
-  atomic, a crash never exposes a half-written marker.
-- **Object stores** (``s3a``, ``gs``, ``abfs``, anything else): create
-  the final object directly. A single-object PUT is already atomic
-  (readers never observe a partial object; the object appears only on
-  successful close), while rename on these stores is a non-atomic
-  copy+delete — so rename is exactly the wrong primitive there. Marker
-  files are immutable-once-present; readers treat name presence as the
-  commit signal, which both protocols guarantee.
-
-When no JVM is running (pure-Python unit tests construct a manifest
-without a SparkSession) the same protocol falls back to ``os`` calls —
-behaviorally identical on the local filesystem.
+With no session (pure-Python callers) the base dir is local and takes the
+local route. The local route keeps the rename protocol: write
+``.name.tmp`` then ``os.replace``, so a crash never exposes a half-written
+marker. Marker files are immutable-once-present; readers treat name
+presence as the commit signal, which every route guarantees.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from urllib.parse import unquote, urlparse
 
 __all__ = ["CommitFS"]
 
-# schemes whose rename() is atomic; everything else gets direct-PUT
-_RENAME_ATOMIC = {"file", "hdfs", "viewfs", "o3fs", ""}
+# JVM schemes whose rename() is atomic; every other non-local one gets
+# direct-PUT
+_RENAME_ATOMIC = {"hdfs", "viewfs", "o3fs"}
 
 
 def _active_spark():
@@ -48,6 +50,13 @@ def _active_spark():
         return None
 
 
+def _local_path(base_dir: str) -> str:
+    """``base_dir`` as a path ``os`` understands: a ``file:`` URI's path,
+    anything else as given."""
+    uri = urlparse(base_dir)
+    return unquote(uri.path) if uri.scheme == "file" else base_dir
+
+
 class CommitFS:
     """Marker-file directory with object-store-safe commit semantics."""
 
@@ -56,16 +65,15 @@ class CommitFS:
         spark = spark if spark is not None else _active_spark()
         self._jfs = None
         if spark is not None:
-            jvm = spark._jvm
-            self._jvm = jvm
-            self._Path = jvm.org.apache.hadoop.fs.Path
-            self._jfs = self._Path(base_dir).getFileSystem(
-                spark._jsc.hadoopConfiguration()
-            )
-            self._scheme = (self._jfs.getScheme() or "").lower()
-            self._jfs.mkdirs(self._Path(base_dir))
-        else:
-            os.makedirs(base_dir, exist_ok=True)
+            Path = spark._jvm.org.apache.hadoop.fs.Path
+            jfs = Path(base_dir).getFileSystem(spark._jsc.hadoopConfiguration())
+            scheme = (jfs.getScheme() or "").lower()
+            if scheme != "file":
+                self._jvm, self._Path, self._jfs, self._scheme = spark._jvm, Path, jfs, scheme
+                jfs.mkdirs(Path(base_dir))
+                return
+        self.base_dir = _local_path(base_dir)
+        os.makedirs(self.base_dir, exist_ok=True)
 
     # -- primitives ------------------------------------------------------
     def _p(self, name: str):
@@ -100,6 +108,13 @@ class CommitFS:
             final = os.path.join(self.base_dir, name)
             with open(tmp, "w") as f:
                 f.write(text)
+            # a checksum Hadoop's local FileSystem wrote for an earlier
+            # marker would fail a checksummed read of the new one; drop
+            # it before the new marker becomes visible
+            try:
+                os.remove(os.path.join(self.base_dir, f".{name}.crc"))
+            except FileNotFoundError:
+                pass
             os.replace(tmp, final)
             return
         data = text.encode("utf-8")

@@ -77,12 +77,11 @@ class LineageManifest:
     ``<dir>/_manifest/bucket=<k>.json`` with rows + metric digest, and
     ``layout.json`` with the bucket count they were hashed under.
 
-    I/O goes through :class:`facturas_spark.sources.fs.CommitFS` — the
-    JVM Hadoop FileSystem API — so the ledger works unchanged against
-    ``file://`` here and ``hdfs://``/``s3a://`` on a cluster (rename
-    commit where rename is atomic, direct single-object PUT where it is
-    not). Pure-Python callers with no JVM get a POSIX fallback with the
-    same crash-safety contract."""
+    I/O goes through :class:`facturas_spark.sources.fs.CommitFS`: ``os``
+    calls in the driver on local storage, with or without a JVM, and the
+    JVM Hadoop FileSystem API on ``hdfs://``/``s3a://`` and the like
+    (rename commit where rename is atomic, direct single-object PUT where
+    it is not), each with the same crash-safety contract."""
 
     manifest_dir: str
 
@@ -157,8 +156,12 @@ def run_with_resume(
     # per-bucket stats from what we just wrote -> manifest commits.
     # Scan ONLY this run's buckets (partition-pruned read): digesting the
     # long-committed buckets too would make resume cost grow with total
-    # corpus size instead of with the pending work.
-    stats_src = spark.read.parquet(os.path.join(out_dir, "extracted"))
+    # corpus size instead of with the pending work. The digest reads two
+    # columns, so their schema is given: with none, Spark first runs a
+    # job that infers it from the parquet footers.
+    stats_src = spark.read.schema("extracted_text STRING, bucket INT").parquet(
+        os.path.join(out_dir, "extracted")
+    )
     if done:
         stats_src = stats_src.filter(~F.col("bucket").isin(*done))
     stats = (

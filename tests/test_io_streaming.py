@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 import re
 
@@ -627,29 +628,83 @@ def test_bucketed_join_without_shuffle(spark, tmp_path):
 
 
 def test_commitfs_hadoop_route(spark, tmp_path):
-    """CommitFS must take the JVM Hadoop FileSystem route when a session
-    is active (the object-store-safe path), and the marker protocol must
-    hold: tmp files are never visible as committed names, re-commit
-    overwrites idempotently."""
+    """A non-local scheme takes the JVM Hadoop FileSystem route (the one
+    that serves hdfs:// and s3a:// on a cluster), and its rename-commit
+    protocol holds: tmp files are never visible as committed names,
+    re-commit overwrites idempotently. Run on a viewfs:// mount of
+    ``tmp_path``, whose scheme is rename-atomic."""
+    import uuid
+
     from facturas_spark.sources.fs import CommitFS
 
-    fs = CommitFS(str(tmp_path / "ledger"), spark=spark)
-    assert fs._jfs is not None  # JVM route, not the POSIX fallback
-    assert fs._scheme == "file"
-    fs.write_json("bucket=1.json", {"bucket": 1, "rows": 10})
-    fs.write_json("bucket=2.json", {"bucket": 2, "rows": 20})
-    fs.write_json("bucket=1.json", {"bucket": 1, "rows": 10})  # idempotent
-    names = [n for n in fs.list_names() if n.endswith(".json")]
-    assert sorted(names) == ["bucket=1.json", "bucket=2.json"]
-    assert not [n for n in fs.list_names() if n.endswith(".tmp")]
-    assert fs.read_json("bucket=1.json")["rows"] == 10
+    conf = spark._jsc.hadoopConfiguration()
+    table = f"commitfs{uuid.uuid4().hex[:8]}"
+    key = f"fs.viewfs.mounttable.{table}.link./m"
+    conf.set(key, f"file://{tmp_path}")
+    try:
+        fs = CommitFS(f"viewfs://{table}/m/ledger", spark=spark)
+        assert fs._jfs is not None  # JVM route, not the local one
+        assert fs._scheme == "viewfs"
+        fs.write_json("bucket=1.json", {"bucket": 1, "rows": 10})
+        fs.write_json("bucket=2.json", {"bucket": 2, "rows": 20})
+        fs.write_json("bucket=1.json", {"bucket": 1, "rows": 10})  # idempotent
+        names = [n for n in fs.list_names() if n.endswith(".json")]
+        assert sorted(names) == ["bucket=1.json", "bucket=2.json"]
+        assert not [n for n in fs.list_names() if n.endswith(".tmp")]
+        assert fs.read_json("bucket=1.json")["rows"] == 10
+        with open(tmp_path / "ledger" / "bucket=2.json") as f:
+            assert f.read() == '{"bucket": 2, "rows": 20}'
+    finally:
+        conf.unset(key)
 
 
-def test_lineage_manifest_uses_hadoop_fs(spark, tmp_path):
-    """The manifest the resume job writes must route through CommitFS's
-    JVM path while a session is up — the same code that serves s3a:// in
-    production."""
+def test_lineage_manifest_local_route(spark, tmp_path):
+    """With a session up, a local manifest dir takes the ``os`` route,
+    the one pure-Python callers use: no JVM FileSystem, and no ``.crc``
+    sibling (Hadoop's local FileSystem writes one per file, forking a
+    ``chmod`` for each without its native library)."""
     m = LineageManifest(str(tmp_path / "_m"))
-    assert m._fs._jfs is not None
+    assert m._fs._jfs is None
+    m.pin_layout(8)
     m.commit(7, 42, "digest")
-    assert m.committed()[7] == {"bucket": 7, "rows": 42, "digest": "digest"}
+    m.commit(7, 42, "digest")  # idempotent
+    assert m.committed() == {7: {"bucket": 7, "rows": 42, "digest": "digest"}}
+    assert sorted(os.listdir(tmp_path / "_m")) == ["bucket=7.json", "layout.json"]
+
+
+@pytest.mark.parametrize("prefix", ["file://", "file:"])
+def test_commitfs_file_uri(spark, tmp_path, prefix):
+    """A ``file:`` URI base dir takes the local route at its path."""
+    from facturas_spark.sources.fs import CommitFS
+
+    fs = CommitFS(f"{prefix}{tmp_path}/ledger", spark=spark)
+    assert fs._jfs is None
+    fs.write_json("stage=flags.json", {"stage": "flags", "rows": 3})
+    assert os.listdir(tmp_path / "ledger") == ["stage=flags.json"]
+    assert fs.read_json("stage=flags.json")["rows"] == 3
+
+
+def test_commitfs_drops_stale_crc(spark, tmp_path):
+    """A marker Hadoop's local FileSystem wrote has a ``.crc`` sibling;
+    replacing the marker on the local route removes it, so a checksummed
+    Hadoop read of the ledger returns the new marker instead of failing
+    on the old checksum."""
+    jvm = spark._jvm
+    ledger = str(tmp_path / "_m")
+    final = jvm.org.apache.hadoop.fs.Path(f"file://{ledger}/bucket=3.json")
+    jfs = final.getFileSystem(spark._jsc.hadoopConfiguration())
+    out = jfs.create(final, True)
+    try:
+        out.write(b'{"bucket": 3, "rows": 1, "digest": "old"}')
+    finally:
+        out.close()
+    assert ".bucket=3.json.crc" in os.listdir(ledger)
+
+    LineageManifest(ledger).commit(3, 120, "new")
+    assert sorted(os.listdir(ledger)) == ["bucket=3.json"]
+    stream = jfs.open(final)
+    try:
+        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+    finally:
+        stream.close()
+    assert json.loads(data) == {"bucket": 3, "rows": 120, "digest": "new"}

@@ -16,9 +16,14 @@ warm-up, the tree's CPU and that CPU by process label (with the process
 count).  Per pass it prints the wall time, the CPU grouped by process label
 and thread name with trailing digits dropped, the JVM's Janino compiles
 (``CodegenMetrics``) and its JIT compile milliseconds
-(``CompilationMXBean``).  Both print the groups' sum against the tree
-total: threads that ended before the step did, and reaped processes, count
-in the total only.  Working files go to ``.perfbench_work/``.
+(``CompilationMXBean``).  A process's ``reaped children`` group is the
+CPU of the children it waited for during the step (``cutime + cstime``):
+short-lived ones such as the ``chmod`` Hadoop's local file system forks
+per file it creates, or a Python worker that exited (one seen live when
+the step began counts its earlier CPU here again).  Both print the groups'
+sum against the tree total: threads that ended before the step did, and
+processes nobody in the tree reaped, count in the total only.  Working
+files go to ``.perfbench_work/``.
 """
 
 from __future__ import annotations
@@ -77,13 +82,18 @@ def process_labels() -> dict[int, str]:
 
 def thread_cpu() -> dict[str, tuple[str, str, float]]:
     """``pid/tid`` -> (process label, thread name, CPU seconds so far) of
-    every live thread of this process tree."""
+    every live thread of this process tree, and ``pid/reaped`` -> (process
+    label, ``reaped children``, their CPU seconds so far) of every live
+    process."""
     out = {}
     for pid, proc in process_labels().items():
         try:
             tids = os.listdir(f"/proc/{pid}/task")
+            # cutime and cstime are fields 16 and 17
+            f = _read(f"/proc/{pid}/stat").rsplit(")", 1)[1].split()
         except OSError:
             continue  # the process ended
+        out[f"{pid}/reaped"] = (proc, "reaped children", (int(f[13]) + int(f[14])) / TICK)
         for tid in tids:
             try:
                 name, fields = _read(f"/proc/{pid}/task/{tid}/stat").rsplit(")", 1)
@@ -99,11 +109,12 @@ def thread_cpu() -> dict[str, tuple[str, str, float]]:
 def cpu_since(threads0: dict, by_thread: bool) -> tuple[Counter, Counter]:
     """CPU seconds each group used since the ``thread_cpu()`` snapshot
     ``threads0``, and how many processes each group holds; a group is the
-    process label, joined with the thread name if ``by_thread``."""
+    process label, joined with the thread name if ``by_thread``, and a
+    process's reaped children are always a group of their own."""
     cpu: Counter = Counter()
     pids: dict[str, set] = {}
     for key, (proc, thread, s) in thread_cpu().items():
-        group = f"{proc}/{thread}" if by_thread else proc
+        group = f"{proc}/{thread}" if by_thread or key.endswith("/reaped") else proc
         cpu[group] += s - threads0.get(key, (proc, thread, 0.0))[2]
         pids.setdefault(group, set()).add(key.split("/")[0])
     return cpu, Counter({g: len(p) for g, p in pids.items()})
@@ -141,7 +152,8 @@ def main(argv: list[str] | None = None) -> int:
                 f"processes {sum(cpu.values()):.2f} s"
             )
             for name, s in cpu.most_common():
-                print(f"  {s:7.2f} s  {name} ({procs[name]})")
+                if s >= 0.005:
+                    print(f"  {s:7.2f} s  {name} ({procs[name]})")
         ctx = Ctx(spark, cores, args.seed, work, Tracer(enabled=False))
         wl, _ = WORKLOADS[args.workload]()
         wl.prepare(ctx)
