@@ -71,25 +71,59 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "f4_f6_amount_banks": Q.f4_f6_amount_banks,
         "txt_field_extraction": Q.txt_field_extraction,
         "dedup_embedding_lsh": D.dedup_embedding_lsh,
-        "dedup_embedding_cosine": D.dedup_embedding_cosine,
         "numier_upsert_ventas": E.numier_upsert_ventas,
         "m14_duplicate_orders": D.m14_duplicate_orders,
-        "q08_price_history_log": Q.q08_price_history_log,
         "txt_token_stats": Q.txt_token_stats,
         "txt_quality_score": Q.txt_quality_score,
         "txt_amount_shapes": Q.txt_amount_shapes,
         "dedup_exact": Q.dedup_exact,
-        "ocr_layout_facets": Q.ocr_layout_facets,
         "corpus_clean_stats": CC.corpus_clean_stats,
         "f11_fiscal_reconciliation": Q.f11_fiscal_reconciliation,
-        "supplier_dim": M.supplier_dim,
-        "v_productos_top": E.v_productos_top,
-        "q14_top_proveedores": N.q14_top_proveedores,
         "esc_food_cost_platos": E.esc_food_cost_platos,
         "esc_resumen_global": E.esc_resumen_global,
         "events_json_props": Q.events_json_props,
         "url_quality_filter": D.url_quality_filter,
         "dedup_url_normalize": D.dedup_url_normalize,
+        "q15_semantic_ranked": N.q15_semantic_ranked,
+        "f12_confidence": Q.f12_confidence,
+        "f8_date_variants": Q.f8_date_variants,
+        "f7_amount_variants": Q.f7_amount_variants,
+        "p9_price_closure": Q.p9_price_closure,
+        "p8_p15_products_normalized": Q.p8_p15_products_normalized,
+        "p13_price_per_unit": Q.p13_price_per_unit,
+        "s2_mime_sniffing": Q.s2_mime_sniffing,
+        "q02_top_products": Q.q02_top_products,
+        "q12_multi_price_products": Q.q12_multi_price_products,
+        "m4_similarity_pairs": D.m4_similarity_pairs,
+        "corpus_quota_two_phase": CC.corpus_quota_two_phase,
+        "q01_daily_sales": Q.q01_daily_sales,
+        "q03_dashboard_resumen": Q.q03_dashboard_resumen,
+        "q04_payment_pivot": Q.q04_payment_pivot,
+        "q07_category_share": Q.q07_category_share,
+        "q09_purchase_frequency": Q.q09_purchase_frequency,
+        "q10_purchase_gaps": Q.q10_purchase_gaps,
+        "q13_rolling_price_stats": Q.q13_rolling_price_stats,
+        "q11_spend_per_product": Q.q11_spend_per_product,
+        "m3_levenshtein_pairs": D.m3_levenshtein_pairs,
+        "master_products": M.master_products,
+        "ann_cosine_topk": Q.ann_cosine_topk,
+        "whatsapp_routing": E.whatsapp_routing,
+        "mailgun_routing": E.mailgun_routing,
+        "events_sessionization": Q.events_sessionization,
+        "host_reputation_filter": D.host_reputation_filter,
+        "iva_tipos_breakdown": E.iva_tipos_breakdown,
+        # ---------------- driver window boundary (50) ----------------
+        # parked: banked-green and untouched this round (the two newest
+        # one-round-parked rows, then the rows the last window refreshed),
+        # then the pinned rows-only pipelines
+        "esc_ingredientes_stats": E.esc_ingredientes_stats,
+        "m5_product_match_pairs": D.m5_product_match_pairs,
+        "dedup_embedding_cosine": D.dedup_embedding_cosine,
+        "q08_price_history_log": Q.q08_price_history_log,
+        "ocr_layout_facets": Q.ocr_layout_facets,
+        "supplier_dim": M.supplier_dim,
+        "v_productos_top": E.v_productos_top,
+        "q14_top_proveedores": N.q14_top_proveedores,
         "numier_dashboard_resumen": E.numier_dashboard_resumen,
         "numier_upsert_catalogo": E.numier_upsert_catalogo,
         "cotejo_patron_efectividad": E.cotejo_patron_efectividad,
@@ -109,42 +143,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q14_facturas_recientes": N.q14_facturas_recientes,
         "q14_productos_mas_comprados": N.q14_productos_mas_comprados,
         "q15_hybrid_textual": N.q15_hybrid_textual,
-        "q15_semantic_ranked": N.q15_semantic_ranked,
         "q15_datos_basicos": N.q15_datos_basicos,
         "stream_window_equivalence": Q.stream_window_equivalence,
-        # ---------------- driver window boundary (50) ----------------
-        # parked: banked-green and untouched this round (the five newest
-        # banked rows the regex-bank fold displaced, then the r08 rows),
-        # then the pinned rows-only pipelines
-        "events_sessionization": Q.events_sessionization,
-        "host_reputation_filter": D.host_reputation_filter,
-        "iva_tipos_breakdown": E.iva_tipos_breakdown,
-        "esc_ingredientes_stats": E.esc_ingredientes_stats,
-        "m5_product_match_pairs": D.m5_product_match_pairs,
-        "f12_confidence": Q.f12_confidence,
-        "f8_date_variants": Q.f8_date_variants,
-        "f7_amount_variants": Q.f7_amount_variants,
-        "p9_price_closure": Q.p9_price_closure,
-        "p8_p15_products_normalized": Q.p8_p15_products_normalized,
-        "p13_price_per_unit": Q.p13_price_per_unit,
-        "s2_mime_sniffing": Q.s2_mime_sniffing,
-        "q02_top_products": Q.q02_top_products,
-        "q12_multi_price_products": Q.q12_multi_price_products,
-        "corpus_quota_two_phase": CC.corpus_quota_two_phase,
-        "q01_daily_sales": Q.q01_daily_sales,
-        "q03_dashboard_resumen": Q.q03_dashboard_resumen,
-        "q04_payment_pivot": Q.q04_payment_pivot,
-        "q07_category_share": Q.q07_category_share,
-        "q09_purchase_frequency": Q.q09_purchase_frequency,
-        "q10_purchase_gaps": Q.q10_purchase_gaps,
-        "q13_rolling_price_stats": Q.q13_rolling_price_stats,
-        "q11_spend_per_product": Q.q11_spend_per_product,
-        "m3_levenshtein_pairs": D.m3_levenshtein_pairs,
-        "m4_similarity_pairs": D.m4_similarity_pairs,
-        "master_products": M.master_products,
-        "ann_cosine_topk": Q.ann_cosine_topk,
-        "whatsapp_routing": E.whatsapp_routing,
-        "mailgun_routing": E.mailgun_routing,
         # -- rows-only, golden-fixture-pinned (no SQL oracle by design)
         "ocr_layout_extraction": Q.ocr_layout_extraction,
         "products_extraction": Q.products_extraction,

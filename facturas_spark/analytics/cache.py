@@ -1,5 +1,11 @@
-"""Session-scoped DataFrame cache for bases shared across queries, and
-the one owner of scratch-frame lifetime.
+"""Session-scoped DataFrame cache for bases shared across queries, the
+one owner of scratch-frame lifetime, and the one way a query reads a
+table.
+
+``table_scan`` memoizes each table's scan per (session, path) against
+the table's file listing, and decides from that same listing whether
+the scan is fanned out to the session's parallelism (``fan_key``). The
+decision lives and dies with the memo entry.
 
 Several registry queries rebuild the same intermediate lineage
 (`_platos_base` feeds two esc_* queries). Computing it twice per
@@ -165,9 +171,18 @@ def checkpoint_with_ids(
 # so any rewrite, append or delete — nested partition files and
 # same-second rewrites included — drops the entry and re-reads. Paths
 # the local filesystem cannot list (hdfs://, s3a://) fingerprint as
-# empty and are never invalidated. Entries from stopped sessions are
-# pruned on insert.
-_SCAN_MEMO: dict[tuple, tuple[tuple, DataFrame]] = {}
+# empty and are never invalidated (nor fanned out). Entries from stopped
+# sessions are pruned on insert. Each entry is (fingerprint, scan, fan
+# decision); the decision is None until a caller passes ``fan_key``, and
+# it goes with the entry.
+_SCAN_MEMO: dict[tuple, tuple[tuple, DataFrame, bool | None]] = {}
+
+# Fan-out only pays when the single-task scan carries real work: below a
+# few MB the repartition exchange costs more than it parallelizes
+# (measured at sf0.1: ~+0.2 s per query for no gain). The splits<cores
+# guard already disables fan-out entirely once inputs arrive in many
+# splits.
+FAN_MIN_BYTES = 4 << 20
 
 
 def _listing_fingerprint(path: str) -> tuple:
@@ -187,24 +202,80 @@ def _listing_fingerprint(path: str) -> tuple:
     return tuple(out)
 
 
-def table_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _scan_parallelism(df: DataFrame, path: str, listing: tuple, cores: int) -> int:
+    """How many tasks can actually produce rows from this scan. Spark's
+    planned split count is size/maxPartitionBytes, but parquet delivers
+    rows at ROW-GROUP granularity — a 600 MB single-row-group file plans
+    ~5 splits yet only ONE task gets rows. When the listing holds fewer
+    parquet files than cores, cap the planned count by the total
+    row-group count (footers of a handful of files are cheap to read);
+    with >= cores files every file carries >= 1 row group, so the scan
+    is already at least cores-wide and the planned count stands."""
+    planned = df.rdd.getNumPartitions()
+    files = [
+        os.path.join(path, rel) if rel else path
+        for rel, _size, _mtime in listing
+        if not rel or rel.endswith(".parquet")
+    ]
+    if len(files) >= cores:
+        return planned
+    try:
+        import pyarrow.parquet as pq
+
+        row_groups = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
+    except Exception:
+        return planned
+    return min(planned, row_groups)
+
+
+def _fan_out(spark: SparkSession, df: DataFrame, path: str, listing: tuple) -> bool:
+    """True when the scan should be fanned out: the listed bytes reach
+    FAN_MIN_BYTES (nested partition files included) AND the scan can use
+    fewer tasks than the session has slots (:func:`_scan_parallelism`)."""
+    if sum(size for _rel, size, _mtime in listing) < FAN_MIN_BYTES:
+        return False
+    cores = spark.sparkContext.defaultParallelism
+    return _scan_parallelism(df, path, listing, cores) < cores
+
+
+def table_scan(
+    spark: SparkSession, sf_dir: str, name: str, fan_key: str | None = None
+) -> DataFrame:
     """Memoized ``spark.read.parquet(f"{sf_dir}/{name}.parquet")``.
 
     Two reads of one unchanged table return the SAME DataFrame object,
     so a self-join must ``.alias()`` both sides (``a.alias("l").join(
     b.alias("r"), F.col("l.x") == F.col("r.x"))``); an unaliased
-    ``a.join(b, a.x == b.x)`` compares a column with itself."""
+    ``a.join(b, a.x == b.x)`` compares a column with itself.
+
+    ``fan_key`` asks for unsplittable-input fan-out (input skew from one
+    big unsplittable file is mended by repartitioning right after the
+    read): the sf parquet tables are SINGLE-ROW-GROUP files, so a
+    parquet scan — and every per-row tokenize/hash/regex expression
+    fused into it, or into a key filter over it — otherwise runs as one
+    or two tasks regardless of core count. When :func:`_fan_out` holds,
+    the scan comes back hash-repartitioned on ``fan_key`` to the
+    session's parallelism (a filter applied afterwards is pushed below
+    the exchange); otherwise the memoized scan itself. At production
+    scale inputs arrive in many splits, the gate is false, and no extra
+    exchange appears in the plan."""
     path = f"{sf_dir}/{name}.parquet"
     fp = _listing_fingerprint(path)
     app = spark.sparkContext.applicationId
     key = (app, path)
     hit = _SCAN_MEMO.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    df = spark.read.parquet(path)
-    for stale in [k for k in list(_SCAN_MEMO) if k[0] != app]:
-        _SCAN_MEMO.pop(stale, None)
-    _SCAN_MEMO[key] = (fp, df)
+    if hit is None or hit[0] != fp:
+        for stale in [k for k in list(_SCAN_MEMO) if k[0] != app]:
+            _SCAN_MEMO.pop(stale, None)
+        hit = _SCAN_MEMO[key] = (fp, spark.read.parquet(path), None)
+    _fp, df, fan = hit
+    if fan_key is None:
+        return df
+    if fan is None:
+        fan = _fan_out(spark, df, path, fp)
+        _SCAN_MEMO[key] = (fp, df, fan)
+    if fan:
+        return df.repartition(spark.sparkContext.defaultParallelism, fan_key)
     return df
 
 

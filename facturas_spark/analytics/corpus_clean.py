@@ -48,13 +48,13 @@ from pyspark.sql.window import Window
 import os
 
 from facturas_spark.analytics.cache import scratch_persist
+from facturas_spark.analytics.cache import table_scan as _t
 from facturas_spark.analytics.dedup import (
     DECON_K,
     _kgram_hashes,
     _lsh_candidate_pairs,
     _min_label_components,
     _shingle_table,
-    _t,
     _verified_pairs,
     _words,
 )
@@ -687,7 +687,6 @@ def corpus_clean_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized once per (session, sf), the same trade the component
     labels and the plato base make; the funnel is then one aggregate."""
     from facturas_spark.analytics.cache import session_cached
-    from facturas_spark.analytics.dedup import _t_fan
 
     # fan the single-row-group scan (guide §2.5) so the chain's tokenize/
     # shingle stages run at session parallelism during the one-time build
@@ -696,7 +695,7 @@ def corpus_clean_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "corpus_clean_flags",
         lambda: per_doc_flags(
-            with_synth_pii(_t_fan(spark, sf_dir, "documents", "doc_id"))
+            with_synth_pii(_t(spark, sf_dir, "documents", fan_key="doc_id"))
         ),
     )
     return clean_funnel(flags).orderBy("stage")

@@ -11,117 +11,23 @@ can't parse hex -> int without extensions, so the hash family is
 ``min(md5(shingle || ':' || i))`` under LEXICOGRAPHIC order — md5 hex
 strings are uniformly distributed, so the min-string is a valid MinHash
 permutation stand-in, and both engines produce identical signatures.
+
+Tables are read through ``cache.table_scan``; the queries whose per-row
+work is fused into the scan pass its ``fan_key``, so a big
+single-row-group table is repartitioned to the session's parallelism.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from facturas_spark.analytics.cache import table_scan as _t
+from facturas_spark.analytics.queries import _r
 
 N_HASHES = 8  # MinHash signature length
 N_BANDS = 4   # LSH bands (2 rows per band)
-
-
-_FAN_MEMO: dict[tuple, bool] = {}
-
-# Fan-out only pays when the single-task scan carries real work: below a
-# few MB the repartition exchange costs more than it parallelizes
-# (measured at sf0.1: ~+0.2 s per query for no gain). The splits<cores
-# guard already disables fan-out entirely once inputs arrive in many
-# splits.
-FAN_MIN_BYTES = 4 << 20
-
-
-def _table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk bytes of a table path — file, or recursive directory walk
-    (hive-partitioned datasets nest files under partition dirs, which a
-    flat listdir would count as ~4 KB inodes)."""
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        if not os.path.isdir(path):
-            return os.path.getsize(path)
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                total += os.path.getsize(os.path.join(root, f))
-        return total
-    except OSError:
-        return 0
-
-
-def _scan_effective_parallelism(
-    spark: SparkSession, sf_dir: str, name: str
-) -> int:
-    """How many tasks can actually produce rows from this table's scan.
-    Spark's planned split count is size/maxPartitionBytes, but parquet
-    delivers rows at ROW-GROUP granularity — a 600 MB single-row-group
-    file plans ~5 splits yet only ONE task gets rows. When the dataset
-    has fewer files than cores, cap the planned count by the total
-    row-group count (footers of a handful of files are cheap to read);
-    with >= cores files every file carries >= 1 row group, so the scan
-    is already at least cores-wide and the planned count stands."""
-    planned = _t(spark, sf_dir, name).rdd.getNumPartitions()
-    cores = spark.sparkContext.defaultParallelism
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        if os.path.isdir(path):
-            files = [
-                os.path.join(root, f)
-                for root, _dirs, fs in os.walk(path)
-                for f in fs
-                if f.endswith(".parquet")
-            ]
-        else:
-            files = [path]
-        if len(files) >= cores:
-            return planned
-        import pyarrow.parquet as pq
-
-        row_groups = sum(
-            pq.ParquetFile(f).metadata.num_row_groups for f in files
-        )
-        return min(planned, row_groups)
-    except Exception:
-        return planned
-
-
-def _fan_needed(spark: SparkSession, sf_dir: str, name: str) -> bool:
-    """True when the table's scan should be fanned out: the table is big
-    enough that its per-row map work matters (>= FAN_MIN_BYTES) AND the
-    scan can effectively use fewer tasks than the session has slots
-    (row-group-aware — see _scan_effective_parallelism). Memoized per
-    (session, sf, table)."""
-    k = (spark.sparkContext.applicationId, sf_dir, name)
-    need = _FAN_MEMO.get(k)
-    if need is None:
-        cores = spark.sparkContext.defaultParallelism
-        need = _table_bytes(sf_dir, name) >= FAN_MIN_BYTES and (
-            _scan_effective_parallelism(spark, sf_dir, name) < cores
-        )
-        _FAN_MEMO[k] = need
-    return need
-
-
-def _t_fan(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
-    """Scan with unsplittable-input fan-out (guide §2.5 "input skew: one
-    huge unsplittable file ... repartition immediately after the read"):
-    the sf parquet tables are SINGLE-ROW-GROUP files, so a parquet scan
-    — and every per-row tokenize/hash/explode expression fused into it —
-    otherwise runs as one or two tasks regardless of core count (row
-    groups are the parquet split granularity). Hash-repartition on the
-    table key to the session's parallelism, gated by :func:`_fan_needed`.
-    At production scale inputs arrive in many splits, the guard is
-    false, and no extra exchange appears in the plan — the fan-out is
-    scale-adaptive, not a local[32] constant."""
-    df = _t(spark, sf_dir, name)
-    if _fan_needed(spark, sf_dir, name):
-        return df.repartition(spark.sparkContext.defaultParallelism, key)
-    return df
 
 
 def _words(col):
@@ -284,9 +190,7 @@ def m4_similarity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(
             "k1",
             "k2",
-            (F.floor(score("n1", "n2") * 10000 + F.lit(0.5)) / 10000).alias(
-                "similitud"
-            ),
+            _r(score("n1", "n2"), 4).alias("similitud"),
         )
         .orderBy("k1")
     )
@@ -295,7 +199,7 @@ def m4_similarity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m14_duplicate_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M14 duplicate detection: same (custkey, orderdate) seen >1 time —
     the reference's CIF+numero_factura equality check shape."""
-    orders = _t_fan(spark, sf_dir, "orders", "o_orderkey")
+    orders = _t(spark, sf_dir, "orders", fan_key="o_orderkey")
     return (
         orders.groupBy("o_custkey", F.to_date("o_orderdate").alias("fecha"))
         .agg(F.count("*").alias("copies"), F.min("o_orderkey").alias("first_key"))
@@ -656,12 +560,12 @@ def _norm2(c: str):
 
 
 def _cosine_small(a: str, b: str):
-    """Fold-form cosine for the BOUNDED demo-oracle window
-    (dedup_embedding_cosine's vec_id<80): its pair count is fixed at every
-    sf, so the unrolled fast path buys no runtime there while its
-    ~400-node tree taxes every analyzer/optimizer pass. Value-identical
-    to ``_dot(a, b) / (sqrt(_norm2(a)) * sqrt(_norm2(b)))`` (same
-    left-fold addition order, same casts)."""
+    """Fold-form cosine for the BOUNDED windows (dedup_embedding_cosine's
+    vec_id<80, nlsql.q15_semantic_ranked's 20 candidates): their pair
+    counts are fixed at every sf, so the unrolled fast path buys no
+    runtime there while its ~400-node tree taxes every analyzer/optimizer
+    pass. Value-identical to ``_dot(a, b) / (sqrt(_norm2(a)) *
+    sqrt(_norm2(b)))`` (same left-fold addition order, same casts)."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -768,7 +672,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shuffle spreads over 1024 keys here and tunes arbitrarily via
     (b, r) at scale. Bands past the vector's length are not emitted
     (short vectors participate only in the slices they populate)."""
-    emb = _t_fan(spark, sf_dir, "embeddings", "vec_id")
+    emb = _t(spark, sf_dir, "embeddings", fan_key="vec_id")
     return (
         _emb_candidates_with_cosine(emb.select("vec_id", "embedding"), "vec_id")
         .select("id1", "id2", F.round("_cos", 4).alias("cos_sim"))
@@ -810,7 +714,7 @@ def url_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB this fuses into the page scan."""
     from facturas_spark.sources.urlfilter import url_quality_flags
 
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id").select("doc_id")
+    docs = _t(spark, sf_dir, "documents", fan_key="doc_id").select("doc_id")
     d = F.col("doc_id")
     host = (
         F.when(d % 10 == 0, F.lit("ads.tracker.net"))
@@ -859,7 +763,7 @@ def dedup_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization itself is a pure map."""
     from facturas_spark.sources.urlfilter import normalize_url
 
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id").select("doc_id")
+    docs = _t(spark, sf_dir, "documents", fan_key="doc_id").select("doc_id")
     d = F.col("doc_id")
     g = (d % 100).cast("string")
     core = F.concat(F.lit("site"), g, F.lit(".example.com/page"), g)

@@ -43,15 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from facturas_spark.analytics.cache import table_scan as _t
-from facturas_spark.analytics.queries import _cents, _rev_e4
-
-
-def _r(c, n: int = 2):
-    """JS Math.round at n decimals (floor(x*10^n + 0.5)/10^n) — identical
-    IEEE-double result in Spark and DuckDB, unlike HALF_UP vs HALF_EVEN
-    ``round`` which disagree on .xx5 ties."""
-    m = 10 ** n
-    return F.floor(c * m + F.lit(0.5)) / m
+from facturas_spark.analytics.queries import _cents, _r, _rev_e4
 
 
 def _platos_base(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,9 +71,7 @@ def _platos_base_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 8: fanned scan keyed on the groupBy key (guide §2.5; one
     # exchange either way, but the 600k-row agg runs session-wide during
     # the one-time session-cache build instead of in the lone scan task)
-    from facturas_spark.analytics.dedup import _t_fan
-
-    li = _t_fan(spark, sf_dir, "lineitem", "l_orderkey")
+    li = _t(spark, sf_dir, "lineitem", fan_key="l_orderkey")
     # net line spend summed as exact 1e-4-euro BIGINTs (order-independent;
     # see queries._rev_e4); food_cost = net*(1+k)/10 rounded half-up at 2dp
     # via integer division on the exact rational
@@ -327,12 +317,10 @@ def numier_upsert_ventas(spark: SparkSession, sf_dir: str) -> DataFrame:
     is union + latest-per-key (row_number desc) — one shuffle on the key;
     on the real lakehouse table this is the same plan Iceberg MERGE INTO
     produces (broadcast/SMJ on the key + per-key latest)."""
-    from facturas_spark.analytics.dedup import _t_fan
-
     # orders is a 2-row-group file: fan the scan so the projection +
     # map-side partial aggregate run at session parallelism (guide §2.5;
     # measured 2.2 -> 1.7 s at sf1.0)
-    o = _t_fan(spark, sf_dir, "orders", "o_orderkey")
+    o = _t(spark, sf_dir, "orders", fan_key="o_orderkey")
     sale = lambda batch_df, batch, price: batch_df.select(  # noqa: E731
         (F.col("o_custkey") % 100).alias("restaurante_id"),
         F.lit("numier").alias("sistema_origen"),

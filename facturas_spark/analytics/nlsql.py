@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from facturas_spark.analytics.cache import table_scan as _t
+from facturas_spark.analytics.dedup import _cosine_small
 from facturas_spark.analytics.queries import _cents, _rev_e4
 
 __all__ = ["detect_query_type", "is_sql_safe"]
@@ -186,21 +187,7 @@ def q15_semantic_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
     )
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
-    dot = F.aggregate(
-        F.zip_with(
-            "embedding", "qe", lambda a, b: a.cast("double") * b.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda v: v.cast("double") * v.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    sim = F.greatest(F.lit(0.0), dot / (norm("embedding") * norm("qe")))
+    sim = F.greatest(F.lit(0.0), _cosine_small("embedding", "qe"))
     return (
         ranked.crossJoin(F.broadcast(q))
         .select(

@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from facturas_spark.analytics.cache import table_scan as _t
-from facturas_spark.analytics.dedup import _t_fan
 from facturas_spark.extraction.dashboard_calc import (
     _HUEVOS,
     _LIQUIDO,
@@ -62,25 +61,12 @@ def _rx(p: re.Pattern[str]) -> str:
     return ("(?i)" if p.flags & re.IGNORECASE else "") + p.pattern
 
 
-def _fan_post(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    df: DataFrame,
-    key: str,
-) -> DataFrame:
-    """Post-filter fan-out for the synthesized bank queries: their pushed
-    key filters leave a few thousand rows in the one task that owns the
-    pruned row group, and the per-row regex banks are the whole query
-    cost. Repartition those rows to session parallelism — but only when
-    the source table passes the same size/splits gate as dedup._t_fan
-    (a tiny table's scan is already cheap, and the exchange would cost
-    more than it parallelizes)."""
-    from facturas_spark.analytics.dedup import _fan_needed
-
-    if _fan_needed(spark, sf_dir, table):
-        return df.repartition(spark.sparkContext.defaultParallelism, key)
-    return df
+def _r(c, n: int = 2):
+    """JS Math.round at n decimals (floor(x*10^n + 0.5)/10^n) — identical
+    IEEE-double result in Spark and DuckDB, unlike HALF_UP vs HALF_EVEN
+    ``round`` which disagree on .xx5 ties."""
+    m = 10 ** n
+    return F.floor(c * m + F.lit(0.5)) / m
 
 
 def _cents(c) -> "F.Column":
@@ -133,7 +119,7 @@ def q02_top_products(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 8: fanned scan (guide §2.5) — single-row-group lineitem ran the
     broadcast join + countDistinct Expand + partial agg in ONE task;
     measured 1.29 -> 0.81 s at sf0.1, neutral at well-split scales (gate)."""
-    li = _t_fan(spark, sf_dir, "lineitem", "l_partkey")
+    li = _t(spark, sf_dir, "lineitem", fan_key="l_partkey")
     part = _t(spark, sf_dir, "part")
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -307,7 +293,7 @@ def q12_multi_price_products(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 8: fanned scan keyed on the groupBy key (guide §2.5; q09
     rationale) — the countDistinct Expand doubles rows, so the serial
     scan-stage agg was the whole query cost at single-row-group scales."""
-    li = _t_fan(spark, sf_dir, "lineitem", "l_partkey")
+    li = _t(spark, sf_dir, "lineitem", fan_key="l_partkey")
     return (
         li.groupBy("l_partkey")
         .agg(
@@ -659,7 +645,7 @@ def ocr_layout_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def txt_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting over documents (whitespace tokenizer), per-lang stats.
     Training-data-pipeline staple; pure built-ins (split/size)."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = _t(spark, sf_dir, "documents", fan_key="doc_id")
     toks = F.size(
         F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda x: x != F.lit(""))
     )
@@ -688,7 +674,7 @@ def txt_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality scoring (length / punctuation / stopword-ish
     ratios), bucketed. Generalizes the reference line filter T4
     (process-invoice/index.ts:1493-1510) to document level."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = _t(spark, sf_dir, "documents", fan_key="doc_id")
     n = F.length("text")
     letters = F.length(F.regexp_replace("text", r"[^A-Za-z]", ""))
     spaces = F.length(F.regexp_replace("text", r"[^ ]", ""))
@@ -711,7 +697,7 @@ def txt_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def txt_amount_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Field-extractor demo on the documents table: count amount-shaped and
     date-shaped tokens per lang (F4/F3 regex layer, SQL-expressible half)."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = _t(spark, sf_dir, "documents", fan_key="doc_id")
     amounts = F.size(F.regexp_extract_all("text", F.lit(r"(\d+[,\.]\d{2})"), 1))
     dates = F.size(
         F.regexp_extract_all("text", F.lit(r"(\d{1,2}/\d{1,2}/\d{2,4})"), 1)
@@ -735,7 +721,7 @@ def txt_content_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     >=4 letters and letter-ratio >= 0.3, not pure numbers/dates/labels —
     and report per-lang keep-rates. Pure built-ins; the trim is an
     explicit regexp so Spark and DuckDB agree on whitespace classes."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = _t(spark, sf_dir, "documents", fan_key="doc_id")
     lines = docs.select(
         "lang",
         F.explode(F.split(F.coalesce("text", F.lit("")), r"\.\s+")).alias("raw"),
@@ -775,7 +761,7 @@ def c1_classify_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     delivery indicators -> default, grouped per (lang, tipo, confianza,
     razonamiento-tag). The fused-UDF kernel is the hot path; this is the
     same operator in its SQL-surface form, oracle-gated."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = _t(spark, sf_dir, "documents", fan_key="doc_id")
     txt = F.coalesce("text", F.lit(""))
     low = F.lower(txt)
 
@@ -861,7 +847,7 @@ def txt_field_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~2/14 are invalid and must be REJECTED by the validity gate), and two
     amounts on ids %% 5 != 0 (',' or '.' decimal by parity; the max must
     win). Amounts aggregate exactly as cents."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = _t(spark, sf_dir, "documents", fan_key="doc_id")
     did = F.col("doc_id")
     cif_part = F.when(
         did % 2 == 0,
@@ -947,27 +933,25 @@ def f11_fiscal_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cover every branch: total-only, base-only, base+cuota, base+total,
     incoherent triple (overwrite fires), coherent triple (untouched).
     Per-row double algebra — identical in both engines."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 6000), "o_orderkey",
+    o = _t(spark, sf_dir, "orders", fan_key="o_orderkey").filter(
+        F.col("o_orderkey") <= 6000
     )
     s = F.col("o_orderkey") % 6
     v = F.col("o_totalprice")
     tp = F.element_at(
         F.array(F.lit(4), F.lit(10), F.lit(21)), (F.col("o_custkey") % 3 + 1).cast("int")
     )
-    r2 = lambda c: F.floor(c * 100 + F.lit(0.5)) / 100  # noqa: E731
     t0 = (
         F.when(s == 0, v)
-        .when(s == 3, r2(v * 1.21))
-        .when(s == 4, r2(v * 1.21) + 5)
-        .when(s == 5, v + r2(v * 0.21))
+        .when(s == 3, _r(v * 1.21))
+        .when(s == 4, _r(v * 1.21) + 5)
+        .when(s == 5, v + _r(v * 0.21))
         .otherwise(F.lit(0.0))
     )
     b0 = F.when(s == 0, F.lit(0.0)).otherwise(v)
     c0 = (
-        F.when(s == 2, r2(v * 0.1))
-        .when((s == 4) | (s == 5), r2(v * 0.21))
+        F.when(s == 2, _r(v * 0.1))
+        .when((s == 4) | (s == 5), _r(v * 0.21))
         .otherwise(F.lit(0.0))
     )
     base = o.select(
@@ -1014,9 +998,9 @@ def f11_fiscal_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "escenario",
         "tipo",
-        r2(F.col("_fb")).alias("base_imponible"),
-        r2(F.col("_fc")).alias("cuota_iva"),
-        r2(coherent_total).alias("total_factura"),
+        _r(F.col("_fb")).alias("base_imponible"),
+        _r(F.col("_fc")).alias("cuota_iva"),
+        _r(coherent_total).alias("total_factura"),
     ).orderBy("o_orderkey")
 
 
@@ -1027,9 +1011,8 @@ def f8_date_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     always adds 2000 at :2893-2895; each extraction site binds its exact
     variant). Synthesized dd/mm/yy tokens from orders; the two parsed
     dates plus the agreement flag per row."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 6000), "o_orderkey",
+    o = _t(spark, sf_dir, "orders", fan_key="o_orderkey").filter(
+        F.col("o_orderkey") <= 6000
     )
     d = (F.col("o_orderkey") % 28 + 1).cast("int")
     m = (F.col("o_orderkey") % 12 + 1).cast("int")
@@ -1057,9 +1040,8 @@ def f7_amount_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     currency/space stripping. Columnar rules are defined over
     single-comma/single-dot tokens (replace-all == replace-first there);
     kernel parity per token is pinned in pytest."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 6000), "o_orderkey",
+    o = _t(spark, sf_dir, "orders", fan_key="o_orderkey").filter(
+        F.col("o_orderkey") <= 6000
     )
     s = F.col("o_orderkey") % 8
     d3 = (F.col("o_orderkey") % 900 + 100).cast("string")
@@ -1112,9 +1094,7 @@ def f7_amount_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "escenario",
         "token",
-        (
-            F.floor(fallback_clean.try_cast("double") * 100 + F.lit(0.5)) / 100
-        ).alias("importe_fallback"),
+        _r(fallback_clean.try_cast("double")).alias("importe_fallback"),
         strict_clean.try_cast("double").alias("importe_estricto"),
     ).withColumn(
         "coinciden", F.col("importe_fallback") == F.col("importe_estricto")
@@ -1131,9 +1111,10 @@ def p8_p15_products_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     em-dash, double spaces, each trailing-strip rule)."""
     from facturas_spark.extraction.products import _CATEGORIES
 
-    part = _fan_post(
-        spark, sf_dir, "part",
-        _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 300), "p_partkey",
+    part = _t(spark, sf_dir, "part", fan_key="p_partkey").filter(
+
+        F.col("p_partkey") <= 300
+
     )
     markers = [keys[0] for _, keys in _CATEGORIES] + ["zzz"]
     kw = F.element_at(
@@ -1186,9 +1167,8 @@ def p9_price_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each rule reads the previous rules' outputs). Scenarios synthesized
     from orders leave a different subset filled per row, with qty=0 rows
     exercising the qty>0 gates and tipo 0 exercising the falsy fallback."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000), "o_orderkey",
+    o = _t(spark, sf_dir, "orders", fan_key="o_orderkey").filter(
+        F.col("o_orderkey") <= 5000
     )
     s = F.col("o_orderkey") % 8
     v = F.col("o_totalprice")
@@ -1325,9 +1305,8 @@ def f12_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded. Extraction-state flags synthesized bitwise from o_orderkey
     (all 64 flag combinations appear); amounts from o_totalprice with an
     incoherence offset on half the rows."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000), "o_orderkey",
+    o = _t(spark, sf_dir, "orders", fan_key="o_orderkey").filter(
+        F.col("o_orderkey") <= 5000
     )
     bit = lambda n: F.expr(f"(o_orderkey div {2 ** n}) % 2 = 1")  # noqa: E731
     total = F.when(bit(3), F.col("o_totalprice")).otherwise(F.lit(0.0))
@@ -1345,13 +1324,12 @@ def f12_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.when(F.abs(total - (base + cuota)) <= 0.1, 0.1).otherwise(0.0)
     )
     conf = F.least(conf, F.lit(1.0))
-    r2 = lambda c: F.floor(c * 100 + F.lit(0.5)) / 100  # noqa: E731
     return o.select(
         "o_orderkey",
-        r2(conf).alias("confianza_global"),
-        r2(conf * 0.8).alias("confianza_proveedor"),
-        r2(conf * 0.9).alias("confianza_datos_fiscales"),
-        r2(conf * 0.85).alias("confianza_importes"),
+        _r(conf).alias("confianza_global"),
+        _r(conf * 0.8).alias("confianza_proveedor"),
+        _r(conf * 0.9).alias("confianza_datos_fiscales"),
+        _r(conf * 0.85).alias("confianza_importes"),
     ).orderBy("o_orderkey")
 
 
@@ -1367,9 +1345,10 @@ def p13_price_per_unit(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-format row; every 7th row has price 0 (JS-falsy gate -> null)."""
     from facturas_spark.extraction.products import _KB
 
-    part = _fan_post(
-        spark, sf_dir, "part",
-        _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 400), "p_partkey",
+    part = _t(spark, sf_dir, "part", fan_key="p_partkey").filter(
+
+        F.col("p_partkey") <= 400
+
     )
     n_kb = len(_KB)
     s = F.col("p_partkey") % (n_kb + 3)
@@ -1429,14 +1408,13 @@ def p13_price_per_unit(spark: SparkSession, sf_dir: str) -> DataFrame:
     vol = F.when(has(F.col("vol_explicito")), F.col("vol_explicito")).otherwise(
         F.col("vol_kb")
     )
-    r2 = lambda c: F.floor(c * 100 + F.lit(0.5)) / 100  # noqa: E731
     return d.select(
         "p_partkey",
         "descripcion",
-        F.when(has(F.col("precio")) & has(peso), r2(F.col("precio") / peso)).alias(
+        F.when(has(F.col("precio")) & has(peso), _r(F.col("precio") / peso)).alias(
             "precio_por_kg"
         ),
-        F.when(has(F.col("precio")) & has(vol), r2(F.col("precio") / vol)).alias(
+        F.when(has(F.col("precio")) & has(vol), _r(F.col("precio") / vol)).alias(
             "precio_por_litro"
         ),
     ).orderBy("p_partkey")
@@ -1463,9 +1441,8 @@ def p14_multi_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(tipo, formato) price fan-out. Synthesized rows cross every type
     marker with every format fragment; every 5th row carries a formato
     override ('1 kg')."""
-    part = _fan_post(
-        spark, sf_dir, "part",
-        _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 400), "p_partkey",
+    part = _t(spark, sf_dir, "part", fan_key="p_partkey").filter(
+        F.col("p_partkey") <= 400
     )
     k = F.col("p_partkey")
     marker = F.element_at(
@@ -1585,9 +1562,8 @@ def p4_p7_line_parsers(spark: SparkSession, sf_dir: str) -> DataFrame:
     number rules). Lines synthesized as code x quantity x price fragment
     crosses (125 combos cycling over part keys); defaults qty=1.0,
     price/code/unit null."""
-    part = _fan_post(
-        spark, sf_dir, "part",
-        _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 500), "p_partkey",
+    part = _t(spark, sf_dir, "part", fan_key="p_partkey").filter(
+        F.col("p_partkey") <= 500
     )
     k = F.col("p_partkey")
     pick = lambda arr, idx: F.element_at(  # noqa: E731
@@ -1637,9 +1613,10 @@ def s2_mime_sniffing(spark: SparkSession, sf_dir: str) -> DataFrame:
     and extensionless names."""
     from facturas_spark.sources.io import mime_from_url
 
-    part = _fan_post(
-        spark, sf_dir, "part",
-        _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 600), "p_partkey",
+    part = _t(spark, sf_dir, "part", fan_key="p_partkey").filter(
+
+        F.col("p_partkey") <= 600
+
     )
     k = F.col("p_partkey")
     name = F.element_at(
@@ -1678,9 +1655,8 @@ def f2_invoice_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate (factura/invoice/nº/num/fn) guards the whole bank. Texts
     synthesized per order key cover multi-candidate ties, the greedy
     uppercase-class capture of pattern 5, and gate misses."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000), "o_orderkey",
+    o = _t(spark, sf_dir, "orders", fan_key="o_orderkey").filter(
+        F.col("o_orderkey") <= 5000
     )
     k = F.col("o_orderkey")
     d2 = F.lpad((k % 100).cast("string"), 2, "0")
@@ -1745,9 +1721,8 @@ def f1_cif_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowercase prefixes match. Texts synthesized per key cover plain,
     dashed, labeled, NIF-dropped, lowercase, short-fallback and no-CIF
     shapes."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000), "o_orderkey",
+    o = _t(spark, sf_dir, "orders", fan_key="o_orderkey").filter(
+        F.col("o_orderkey") <= 5000
     )
     k = F.col("o_orderkey")
     d8 = F.lpad(((k * 37) % 100000000).cast("string"), 8, "0")
@@ -1792,7 +1767,7 @@ def f4_f6_amount_banks(spark: SparkSession, sf_dir: str) -> DataFrame:
     each bank. Texts synthesized per key cover multi-candidate pick-max,
     value-before-label captures, the IVA-rate-token-as-cuota quirk, the
     out-of-range tipo filter, and all-defaults."""
-    # fanned out at every scale, not behind _fan_post's byte gate: the
+    # fanned out at every scale, not behind table_scan's fan gate: the
     # filter keeps a constant ~5k rows, and the three amount banks cost
     # ~3x the other banks per row. Round-8 A/B at sf0.1 (interleaved, min
     # of 3): fanned/unfanned 0.63 here; f1 1.54, f2 1.40, f8 1.74, f11
@@ -1848,10 +1823,7 @@ def f4_f6_amount_banks(spark: SparkSession, sf_dir: str) -> DataFrame:
         parsed = F.filter(
             F.transform(
                 cands,
-                lambda c: F.floor(
-                    F.translate(c, ",", ".").try_cast("double") * 100 + F.lit(0.5)
-                )
-                / 100,
+                lambda c: _r(F.translate(c, ",", ".").try_cast("double")),
             ),
             lambda v: v > 0,
         )
@@ -1907,7 +1879,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup via content hash (hash-groupBy): md5 of normalized text;
     emit duplicate-group stats. The normalized md5 doubles as the document
     fingerprint operator."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = _t(spark, sf_dir, "documents", fan_key="doc_id")
     fp = F.md5(F.lower(F.regexp_replace(F.coalesce("text", F.lit("")), r"\s+", " ")))
     groups = (
         docs.select(fp.alias("fingerprint"))
@@ -2029,7 +2001,7 @@ def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     string, then integer-exact stats per event_type. get_json_object is
     JVM-side (Jackson); at scale this is a map stage fused into the scan —
     no UDF, no shuffle beyond the final per-type aggregation."""
-    ev = _t_fan(spark, sf_dir, "events", "event_id")
+    ev = _t(spark, sf_dir, "events", fan_key="event_id")
     k = F.get_json_object("props", "$.k").cast("long")
     return (
         ev.select("event_type", k.alias("k"))

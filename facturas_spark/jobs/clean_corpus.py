@@ -104,8 +104,9 @@ def main(argv: list[str] | None = None) -> int:
         "--iceberg-table",
         default=None,
         help="ALSO write the cleaned corpus to this Iceberg table "
-        "(catalog.db.table) via overwritePartitions — idempotent like "
-        "the parquet stages; requires the iceberg-spark-runtime jar "
+        "(catalog.db.table) via createOrReplace — idempotent like "
+        "the parquet stages, and written before the clean stage's marker "
+        "commits; requires the iceberg-spark-runtime jar "
         "(skipped with a warning when absent, parquet output stands)",
     )
     args = parser.parse_args(argv)
@@ -183,10 +184,10 @@ def main(argv: list[str] | None = None) -> int:
         clean_path = os.path.join(args.output, "clean")
         cleaned_corpus(flags_df).write.mode("overwrite").parquet(clean_path)
         rows = spark.read.parquet(clean_path).count()
-        manifest.write_json("stage=clean.json", {"stage": "clean", "rows": rows})
-        result["stages"]["clean"] = {
-            "rows": rows, "sec": round(time.perf_counter() - t_stage, 2)
-        }
+        iceberg = {}
+        # the Iceberg copy belongs to the stage: written before the marker
+        # commits, so a failed write leaves the stage open and a rerun
+        # retries it instead of skipping it
         if args.iceberg_table:
             from facturas_spark.sources.iceberg import iceberg_available
 
@@ -194,13 +195,17 @@ def main(argv: list[str] | None = None) -> int:
                 spark.read.parquet(clean_path).writeTo(
                     args.iceberg_table
                 ).createOrReplace()
-                result["stages"]["clean"]["iceberg_table"] = args.iceberg_table
+                iceberg = {"iceberg_table": args.iceberg_table}
             else:
                 print(
                     "WARN: no Iceberg runtime on the classpath; cleaned "
                     "corpus written to parquet only",
                     file=sys.stderr,
                 )
+        manifest.write_json("stage=clean.json", {"stage": "clean", "rows": rows})
+        result["stages"]["clean"] = {
+            "rows": rows, "sec": round(time.perf_counter() - t_stage, 2), **iceberg
+        }
 
     if "stats" not in done:
         t_stage = time.perf_counter()

@@ -118,6 +118,57 @@ def test_clean_job_stage_resume(spark, tmp_path):
     assert r3["stages"]["stats"]["funnel"] == funnel1  # derived from flags parquet
 
 
+def test_clean_job_iceberg_failure_leaves_stage_open(spark, tmp_path, monkeypatch):
+    """A failing --iceberg-table write must not leave the clean stage
+    committed: its marker is written after the Iceberg copy, so a rerun
+    redoes the stage and retries the table write."""
+    import contextlib
+    import io as _io
+    import json
+
+    from facturas_spark.jobs.clean_corpus import main
+    from facturas_spark.sources import iceberg
+
+    docs_path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(0, "the quick brown fox and the lazy dog", "en", "s0", 0)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(docs_path)
+    out = tmp_path / "out"
+    argv = ["--input", docs_path, "--output", str(out),
+            "--iceberg-table", "lake.db.clean"]
+    monkeypatch.setattr(iceberg, "iceberg_available", lambda spark, cat: True)
+    written = []
+    frame_cls = type(spark.range(1))
+
+    class _Writer:
+        def __init__(self, table, fail):
+            self.table, self.fail = table, fail
+
+        def createOrReplace(self):
+            if self.fail:
+                raise RuntimeError("iceberg write failed")
+            written.append(self.table)
+
+    monkeypatch.setattr(frame_cls, "writeTo", lambda df, t: _Writer(t, True))
+    with contextlib.redirect_stdout(_io.StringIO()):
+        with pytest.raises(RuntimeError, match="iceberg write failed"):
+            main(argv)
+    markers = sorted(p.name for p in (out / "_manifest").iterdir())
+    assert "stage=flags.json" in markers
+    assert "stage=clean.json" not in markers
+
+    monkeypatch.setattr(frame_cls, "writeTo", lambda df, t: _Writer(t, False))
+    buf = _io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        assert main(argv) == 0
+    r = json.loads(buf.getvalue().strip().splitlines()[-1])
+    assert r["skipped"] == ["flags"]
+    assert r["stages"]["clean"]["iceberg_table"] == "lake.db.clean"
+    assert written == ["lake.db.clean"]
+    assert (out / "_manifest" / "stage=clean.json").exists()
+
+
 def test_clean_job_frees_its_scratch(spark, tmp_path):
     """Two clean-job runs in one session leave no persistent RDD and no
     loose-ledger entry behind: every frame the flag stage persists or

@@ -4,19 +4,22 @@
    higher-order-function fold it replaced (same left-to-right addition
    order from 0.0, same per-element double casts) — exact equality, no
    tolerance, including the short-vector fallback branch.
-2. The scan fan-out gate (`_fan_needed` / `_t_fan`) is adaptive in both
-   directions: tiny tables are never repartitioned (the sf0.1 regression
-   class), fan-worthy tables repartition to session parallelism, and the
-   decision is memoized per (session, sf, table).
+2. The scan fan-out gate (`cache.table_scan(..., fan_key=K)`) is
+   adaptive in both directions: tiny tables are never repartitioned (the
+   sf0.1 regression class), fan-worthy tables repartition to session
+   parallelism, and the decision is memoized in the table's scan-memo
+   entry, so a rewrite or a stopped session drops it with the scan.
 """
 
 from __future__ import annotations
 
+import hashlib
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
+from facturas_spark.analytics import cache as C
 from facturas_spark.analytics import dedup as D
 
 SF = "/root/testdata/sf0.001"
@@ -81,80 +84,125 @@ def test_unrolled_dot_norm_match_fold_on_exact_width(spark):
         assert r["fast"] == r["fold"]
 
 
+@pytest.fixture
+def fresh_scan_memo():
+    """The fan decision lives in the scan memo: drop it before and after a
+    test that moves FAN_MIN_BYTES, so no later test sees its decisions."""
+    C._SCAN_MEMO.clear()
+    yield
+    C._SCAN_MEMO.clear()
+
+
+def _fan(spark, sf_dir, name, key):
+    """The fan decision a ``fan_key`` read of ``name`` leaves in the memo."""
+    C.table_scan(spark, sf_dir, name, fan_key=key)
+    app = spark.sparkContext.applicationId
+    return C._SCAN_MEMO[(app, f"{sf_dir}/{name}.parquet")][2]
+
+
+@pytest.mark.usefixtures("fresh_scan_memo")
 def test_fan_gate_never_fans_tiny_tables(spark):
-    D._FAN_MEMO.clear()
     # sf0.001 documents is a few hundred KB — far under FAN_MIN_BYTES
-    assert not D._fan_needed(spark, SF, "documents")
-    df = D._t_fan(spark, SF, "documents", "doc_id")
-    plain = D._t(spark, SF, "documents")
-    # no repartition node: same partitioning as the raw scan
-    assert df.rdd.getNumPartitions() == plain.rdd.getNumPartitions()
+    df = C.table_scan(spark, SF, "documents", fan_key="doc_id")
+    plain = C.table_scan(spark, SF, "documents")
+    assert df is plain  # no repartition node: the memoized scan itself
+    assert _fan(spark, SF, "documents", "doc_id") is False
 
 
+@pytest.mark.usefixtures("fresh_scan_memo")
 def test_fan_gate_fans_when_size_floor_cleared(spark, monkeypatch):
-    monkeypatch.setattr(D, "FAN_MIN_BYTES", 0)
-    D._FAN_MEMO.clear()
-    try:
-        assert D._fan_needed(spark, SF, "documents")
-        df = D._t_fan(spark, SF, "documents", "doc_id")
-        assert (
-            df.rdd.getNumPartitions()
-            == spark.sparkContext.defaultParallelism
-        )
-        # memoized: second call answers from the cache (poke the memo)
-        key = (spark.sparkContext.applicationId, SF, "documents")
-        assert D._FAN_MEMO[key] is True
-    finally:
-        D._FAN_MEMO.clear()
+    monkeypatch.setattr(C, "FAN_MIN_BYTES", 0)
+    df = C.table_scan(spark, SF, "documents", fan_key="doc_id")
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    # memoized with the scan: the entry holds the decision
+    assert _fan(spark, SF, "documents", "doc_id") is True
 
 
-def test_table_bytes_recurses_partition_dirs(tmp_path):
+@pytest.mark.usefixtures("fresh_scan_memo")
+def test_fan_gate_counts_nested_partition_bytes(spark, tmp_path, monkeypatch):
     """Hive-partitioned datasets nest files under partition dirs — the
     size gate must count them, not the ~4KB dir inodes."""
-    root = tmp_path / "t.parquet" / "lang=es"
-    root.mkdir(parents=True)
-    (root / "part-0.parquet").write_bytes(b"x" * 10_000)
-    (tmp_path / "t.parquet" / "part-1.parquet").write_bytes(b"y" * 5_000)
-    assert D._table_bytes(str(tmp_path), "t") == 15_000
+    import os
+
+    p = str(tmp_path)
+    top = f"{p}/t.parquet"
+    rows = [(i, i % 2) for i in range(200)]
+    df = spark.createDataFrame(rows, "doc_id long, k int").coalesce(1)
+    df.write.partitionBy("k").parquet(top)
+    assert all(not f.endswith(".parquet") for f in os.listdir(top))
+    total = sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _dirs, files in os.walk(top)
+        for f in files
+    )
+    monkeypatch.setattr(C, "FAN_MIN_BYTES", total)
+    assert _fan(spark, p, "t", "doc_id") is True
+    C._SCAN_MEMO.clear()
+    monkeypatch.setattr(C, "FAN_MIN_BYTES", total + 1)
+    assert _fan(spark, p, "t", "doc_id") is False
 
 
 def test_effective_parallelism_caps_by_row_groups(spark):
     """A single-row-group file can plan multiple splits but only one
     task gets rows — the gate must see effective parallelism 1."""
-    eff = D._scan_effective_parallelism(spark, SF, "documents")
+    path = f"{SF}/documents.parquet"
+    listing = C._listing_fingerprint(path)
+    df = C.table_scan(spark, SF, "documents")
+    cores = spark.sparkContext.defaultParallelism
+    eff = C._scan_parallelism(df, path, listing, cores)
     assert eff == 1  # sf0.001 documents: one file, one row group
 
 
+@pytest.mark.usefixtures("fresh_scan_memo")
+def test_fan_decision_follows_table_rewrite(spark, tmp_path, monkeypatch):
+    """The decision is taken from the listing the memo entry holds: a
+    rewrite that carries the table across the floor in the same session
+    changes it (a per-session decision memo would keep the stale one)."""
+    p = str(tmp_path)
+    small = spark.createDataFrame([(1, "a")], "doc_id long, text string")
+    small.coalesce(1).write.parquet(f"{p}/t.parquet")
+    small_bytes = sum(s for _r, s, _m in C._listing_fingerprint(f"{p}/t.parquet"))
+    monkeypatch.setattr(C, "FAN_MIN_BYTES", small_bytes + 2000)
+    assert _fan(spark, p, "t", "doc_id") is False
+
+    big = spark.createDataFrame(
+        [(i, hashlib.md5(str(i).encode()).hexdigest()) for i in range(500)],
+        "doc_id long, text string",
+    )
+    big.coalesce(1).write.mode("overwrite").parquet(f"{p}/t.parquet")
+    listing = C._listing_fingerprint(f"{p}/t.parquet")
+    assert sum(s for _r, s, _m in listing) >= C.FAN_MIN_BYTES
+    assert _fan(spark, p, "t", "doc_id") is True
+    df = C.table_scan(spark, p, "t", fan_key="doc_id")
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert df.count() == 500
+
+
+@pytest.mark.usefixtures("fresh_scan_memo")
 def test_fan_is_result_invariant(spark, monkeypatch):
     """Forcing the fan on must not change any query's rows — only the
     physical partitioning. Checked on dedup_url_normalize, whose
     min-over-window keep flag runs on the fanned documents scan."""
     base = [tuple(r) for r in D.dedup_url_normalize(spark, SF).collect()]
-    monkeypatch.setattr(D, "FAN_MIN_BYTES", 0)
-    D._FAN_MEMO.clear()
-    try:
-        fanned = [tuple(r) for r in D.dedup_url_normalize(spark, SF).collect()]
-    finally:
-        D._FAN_MEMO.clear()
+    monkeypatch.setattr(C, "FAN_MIN_BYTES", 0)
+    C._SCAN_MEMO.clear()
+    fanned = [tuple(r) for r in D.dedup_url_normalize(spark, SF).collect()]
     assert base == fanned
 
 
-def test_fan_post_force_is_result_invariant(spark):
+@pytest.mark.usefixtures("fresh_scan_memo")
+def test_f4_f6_forces_its_fan(spark):
     """f4_f6_amount_banks fans its bank rows out whatever the scan fan
     gate says, and still returns its rows."""
     from facturas_spark.analytics.queries import f4_f6_amount_banks
 
-    key = (spark.sparkContext.applicationId, SF, "orders")
-    D._FAN_MEMO[key] = False
-    try:
-        df = f4_f6_amount_banks(spark, SF)
-        # the fan ignores the (False-seeded) gate: the bank rows pass
-        # through a hash repartition before the battery
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "RepartitionByExpression" in plan, plan
-        assert len(df.collect()) > 0
-    finally:
-        D._FAN_MEMO.pop(key, None)
+    # sf0.001 orders is under the floor: the gate says no
+    assert _fan(spark, SF, "orders", "o_orderkey") is False
+    df = f4_f6_amount_banks(spark, SF)
+    # the bank rows pass through a hash repartition before the battery
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "RepartitionByExpression" in plan, plan
+    assert len(df.collect()) > 0
 
 
 def test_table_scan_memo_and_mtime_invalidation(spark, tmp_path):
@@ -229,10 +277,26 @@ def test_table_scan_memo_prunes_stopped_sessions(spark, tmp_path):
     p = str(tmp_path)
     spark.createDataFrame([(1,)], "x long").write.parquet(f"{p}/t.parquet")
     foreign = ("local-stopped-app", f"{p}/t.parquet")
-    cache._SCAN_MEMO[foreign] = ((), None)
+    cache._SCAN_MEMO[foreign] = ((), None, None)
     try:
         cache.table_scan(spark, p, "t")
         assert foreign not in cache._SCAN_MEMO
         assert (spark.sparkContext.applicationId, f"{p}/t.parquet") in cache._SCAN_MEMO
     finally:
         cache._SCAN_MEMO.pop(foreign, None)
+
+
+def test_stopped_session_fan_decision_is_pruned(spark, tmp_path):
+    """A stopped session's fan decision goes with its scan entry: the
+    next insert drops it, so no decision outlives its session."""
+    p = str(tmp_path)
+    spark.createDataFrame([(1,)], "x long").write.parquet(f"{p}/t.parquet")
+    foreign = ("local-stopped-app", f"{SF}/documents.parquet")
+    C._SCAN_MEMO[foreign] = ((), None, True)
+    try:
+        assert C.table_scan(spark, p, "t", fan_key="x") is C.table_scan(spark, p, "t")
+        assert foreign not in C._SCAN_MEMO
+        own = C._SCAN_MEMO[(spark.sparkContext.applicationId, f"{p}/t.parquet")]
+        assert own[2] is False
+    finally:
+        C._SCAN_MEMO.pop(foreign, None)
