@@ -28,8 +28,9 @@ re-expressed over the full ``documents`` table with no demo bounds:
 Scale shape: stages 0-5 are map stages + two keyed shuffles (the
 repetition n-gram counts and the fingerprint window); stage 6 is the
 banded candidate join (never all-pairs) + the iterative component loop;
-7 is one shuffle on source; 8's global window runs per-shard at cluster
-scale (``per_doc_flags(pack_shards=N)`` is the same expression). Decision
+7 is one shuffle on source; 8 is a running sum split into
+defaultParallelism contiguous doc_id ranges, each offset by the token
+total of the ranges before it (the global sum's exact values). Decision
 thresholds compare UNROUNDED integer ratios — both engines evaluate the
 identical IEEE division, so the DuckDB funnel twin matches exactly.
 
@@ -41,11 +42,11 @@ stage-granular manifest resume on top.
 
 from __future__ import annotations
 
+from itertools import accumulate
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-import os
 
 from facturas_spark.analytics.cache import scratch_persist
 from facturas_spark.analytics.cache import table_scan as _t
@@ -396,14 +397,12 @@ def per_doc_flags(
     docs: DataFrame,
     quota_k: int = QUOTA_K,
     pack_budget: int = PACK_BUDGET,
-    pack_shards: int | None = None,
     semantic_tau: float | None = None,
 ) -> DataFrame:
     """One row per input doc with cumulative stage-survival flags
     (s0..s7), the scrubbed text, PII span counts, and pack assignment.
     Columns: doc_id, source, s0..s3, n_red, s5, s6, sem_drop, s7,
-    scrubbed, tokens, pack_shard, pack_id (packing cols only for final
-    survivors; pack_shard null in the global-window default).
+    scrubbed, tokens, pack_id (packing cols only for final survivors).
 
     ``semantic_tau`` switches on the SemDeDup stage (Abbas et al. 2023):
     among near-dup (s6) survivors, docs whose hash-embedding cosine with
@@ -498,31 +497,32 @@ def per_doc_flags(
         "s7", F.col("s6") & F.coalesce("quota_keep", F.lit(False))
     ))
 
-    # stage 8: token-budget packing of the final survivors. Global
-    # running sum by default (the oracle-checkable core); pack_shards
-    # partitions the window by doc_id % N so the cumsum never
-    # crosses executors at cluster scale (same expression, pack identity
-    # becomes (pack_shard, pack_id))
+    # stage 8: token-budget packing of the final survivors: pack_id =
+    # floor(tokens before the doc in doc_id order / budget). That running
+    # sum splits exactly over contiguous doc_id ranges (Blelloch 1990):
+    # each range's window sum plus the total of the ranges before it. The
+    # ranges come from one thin min/max, so a doc's shard is a pure
+    # function of doc_id and a recomputed stage sees the same shards.
     surv = f4.filter(F.col("s7")).select(
         "doc_id", F.size(_words(F.col("scrubbed"))).alias("tokens")
+    ).transform(scratch_persist)
+    lo, hi = surv.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
+    n = docs.sparkSession.sparkContext.defaultParallelism  # table_scan's fan-out
+    width = -(-(hi - lo + 1) // n) if lo is not None else 1  # None: no survivor
+    shard = F.expr(f"CAST((doc_id - {lo or 0}) div {width} AS INT)")
+    totals = dict(surv.groupBy(shard.alias("_shard")).agg(F.sum("tokens")).collect())
+    offsets = accumulate((totals.get(i) or 0 for i in range(n - 1)), initial=0)
+    offset = F.array(*[F.lit(o).cast("bigint") for o in offsets])
+    pw = Window.partitionBy("_shard").orderBy("doc_id")
+    before = (
+        F.element_at(offset, F.col("_shard") + 1)
+        + F.sum("tokens").over(pw.rowsBetween(Window.unboundedPreceding, 0))
+        - F.col("tokens")
     )
-    if pack_shards is None:
-        pw = Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, 0)
-        surv = surv.withColumn("pack_shard", F.lit(None).cast("bigint"))
-    else:
-        surv = surv.withColumn(
-            "pack_shard", F.pmod(F.col("doc_id"), F.lit(pack_shards))
-        )
-        pw = (
-            Window.partitionBy("pack_shard")
-            .orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-    packs = surv.withColumn(
-        "pack_id",
-        F.floor((F.sum("tokens").over(pw) - F.col("tokens")) / pack_budget).cast(
-            "bigint"
-        ),
+    packs = surv.withColumn("_shard", shard).select(
+        "doc_id",
+        "tokens",
+        F.floor(before / pack_budget).cast("bigint").alias("pack_id"),
     )
     return f4.join(packs, "doc_id", "left").select(
         "doc_id",
@@ -538,7 +538,6 @@ def per_doc_flags(
         "s7",
         "scrubbed",
         "tokens",
-        "pack_shard",
         "pack_id",
     )
 
@@ -559,15 +558,7 @@ def clean_funnel(flags: DataFrame) -> DataFrame:
         i64("s5").alias("c5"),
         i64("s6").alias("c6"),
         i64("s7").alias("c7"),
-        F.count_distinct(
-            F.when(
-                F.col("s7"),
-                F.struct(
-                    F.coalesce(F.col("pack_shard"), F.lit(-1)).alias("sh"),
-                    F.col("pack_id").alias("p"),
-                ),
-            )
-        ).alias("packs"),
+        F.count_distinct(F.when(F.col("s7"), F.col("pack_id"))).alias("packs"),
     )
     rows = [
         ("0_nonempty", "total", "c0", None),
@@ -611,7 +602,6 @@ def cleaned_corpus(flags: DataFrame) -> DataFrame:
             "source",
             F.col("scrubbed").alias("text"),
             "tokens",
-            "pack_shard",
             "pack_id",
         )
         .orderBy("doc_id")
@@ -660,8 +650,8 @@ def with_synth_pii(docs: DataFrame) -> DataFrame:
     PII-free, which would leave the
     scrub stage a wall of zeros; injecting email/phone/IP shapes on
     doc_id % 7/11/13 gives the scrub + count expressions real positive
-    AND negative signal. Applied by the STATS query only — the
-    production job runs the pure corpus."""
+    AND negative signal. Applied by the stats query and by the clean
+    job's ``--synth-pii`` (which perfbench's clean probe passes)."""
     did = F.col("doc_id")
     t = F.concat(
         F.coalesce(F.col("text"), F.lit("")),

@@ -8,7 +8,7 @@ Usage (cluster or local):
         --py-files facturas_spark.zip \\
         facturas_spark/jobs/clean_corpus.py \\
         --input /data/documents_parquet --output /data/clean \\
-        [--quota-k 15] [--pack-budget 512] [--pack-shards 64] [--cores 32] \\
+        [--quota-k 15] [--pack-budget 512] [--cores 32] \\
         [--benchmark /data/eval_set_parquet]
 
 The driver's memory and Java options go to spark-submit itself, as in
@@ -36,16 +36,12 @@ extraction job uses (object-store-safe; ``sources/fs.py``):
              recorded in the manifest entry (the job's metrics).
 
 A re-run skips committed stages (idempotent: each stage overwrites its
-own directory before its marker commits). Cluster sizing notes mirror
-extract_job.py: shuffle partitions ~2-3x cores (the chain shuffles on
-(doc_id, gram), fingerprint, band key, source) and AQE on for skew.
-
-Pass ``--pack-shards N`` on any corpus that does not fit one task.
-Without it, stage 8 (token-budget packing) is a running sum over the
-whole surviving corpus in doc_id order, which Spark runs through ONE
-task (it logs ``No Partition Defined for Window operation! Moving all
-data to a single partition``). With it, the running sum restarts in each
-of N shards, and pack identity becomes (pack_shard, pack_id).
+own directory before its marker commits); the first run pins the
+arguments the flags depend on, and a rerun with other values exits 2,
+since its skipped stages would stand on the old flags. Cluster sizing
+notes mirror extract_job.py: shuffle partitions ~2-3x cores (the chain
+shuffles on (doc_id, gram), fingerprint, band key, source) and AQE on
+for skew.
 """
 
 from __future__ import annotations
@@ -60,6 +56,24 @@ _ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__
 if _ROOT not in sys.path:
     sys.path.insert(0, _ROOT)
 
+# the arguments that decide the flags (--cores and --iceberg-table do not)
+_PINNED = ("input", "quota_k", "pack_budget", "synth_pii", "semantic_dedup", "benchmark")
+
+
+def _pin_args(manifest, names: list[str], args) -> str | None:
+    """Record the pinned arguments in ``args.json`` on the first run; on a
+    rerun return why it must not resume, or None when they match."""
+    pinned = {k: getattr(args, k) for k in _PINNED}
+    if "args.json" in names:
+        old = manifest.read_json("args.json")
+        differ = [f"--{k.replace('_', '-')} {old.get(k)!r} (now {v!r})"
+                  for k, v in pinned.items() if old.get(k) != v]
+        return "written with other arguments: " + ", ".join(differ) if differ else None
+    if any(n.startswith("stage=") for n in names):
+        return "committed stages but no pinned arguments"
+    manifest.write_json("args.json", pinned)
+    return None
+
 
 def main(argv: list[str] | None = None) -> int:
     parser = argparse.ArgumentParser(description=__doc__)
@@ -67,14 +81,6 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("--output", required=True, help="output dir")
     parser.add_argument("--quota-k", type=int, default=15)
     parser.add_argument("--pack-budget", type=int, default=512)
-    parser.add_argument(
-        "--pack-shards",
-        type=int,
-        default=None,
-        help="shard the packing window by doc_id %% N; pack identity becomes "
-        "(pack_shard, pack_id). Without it the packing stage runs the "
-        "whole surviving corpus through one task",
-    )
     parser.add_argument("--cores", type=int, default=None, help="local-mode cores")
     parser.add_argument(
         "--synth-pii",
@@ -124,9 +130,14 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark("facturas-clean-corpus", cores=args.cores)
     manifest = CommitFS(os.path.join(args.output, "_manifest"), spark=spark)
+    names = manifest.list_names()
+    refused = _pin_args(manifest, names, args)
+    if refused:
+        print(f"{args.output}: {refused}; refusing to resume", file=sys.stderr)
+        return 2
     done = {
         n[len("stage="):-len(".json")]
-        for n in manifest.list_names()
+        for n in names
         if n.startswith("stage=") and n.endswith(".json")
     }
     result: dict = {"skipped": sorted(done), "stages": {}}
@@ -156,7 +167,6 @@ def main(argv: list[str] | None = None) -> int:
                 docs,
                 quota_k=args.quota_k,
                 pack_budget=args.pack_budget,
-                pack_shards=args.pack_shards,
                 semantic_tau=args.semantic_dedup,
             )
             flags.write.mode("overwrite").parquet(flags_path)

@@ -35,6 +35,7 @@ Score algebra citations:
 from __future__ import annotations
 
 from datetime import date
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -55,38 +56,32 @@ def _clamp01(c):
     return F.greatest(F.lit(0.0), F.least(F.lit(1.0), c))
 
 
-def _score_m8(f_fecha, a_fecha, f_total, a_total):
-    dias = F.abs(F.datediff(f_fecha, a_fecha))
-    date_adj = (
-        F.when(dias <= 7, 0.1)
-        .when(dias <= 15, 0.05)
-        .when(dias <= 30, 0.02)
-        .otherwise(-0.1)
-    )
-    pct = F.abs(f_total - a_total) / f_total * 100
-    amt_adj = (
-        F.when(pct <= 5, 0.1).when(pct <= 10, 0.05).when(pct <= 20, 0.02).otherwise(-0.15)
-    )
+def _bracket_score(base, day_brackets, pct_brackets, f_fecha, a_fecha, f_total, a_total):
+    """``base`` plus a day-gap and an amount-percentage adjustment,
+    clamped to [0, 1]. Each bracket table is ((limit, adj), ...) taken in
+    order; past its last limit the day gap costs 0.1 and the amount 0.15."""
+
+    def bracket(x, table, past):
+        c = F  # F.when opens the CASE, Column.when extends it
+        for lim, adj in table:
+            c = c.when(x <= lim, adj)
+        return c.otherwise(past)
+
+    date_adj = bracket(F.abs(F.datediff(f_fecha, a_fecha)), day_brackets, -0.1)
+    amt_adj = bracket(F.abs(f_total - a_total) / f_total * 100, pct_brackets, -0.15)
     # reference guards: adjustments only apply when both values present
     date_adj = F.when(f_fecha.isNotNull() & a_fecha.isNotNull(), date_adj).otherwise(0.0)
     amt_adj = F.when(
         f_total.isNotNull() & (f_total != 0) & a_total.isNotNull() & (a_total != 0),
         amt_adj,
     ).otherwise(0.0)
-    return _clamp01(F.lit(0.85) + date_adj + amt_adj)
+    return _clamp01(F.lit(base) + date_adj + amt_adj)
 
 
-def _score_m9(f_fecha, a_fecha, f_total, a_total):
-    dias = F.abs(F.datediff(f_fecha, a_fecha))
-    date_adj = F.when(dias <= 30, 0.1).when(dias <= 60, 0.05).otherwise(-0.1)
-    pct = F.abs(f_total - a_total) / f_total * 100
-    amt_adj = F.when(pct <= 10, 0.1).when(pct <= 25, 0.05).otherwise(-0.15)
-    date_adj = F.when(f_fecha.isNotNull() & a_fecha.isNotNull(), date_adj).otherwise(0.0)
-    amt_adj = F.when(
-        f_total.isNotNull() & (f_total != 0) & a_total.isNotNull() & (a_total != 0),
-        amt_adj,
-    ).otherwise(0.0)
-    return _clamp01(F.lit(0.4) + date_adj + amt_adj)
+# M8 temporal and M9 last-chance scores of (f_fecha, a_fecha, f_total, a_total)
+_score_m8 = partial(_bracket_score, 0.85, ((7, 0.1), (15, 0.05), (30, 0.02)),
+                    ((5, 0.1), (10, 0.05), (20, 0.02)))
+_score_m9 = partial(_bracket_score, 0.4, ((30, 0.1), (60, 0.05)), ((10, 0.1), (25, 0.05)))
 
 
 _ALB_REF_PATTERNS = [

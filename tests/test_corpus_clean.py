@@ -118,6 +118,43 @@ def test_clean_job_stage_resume(spark, tmp_path):
     assert r3["stages"]["stats"]["funnel"] == funnel1  # derived from flags parquet
 
 
+def test_clean_job_refuses_other_arguments(spark, tmp_path):
+    """A rerun must not resume from flags other arguments made: the first
+    run pins the flag-deciding arguments, a rerun with another --quota-k
+    exits 2 naming it, and a manifest with stage markers but no pinned
+    arguments is refused too. --cores is not pinned."""
+    import contextlib
+    import io as _io
+
+    from facturas_spark.jobs.clean_corpus import main
+
+    docs = str(tmp_path / "docs")
+    spark.read.parquet(f"{SF}/documents.parquet").write.parquet(docs)
+    out = tmp_path / "out"
+    argv = ["--input", docs, "--output", str(out), "--synth-pii"]
+
+    def run(*extra):
+        err = _io.StringIO()
+        with contextlib.redirect_stdout(_io.StringIO()), contextlib.redirect_stderr(err):
+            rc = main(argv + list(extra))
+        return rc, err.getvalue()
+
+    assert run("--quota-k", "15")[0] == 0
+    manifest = out / "_manifest"
+    for stage in ("clean", "stats"):
+        (manifest / f"stage={stage}.json").unlink()
+    rc, err = run("--quota-k", "3")
+    assert rc == 2 and "--quota-k 15 (now 3)" in err
+    assert not (manifest / "stage=clean.json").exists()
+
+    assert run("--quota-k", "15", "--cores", "2")[0] == 0
+    assert (manifest / "stage=stats.json").exists()
+
+    (manifest / "args.json").unlink()
+    rc, err = run("--quota-k", "15")
+    assert rc == 2 and "no pinned arguments" in err
+
+
 def test_clean_job_iceberg_failure_leaves_stage_open(spark, tmp_path, monkeypatch):
     """A failing --iceberg-table write must not leave the clean stage
     committed: its marker is written after the Iceberg copy, so a rerun
@@ -199,25 +236,75 @@ def test_clean_job_frees_its_scratch(spark, tmp_path):
         assert len(cache._LOOSE_FRAMES) == loose_frames
 
 
-def test_sharded_packing_variant(spark):
-    """pack_shards=N: identical survivors, per-shard budget respected,
-    every doc keeps its pack assignment within its own shard."""
-    from pyspark.sql import functions as F
+def _global_window_packs(flags, budget: int) -> dict:
+    """The reference packing: one running sum over every survivor in
+    doc_id order (a single-partition window)."""
+    from pyspark.sql.window import Window
 
-    docs = with_synth_pii(spark.read.parquet(f"{SF}/documents.parquet"))
-    sharded = per_doc_flags(docs, pack_shards=4).localCheckpoint(eager=True)
-    survivors = sharded.filter("s7")
-    glob = per_doc_flags(docs).localCheckpoint(eager=True)
-    assert survivors.count() == glob.filter("s7").count()
-    rows = survivors.select("doc_id", "tokens", "pack_shard", "pack_id").collect()
-    assert all(r.pack_shard == r.doc_id % 4 for r in rows)
-    # per (shard, pack): running-sum packing invariant — removing the last
-    # doc of a pack brings it under budget
-    by_pack: dict = {}
-    for r in sorted(rows, key=lambda r: r.doc_id):
-        by_pack.setdefault((r.pack_shard, r.pack_id), []).append(r.tokens)
-    for toks in by_pack.values():
-        assert sum(toks[:-1]) < 512
+    w = Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, 0)
+    ref = flags.filter("s7").select(
+        "doc_id",
+        F.floor((F.sum("tokens").over(w) - F.col("tokens")) / budget)
+        .cast("bigint")
+        .alias("pack_id"),
+    )
+    return {r.doc_id: r.pack_id for r in ref.collect()}
+
+
+def _packs(flags) -> dict:
+    return {r.doc_id: r.pack_id for r in flags.filter("s7").collect()}
+
+
+def _doc(i: int, n_words: int) -> str:
+    # distinct words (no exact or near duplicate, no repeated n-gram) with
+    # enough stopwords for the gopher rule
+    return " ".join(
+        ("the", "of", "and", "in")[j % 4] if j % 3 == 0 else f"w{i}x{j}"
+        for j in range(n_words)
+    )
+
+
+def test_packing_matches_global_window(spark, flags):
+    """Stage 8's sharded running sum gives every survivor the pack id of
+    the global doc_id-ordered window: on the sf0.001 corpus, and on sparse,
+    clustered doc_ids whose packs straddle shard boundaries, a single
+    survivor and no survivor."""
+    assert flags.columns == [
+        "doc_id", "source", "s0", "s1", "s2", "s3", "n_red", "s5", "s6",
+        "sem_drop", "s7", "scrubbed", "tokens", "pack_id",
+    ]
+    assert flags.filter("s7").count() > 0
+    assert _packs(flags) == _global_window_packs(flags, 512)
+
+    ids = (
+        [-7, -6, *range(12), *range(10**6, 10**6 + 12)]
+        + [10**9 + 7 * k for k in range(6)]
+    )
+    rows = [(d, f"s{k % 3}", "en", _doc(k, 12 + (k * 7) % 13)) for k, d in enumerate(ids)]
+    schema = "doc_id long, source string, lang string, text string"
+    sparse = per_doc_flags(
+        spark.createDataFrame(rows, schema), quota_k=100, pack_budget=40
+    ).localCheckpoint(eager=True)
+    got = _packs(sparse)
+    assert sorted(got) == ids  # every doc survives
+    assert got == _global_window_packs(sparse, 40)
+    # the case the offsets exist for: a pack holding docs of two shards
+    n = spark.sparkContext.defaultParallelism
+    width = -(-(max(ids) - min(ids) + 1) // n)
+    shards: dict = {}
+    for d, p in got.items():
+        shards.setdefault(p, set()).add((d - min(ids)) // width)
+    assert any(len(s) > 1 for s in shards.values())
+
+    one = per_doc_flags(
+        spark.createDataFrame([(5, "s0", "en", _doc(0, 20))], schema)
+    ).collect()
+    assert [(r.doc_id, r.s7, r.pack_id) for r in one] == [(5, True, 0)]
+
+    none = per_doc_flags(
+        spark.createDataFrame([(1, "s0", "en", ""), (2, "s0", "en", "x")], schema)
+    ).collect()
+    assert [(r.s7, r.pack_id) for r in none] == [(False, None)] * 2
 
 
 def test_clean_job_decontamination(spark, tmp_path):

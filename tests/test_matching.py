@@ -116,6 +116,33 @@ def _mk_corpus(spark):
     return facturas, albaranes
 
 
+def test_score_expressions_unchanged(spark):
+    """The M8/M9 scores built by the one bracket helper are the exact
+    expressions each score wrote out by hand."""
+    from facturas_spark.matching.cotejo import _score_m8, _score_m9
+
+    cols = [F.col(c) for c in "abcd"]
+    assert str(_score_m8(*cols)._jc) == (
+        'greatest(0.0, least(1.0, +(+(0.85, CASE WHEN and(isNotNull(a), '
+        'isNotNull(b)) THEN CASE WHEN <=(abs(datediff(a, b)), 7) THEN 0.1 '
+        'WHEN <=(abs(datediff(a, b)), 15) THEN 0.05 WHEN <=(abs(datediff(a,'
+        ' b)), 30) THEN 0.02 ELSE -0.1 END ELSE 0.0 END), CASE WHEN '
+        'and(and(and(isNotNull(c), !(=(c, 0))), isNotNull(d)), !(=(d, 0))) '
+        'THEN CASE WHEN <=(*(/(abs(-(c, d)), c), 100), 5) THEN 0.1 WHEN '
+        '<=(*(/(abs(-(c, d)), c), 100), 10) THEN 0.05 WHEN <=(*(/(abs(-(c, '
+        'd)), c), 100), 20) THEN 0.02 ELSE -0.15 END ELSE 0.0 END)))'
+    )
+    assert str(_score_m9(*cols)._jc) == (
+        'greatest(0.0, least(1.0, +(+(0.4, CASE WHEN and(isNotNull(a), '
+        'isNotNull(b)) THEN CASE WHEN <=(abs(datediff(a, b)), 30) THEN 0.1 '
+        'WHEN <=(abs(datediff(a, b)), 60) THEN 0.05 ELSE -0.1 END ELSE 0.0 '
+        'END), CASE WHEN and(and(and(isNotNull(c), !(=(c, 0))), '
+        'isNotNull(d)), !(=(d, 0))) THEN CASE WHEN <=(*(/(abs(-(c, d)), c),'
+        ' 100), 10) THEN 0.1 WHEN <=(*(/(abs(-(c, d)), c), 100), 25) THEN '
+        '0.05 ELSE -0.15 END ELSE 0.0 END)))'
+    )
+
+
 def test_cotejo_methods(spark):
     from facturas_spark.matching.cotejo import cotejo_candidates, run_cotejo
 

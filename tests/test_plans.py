@@ -221,8 +221,9 @@ def test_aqe_skew_join_splits_hot_partition(spark):
 def test_clean_chain_plan_properties(spark):
     """The corpus-clean chain must keep the properties its 100 TB story
     claims: near-dup candidates only from the banded equi-join (no
-    cartesian/nested-loop anywhere in the flag frame's plan) and no
-    Python eval nodes (every stage is built-ins)."""
+    cartesian/nested-loop anywhere in the flag frame's plan), no Python
+    eval nodes (every stage is built-ins) and no stage that gathers the
+    corpus into one partition (the packing running sum is sharded)."""
     from facturas_spark.analytics.corpus_clean import per_doc_flags, with_synth_pii
 
     docs = with_synth_pii(spark.read.parquet(f"{SF}/documents.parquet"))
@@ -230,6 +231,7 @@ def test_clean_chain_plan_properties(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "PythonUDF" not in plan and "ArrowEvalPython" not in plan
+    assert "Exchange SinglePartition" not in plan, plan
 
 
 def test_decontamination_broadcast_no_cartesian(spark):
