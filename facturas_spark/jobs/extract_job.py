@@ -26,9 +26,10 @@ files via the availableNow micro-batch path.
 
 Cluster sizing notes (the local defaults mirror these):
 - spark.sql.shuffle.partitions ~ 2-3x total executor cores (the extraction
-  job's one shuffle clusters the extracted rows by output bucket before the
-  write, which AQE coalesces; this mostly covers the downstream
-  aggregations).
+  job's one shuffle repartitions the extracted rows by output bucket before
+  the write; AQE merges its small partitions but never splits one, so a
+  bucket is written, and digested for the manifest, by one task; this
+  mostly covers the downstream aggregations).
 - spark.sql.files.maxPartitionBytes 128m keeps a scan task's Arrow batches
   comfortably in executor memory at ~1-4 KB/doc.
 - AQE on (skew-join + partition coalescing) for the matching/aggregation

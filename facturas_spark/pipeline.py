@@ -12,8 +12,11 @@ Scale notes (the part that matters at 10^12 docs):
 - The fused UDF is one Python eval node in one stage, pipelined with the
   projections over the same Arrow batches. Input partitioning is preserved
   from the scan; extraction itself has no shuffle. The bucketed sink
-  (``sources.io.write_bucketed``) adds one exchange after the eval, which
-  moves extracted rows, not html, and leaves one file per bucket.
+  (``sources.io.write_bucketed``) adds one exchange after the eval, a
+  repartition by bucket that moves extracted rows, not html, and leaves
+  each bucket whole in one write task: one file per bucket, and a
+  pass-through Arrow tap there takes each bucket's row count and digest
+  for the resume manifest as the rows go by.
 - Skewed hosts do not skew this stage (extraction is per-row, cost scales
   with bytes not keys). Skew matters for the downstream joins/aggregations,
   handled in analytics/matching via AQE skew-join (see matching/cotejo.py).

@@ -6,11 +6,13 @@ disk), so the module degrades
 explicitly: :func:`iceberg_available` probes the Spark session for the
 catalog plugin; the writer uses real Iceberg DDL/DataFrameWriterV2 when the
 plugin is present and otherwise raises ``IcebergUnavailable`` so callers
-fall back to :func:`facturas_spark.sources.io.write_bucketed` (the
-``xxhash64(url) %% N`` parquet layout — numerically the same bucket
-assignment Iceberg's ``bucket(N, url)`` transform produces is NOT
-guaranteed, but the *distribution property* the pipeline relies on — hot
-hosts spread uniformly because the full url is hashed — is identical).
+fall back to :func:`facturas_spark.sources.io.run_with_resume`, whose
+sink ``write_bucketed`` writes the ``xxhash64(url) %% N`` parquet layout
+and takes each bucket's manifest digest in its write stage. Numerically
+the same bucket assignment Iceberg's ``bucket(N, url)`` transform
+produces is NOT guaranteed, but the *distribution property* the pipeline
+relies on — hot hosts spread uniformly because the full url is hashed —
+is identical.
 
 Cluster deployment (documented, exercised when the jar is on the
 classpath):

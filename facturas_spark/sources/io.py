@@ -8,22 +8,26 @@
   full-url hashing breaks host skew at the storage layer). Rows are
   clustered by bucket before the write (Iceberg's ``hash``
   write-distribution), so each bucket gets one file rather than one per
-  input split.
+  input split, and the write stage returns each bucket's row count and
+  digest.
 - :class:`LineageManifest` / :func:`run_with_resume` — S6 processing-state
   machine re-expressed at partition granularity: a JSON ledger of committed
   buckets (rows + metric digest each) plus the bucket count they were
   hashed under; re-runs skip committed buckets and are idempotent. This is
   the north rule's checkpointed-lineage resume.
 
-The one exchange in the sink pays for itself. Without it every scan split
-writes its own file into every bucket it touches: splits x buckets files
-(64 for 1600 pages in 16 buckets on 4 cores), each with its own output
-stream, footer, commit rename and checksum file, and the manifest's digest
-read-back then opens all of them. The exchange moves only the extracted
-header rows (the html is gone by then, ~0.25 KB/doc), after the single
-Python eval, and leaves one file per bucket. Under AQE a rebalance, unlike
-a plain repartition, may still split an oversized bucket into files of the
-advisory partition size.
+The one exchange in the sink pays for itself twice. Without it every scan
+split writes its own file into every bucket it touches: splits x buckets
+files (64 for 1600 pages in 16 buckets on 4 cores), each with its own
+output stream, footer, commit rename and checksum file. The exchange moves
+only the extracted header rows (the html is gone by then, ~0.25 KB/doc),
+after the single Python eval. It is a plain ``repartition`` by bucket:
+AQE may merge its reducer partitions but never splits one, so each bucket
+sits whole in one write task and leaves one file. That same gather is
+all the manifest digest needs, so a pass-through tap in the write stage
+takes each bucket's row count and digest as its rows go by, and the
+manifest commits them when the write returns: a run is the write's job
+graph alone, with no second query reading back the files it just wrote.
 
 At 10^12 docs the manifest is per (bucket, snapshot) — tiny relative to
 data — and the write path is overwrite-by-partition, so a mid-job failure
@@ -32,9 +36,11 @@ leaves only uncommitted buckets to redo.
 
 from __future__ import annotations
 
+import hashlib
 import os
 from dataclasses import dataclass
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,17 +64,65 @@ def mime_from_url(url: Column) -> Column:
     )
 
 
-def write_bucketed(df: DataFrame, path: str, *, n_buckets: int) -> None:
+class _ByBucket(AccumulatorParam):
+    """Driver accumulator of ``{bucket: (rows, digest)}`` merged by key.
+
+    Spark may apply an update made in a transformation more than once
+    (a retried fetch, speculation, a recomputed stage); a duplicate here
+    carries the same deterministic value under the same key, so merging
+    by key is idempotent. A failed task attempt's update is never merged."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, acc: dict, update: dict) -> dict:
+        acc.update(update)
+        return acc
+
+
+def _bucket_digests(acc):
+    """The write stage's pass-through ``mapInArrow`` tap: yields every
+    batch unchanged and, when its task's input ends, adds
+    ``{bucket: (rows, md5("|".join(sorted(md5(extracted_text)))))}`` for
+    the buckets it saw to ``acc``. Null texts count as rows but add no
+    hash, as ``collect_list(md5(...))`` skips them."""
+
+    def tap(batches):
+        rows: dict[int, int] = {}
+        hashes: dict[int, list[str]] = {}
+        for batch in batches:
+            buckets = batch.column("bucket").to_pylist()
+            texts = batch.column("extracted_text").to_pylist()
+            for b, text in zip(buckets, texts):
+                rows[b] = rows.get(b, 0) + 1
+                hs = hashes.setdefault(b, [])
+                if text is not None:
+                    hs.append(hashlib.md5(text.encode()).hexdigest())
+            yield batch
+        acc.add({
+            b: (n, hashlib.md5("|".join(sorted(hashes[b])).encode()).hexdigest())
+            for b, n in rows.items()
+        })
+
+    return tap
+
+
+def write_bucketed(df: DataFrame, path: str, *, n_buckets: int) -> dict[int, tuple[int, str]]:
     """S5: write partitioned by url-hash bucket (dynamic overwrite so a
     re-run replaces exactly the buckets it processed — idempotent), one
-    file per bucket."""
-    out = with_salt_bucket(df, n_buckets=n_buckets).hint("rebalance", "bucket")
+    file per bucket. ``df`` carries ``extracted_text``; returns
+    ``{bucket: (rows, digest)}`` for every bucket the write produced,
+    taken in the write stage itself."""
+    written = df.sparkSession.sparkContext.accumulator({}, _ByBucket())
+    out = with_salt_bucket(df, n_buckets=n_buckets).repartition("bucket")
     (
-        out.write.mode("overwrite")
+        out.mapInArrow(_bucket_digests(written), out.schema)
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(path)
     )
+    return dict(written.value)
 
 
 @dataclass
@@ -129,12 +183,14 @@ def run_with_resume(
 
     Plan: bucket the input by url hash; skip buckets already in the
     manifest; run the fused header extraction on the remaining buckets in
-    ONE job (single scan + single write through :func:`write_bucketed`,
-    not a per-bucket loop); commit each processed bucket's manifest entry
-    after the write succeeds. Raises ``ValueError`` when ``out_dir`` was
-    written with another ``n_buckets``.
+    ONE job graph (single scan + single write through
+    :func:`write_bucketed`, not a per-bucket loop); after the write
+    succeeds, commit the ``(rows, digest)`` its write stage took for each
+    bucket it wrote. Raises ``ValueError`` when ``out_dir`` was written
+    with another ``n_buckets``.
 
-    Returns {"processed": [...], "skipped": [...], "rows": n}.
+    Returns {"processed": [...], "skipped": [...], "rows": n}, where
+    ``processed`` and ``rows`` cover only the buckets this run wrote.
     """
     manifest = LineageManifest(os.path.join(out_dir, "_manifest"))
     manifest.pin_layout(n_buckets)
@@ -147,44 +203,15 @@ def run_with_resume(
     # bucket is a pure function of url: write_bucketed recomputes it after
     # extraction instead of carrying it through the Python eval; its
     # exchange comes after the eval, so it moves extracted rows, not html
-    write_bucketed(
+    written = write_bucketed(
         extract_pages_header(todo.select("url", "warc_ts", "html", "text", "lang")),
         os.path.join(out_dir, "extracted"),
         n_buckets=n_buckets,
     )
-
-    # per-bucket stats from what we just wrote -> manifest commits.
-    # Scan ONLY this run's buckets (partition-pruned read): digesting the
-    # long-committed buckets too would make resume cost grow with total
-    # corpus size instead of with the pending work. The digest reads two
-    # columns, so their schema is given: with none, Spark first runs a
-    # job that infers it from the parquet footers.
-    stats_src = spark.read.schema("extracted_text STRING, bucket INT").parquet(
-        os.path.join(out_dir, "extracted")
-    )
-    if done:
-        stats_src = stats_src.filter(~F.col("bucket").isin(*done))
-    stats = (
-        stats_src
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("rows"),
-            F.md5(
-                F.concat_ws(
-                    "|", F.sort_array(F.collect_list(F.md5("extracted_text")))
-                )
-            ).alias("digest"),
-        )
-        .collect()
-    )
-    processed = []
-    for r in stats:
-        if r.bucket in done:
-            continue
-        manifest.commit(int(r.bucket), int(r.rows), r.digest)
-        processed.append(int(r.bucket))
+    for b in sorted(written):
+        manifest.commit(b, *written[b])
     return {
-        "processed": sorted(processed),
+        "processed": sorted(written),
         "skipped": sorted(done),
-        "rows": sum(int(r.rows) for r in stats if r.bucket not in done),
+        "rows": sum(rows for rows, _ in written.values()),
     }

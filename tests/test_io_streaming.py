@@ -36,11 +36,18 @@ def test_mime_from_url(spark):
 def test_write_bucketed_layout(spark, tmp_path):
     df = spark.createDataFrame(corpus_rows(50, seed=42), PAGES_SCHEMA_DDL)
     path = str(tmp_path / "pages_out")
-    write_bucketed(df.select("url", "lang"), path, n_buckets=4)
+    written = write_bucketed(
+        df.select("url", "lang", F.col("text").alias("extracted_text")),
+        path,
+        n_buckets=4,
+    )
     dirs = {d for d in os.listdir(path) if d.startswith("bucket=")}
     assert len(dirs) >= 3  # urls spread across buckets despite host skew
+    assert {f"bucket={b}" for b in written} == dirs
     back = spark.read.parquet(path)
     assert back.count() == 50
+    counts = {r.bucket: r["count"] for r in back.groupBy("bucket").count().collect()}
+    assert {b: rows for b, (rows, _) in written.items()} == counts
 
 
 def test_lineage_manifest_roundtrip(tmp_path):
@@ -220,6 +227,194 @@ def test_run_with_resume_rejects_other_bucket_count(spark, tmp_path):
     assert run_with_resume(spark, df, out, n_buckets=4)["processed"] == []
 
 
+def _job_ids(spark, group: str, fn) -> list[int]:
+    """The ids of the Spark jobs ``fn()`` launches, run in job group
+    ``group`` (a name no other call uses)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_run_with_resume_runs_only_the_write(spark, tmp_path):
+    """A run launches exactly the jobs of its bucketed write (the
+    exchange's map stage, then the write stage): each bucket's manifest
+    entry comes from the write stage itself, not from a second query
+    that reads the written files back (2 more jobs)."""
+    from facturas_spark.pipeline import extract_pages_header
+
+    df = spark.createDataFrame(corpus_rows(40, seed=42), PAGES_SCHEMA_DDL)
+    run = _job_ids(
+        spark,
+        f"run-{tmp_path.name}",
+        lambda: run_with_resume(spark, df, str(tmp_path / "job"), n_buckets=4),
+    )
+    write = _job_ids(
+        spark,
+        f"write-{tmp_path.name}",
+        lambda: write_bucketed(
+            extract_pages_header(df), str(tmp_path / "write"), n_buckets=4
+        ),
+    )
+    assert len(run) == len(write) == 2
+
+
+def test_run_with_resume_leaves_unwritten_leftover_uncommitted(spark, tmp_path, monkeypatch):
+    """A bucket directory that a crashed run wrote but never committed,
+    and that gets no rows in this run, is not this run's work: it is
+    neither in ``processed`` nor committed, and ``rows`` counts only what
+    this run wrote. A later run that does get its pages commits it with
+    the reference entry."""
+    from facturas_spark.pipeline import with_salt_bucket
+
+    df = spark.createDataFrame(corpus_rows(60, seed=42), PAGES_SCHEMA_DDL)
+    ref_out = str(tmp_path / "ref")
+    run_with_resume(spark, df, ref_out, n_buckets=4)
+    ref = _manifest(ref_out)
+
+    out = str(tmp_path / "crash")
+    _crash_after_commits(spark, df, out, 0, monkeypatch)
+    assert os.path.isdir(os.path.join(out, "extracted", "bucket=3"))
+    rest = with_salt_bucket(df, n_buckets=4).filter(F.col("bucket") != 3).drop("bucket")
+    r = run_with_resume(spark, rest, out, n_buckets=4)
+    assert r["processed"] == [0, 1, 2]
+    assert r["rows"] == sum(ref[b][0] for b in (0, 1, 2)) == 60 - ref[3][0]
+    assert _manifest(out) == {b: ref[b] for b in (0, 1, 2)}
+
+    assert run_with_resume(spark, df, out, n_buckets=4)["processed"] == [3]
+    assert _manifest(out) == ref
+    assert _extracted(spark, out) == _extracted(spark, ref_out)
+
+
+_RETRY_JOB = r"""
+import json, os, sys
+sys.path.insert(0, %(repo)r)
+from pyspark import TaskContext
+from facturas_spark.session import get_spark
+
+# local[2,2]: two cores, and a task gets a second attempt before its
+# job fails
+spark = get_spark("write-retry", cores=2, extra_conf={
+    "spark.master": "local[2,2]", "spark.driver.memory": "1g"})
+from facturas_spark.sources import io
+from facturas_spark.synth import PAGES_SCHEMA_DDL, corpus_rows
+
+tmp = sys.argv[1]
+df = spark.createDataFrame(corpus_rows(60, seed=42), PAGES_SCHEMA_DDL)
+tap = io._bucket_digests
+
+
+def failing(attempts):
+    # the first write-stage task raises once its tap has seen every row,
+    # on the attempts listed
+    def wrap(acc):
+        inner = tap(acc)
+
+        def run(batches):
+            yield from inner(batches)
+            ctx = TaskContext.get()
+            if ctx.partitionId() == 0 and ctx.attemptNumber() in attempts:
+                raise RuntimeError("injected write-stage failure")
+
+        return run
+
+    return wrap
+
+
+def state(out):
+    manifest = io.LineageManifest(os.path.join(out, "_manifest")).committed()
+    path = os.path.join(out, "extracted")
+    rows = []
+    if os.path.isdir(path) and any(d.startswith("bucket=") for d in os.listdir(path)):
+        rows = sorted(repr(tuple(r)) for r in spark.read.parquet(path).collect())
+    return {"manifest": {str(b): [e["rows"], e["digest"]] for b, e in manifest.items()},
+            "rows": rows}
+
+
+result = {}
+ref = os.path.join(tmp, "ref")
+io.run_with_resume(spark, df, ref, n_buckets=4)
+result["ref"] = state(ref)
+
+for name, attempts in (("retry", (0,)), ("every", (0, 1))):
+    out = os.path.join(tmp, name)
+    io._bucket_digests = failing(attempts)
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        result[name] = {"run": io.run_with_resume(spark, df, out, n_buckets=4)}
+    except Exception as exc:
+        result[name] = {"error": "injected write-stage failure" in str(exc)}
+    finally:
+        io._bucket_digests = tap
+    tracker = sc.statusTracker()
+    result[name]["failed_tasks"] = sum(
+        tracker.getStageInfo(s).numFailedTasks
+        for j in tracker.getJobIdsForGroup(name)
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s) is not None
+    )
+    result[name]["after"] = state(out)
+
+sc.setLocalProperty("spark.jobGroup.id", None)
+out = os.path.join(tmp, "every")
+result["every"]["rerun"] = io.run_with_resume(spark, df, out, n_buckets=4)
+result["every"]["after_rerun"] = state(out)
+spark.stop()
+print("RESULT" + json.dumps(result))
+"""
+
+
+@pytest.fixture(scope="module")
+def write_retry(tmp_path_factory):
+    """Runs in a subprocess: the retry budget (``local[N,F]``) is fixed
+    when a SparkContext starts, and the session fixture owns this
+    process's."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_JOB % {"repo": repo},
+         str(tmp_path_factory.mktemp("write_retry"))],
+        capture_output=True,
+        text=True,
+        timeout=420,
+        cwd=repo,
+    )
+    for line in proc.stdout.splitlines():
+        if line.startswith("RESULT"):
+            return json.loads(line[len("RESULT"):])
+    pytest.fail(f"retry job produced no RESULT line:\n{proc.stdout[-2000:]}\n{proc.stderr[-2000:]}")
+
+
+def test_write_stage_retry_commits_reference(write_retry):
+    """One write-stage task fails on its first attempt, after its tap has
+    taken every row's hash; the retry succeeds. The manifest and the rows
+    equal an uninterrupted run's: the retried task's entries count once."""
+    ref, got = write_retry["ref"], write_retry["retry"]
+    assert got["failed_tasks"] == 1
+    assert got["run"]["processed"] == [0, 1, 2, 3]
+    assert got["run"]["rows"] == 60
+    assert got["after"] == ref
+    assert len(ref["manifest"]) == 4
+
+
+def test_write_stage_failure_commits_nothing(write_retry):
+    """A write-stage task that fails on every attempt fails the run with
+    no new manifest entry; a rerun converges to the uninterrupted run."""
+    ref, got = write_retry["ref"], write_retry["every"]
+    assert got["error"] is True
+    assert got["failed_tasks"] == 2
+    assert got["after"]["manifest"] == {}
+    assert got["rerun"]["processed"] == [0, 1, 2, 3]
+    assert got["after_rerun"] == ref
+
+
 def _python_evals(plan) -> list:
     """Every ArrowEvalPython node of a JVM physical plan."""
     found = [plan] if plan.nodeName() == "ArrowEvalPython" else []
@@ -247,7 +442,7 @@ def test_run_with_resume_header_kernel_ab(spark, tmp_path, monkeypatch):
 
     def spy(extracted, path, *, n_buckets):
         written.append(extracted)
-        write_bucketed(extracted, path, n_buckets=n_buckets)
+        return write_bucketed(extracted, path, n_buckets=n_buckets)
 
     monkeypatch.setattr("facturas_spark.sources.io.write_bucketed", spy)
     out = str(tmp_path / "job")
